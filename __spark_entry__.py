@@ -2404,17 +2404,15 @@ def _events_stream(spark: SparkSession, sf_dir: str):
 
 
 def _stream_state_parts(spark: SparkSession, sf_dir: str) -> str:
-    """State-store partition count RULE for the stream gates (r14,
-    VERDICT item 6; rules-not-constants): every state-store instance
-    pays per-micro-batch init/commit regardless of rows, so the
-    partition count follows the keyed-state volume, not the session
-    width — the exact rule bench.py's windowed-eps block measured
-    (32 stores -> ~62k eps, 8 -> ~118k on the same fixture) and
-    stream_livecheck_audit already applies. The event count comes from
-    the parquet FOOTER (driver-side metadata, no Spark job); any
-    failure (DFS path, missing pyarrow) falls back to the session
-    width, which is always correct — results are partitioning-
-    invariant, only the fixed overhead changes."""
+    """State-store partition count for the stream gates:
+    ``streaming.runner.state_partitions`` (the rule bench.py's
+    windowed-eps block also applies), capped at the session width. The
+    event count comes from the parquet FOOTER (driver-side metadata, no
+    Spark job); any failure (DFS path, missing pyarrow) falls back to
+    the session width, which is always correct — results are
+    partitioning-invariant, only the fixed overhead changes."""
+    from faust_spark.streaming.runner import state_partitions
+
     default = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         import pyarrow.parquet as _pq
@@ -2422,7 +2420,7 @@ def _stream_state_parts(spark: SparkSession, sf_dir: str) -> str:
         n = _pq.read_metadata(
             os.path.join(sf_dir, "events.parquet")
         ).num_rows
-        return str(min(int(default), max(4, n // 12_500)))
+        return str(state_partitions(n, int(default)))
     except Exception:
         return default
 
@@ -2513,16 +2511,15 @@ def stream_window_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary per-key state via applyInPandasWithState (the faust
-    ``table[k] = f(...)`` escape hatch, SURVEY §2.4/M5): cumulative
-    count+sum per user in keyed state, update-mode emission; final value
-    per key = max over emissions (batching-invariant)."""
+    """The faust counter table ``table[k] += v`` (SURVEY §2.4/M5):
+    cumulative count+sum per user as a native update-mode streaming
+    aggregation (state-store buffer, no Python worker); final value per
+    key = max over emissions (batching-invariant)."""
     from faust_spark.streaming.runner import run_to_memory
     from faust_spark.streaming.state import stateful_counter
 
-    # fewer state partitions = fewer Arrow worker round-trips per batch
-    # (the count is fixed at query start); r14: hard-coded 8 replaced by
-    # the shared keyed-state-volume rule (scale-adaptive, VERDICT item 6)
+    # fewer state partitions = fewer state-store commits per batch (the
+    # count is fixed at query start): the shared keyed-state-volume rule
     with _state_parts_for(spark, sf_dir):
         s = _events_stream(spark, sf_dir)
         counted = stateful_counter(
@@ -7715,23 +7712,19 @@ def stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming feature table + analytic screen: the STREAM builds the
     per-(user, day) activity table in keyed state — the faust windowed
     Table ``table[(user, day)] += 1`` (streaming/state.py
-    stateful_counts, applyInPandasWithState with a composite key) — and
+    stateful_counts, a native update-mode count over a composite key) — and
     the z-score anomaly screen then reads the finished table, same
     math as ``user_anomaly``. This is the reference's idiomatic
     deployment shape (agent keeps windowed counters, a reader flags
     outliers), so the composition itself is what's verified: streaming
     state accumulation must land exactly on the batch oracle."""
-    from pyspark.sql.types import DateType, LongType
-
     from faust_spark.streaming.runner import run_to_memory
     from faust_spark.streaming.state import stateful_counts
 
-    # r14: hard-coded 8 replaced by the shared keyed-state-volume rule
     with _state_parts_for(spark, sf_dir):
         s = _events_stream(spark, sf_dir).withColumn("day", F.to_date("ts"))
         counted = stateful_counts(
-            s.groupBy("user_id", "day"),
-            [("user_id", LongType()), ("day", DateType())],
+            s.groupBy("user_id", "day"), ["user_id", "day"]
         )
         out = run_to_memory(counted, output_mode="update")
     daily = out.groupBy("user_id", "day").agg(F.max("cnt").alias("cnt"))

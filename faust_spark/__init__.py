@@ -14,7 +14,8 @@ Public surface (see SURVEY.md for the operator-by-operator mapping):
 - :mod:`faust_spark.operators` — relational + LLM-data-pipeline operators
   (dedup, similarity search, text analysis, multimodal plumbing).
 - :mod:`faust_spark.streaming` — stateful streaming helpers
-  (``applyInPandasWithState`` wrappers, sources, sinks).
+  (native keyed counters, ``applyInPandasWithState`` for arbitrary state,
+  sources, sinks).
 """
 
 from faust_spark.session import get_spark  # noqa: F401

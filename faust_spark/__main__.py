@@ -27,16 +27,19 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
+
+#: checkout root (the parent of this package): examples/ and
+#: __spark_entry__.py live there
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _example_modules() -> list[str]:
     """Every bundled example module, discovered from disk (ADVICE r11:
     the hardcoded two-module list silently dropped models defined in
     newer examples from the `models`/`model` registry listing)."""
-    import os
-
-    ex_dir = os.path.join("/root/repo", "examples")
+    ex_dir = os.path.join(_ROOT, "examples")
     try:
         names = sorted(os.listdir(ex_dir))
     except OSError:
@@ -298,7 +301,7 @@ def main(argv: list[str] | None = None) -> int:
 
     args = ap.parse_args(argv)
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, _ROOT)
 
     if args.cmd == "completion":
         # text emission with no app and no Spark session (reference:

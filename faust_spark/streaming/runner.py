@@ -39,6 +39,17 @@ def stream_parquet(
     return reader.load(path)
 
 
+def state_partitions(n_events: int, cap: int) -> int:
+    """State-store partition count for a keyed stream of ``n_events``.
+
+    Every state-store instance pays a fixed init/commit per micro-batch
+    regardless of its rows, so the count follows the keyed-state volume —
+    one store per 12,500 events, at least 4 — capped at ``cap`` (the
+    session width). Results are partitioning-invariant; only the fixed
+    per-batch overhead changes."""
+    return min(cap, max(4, n_events // 12_500))
+
+
 def run_to_memory(
     df: DataFrame,
     output_mode: str = "update",

@@ -1,10 +1,13 @@
-"""Arbitrary per-key state: the ``table[k] = f(table[k], v)`` escape hatch.
+"""Keyed table state: faust's ``table[k] += v`` and ``table[k] = f(...)``.
 
-The reference's Table allows any Python reduction per key (SURVEY §2.4);
-built-in streaming aggs cover sums/counts/sets, and this module covers the
-rest via ``applyInPandasWithState`` — Spark's keyed-state operator with
-checkpointed state (the analogue of faust's RocksDB store + changelog,
-minus all the recovery machinery).
+Counters (:func:`stateful_counter`, :func:`stateful_counts`) are native
+update-mode streaming aggregations: the state store holds the aggregation
+buffer and no Python worker runs. The reference's Table also allows any
+Python reduction per key (SURVEY §2.4); that arbitrary state
+(:func:`reduce_by_key`, :func:`session_tracker`) runs through
+``applyInPandasWithState`` — Spark's keyed-state operator with checkpointed
+state (the analogue of faust's RocksDB store + changelog, minus all the
+recovery machinery).
 
 Emission pattern: every batch emits each updated key's *cumulative* state
 (update-mode semantics). Readers that want only the final value take
@@ -14,11 +17,12 @@ faust table reads see "current value as of now".
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable, Iterator, Tuple
+from typing import Callable, Iterable
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -35,63 +39,33 @@ def stateful_counter(
     count_alias: str = "cnt",
     sum_col: str | None = None,
     sum_alias: str = "total",
-    key_type=LongType(),
 ) -> DataFrame:
-    """Cumulative per-key counter/summer over a grouped stream.
+    """Cumulative per-key counter/summer over a grouped stream — faust's
+    ``table[k] += v``, as a native streaming aggregation.
 
-    ``grouped`` is ``df.groupBy(key)``; emits (key, cnt[, total]) with
-    cumulative values per batch. State is two scalars per key — the same
-    footprint as faust's counter tables.
+    ``grouped`` is ``df.groupBy(key)``; emits (key_name, cnt[, total]) with
+    each updated key's cumulative values per batch in update mode. State is
+    the aggregation buffer in the state store (count plus decimal sum), kept
+    under codegen with no Python worker.
 
-    Sums accumulate as integer hundredths (the fixtures carry 2-decimal
-    currency values): exact, order-independent, and equal to a decimal-sum
-    oracle — float accumulation would drift in the last ulp.
+    Sums accumulate as ``decimal(18,2)`` (the fixtures carry 2-decimal
+    currency values): exact, order-independent, and the same expression as
+    the decimal-sum oracle — float accumulation would drift in the last ulp.
     """
-    fields = [
-        StructField(key_name, key_type, False),
-        StructField(count_alias, LongType(), False),
-    ]
-    state_fields = [StructField("c", LongType(), False)]
+    aggs = [F.count(F.lit(1)).alias(count_alias)]
     if sum_col is not None:
-        fields.append(StructField(sum_alias, DoubleType(), True))
-        state_fields.append(StructField("s", LongType(), False))  # hundredths
-    out_schema = StructType(fields)
-    state_schema = StructType(state_fields)
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        c = 0
-        cents = 0
-        if state.exists:
-            prev = state.get
-            c = prev[0]
-            if sum_col is not None:
-                cents = prev[1]
-        for pdf in pdfs:
-            c += len(pdf)
-            if sum_col is not None:
-                cents += int((pdf[sum_col] * 100).round().astype("int64").sum())
-        state.update((c, cents) if sum_col is not None else (c,))
-        row = {key_name: key[0], count_alias: c}
-        if sum_col is not None:
-            row[sum_alias] = cents / 100.0
-        yield pd.DataFrame([row])
-
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        aggs.append(
+            F.sum(F.col(sum_col).cast("decimal(18,2)"))
+            .cast("double")
+            .alias(sum_alias)
+        )
+    out = grouped.agg(*aggs)
+    return out.withColumnRenamed(out.columns[0], key_name)
 
 
 def stateful_counts(
     grouped,
-    keys: Iterable[Tuple[str, Any]],
+    keys: Iterable[str],
     count_alias: str = "cnt",
 ) -> DataFrame:
     """Cumulative counter over a COMPOSITE key — the windowed-Table shape
@@ -99,37 +73,14 @@ def stateful_counts(
     (key, window range); here the window bucket is just another grouping
     column, e.g. a day derived from event time).
 
-    ``grouped`` is ``df.groupBy(*names)`` with one (name, DataType) per
-    grouping column, in the same order.  State is one scalar per
-    composite key; every batch emits the key's cumulative count
-    (update-mode semantics — readers take ``max`` per key for the final
-    value, batching-invariant like :func:`stateful_counter`).
+    ``grouped`` is ``df.groupBy(*keys)``; ``keys`` names the output's key
+    columns, in the same order. Every batch emits each updated composite
+    key's cumulative count (update-mode semantics — readers take ``max``
+    per key for the final value, batching-invariant like
+    :func:`stateful_counter`).
     """
-    keys = list(keys)
-    fields = [StructField(n, t, False) for n, t in keys]
-    fields.append(StructField(count_alias, LongType(), False))
-    out_schema = StructType(fields)
-    state_schema = StructType([StructField("c", LongType(), False)])
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        c = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            c += len(pdf)
-        state.update((c,))
-        row = {n: v for (n, _t), v in zip(keys, key)}
-        row[count_alias] = c
-        yield pd.DataFrame([row])
-
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return grouped.agg(F.count(F.lit(1)).alias(count_alias)).toDF(
+        *keys, count_alias
     )
 
 

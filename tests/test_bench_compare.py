@@ -8,8 +8,11 @@ slow phase that first read as a fleet of regressions).
 """
 
 import json
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _bench_json(spin, queries, pre=None, post=None, extra=None):
@@ -32,7 +35,7 @@ def _run_compare(tmp_path, old, new):
         [sys.executable, "tools/bench_compare.py", str(po), str(pn)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert res.returncode == 0, res.stderr
     return json.loads(res.stdout)
@@ -74,7 +77,7 @@ def test_pre_r12_artifact_compares_without_flag(tmp_path):
 def test_bench_emits_phase_fields():
     """bench.py must emit pre/post/drift/stable — source-level pin (a
     full bench run is a ~15-minute artifact job, not a unit test)."""
-    src = open("/root/repo/bench.py").read()
+    src = open(os.path.join(ROOT, "bench.py")).read()
     for field in (
         "python_spin_pre",
         "python_spin_post",

@@ -88,7 +88,10 @@ def test_scale_probe_link_is_idempotent(tmp_path):
     second run against a warm temp dir doesn't FileExistsError."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    sys.path.insert(0, tools)
     try:
         from scale_probe import _link
     finally:

@@ -30,7 +30,7 @@ def _run(spark, src_dir, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
-    counted = stateful_counter(s.groupBy("user_id"), "user_id")
+    counted = stateful_counter(s.groupBy("user_id"), "user_id", sum_col="value")
     emitted = []
 
     def sink(batch_df, batch_id):
@@ -66,14 +66,20 @@ def test_state_survives_restart(spark, sf_dir, tmp_path):
     events.filter(F.col("event_id") >= 500).coalesce(2).write.mode(
         "append"
     ).parquet(src)
-    run2 = {r.user_id: r.cnt for r in _run(spark, src, ckpt)}
+    run2 = {r.user_id: (r.cnt, r.total) for r in _run(spark, src, ckpt)}
 
     totals = {
-        r.user_id: r.c
-        for r in events.groupBy("user_id").agg(F.count("*").alias("c")).collect()
+        r.user_id: (r.c, r.t)
+        for r in events.groupBy("user_id")
+        .agg(
+            F.count("*").alias("c"),
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("t"),
+        )
+        .collect()
     }
-    # every key updated after restart must land exactly on the full total:
-    # state carried over (no gaps), old rows not re-processed (no dups)
+    # every key updated after restart must land exactly on the full count
+    # and decimal sum: state carried over (no gaps), old rows not
+    # re-processed (no dups)
     assert run2, "restart produced no updates"
-    for uid, cnt in run2.items():
-        assert cnt == totals[uid], f"user {uid}: {cnt} != {totals[uid]}"
+    for uid, got in run2.items():
+        assert got == totals[uid], f"user {uid}: {got} != {totals[uid]}"

@@ -6,13 +6,23 @@ batches, t/stress/tests/tables/app.py:96-150 behavior spec).
 """
 
 import os
+import re
+import uuid
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from faust_spark.streaming.runner import run_to_memory, stream_parquet
-from faust_spark.streaming.state import reduce_by_key, stateful_counter
+from faust_spark.streaming.runner import (
+    run_to_memory,
+    state_partitions,
+    stream_parquet,
+)
+from faust_spark.streaming.state import (
+    reduce_by_key,
+    stateful_counter,
+    stateful_counts,
+)
 
 
 @pytest.fixture(scope="module")
@@ -70,18 +80,11 @@ def test_stateful_counts_composite_key_matches_batch(
 ):
     """Composite-key state (the windowed-Table shape table[(user, day)])
     across 4 micro-batches lands exactly on the batch rollup."""
-    from pyspark.sql.types import DateType, LongType
-
-    from faust_spark.streaming.state import stateful_counts
-
     s = stream_parquet(
         spark, multi_file_events, max_files_per_trigger=1
     ).withColumn("day", F.to_date("ts"))
     out = run_to_memory(
-        stateful_counts(
-            s.groupBy("user_id", "day"),
-            [("user_id", LongType()), ("day", DateType())],
-        ),
+        stateful_counts(s.groupBy("user_id", "day"), ["user_id", "day"]),
         output_mode="update",
     )
     final = {
@@ -100,6 +103,78 @@ def test_stateful_counts_composite_key_matches_batch(
         .collect()
     }
     assert final == expected
+
+
+def test_stateful_counter_sum_matches_batch_decimal_sum(
+    spark, multi_file_events
+):
+    """The streamed decimal sum, accumulated over 4 micro-batches, equals
+    the batch ``CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)`` bit
+    for bit (the oracle's expression), and the count equals COUNT(*)."""
+    s = stream_parquet(spark, multi_file_events, max_files_per_trigger=1)
+    out = run_to_memory(
+        stateful_counter(s.groupBy("user_id"), "user_id", sum_col="value"),
+        output_mode="update",
+    )
+    got = {
+        r.user_id: (r.cnt, r.total)
+        for r in out.groupBy("user_id")
+        .agg(F.max("cnt").alias("cnt"), F.max("total").alias("total"))
+        .collect()
+    }
+    expected = {
+        r.user_id: (r.cnt, r.total)
+        for r in spark.sql(
+            "SELECT user_id, COUNT(*) AS cnt, "
+            "CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total "
+            f"FROM parquet.`{multi_file_events}` GROUP BY user_id"
+        ).collect()
+    }
+    assert got == expected
+
+
+def _executed_plan(df) -> str:
+    """Physical plan of the last micro-batch of ``df`` run to completion."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(f"plan_{uuid.uuid4().hex[:8]}")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300)
+    finally:
+        q.stop()
+    return q._jsq.explainInternal(False)
+
+
+@pytest.mark.parametrize("shape", ["counter", "counts"])
+def test_counters_run_in_the_native_state_store(
+    spark, multi_file_events, shape
+):
+    """The counters are native aggregations over the state store: a
+    StateStoreSave and no Python-worker node (FlatMapGroupsInPandasWithState,
+    ArrowEvalPython, MapInArrow, ...) in the executed plan."""
+    s = stream_parquet(spark, multi_file_events, max_files_per_trigger=2)
+    if shape == "counter":
+        df = stateful_counter(s.groupBy("user_id"), "user_id", sum_col="value")
+    else:
+        s = s.withColumn("day", F.to_date("ts"))
+        df = stateful_counts(s.groupBy("user_id", "day"), ["user_id", "day"])
+    plan = _executed_plan(df)
+    assert "StateStoreSave" in plan
+    assert not re.search(r"Python|Pandas|InArrow", plan), plan
+
+
+def test_state_partitions_rule():
+    """One state store per 12,500 events, at least 4, at most the cap."""
+    assert state_partitions(0, 32) == 4
+    assert state_partitions(62_499, 32) == 4
+    assert state_partitions(100_000, 32) == 8
+    assert state_partitions(1_000_000, 200) == 80
+    assert state_partitions(10_000_000, 32) == 32
+    assert state_partitions(0, 2) == 2  # the cap (session width) wins
 
 
 def test_append_mode_emits_only_closed_windows(spark, multi_file_events):
