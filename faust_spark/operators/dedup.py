@@ -711,7 +711,8 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """32-bit SimHash fingerprint from distinct-word md5 bit votes.
+    """``bits``-bit SimHash fingerprint (up to 64, default 32) from
+    distinct-word md5 bit votes.
 
     bit k of word-hash = nibble bit of hex char k/4 of md5(word) —
     md5-derived so the DuckDB oracle can reproduce it exactly.
