@@ -2595,11 +2595,10 @@ _MH_NIBBLES, _MH_A, _MH_B = _mh_oracle_pieces()
     """,
 )
 def stream_everseen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ever-seen streaming dedup through the DFS-sharded state backend
-    (streaming/dfs_state.py — r6: state lives as versioned parquet word
-    shards under the checkpoint root, written by executors; the r5
-    driver-resident-bitmap variant remains in streaming/bloom_dedup.py
-    for small-cardinality/control-plane use). Unlike the watermarked
+    """Ever-seen streaming dedup through the DFS state backend
+    (streaming/dfs_state.py ``bloom_dedup_dfs_sink``: state lives as
+    versioned parquet word deltas and bases under the checkpoint root,
+    written by executors). Unlike the watermarked
     ``stream_dedup`` (which forgets past the horizon), the Bloom screen
     suppresses keys seen in ANY earlier batch with O(m_bits) state. The
     events table replays as multiple micro-batches (4 files, 2 per
@@ -2608,7 +2607,7 @@ def stream_everseen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (the oracle). The 2^22-bit map keeps the false-positive
     probability for the fixture cardinalities below ~1e-6, i.e.
     deterministic in practice; the bounded-FP and replay contracts are
-    pinned in tests/test_bloom_dedup_stream.py + test_dfs_state.py."""
+    pinned in tests/test_dfs_state.py."""
     import tempfile
 
     from faust_spark.catalog import load_table, normalize_event_time
@@ -3573,11 +3572,10 @@ def value_quantiles_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING count-min state through the DFS-sharded backend
-    (streaming/dfs_state.py — r6: per-batch (d, bucket, cnt) deltas as
-    executor-written parquet under the checkpoint root, merged by
-    per-cell SUM; the r5 driver-array variant stays in
-    streaming/cms_agg.py). CMS is a linear sketch, so the accumulated
+    """STREAMING count-min state through the DFS state backend
+    (streaming/dfs_state.py ``cms_dfs_sink``: per-batch (d, bucket, cnt)
+    deltas as executor-written parquet under the checkpoint root, merged
+    by per-cell SUM). CMS is a linear sketch, so the accumulated
     state is provably batch-boundary-independent — the oracle rebuilds
     the sketch from the full data in one shot and the streaming
     estimates must match BIT-FOR-BIT. The strongest form of

@@ -36,10 +36,24 @@ def main() -> None:
         else tempfile.mkdtemp(prefix="everseen_example_")
     )
     spark = get_spark("everseen-dedup-example")
+    out, state_dir = run(spark, sf_dir, out_root)
+    n = spark.read.parquet(out).count()
+    distinct = (
+        load_table(spark, sf_dir, "events").select("user_id").distinct().count()
+    )
+    print(f"emitted {n} rows; distinct user_ids in source: {distinct}")
+    print(f"output: {out}\nstate:  {state_dir}")
 
+
+def run(spark, sf_dir: str, out_root: str) -> tuple[str, str]:
+    """Stream the ``events`` fixture through the Bloom screen; returns
+    (survivors dir, state dir). Raises ``TimeoutError`` if the stream is
+    still running after 300 s — a partial output must not pass for the
+    deduplicated stream."""
     src = os.path.join(out_root, "src")
     out = os.path.join(out_root, "deduped")
     ckpt = os.path.join(out_root, "ckpt")
+    state_dir = os.path.join(ckpt, "bloom_state")
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     ev.repartition(4).write.mode("overwrite").parquet(src)
@@ -53,7 +67,7 @@ def main() -> None:
         to_parquet,
         key_col="user_id",
         # state under the checkpoint root: one durability domain
-        state_dir=os.path.join(ckpt, "bloom_state"),
+        state_dir=state_dir,
         m_bits=1 << 22,
     )
     q = (
@@ -64,12 +78,13 @@ def main() -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-
-    n = spark.read.parquet(out).count()
-    distinct = ev.select("user_id").distinct().count()
-    print(f"emitted {n} rows; distinct user_ids in source: {distinct}")
-    print(f"output: {out}\nstate:  {ckpt}/bloom_state")
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            "everseen_dedup: stream still running after 300s; "
+            f"output in {out} is partial"
+        )
+    return out, state_dir
 
 
 if __name__ == "__main__":

@@ -1,13 +1,13 @@
-"""DFS-sharded streaming sketch state (streaming/dfs_state.py): the
-scale path for ever-seen Bloom dedup and CMS accumulation — state as
+"""Streaming sketch state on the DFS (streaming/dfs_state.py): ever-seen
+Bloom dedup, CMS accumulation and banded near-duplicate claims — state as
 parquet relations written by executors, never a driver array.
 
-Contracts carried over from the driver-resident variants (VERDICT r5
-item 2): cross-batch suppression, no false negatives, replay
+Contracts: cross-batch suppression, no false negatives, replay
 idempotence (screen/accumulate against versions strictly below the
-batch id), PLUS the new ones — compaction preserves the merged state
-bit-for-bit, and a fresh process ("driver loss") resumes from the state
-directory alone."""
+batch id), compaction preserves the merged state bit-for-bit, a fresh
+process ("driver loss") resumes from the state directory alone, every
+``shards`` setting equals the one-shot batch sketch, and a state dir
+used with another shard count raises."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,7 +79,7 @@ def test_compaction_preserves_state_and_prunes(spark, tmp_path):
     want = {str(b) for b in range(7)} | {str(b + 100) for b in range(7)}
     assert emitted == want
     names = sorted(p.name for p in state_dir.iterdir())
-    assert "base_v5" in names           # b=6 folded deltas 0..5
+    assert "base_s0_v5" in names        # b=6 folded deltas 0..5
     assert not any(n.startswith("delta_v") and int(n[7:]) <= 5
                    for n in names)
     # post-compaction duplicates are still recognized
@@ -111,16 +111,45 @@ def test_driver_loss_resumes_from_state_dir(spark, tmp_path):
     assert b_out == {"6"}
 
 
-def test_dfs_state_equals_driver_resident_bitmap(spark, tmp_path):
-    """The sharded (w, bits) relation OR-folds to exactly the bitmap the
-    driver-resident variant builds from the same keys."""
+def test_no_false_negatives_and_bounded_fp(spark, tmp_path):
+    """Every true duplicate is dropped (bloom guarantees no false
+    negatives); false positives stay near the design rate."""
+    emitted: set = set()
+
+    def sink(df, bid):
+        emitted.update(r.k for r in df.collect())
+
+    # m=2^16 bits, n=2000 keys, k=4 → fp ≈ 0.3%
+    wrapped = bloom_dedup_dfs_sink(
+        sink, "k", str(tmp_path / "state"), m_bits=1 << 16
+    )
+    wrapped(_df(spark, range(0, 1000)), 0)
+    wrapped(_df(spark, range(0, 1000)), 1)  # pure replay content: all dups
+    assert emitted == {str(i) for i in range(1000)}  # nothing re-emitted
+    wrapped(_df(spark, range(1000, 2000)), 2)
+    new = {str(i) for i in range(1000, 2000)}
+    dropped_fp = new - emitted
+    assert len(dropped_fp) < 50  # ~0.3% design point, assert < 5%
+
+
+def test_dfs_state_equals_batch_bloom_build(spark, tmp_path):
+    """The (w, bits) state relation OR-folds to exactly the bitmap the
+    batch ``bloom_build`` builds from the same keys — also when the
+    session sets dynamic partition overwrite, which must not change how
+    a delta commits."""
     from faust_spark.operators.sketch import bloom_build
 
     keys = _df(spark, range(200))
     wrapped = bloom_dedup_dfs_sink(
         lambda df, b: None, "k", str(tmp_path / "s"), m_bits=1 << 12
     )
-    wrapped(keys, 0)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        wrapped(keys, 0)
+    finally:
+        spark.conf.set(key, prev)
     words = {
         r.w: r.bits
         for r in bloom_state_words(spark, str(tmp_path / "s")).collect()
@@ -130,7 +159,6 @@ def test_dfs_state_equals_driver_resident_bitmap(spark, tmp_path):
     assert words == want
 
 
-@pytest.mark.slow
 def test_streaming_cms_dfs_equals_batch_sketch(spark, tmp_path):
     """CMS linearity through the DFS deltas: accumulation equals the
     one-shot sketch for any split, replays don't double-count, and
@@ -275,7 +303,7 @@ def test_lsh_dedup_ordering_contract_violation_raises(spark, tmp_path):
 
 @pytest.mark.slow
 def test_lsh_dedup_watermark_survives_compaction(spark, tmp_path):
-    """The sentinel bucket folds through _compact_lsh's MIN merge: after
+    """The sentinel bucket folds through the shard fold's MIN merge: after
     a compaction boundary the watermark still reports the running max
     and document claims are unchanged (sentinel filtered from
     lsh_bucket_state)."""
@@ -305,9 +333,10 @@ def test_lsh_dedup_watermark_survives_compaction(spark, tmp_path):
 @pytest.mark.slow
 def test_sharded_bloom_equals_unsharded(spark, tmp_path):
     """shards=4 (DEPLOYMENT's 100x compaction knob): same emitted
-    survivors per batch and the SAME merged word relation as the
-    unsharded layout, across a run with multiple staggered
-    compactions."""
+    survivors per batch and the SAME merged word relation as shards=1,
+    across a run with multiple staggered compactions — and both equal
+    the batch ``bloom_build`` of every key the run saw."""
+    from faust_spark.operators.sketch import bloom_build
     from faust_spark.streaming.dfs_state import (
         bloom_dedup_dfs_sink,
         bloom_state_words,
@@ -323,7 +352,9 @@ def test_sharded_bloom_equals_unsharded(spark, tmp_path):
         "k", str(tmp_path / "shrd"), m_bits=1 << 12, compact_every=4,
         shards=4,
     )
+    seen = []
     for b in range(13):  # staggered folds at 1,2,3,4,5,6,7,8,...
+        seen += [b, b + 1, b + 500]
         batch = _df(spark, [b, b + 1, b + 500])
         flat(batch, b)
         shrd(batch, b)
@@ -333,7 +364,8 @@ def test_sharded_bloom_equals_unsharded(spark, tmp_path):
     sw = {r.w: r.bits for r in
           bloom_state_words(spark, str(tmp_path / "shrd"),
                             shards=4).collect()}
-    assert fw == sw and fw
+    arr = bloom_build(_df(spark, seen), "k", m_bits=1 << 12)
+    assert fw == sw == {i: v for i, v in enumerate(arr) if v}
 
 
 @pytest.mark.slow
@@ -368,7 +400,11 @@ def test_sharded_bloom_staggered_bases_and_pruning(spark, tmp_path):
 
 
 def test_sharded_bloom_rejects_bad_shards(spark, tmp_path):
-    from faust_spark.streaming.dfs_state import bloom_dedup_dfs_sink
+    from faust_spark.streaming.dfs_state import (
+        bloom_dedup_dfs_sink,
+        cms_dfs_sink,
+        lsh_dedup_dfs_sink,
+    )
 
     import pytest
 
@@ -378,13 +414,24 @@ def test_sharded_bloom_rejects_bad_shards(spark, tmp_path):
                 lambda df, b: None, "k", str(tmp_path / "x"),
                 compact_every=8, shards=bad,
             )
+    x = str(tmp_path / "x")
+    for make in (
+        lambda: bloom_dedup_dfs_sink(lambda df, b: None, "k", x,
+                                     compact_every=0),
+        lambda: cms_dfs_sink("k", x, compact_every=0),
+        lambda: lsh_dedup_dfs_sink(lambda df, b: None, x, compact_every=0),
+    ):
+        with pytest.raises(ValueError, match="compact_every must be >= 1"):
+            make()
 
 
 @pytest.mark.slow
 def test_sharded_lsh_equals_unsharded(spark, tmp_path):
     """shards=2 LSH: identical emitted survivors, bucket state, and id
-    watermark as the unsharded layout across staggered compactions —
-    the sentinel rides its hash shard and survives per-shard folds."""
+    watermark as shards=1 across staggered compactions — the sentinel
+    rides its hash shard and survives per-shard folds — and the claims
+    equal the batch min id per (band, band_sig) over every doc."""
+    from faust_spark.operators.dedup import lsh_bands, minhash_signatures
     from faust_spark.streaming.dfs_state import (
         lsh_bucket_state,
         lsh_dedup_dfs_sink,
@@ -412,8 +459,10 @@ def test_sharded_lsh_equals_unsharded(spark, tmp_path):
         lambda df, b: shard_out.append((b, {r.doc_id for r in df.collect()})),
         str(tmp_path / "shrd"), compact_every=3, shards=2,
     )
+    seen = []
     for b in range(8):  # staggered folds at 1,3,4,6,7 (shards=2, ce=3)
         rows = [(b * 10 + i, texts[(b + i) % len(texts)]) for i in range(3)]
+        seen += rows
         flat(_docs(spark, rows), b)
         shrd(_docs(spark, rows), b)
     assert flat_out == shard_out
@@ -422,7 +471,14 @@ def test_sharded_lsh_equals_unsharded(spark, tmp_path):
     sc = {(r.band, r.band_sig, r.min_id) for r in
           lsh_bucket_state(spark, str(tmp_path / "shrd"),
                            shards=2).collect()}
-    assert fc == sc and fc
+    want = {
+        (r.band, r.band_sig, r.min_id)
+        for r in lsh_bands(minhash_signatures(_docs(spark, seen)))
+        .groupBy("band", "band_sig")
+        .agg(F.min("doc_id").alias("min_id"))
+        .collect()
+    }
+    assert fc == sc == want
     assert (
         lsh_id_watermark(spark, str(tmp_path / "flat"))
         == lsh_id_watermark(spark, str(tmp_path / "shrd"), shards=2)
@@ -438,15 +494,19 @@ def test_sharded_lsh_equals_unsharded(spark, tmp_path):
 @pytest.mark.slow
 def test_sharded_cms_equals_unsharded(spark, tmp_path):
     """shards=4 CMS: the accumulated sketch relation is identical to
-    the unsharded layout across staggered compactions (SUM is the
-    shard-local merge; cells hash-shard on the merge key)."""
+    shards=1 across staggered compactions (SUM is the shard-local
+    merge; cells hash-shard on the merge key), and both equal the
+    one-shot ``cms_counts`` of every batch's keys."""
+    from faust_spark.operators.sketch import cms_counts
     from faust_spark.streaming.dfs_state import cms_dfs_sink, cms_state_cells
 
     flat = cms_dfs_sink("k", str(tmp_path / "flat"), width=64,
                         compact_every=4)
     shrd = cms_dfs_sink("k", str(tmp_path / "shrd"), width=64,
                         compact_every=4, shards=4)
+    seen = []
     for b in range(11):
+        seen += [b % 5, b % 7, b % 3, 42]
         batch = _df(spark, [b % 5, b % 7, b % 3, 42])
         flat(batch, b)
         shrd(batch, b)
@@ -455,16 +515,19 @@ def test_sharded_cms_equals_unsharded(spark, tmp_path):
     sc = {(r.d, r.bucket): r.cnt for r in
           cms_state_cells(spark, str(tmp_path / "shrd"),
                           shards=4).collect()}
-    assert fc == sc and fc
+    want = {(r.d, r.bucket): r.cnt for r in
+            cms_counts(_df(spark, seen), "k", 4, 64).collect()}
+    assert fc == sc == want
     names = sorted(p.name for p in (tmp_path / "shrd").iterdir())
     assert any(n.startswith("base_s") for n in names)
 
 
 @pytest.mark.slow
 def test_layout_mismatch_reads_fail_loudly(spark, tmp_path):
-    """Reading a sharded state dir with the wrong shards= (or vice
-    versa) must raise, not silently return state missing everything
-    folded into the other layout's bases."""
+    """A state dir used with another shards= than it was written with —
+    read or extended, 1 vs N included — must raise, not silently return
+    state missing everything folded into the other layout's bases; so
+    must a dir in the old unsharded layout (no recorded shard count)."""
     import pytest
 
     from faust_spark.streaming.dfs_state import (
@@ -478,25 +541,32 @@ def test_layout_mismatch_reads_fail_loudly(spark, tmp_path):
     )
     for b in range(4):  # folds at 1 (shard 1) and 2 (shard 0)
         shrd(_df(spark, [b]), b)
-    with pytest.raises(ValueError, match="sharded base"):
-        bloom_state_words(spark, str(tmp_path / "s"))  # shards=1 read
-    # too-few-shards read: detectable once a base above the read's
-    # shard range exists (fabricated — shard 5 of a true shards=8 dir)
-    hi = tmp_path / "s" / "base_s5_v1"
-    hi.mkdir()
-    (hi / "_SUCCESS").touch()
-    with pytest.raises(ValueError, match="must match"):
-        bloom_state_words(spark, str(tmp_path / "s"), shards=2)
-    (hi / "_SUCCESS").unlink()
-    hi.rmdir()
+    for wrong in (1, 3):
+        with pytest.raises(ValueError, match="written with shards=2"):
+            bloom_state_words(spark, str(tmp_path / "s"), shards=wrong)
+    before = sorted(p.name for p in (tmp_path / "s").iterdir())
+    extend = bloom_dedup_dfs_sink(
+        lambda df, b: df.count(), "k", str(tmp_path / "s"),
+        m_bits=1 << 12, compact_every=2,
+    )
+    with pytest.raises(ValueError, match="written with shards=2"):
+        extend(_df(spark, [9]), 4)
+    assert sorted(p.name for p in (tmp_path / "s").iterdir()) == before
     flat = bloom_dedup_dfs_sink(
         lambda df, b: df.count(), "k", str(tmp_path / "f"),
         m_bits=1 << 12, compact_every=2,
     )
     for b in range(3):
         flat(_df(spark, [b]), b)
-    with pytest.raises(ValueError, match="unsharded base"):
+    with pytest.raises(ValueError, match="written with shards=1"):
         bloom_state_words(spark, str(tmp_path / "f"), shards=2)
+    # the old unsharded layout: base_v<id> plus plain deltas, no record
+    old = tmp_path / "old"
+    for name in ("base_v1", "delta_v2"):
+        (old / name).mkdir(parents=True)
+        (old / name / "_SUCCESS").touch()
+    with pytest.raises(ValueError, match="no recorded shard count"):
+        bloom_state_words(spark, str(old))
 
 
 def _vecs(spark, rows):

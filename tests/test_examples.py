@@ -117,3 +117,16 @@ def test_ann_index_serving(spark, tmp_path):
     assert meta["kind"] == "ivfpq" and meta["fingerprint"]["n"] == meta["n"]
     assert len({r.qid for r in rows}) == 5
     assert all(1 <= r.rank <= 3 for r in rows)
+
+
+def test_everseen_dedup(spark, sf_dir, tmp_path):
+    """The Bloom sink through a real checkpointed stream: every user_id
+    surfaces exactly once across all micro-batches."""
+    from everseen_dedup import run
+
+    from faust_spark.catalog import load_table
+
+    out, _ = run(spark, sf_dir, str(tmp_path))
+    got = [r.user_id for r in spark.read.parquet(out).collect()]
+    want = load_table(spark, sf_dir, "events").select("user_id").distinct()
+    assert sorted(got) == sorted(r.user_id for r in want.collect())

@@ -1,20 +1,21 @@
 """DFS-state compaction probe (VERDICT r8 item 7).
 
-The DFS-sharded streaming sketch states (``streaming/dfs_state.py``)
-compact every ``compact_every`` batches by a FULL rewrite: fold base +
-deltas into a new base, prune the superseded files. Two costs scale
-with state size and deserve measurement before anyone trusts them at
-100x:
+The streaming sketch states (``streaming/dfs_state.py``) compact by a
+FULL rewrite of each shard's range: every ``compact_every`` batches
+(one shard; ``shards=N`` staggers N smaller folds over the same cycle)
+the shard's base and later delta slices fold into a new base and the
+superseded files are pruned. Two costs scale with state size and
+deserve measurement before anyone trusts them at 100x:
 
 1. **compaction cost** — the fold reads O(state) and writes O(state)
    every ``compact_every`` batches (amortized O(state/compact_every)
    per batch, executed by executors as a distributed parquet rewrite,
    never on the driver);
-2. **read fan-in** — every batch merges the newest base plus at most
-   ``compact_every - 1`` deltas (bounded by construction in
-   ``_state_parts``: deltas older than the newest base are pruned at
-   compaction), so per-batch read cost is O(state + compact_every *
-   delta)
+2. **read fan-in** — every batch merges each shard's newest base plus
+   at most ``compact_every - 1`` deltas (bounded by construction in
+   ``_state_paths``: deltas older than every shard's newest base are
+   pruned at compaction), so per-batch read cost is
+   O(state + compact_every * delta)
 
 This probe drives each DFS sink (bloom, cms, lsh) through 32 batches
 at a base state size and at 10x that size, recording the per-batch
@@ -44,8 +45,8 @@ COMPACT_EVERY = 8
 
 
 def _fan_in(state_dir: str) -> int:
-    """Version dirs currently contributing to a read (bases + deltas;
-    ``base*`` also matches the sharded layout's per-shard bases)."""
+    """Version dirs currently contributing to a read (per-shard bases
+    + deltas)."""
     return len(glob.glob(os.path.join(state_dir, "base*_v*"))) + len(
         glob.glob(os.path.join(state_dir, "delta_v*"))
     )
