@@ -3584,6 +3584,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from faust_spark.catalog import load_table, normalize_event_time
+    from faust_spark.operators.mat import local_rows
     from faust_spark.operators.sketch import cms_estimate
     from faust_spark.streaming.dfs_state import (
         cms_dfs_sink,
@@ -3593,32 +3594,36 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
     work = tempfile.mkdtemp(prefix="streamcms_")
-    src = os.path.join(work, "src")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    state = os.path.join(work, "ckpt", "cms_state")
-    stream = normalize_event_time(
-        stream_parquet(spark, src, max_files_per_trigger=2)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            cms_dfs_sink("event_type", state, depth=4, width=1024)
+    try:
+        src = os.path.join(work, "src")
+        ev.repartition(4).write.mode("overwrite").parquet(src)
+        state = os.path.join(work, "ckpt", "cms_state")
+        stream = normalize_event_time(
+            stream_parquet(spark, src, max_files_per_trigger=2)
         )
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        # fail loudly: a half-accumulated sketch must never reach the
-        # bit-exact oracle comparison. No cleanup on success — the
-        # returned DataFrame lazily reads the state dir.
-        q.stop()
+        q = (
+            stream.writeStream.foreachBatch(
+                cms_dfs_sink("event_type", state, depth=4, width=1024)
+            )
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            # fail loudly: a half-accumulated sketch must never reach
+            # the bit-exact oracle comparison
+            q.stop()
+            raise TimeoutError(
+                "stream_heavy_hitters: query still running after 300s; "
+                "partial CMS state discarded"
+            )
+        # the merged sketch is model-sized (depth × width cells): collect
+        # it so the work dir can go before the result is read
+        cells = [tuple(r) for r in cms_state_cells(spark, state).collect()]
+    finally:
         shutil.rmtree(work, ignore_errors=True)
-        raise TimeoutError(
-            "stream_heavy_hitters: query still running after 300s; "
-            "partial CMS state discarded"
-        )
-    counts = cms_state_cells(spark, state)
+    counts = local_rows(spark, cells, "d int, bucket bigint, cnt bigint")
     keys = (
         _t(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -6445,21 +6450,22 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower-id vector reaches the threshold (Abbas et al. 2023). Cells via
     the engine-portable double-cast argmin (same contract as ivf_assign,
     iters=0 seed centroids so the oracle is exactly expressible); the
-    pairwise stage is an equi-join on cell, so the quadratic term is
-    capped per cell — and the query LIVES that contract: the cell count
-    is corpus-derived, k = max(8, ceil(n/250)), stated identically in
-    the oracle, so mean cell population is bounded (~250) at any corpus
+    pairwise stage is keyed on cell (one cell-keyed shuffle; the oracle
+    writes it as an equi-join on cell), so the quadratic term is capped
+    per cell — and the query LIVES that contract: the cell count is
+    corpus-derived, k = max(8, ceil(n/250)), stated identically in the
+    oracle, so mean cell population is bounded (~250) at any corpus
     size and the within-cell quadratic term stays linear overall (the
     round-2 fixed-k scale probe showed 66x at 10x without this).
-    Assignment runs in "arrow" mode (r8): the n×k distance flops are
-    unavoidable once k is corpus-derived, but the "join" form paid
-    Catalyst's interpreted higher-order-function overhead on every term
-    of every n×k joined row — the whole cost of the 10× probe. The
-    Arrow form runs the same flops vectorized in numpy with the
-    IDENTICAL fold order (ascending-j (v[j]-c[j])² adds from a 0.0
-    init) and first-minimum tie-break, so values and the oracle's flat
-    CROSS JOIN formulation are bit-for-bit unchanged — a physical swap,
-    not an approximation (probe ratio 9.0× → ~3× at 10×).
+    Assignment and pair scoring run as Arrow numpy passes (r8): the n×k
+    distance flops are unavoidable once k is corpus-derived, but the
+    old broadcast-join form paid Catalyst's interpreted
+    higher-order-function overhead on every term of every n×k joined
+    row — the whole cost of the 10× probe. The Arrow form runs the same
+    flops vectorized with the IDENTICAL fold order (ascending-j
+    (v[j]-c[j])² adds from a 0.0 init) and first-minimum tie-break, so
+    values and the oracle's flat CROSS JOIN formulation are bit-for-bit
+    unchanged (probe ratio 9.0× → ~3× at 10×).
     Threshold 0.42 sits >1e-3 from every observed cosine at both test
     SFs, so the cut is numerically unambiguous."""
     import math
@@ -6470,7 +6476,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(8, math.ceil(e.count() / 250.0))
     seed = e.orderBy("vec_id").limit(k).select("embedding").collect()
     cents = [list(r[0]) for r in seed]
-    return semantic_dedup(e, cents, threshold=0.42, assign_mode="arrow")
+    return semantic_dedup(e, cents, threshold=0.42)
 
 
 @_q(
@@ -8383,7 +8389,10 @@ def stream_livecheck_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-µs runtimes are batching-invariant."""
     import tempfile
 
-    from faust_spark.streaming.livecheck_audit import audit_updates
+    from faust_spark.streaming.livecheck_audit import (
+        audit_state_partitions,
+        audit_updates,
+    )
     from faust_spark.streaming.runner import stream_parquet
 
     execs, sigs, specs = _livecheck_fixture(spark, sf_dir)
@@ -8481,19 +8490,12 @@ def stream_livecheck_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted: list = []
     # GATE-HARNESS ONLY collect; production writes decided verdicts to
     # a sink (the operator itself never collects).
-    # State-store partitions sized to the fixture (r10, same rule shape
-    # as the windowed streaming bench): small replays want few
-    # partitions (per-batch state-store task overhead dominates,
-    # 3 micro-batches multiply it), large replays want the Arrow state
-    # work spread wide. Swept at sf0.1 (7.5k rows, 3 rounds, fresh
-    # checkpoints): 8 parts 5.1-5.3s, 16 3.9-4.7s, 24-25 3.8-4.4s,
-    # 32 3.8-4.6s — n//300 lands 8 at sf0.01 and 25 at sf0.1. The
-    # setting binds at stream start via the fresh checkpoint; restored
-    # after.
+    # State-store partitions sized to the fixture (r10 sweep in
+    # audit_state_partitions); the setting binds at stream start via the
+    # fresh checkpoint and is restored after.
     default_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(32, max(8, int(n_rows) // 300))),
+        "spark.sql.shuffle.partitions", str(audit_state_partitions(n_rows))
     )
     try:
         q = (

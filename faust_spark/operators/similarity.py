@@ -1203,7 +1203,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     assign_mode: str = "flat",
-    physical: str = "arrow",
     centroids: Optional[list[list[float]]] = None,
     assigned: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -1252,44 +1251,23 @@ def ivf_topk(
         )
         if assign_mode == "two_level":
             c = assign_cells_two_level(base, cents, "cv")
-        elif physical == "arrow":
-            # Arrow numpy argmin — bit-identical cells to the join/expr
-            # forms (assign_cells_arrow's fold-order contract), without
-            # the interpreted n×k evaluation or the reattach join
-            c = assign_cells_arrow(base, cents, vec_col="cv", id_col="nid")
-        elif physical == "join":
-            # centroids as a broadcast table (same argmin + tie-break as
-            # the literal expression, constant-size codegen — see
-            # assign_cells_join); reattach the vector for the re-rank
-            c = base.join(
-                assign_cells_join(base, cents, vec_col="cv", id_col="nid"),
-                "nid",
-            )
         else:
-            c = assign_cells(base, cents, "cv")
-    # nprobe nearest cells per query — rank the same distance terms
+            # Arrow numpy argmin — the flat argmin's cells bit-for-bit
+            # (assign_cells_arrow's fold-order contract), without an
+            # interpreted n×k evaluation or a reattach join
+            c = assign_cells_arrow(base, cents, vec_col="cv", id_col="nid")
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
     )
-    if physical in ("join", "arrow"):
-        qp = probe_cells_join(q, cents, nprobe)
-    else:
-        qp = q.withColumn(
-            "cell", F.explode(probe_cells_expr(cents, "qv", nprobe))
-        )
+    qp = probe_cells_join(q, cents, nprobe)
     paired = c.join(F.broadcast(qp), "cell").filter(
         F.col("qid") != F.col("nid")
     )
-    if physical == "arrow":
-        # the re-rank similarity is the serving hot loop (|probed| ×
-        # |queries| rows × dim terms); it only decides the approximate
-        # RANKING, so the einsum scorer applies — the recall contract's
-        # exact side (cosine_topk) stays on the fold-exact expression
-        scored = cosine_rows_arrow(paired, "qv", "cv", keep=["qid", "nid"])
-    else:
-        scored = paired.withColumn(
-            "sim", cosine_expr(F.col("qv"), F.col("cv"))
-        )
+    # the re-rank similarity is the serving hot loop (|probed| ×
+    # |queries| rows × dim terms); it only decides the approximate
+    # RANKING, so the einsum scorer applies — the recall contract's
+    # exact side (cosine_topk) stays on the fold-exact expression
+    scored = cosine_rows_arrow(paired, "qv", "cv", keep=["qid", "nid"])
     w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1422,32 +1400,6 @@ def pq_codebooks(
     )
 
 
-def pq_encode(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    vec_col: str = "embedding",
-    code_col: str = "codes",
-) -> DataFrame:
-    """Encode each vector as ``m`` codebook cell ids (narrow map, no
-    shuffle): per subspace, the same argmin-over-centroids expression as
-    ``assign_cells`` over the sliced vector."""
-    d = len(books[0][0])
-    codes = []
-    for j, book in enumerate(books):
-        sub = F.slice(F.col(vec_col), j * d + 1, d)
-        terms = []
-        for i, c in enumerate(book):
-            carr = F.array(*[F.lit(v) for v in c])
-            dist = F.aggregate(
-                F.zip_with(sub, carr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            terms.append(F.struct(dist.alias("d"), F.lit(i).alias("i")))
-        codes.append(F.array_min(F.array(*terms))["i"])
-    return df.withColumn(code_col, F.array(*codes))
-
-
 def pq_encode_join(
     df: DataFrame,
     books: list[list[list[float]]],
@@ -1455,20 +1407,19 @@ def pq_encode_join(
     vec_col: str = "embedding",
     id_col: str = "nid",
 ) -> DataFrame:
-    """(id[, cell], codes) with the codebooks as broadcast TABLES instead
-    of literal argmin expressions.
+    """(id[, cell], codes) with the codebooks as broadcast TABLES, not
+    literal argmin expressions (whose Catalyst analysis and Janino
+    compile grow with m*ksub*dim literals).
 
-    :func:`pq_encode` / :func:`assign_cells` bake every centroid into the
-    expression tree, so Catalyst analysis and Janino compile time grow
-    with m*ksub*dim literals — measured on the fixture, the compile
-    dominates the whole encode.  Here the corpus is posexploded once into
-    (id, group, subvec) long form, joined against a broadcast (group,
-    cell, centroid) table (m*ksub + n_cells rows — always model-sized),
-    and a partial-aggregated ``min(struct(dist, cell))`` per (id, group)
-    picks each code with the same lexicographic tie-break as the literal
-    form — identical codes, constant-size expressions, one extra shuffle.
-    When ``coarse`` is given the IVF cell rides the same scan as group
-    ``m`` over the full vector.
+    The corpus is posexploded once into (id, group, subvec) long form,
+    joined against a broadcast (group, cell, centroid) table (m*ksub +
+    n_cells rows — always model-sized), and a partial-aggregated
+    ``min(struct(dist, cell))`` per (id, group) picks each code: the
+    squared distance folds dimensions in ascending order from 0.0, and
+    the lowest code wins a tie (the first-minimum argmin,
+    ``tests/test_similarity.py`` pins it). Constant-size expressions,
+    one shuffle. When ``coarse`` is given the IVF cell rides the same
+    scan as group ``m`` over the full vector.
     """
     m = len(books)
     d = len(books[0][0])
@@ -1567,22 +1518,17 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "qid",
-    physical: str = "join",
 ) -> DataFrame:
     """PQ two-stage top-k: ADC shortlist over codes, exact re-rank.
 
-    ``physical="join"`` (default) encodes and scores with the codebooks
-    as broadcast tables (:func:`pq_encode_join` + :func:`adc_lut` — here
-    the LUT has no cell column: every (qid, j, code) row applies
-    corpus-wide); ``"literal"`` bakes them into codegen expressions —
-    see :func:`ivfpq_topk` for the trade-off.  Codes are identical
-    either way.
-
     Stage 1 scans only the code table (``m`` small ints per vector —
-    the 100 TB corpus is a few hundred GB of codes): approximate
-    distance = Σ_j ‖q_j − book_j[code_j]‖², where the code indexes the
-    broadcast codebook literal (``element_at``) so the whole distance is
-    one codegen expression — no UDF and no decode of corpus vectors.
+    the 100 TB corpus is a few hundred GB of codes, encoded by
+    :func:`pq_encode_join`): approximate distance = Σ_j ‖q_j −
+    book_j[code_j]‖², read from the per-query lookup table of
+    :func:`adc_lut` (here without a cell column: every (qid, j, code)
+    row applies corpus-wide). The exploded codes hash-join that
+    broadcast LUT and a partial aggregation sums the m lookups — no
+    float math per corpus row, no UDF, no decode of corpus vectors.
     Per-query ``shortlist`` candidates survive (window rank).
 
     Stage 2 fetches full vectors for candidates ONLY (an equi-join on
@@ -1597,31 +1543,19 @@ def pq_topk(
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
     )
-    if physical == "join":
-        enc = pq_encode_join(
-            corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
-            books,
-            vec_col=vec_col,
-        )
-        lut = adc_lut(q, books)
-        expl = enc.select("nid", F.posexplode("codes").alias("j", "code"))
-        scored = (
-            expl.join(F.broadcast(lut), ["j", "code"])
-            .filter(F.col("qid") != F.col("nid"))
-            .groupBy("qid", "nid")
-            .agg(F.sum("ldist").alias("adist"))
-        )
-    else:
-        enc = pq_encode(
-            corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
-            books,
-            vec_col=vec_col,
-        ).select("nid", "codes")
-        scored = (
-            enc.crossJoin(F.broadcast(q))
-            .filter(F.col("qid") != F.col("nid"))
-            .withColumn("adist", _adc_expr(books, "qv", "codes"))
-        )
+    enc = pq_encode_join(
+        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
+        books,
+        vec_col=vec_col,
+    )
+    lut = adc_lut(q, books)
+    expl = enc.select("nid", F.posexplode("codes").alias("j", "code"))
+    scored = (
+        expl.join(F.broadcast(lut), ["j", "code"])
+        .filter(F.col("qid") != F.col("nid"))
+        .groupBy("qid", "nid")
+        .agg(F.sum("ldist").alias("adist"))
+    )
     wa = W.partitionBy("qid").orderBy(F.asc("adist"), F.col("nid"))
     cand = (
         scored.withColumn("arank", F.row_number().over(wa))
@@ -1646,35 +1580,12 @@ def pq_topk(
     )
 
 
-def _adc_expr(
-    books: list[list[list[float]]], qv_col: str, codes_col: str
-) -> Column:
-    """Asymmetric-distance (ADC) expression: Σ_j ‖q_j − book_j[code_j]‖²
-    with the codebooks as broadcast literals — one codegen expression
-    over the code table, no decode of corpus vectors."""
-    d = len(books[0][0])
-    terms = []
-    for j, book in enumerate(books):
-        qsub = F.slice(F.col(qv_col), j * d + 1, d)
-        book_lit = F.array(*[F.array(*[F.lit(v) for v in c]) for c in book])
-        cent = F.element_at(book_lit, F.element_at(codes_col, j + 1) + 1)
-        terms.append(
-            F.aggregate(
-                F.zip_with(qsub, cent, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    return sum(terms[1:], terms[0])
-
-
 def probe_cells_join(
     q: DataFrame, cents: list[list[float]], nprobe: int
 ) -> DataFrame:
     """(qid, qv, cell): the ``nprobe`` nearest cells per query via a
-    broadcast centroid TABLE + per-query rank — value-identical to
-    exploding :func:`probe_cells_expr` (same ``ORDER BY dist, cell``
-    tie-break as the lexicographic struct sort), but the expression stays
+    broadcast centroid TABLE + per-query rank (``ORDER BY dist, cell``:
+    the lowest cell wins a distance tie); the expression stays
     constant-size as ``n_cells`` grows.  The query side is tiny, so the
     rank window is per-qid over n_cells rows."""
     # local_rows (guide §4): LocalTableScan, no Python re-eval per action
@@ -1697,27 +1608,6 @@ def probe_cells_join(
         .withColumn("pr", F.row_number().over(wq))
         .filter(F.col("pr") <= nprobe)
         .select("qid", "qv", "cell")
-    )
-
-
-def probe_cells_expr(
-    cents: list[list[float]], qv_col: str, nprobe: int
-) -> Column:
-    """The ``nprobe`` nearest cell ids for a query vector, as one
-    array-of-structs sort expression (shared by ivf_topk / ivfpq_topk)."""
-    probes = []
-    for i, cent in enumerate(cents):
-        carr = F.array(*[F.lit(v) for v in cent])
-        d = F.aggregate(
-            F.zip_with(F.col(qv_col), carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        probes.append(F.struct(d.alias("d"), F.lit(i).alias("i")))
-    return F.slice(
-        F.transform(F.array_sort(F.array(*probes)), lambda s: s["i"]),
-        1,
-        nprobe,
     )
 
 
@@ -1761,7 +1651,6 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "qid",
-    physical: str = "join",
     index: Optional[tuple] = None,
     codes: Optional[DataFrame] = None,
 ) -> DataFrame:
@@ -1779,25 +1668,17 @@ def ivfpq_topk(
     encoding is the standard refinement once cells are large enough for
     the per-cell offset to dominate distortion.
 
-    ``physical`` picks the plan shape, not the semantics:
-
-    - ``"join"`` (default): codebooks are broadcast TABLES.  Encode via
-      :func:`pq_encode_join` (one long-form scan + partial-agg argmin),
-      scoring via the FAISS precomputed-LUT trick (:func:`adc_lut` —
-      per-query (j, code) → distance rows, broadcast hash-joined against
-      the exploded code table and partial-agg summed).  Expression size
-      and compile time are CONSTANT in n_cells/m/ksub, so this is the
-      shape that survives k growing with the corpus.
-    - ``"literal"``: every centroid baked into one codegen expression
-      (:func:`pq_encode` / :func:`_adc_expr`) — zero extra shuffles and
-      bit-pinned summation order, but analysis + Janino compile grow
-      with m·ksub·dim literals; the exact-reference form, kept for
-      parity with ``pq_topk`` and for small fixed codebooks.
-
-    Both produce the same codes (same lexicographic argmin tie-break);
-    LUT summation reorders the m float adds, which can flip
-    near-degenerate shortlist tails — recall is contract-checked either
-    way (same recall@5 gate as ivf_topk / pq_ann_topk).
+    The codebooks are broadcast TABLES: encoding runs through
+    :func:`pq_encode_join` (one long-form scan + partial-agg argmin,
+    the coarse cell riding the same scan) and scoring through the FAISS
+    precomputed-LUT trick (:func:`adc_lut` — per-(query, probed cell)
+    (j, code) → distance rows, broadcast hash-joined against the
+    exploded code table and partial-agg summed). Expression size and
+    compile time are CONSTANT in n_cells/m/ksub, so the plan survives
+    k growing with the corpus. The LUT sum adds the m lookups in
+    aggregation order, which can flip near-degenerate shortlist tails;
+    recall is contract-checked (same recall@5 gate as ivf_topk /
+    pq_ann_topk).
 
     **Index reuse**: pass ``index=(cents, books)`` from
     :func:`ivfpq_fit` to skip the quantizer fits, and ``codes=`` — the
@@ -1805,8 +1686,7 @@ def ivfpq_topk(
     (the compact index artifact, written bucketed by cell at scale) —
     to skip corpus encoding; the per-call cost is then probe + ADC over
     the probed code buckets + shortlist re-rank only. Inline fit stays
-    the default for one-shot use. (``codes`` applies to the default
-    ``physical="join"`` path.)
+    the default for one-shot use.
 
     Returns (qid, nid, rank).
     """
@@ -1828,51 +1708,32 @@ def ivfpq_topk(
             id_col=id_col,
         )
         cents, books = fitted[0], fitted[1:]
-    # code table WITH cell id: (nid, cell, codes) — at scale this is the
-    # compact index artifact, written once and bucketed by cell
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
     )
-    if physical == "join":
-        qp = probe_cells_join(q, cents, nprobe)
-        enc = (
-            codes
-            if codes is not None
-            else pq_encode_join(
-                corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
-                books,
-                coarse=cents,
-                vec_col=vec_col,
-            )
-        )
-        lut = adc_lut(qp, books)
-        expl = enc.select(
-            "nid", "cell", F.posexplode("codes").alias("j", "code")
-        )
-        scored = (
-            expl.join(F.broadcast(lut), ["cell", "j", "code"])
-            .filter(F.col("qid") != F.col("nid"))
-            .groupBy("qid", "nid")
-            .agg(F.sum("ldist").alias("adist"))
-        )
-    else:
-        qp = q.withColumn(
-            "cell", F.explode(probe_cells_expr(cents, "qv", nprobe))
-        )
-        enc = pq_encode(
-            assign_cells(
-                corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
-                cents,
-                vec_col,
-            ),
+    qp = probe_cells_join(q, cents, nprobe)
+    # code table WITH cell id: (nid, cell, codes) — at scale this is the
+    # compact index artifact, written once and bucketed by cell
+    enc = (
+        codes
+        if codes is not None
+        else pq_encode_join(
+            corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
             books,
+            coarse=cents,
             vec_col=vec_col,
-        ).select("nid", "cell", "codes")
-        scored = (
-            enc.join(F.broadcast(qp), "cell")
-            .filter(F.col("qid") != F.col("nid"))
-            .withColumn("adist", _adc_expr(books, "qv", "codes"))
         )
+    )
+    lut = adc_lut(qp, books)
+    expl = enc.select(
+        "nid", "cell", F.posexplode("codes").alias("j", "code")
+    )
+    scored = (
+        expl.join(F.broadcast(lut), ["cell", "j", "code"])
+        .filter(F.col("qid") != F.col("nid"))
+        .groupBy("qid", "nid")
+        .agg(F.sum("ldist").alias("adist"))
+    )
     wa = W.partitionBy("qid").orderBy(F.asc("adist"), F.col("nid"))
     cand = (
         scored.withColumn("arank", F.row_number().over(wa))
@@ -2941,10 +2802,8 @@ __all__ = [
     "ivfpq_fit",
     "ivfpq_topk",
     "pq_codebooks",
-    "pq_encode",
     "pq_encode_join",
     "adc_lut",
     "pq_topk",
-    "probe_cells_expr",
     "probe_cells_join",
 ]

@@ -11,11 +11,24 @@ execution (state store, watermarks, output modes).
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+#: Hadoop ``GlobPattern`` metacharacters, plus ``!``/``^``, which negate
+#: a character class when they open it
+_GLOB_META = frozenset("\\*?[]{}!^")
+
+
+def _file_glob(path: str) -> str:
+    """A Hadoop glob matching exactly the one file ``path``: every glob
+    metacharacter escaped, and the last character wrapped in a class so
+    the path IS a glob. A plain file path fails as a stream source
+    (``Option 'basePath' must be a directory``); a glob does not."""
+    esc = [("\\" + c if c in _GLOB_META else c) for c in path]
+    return "".join(esc[:-1]) + "[" + esc[-1] + "]"
 
 
 def stream_parquet(
@@ -26,13 +39,11 @@ def stream_parquet(
     """Open a parquet file/dir as a stream (schema inferred from a batch
     peek). ``max_files_per_trigger`` forces multi-batch replay — useful to
     prove an operator is batching-invariant."""
-    schema = spark.read.parquet(path).schema
     if os.path.isfile(path):
-        # FileStreamSource requires a directory; expose the file through a
-        # scratch dir of symlinks (no data copied).
-        d = tempfile.mkdtemp(prefix="fs_stream_")
-        os.symlink(path, os.path.join(d, os.path.basename(path)))
-        path = d
+        # the file stream source lists a directory or a glob: read the
+        # one file through a glob naming it
+        path = _file_glob(path)
+    schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

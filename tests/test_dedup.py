@@ -506,52 +506,81 @@ def test_jaccard_prefix_joins_only_prefix_tokens(spark):
     )
 
 
-def test_semantic_dup_cells_chunked_matches_relational(spark):
-    """The Arrow per-cell pairwise marking must agree with the
-    relational equi-join form on every row — including when a cell is
-    larger than the slab size, so flags accumulate across chunks."""
+def test_semantic_dup_cells_chunked_matches_brute_force(spark):
+    """semantic_dedup agrees on every row with a plain-Python brute
+    force — squared distances folded over ascending dimensions from
+    0.0, lowest cell on ties, within-cell cosine as the ascending dot
+    fold over the norm product, a row flagged iff a lower-id row of its
+    cell reaches the threshold — including when a cell is larger than
+    the slab size, so flags accumulate across chunks."""
+    import math
+
     import numpy as np
 
     from faust_spark.operators.dedup import (
         _semantic_dup_cells,
         semantic_dedup,
     )
+    from faust_spark.operators.similarity import assign_cells_arrow
 
     rng = np.random.RandomState(3)
     base = np.float32(rng.randn(40, 5))
     # plant near-dups: rows 40..79 are rows 0..39 nudged by a constant
     X = np.vstack([base, base + np.float32(1e-4)])
+    rows = [[float(v) for v in x] for x in X]
     df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
-        "vec_id bigint, embedding array<float>",
+        list(enumerate(rows)), "vec_id bigint, embedding array<float>"
     )
-    cents = [[float(v) for v in X[i]] for i in range(4)]
-    rel = {
-        (r.vec_id): (r.cell, r.is_dup)
-        for r in semantic_dedup(
-            df, cents, threshold=0.9, assign_mode="join"
-        ).collect()
+    cents = rows[:4]
+
+    def fold(terms):
+        acc = 0.0
+        for t in terms:
+            acc += t
+        return acc
+
+    cell = []
+    for v in rows:
+        best, best_c = math.inf, 0
+        for ci, c in enumerate(cents):
+            dist = fold((a - b) * (a - b) for a, b in zip(v, c))
+            if dist < best:  # strict: the lowest cell wins a tie
+                best, best_c = dist, ci
+        cell.append(best_c)
+    nrm = [math.sqrt(fold(a * a for a in v)) for v in rows]
+    expect = {
+        i: (
+            cell[i],
+            any(
+                cell[h] == cell[i]
+                and fold(a * b for a, b in zip(rows[h], rows[i]))
+                / (nrm[h] * nrm[i])
+                >= 0.9
+                for h in range(i)  # ids ascend with the row index
+            ),
+        )
+        for i in range(len(rows))
     }
-    arrow = {
-        (r.vec_id): (r.cell, r.is_dup)
-        for r in semantic_dedup(
-            df, cents, threshold=0.9, assign_mode="arrow"
-        ).collect()
+    got = {
+        r.vec_id: (r.cell, r.is_dup)
+        for r in semantic_dedup(df, cents, threshold=0.9).collect()
     }
-    assert rel == arrow
+    assert got == expect
     # slab boundary: chunk smaller than the cell population must not
     # change anything
-    from faust_spark.operators.similarity import assign_cells_arrow
-
-    a = assign_cells_arrow(df, cents)
     tiny = {
         r.vec_id: (r.cell, r.is_dup)
         for r in _semantic_dup_cells(
-            a, threshold=0.9, id_col="vec_id", vec_col="embedding", chunk=3
+            assign_cells_arrow(df, cents),
+            threshold=0.9,
+            id_col="vec_id",
+            vec_col="embedding",
+            chunk=3,
         ).collect()
     }
-    assert tiny == arrow
-    assert any(d for _, d in arrow.values())  # the planted dups are found
+    assert tiny == expect
+    assert any(d for _, d in expect.values())  # the planted dups are found
+    assert len(set(cell)) > 1  # more than one cell is exercised
 
 
 @pytest.mark.slow

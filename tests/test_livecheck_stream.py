@@ -7,7 +7,10 @@ import pytest
 import datetime as dt
 import time
 
-from faust_spark.streaming.livecheck_audit import audit_updates
+from faust_spark.streaming.livecheck_audit import (
+    audit_state_partitions,
+    audit_updates,
+)
 from faust_spark.streaming.runner import stream_parquet
 
 SCHEMA = (
@@ -41,6 +44,16 @@ def _run(spark, src, ckpt, emitted, require_order=True):
 
 
 @pytest.mark.slow
+def test_audit_state_partitions_rule():
+    """One state-store partition per 300 audit rows, clamped to [8, 32]
+    (sf0.01 lands on 8, sf0.1's 7.5k rows on 25)."""
+    assert audit_state_partitions(0) == 8
+    assert audit_state_partitions(2_699) == 8
+    assert audit_state_partitions(7_500) == 25
+    assert audit_state_partitions(9_600) == 32
+    assert audit_state_partitions(10**9) == 32
+
+
 def test_decisions_across_batches(spark, tmp_path):
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")

@@ -234,17 +234,6 @@ def test_boilerplate_reuses_chunk_hash_exchange(spark, sf_dir):
     assert "ReusedExchange" in plan
 
 
-@pytest.mark.slow
-def test_pq_encode_is_narrow(spark, sf_dir):
-    """PQ encoding is a narrow map: no exchange between scan and codes."""
-    from faust_spark.operators.similarity import pq_codebooks, pq_encode
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_codebooks(emb, m=8, ksub=16, iters=1)
-    enc = pq_encode(emb, books).select("vec_id", "codes")
-    assert "Exchange" not in plan_of(enc)
-
-
 def test_label_propagation_argmax_has_no_window_sort(
     spark, sf_dir, monkeypatch
 ):

@@ -60,7 +60,7 @@ def test_pq_roundtrip_codes_and_recall(spark, sf_dir):
     recall beats random chance by a wide margin (≥60% of 10 queries)."""
     from faust_spark.operators.similarity import (
         pq_codebooks,
-        pq_encode,
+        pq_encode_join,
         pq_topk,
     )
 
@@ -68,12 +68,16 @@ def test_pq_roundtrip_codes_and_recall(spark, sf_dir):
     books = pq_codebooks(emb, m=8, ksub=16, iters=2)
     assert len(books) == 8 and all(len(b) <= 16 for b in books)
     assert all(len(c) == 8 for b in books for c in b)  # 64/8 dims each
-    enc = pq_encode(emb.limit(50), books)
-    rows = enc.select("vec_id", "codes").collect()
+    enc = pq_encode_join(emb.limit(50), books, id_col="vec_id")
+    rows = enc.collect()
+    assert len(rows) == 50
     assert all(len(r.codes) == 8 for r in rows)
     assert all(0 <= c < 16 for r in rows for c in r.codes)
-    again = {r.vec_id: r.codes for r in pq_encode(emb.limit(50), books)
-             .select("vec_id", "codes").collect()}
+    again = {
+        r.vec_id: r.codes
+        for r in pq_encode_join(emb.limit(50), books, id_col="vec_id")
+        .collect()
+    }
     assert {r.vec_id: r.codes for r in rows} == again
 
     q = emb.filter(F.col("vec_id") < 10).select(
@@ -479,6 +483,61 @@ def test_assign_cells_arrow_matches_join_exactly(spark):
     # the arrow form also passes the vector through unchanged
     row = assign_cells_arrow(df, cents).filter("vec_id = 5").collect()[0]
     assert list(np.float32(row["embedding"])) == list(X[5])
+
+
+def test_pq_encode_join_codes_match_first_minimum_argmin(spark):
+    """pq_encode_join's codes (and its coarse cell) equal a plain-Python
+    argmin per subspace: squared distance folded over ascending
+    dimensions from 0.0, the FIRST minimum winning — so a duplicated
+    codebook centroid always resolves to the lower code."""
+    import numpy as np
+
+    from faust_spark.operators.similarity import pq_encode_join
+
+    rng = np.random.RandomState(5)
+    X = np.float32(rng.randn(60, 6))
+    rows = [[float(v) for v in x] for x in X]
+    df = spark.createDataFrame(
+        list(enumerate(rows)), "nid bigint, embedding array<float>"
+    )
+    m, d = 3, 2
+    # code 2 duplicates code 1 in every subspace, coarse cell 2 duplicates
+    # cell 1: vectors 1 and 3 sit at distance 0 from both copies
+    books = [
+        [rows[i][j * d:(j + 1) * d] for i in (0, 1, 1, 2)] for j in range(m)
+    ]
+    coarse = [rows[i] for i in (0, 3, 3, 4)]
+
+    def argmin(v, cents):
+        best, best_i = float("inf"), 0
+        for i, c in enumerate(cents):
+            acc = 0.0
+            for a, b in zip(v, c):
+                acc += (a - b) * (a - b)
+            if acc < best:  # strict: first minimum
+                best, best_i = acc, i
+        return best_i
+
+    want = {
+        n: (
+            [argmin(v[j * d:(j + 1) * d], books[j]) for j in range(m)],
+            argmin(v, coarse),
+        )
+        for n, v in enumerate(rows)
+    }
+    got = {
+        r["nid"]: (list(r["codes"]), r["cell"])
+        for r in pq_encode_join(df, books, coarse=coarse).collect()
+    }
+    assert got == want
+    assert want[1][0] == [1, 1, 1] and want[3][1] == 1  # ties exercised
+    assert all(2 not in codes and cell != 2 for codes, cell in got.values())
+    # without ``coarse`` the codes are the same
+    plain = {
+        r["nid"]: list(r["codes"])
+        for r in pq_encode_join(df, books).collect()
+    }
+    assert plain == {n: codes for n, (codes, _) in want.items()}
 
 
 def test_rp_shortlist_recall_and_rerank_exactness(spark, sf_dir):

@@ -52,6 +52,35 @@ def test_streaming_counts_match_batch(spark, multi_file_events):
     assert got == expected
 
 
+@pytest.mark.parametrize("name", ["events.parquet", "e[v]{1,2}*?!^.parquet"])
+def test_single_file_stream_reads_every_row_leaves_no_temp_dir(
+    spark, tmp_path, name
+):
+    """One parquet file streams through a glob naming exactly it: every
+    row arrives, glob metacharacters in its path stay literal (a sibling
+    the unescaped pattern would match is not read), and no scratch dir
+    is left behind in the temp dir."""
+    import glob
+    import shutil
+    import tempfile
+
+    d = tmp_path / "d!^[x]"
+    stage = str(tmp_path / "stage")
+    spark.range(1000).coalesce(1).write.parquet(stage)
+    (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+    d.mkdir()
+    shutil.copy(part, d / name)
+    spark.range(5).coalesce(1).write.parquet(str(tmp_path / "decoy"))
+    (decoy,) = glob.glob(str(tmp_path / "decoy" / "part-*.parquet"))
+    # the unescaped pattern of the second name would match this file
+    shutil.copy(decoy, d / "ev1x!^.parquet")
+    before = set(os.listdir(tempfile.gettempdir()))
+    s = stream_parquet(spark, str(d / name), max_files_per_trigger=1)
+    out = run_to_memory(s, output_mode="append").collect()
+    assert sorted(r.id for r in out) == list(range(1000))
+    assert set(os.listdir(tempfile.gettempdir())) <= before
+
+
 def test_stateful_counter_multibatch_no_gaps_no_dups(
     spark, multi_file_events
 ):

@@ -1,5 +1,8 @@
 """Agent test harness (reference Agent.test_context parity)."""
 
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 
 from faust_spark import App
@@ -26,5 +29,13 @@ def test_feed_stream_agent(spark):
         return df.groupBy("k").agg(F.count("*").alias("cnt"))
 
     rows = [("x",), ("x",), ("y",)]
+    def staged():
+        return {
+            n for n in os.listdir(tempfile.gettempdir())
+            if n.startswith("feed_stream_")
+        }
+
+    before = staged()
     out = {r.k: r.cnt for r in feed_stream(counts, rows, "k string", "complete")}
     assert out == {"x": 2, "y": 1}
+    assert staged() <= before  # the staged parquet dir is removed

@@ -242,7 +242,10 @@ def livecheck_probe(spark, entry, scale: str, sf_dir: str, batches: int) -> dict
     decided-row count) with per-batch completion timing."""
     from pyspark.sql import functions as F
 
-    from faust_spark.streaming.livecheck_audit import audit_updates
+    from faust_spark.streaming.livecheck_audit import (
+        audit_state_partitions,
+        audit_updates,
+    )
     from faust_spark.streaming.runner import stream_parquet
 
     execs, sigs, _specs = entry._livecheck_fixture(spark, sf_dir)
@@ -315,8 +318,7 @@ def livecheck_probe(spark, entry, scale: str, sf_dir: str, batches: int) -> dict
 
     default_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(32, max(8, int(n_rows) // 300))),
+        "spark.sql.shuffle.partitions", str(audit_state_partitions(n_rows))
     )
     try:
         start = time.time()
