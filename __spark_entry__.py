@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2403,7 +2403,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     return normalize_event_time(s)
 
 
-def _stream_state_parts(spark: SparkSession, sf_dir: str) -> str:
+def _stream_state_parts(spark: SparkSession, sf_dir: str) -> int:
     """State-store partition count for the stream gates:
     ``streaming.runner.state_partitions`` (the rule bench.py's
     windowed-eps block also applies), capped at the session width. The
@@ -2413,36 +2413,16 @@ def _stream_state_parts(spark: SparkSession, sf_dir: str) -> str:
     partitioning-invariant, only the fixed overhead changes."""
     from faust_spark.streaming.runner import state_partitions
 
-    default = spark.conf.get("spark.sql.shuffle.partitions")
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         import pyarrow.parquet as _pq
 
         n = _pq.read_metadata(
             os.path.join(sf_dir, "events.parquet")
         ).num_rows
-        return str(state_partitions(n, int(default)))
+        return state_partitions(n, default)
     except Exception:
         return default
-
-
-class _state_parts_for:
-    """Context manager: shuffle (= state) partitions scaled to the
-    stream's keyed-state volume for the duration of one streaming run,
-    session width restored after (the count binds at query start)."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str):
-        self.spark, self.sf_dir = spark, sf_dir
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            _stream_state_parts(self.spark, self.sf_dir),
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
 
 
 @_q(
@@ -2459,9 +2439,12 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     source → windowed agg in the state store → complete-mode memory sink
     (availableNow trigger). Hash-matches the same oracle as the batch
     form — the streaming path computes the identical result."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir)
         agg = s.groupBy(F.window("ts", "3600 seconds"), "event_type").agg(
             F.count(F.lit(1)).alias("cnt"), _dec_sum("value")
@@ -2489,9 +2472,12 @@ def stream_window_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark = expires (600 s), append output mode — a window's final
     row emits exactly when it closes. The oracle selects windows whose
     end precedes the terminal watermark (max event time - 600 s)."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir)
         agg = (
             s.withWatermark("ts", "600 seconds")
@@ -2515,12 +2501,15 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative count+sum per user as a native update-mode streaming
     aggregation (state-store buffer, no Python worker); final value per
     key = max over emissions (batching-invariant)."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
     from faust_spark.streaming.state import stateful_counter
 
     # fewer state partitions = fewer state-store commits per batch (the
     # count is fixed at query start): the shared keyed-state-volume rule
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir)
         counted = stateful_counter(
             s.groupBy("user_id"), "user_id", sum_col="value"
@@ -2542,9 +2531,12 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (every row duplicated) → ``dropDuplicates`` on the key with a
     watermark bounding the dedup state → exactly the original rows. The
     state-store dedup is the exactly-once ingestion building block."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s1 = _events_stream(spark, sf_dir)
         s2 = _events_stream(spark, sf_dir)
         doubled = s1.unionByName(s2).select(
@@ -2588,6 +2580,63 @@ def _mh_oracle_pieces() -> tuple[str, str, str]:
 _MH_NIBBLES, _MH_A, _MH_B = _mh_oracle_pieces()
 
 
+def _replay_ids(
+    spark: SparkSession,
+    label: str,
+    fixture: DataFrame,
+    id_col: str,
+    wrap: Callable,
+    ordered: bool,
+) -> DataFrame:
+    """The id-emitting dedup gates' replay: ``fixture`` streams through
+    the DFS-state sink ``wrap(sink, state_dir)`` builds, and the ids it
+    lets through come back as a one-column DataFrame.
+
+    The fixture replays as 4 part files. ``ordered`` writes ascending
+    ``id_col`` ranges (``runner.write_ordered``) delivered one per
+    micro-batch, the banded sinks' ordering contract; otherwise 4
+    round-robin files replay 2 per trigger. The sink's state rides under
+    the checkpoint root: one durability domain for progress and state.
+
+    GATE-HARNESS ONLY: the collect() in ``sink`` funnels survivors into
+    the comparable DataFrame the driver hashes. The operators never
+    collect; production pipelines point the sink at a parquet or Kafka
+    writer (examples/everseen_dedup.py)."""
+    import pandas as pd
+
+    from faust_spark.streaming.runner import (
+        drain,
+        stream_parquet,
+        write_ordered,
+    )
+
+    emitted: list = []
+
+    def sink(df: DataFrame, bid: int) -> None:
+        emitted.extend(int(r[0]) for r in df.select(id_col).collect())
+
+    with tempfile.TemporaryDirectory(prefix=f"{label}_") as work:
+        src, ckpt = os.path.join(work, "src"), os.path.join(work, "ckpt")
+        if ordered:
+            write_ordered(fixture, src, 4, id_col)
+        else:
+            fixture.repartition(4).write.parquet(src)
+        stream = stream_parquet(
+            spark, src, max_files_per_trigger=1 if ordered else 2
+        )
+        drain(
+            stream.writeStream.foreachBatch(
+                wrap(sink, os.path.join(ckpt, "state"))
+            )
+            .outputMode("append")
+            .option("checkpointLocation", ckpt),
+            label,
+        )
+    return spark.createDataFrame(
+        pd.DataFrame({id_col: pd.Series(sorted(emitted), dtype="int64")})
+    )
+
+
 @_q(
     "stream_everseen_dedup",
     """
@@ -2608,60 +2657,17 @@ def stream_everseen_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability for the fixture cardinalities below ~1e-6, i.e.
     deterministic in practice; the bounded-FP and replay contracts are
     pinned in tests/test_dfs_state.py."""
-    import tempfile
-
-    from faust_spark.catalog import load_table, normalize_event_time
     from faust_spark.streaming.dfs_state import bloom_dedup_dfs_sink
-    from faust_spark.streaming.runner import stream_parquet
 
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    work = tempfile.mkdtemp(prefix="everseen_")
-    src = os.path.join(work, "src")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-
-    emitted: list = []
-
-    # GATE-HARNESS ONLY: this collect() funnels survivors into the
-    # comparable DataFrame the driver hashes — it is NOT the production
-    # usage pattern (the operator itself never collects; real pipelines
-    # write survivors to a sink, see examples/everseen_dedup.py's
-    # parquet sink).
-    def sink(df: DataFrame, bid: int) -> None:
-        emitted.extend(r.user_id for r in df.select("user_id").collect())
-
-    # state rides under the same root as the checkpoint — one
-    # durability domain for progress and state
-    wrapped = bloom_dedup_dfs_sink(
-        sink, "user_id", os.path.join(work, "ckpt", "bloom_state"),
-        m_bits=1 << 22,
-    )
-    stream = normalize_event_time(
-        stream_parquet(spark, src, max_files_per_trigger=2)
-    )
-    q = (
-        stream.writeStream.foreachBatch(wrapped)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # fail loudly on timeout: a partial emitted set must never pose
-        # as the gate answer (same contract as stream_lsh_dedup)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_everseen_dedup: query still running after 300s;"
-                f" partial emitted set ({len(emitted)} ids) discarded"
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    import pandas as _pd
-
-    return spark.createDataFrame(
-        _pd.DataFrame(
-            {"user_id": _pd.Series(sorted(emitted), dtype="int64")}
-        )
+    return _replay_ids(
+        spark,
+        "stream_everseen_dedup",
+        _t(spark, sf_dir, "events").select("user_id", "ts"),
+        "user_id",
+        lambda sink, state: bloom_dedup_dfs_sink(
+            sink, "user_id", state, m_bits=1 << 22
+        ),
+        ordered=False,
     )
 
 
@@ -2709,66 +2715,15 @@ def stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonically assigned doc ids); the emitted set then equals the
     batch-agnostic NOT-EXISTS predicate the oracle computes, regardless
     of where the batch boundaries fall."""
-    import tempfile
-
-    import pandas as pd
-
-    from faust_spark.catalog import load_table
     from faust_spark.streaming.dfs_state import lsh_dedup_dfs_sink
-    from faust_spark.streaming.runner import stream_parquet
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="lshdedup_")
-    src = os.path.join(work, "src")
-    # range partitioner: ascending id ranges land in ascending part-file
-    # NAMES — but FileStreamSource orders by MODIFICATION TIME, and one
-    # write job stamps near-identical mtimes (measured: batches arrived
-    # rotated). Stamp strictly increasing mtimes in path order so the
-    # source delivers ranges in nondecreasing doc_id order, the sink's
-    # documented ordering contract.
-    docs.repartitionByRange(4, "doc_id").write.mode("overwrite").parquet(
-        src
-    )
-    import glob
-    import time as _time
-
-    t0 = _time.time()
-    for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
-        os.utime(f, (t0 + i, t0 + i))
-
-    emitted: list = []
-
-    # GATE-HARNESS ONLY: collect() funnels survivors into the comparable
-    # DataFrame the driver hashes — production pipelines point `sink` at
-    # a parquet/Kafka writer and nothing ever reaches the driver.
-    def sink(df: DataFrame, bid: int) -> None:
-        emitted.extend(int(r.doc_id) for r in df.select("doc_id").collect())
-
-    wrapped = lsh_dedup_dfs_sink(
-        sink, os.path.join(work, "ckpt", "lsh_state")
-    )
-    stream = stream_parquet(spark, src, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(wrapped)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout — a partial
-        # `emitted` set must fail loudly, never pose as the gate
-        # answer (ADVICE r8)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_lsh_dedup: query still running after 300s; "
-                f"partial emitted set ({len(emitted)} ids) discarded"
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        pd.DataFrame({"doc_id": pd.Series(emitted, dtype="int64")})
+    return _replay_ids(
+        spark,
+        "stream_lsh_dedup",
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        "doc_id",
+        lsh_dedup_dfs_sink,
+        ordered=True,
     )
 
 
@@ -2855,66 +2810,20 @@ def stream_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); the emitted set then equals the batch-agnostic
     NOT-EXISTS predicate the oracle computes, regardless of batch
     boundaries."""
-    import glob
-    import tempfile
-    import time as _time
-
-    import pandas as pd
-
-    from faust_spark.catalog import load_table
-    from faust_spark.streaming.dfs_state import embedding_dedup_dfs_sink
-    from faust_spark.streaming.runner import stream_parquet
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    work = tempfile.mkdtemp(prefix="embdedup_")
-    src = os.path.join(work, "src")
-    # ascending id ranges + strictly increasing mtimes in path order so
-    # FileStreamSource delivers batches in nondecreasing vec_id order
-    # (it orders by MODIFICATION TIME; see stream_lsh_dedup)
-    emb.repartitionByRange(4, "vec_id").write.mode("overwrite").parquet(src)
-    t0 = _time.time()
-    for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
-        os.utime(f, (t0 + i, t0 + i))
-
-    emitted: list = []
-
-    # GATE-HARNESS ONLY: collect() funnels survivors into the comparable
-    # DataFrame the driver hashes — production pipelines point `sink` at
-    # a parquet/Kafka writer and nothing ever reaches the driver.
-    def sink(df: DataFrame, bid: int) -> None:
-        emitted.extend(int(r.vec_id) for r in df.select("vec_id").collect())
-
     from faust_spark.operators.similarity import hyperplane_params
+    from faust_spark.streaming.dfs_state import embedding_dedup_dfs_sink
 
-    wrapped = embedding_dedup_dfs_sink(
-        sink,
-        os.path.join(work, "ckpt", "emb_state"),
-        n_tables=2,
-        n_planes=hyperplane_params(emb.count()),
-    )
-    stream = stream_parquet(spark, src, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(wrapped)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # awaitTermination returns False on timeout — a partial emitted
-        # set must fail loudly, never pose as the gate answer
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "stream_embedding_dedup: query still running after 300s; "
-                f"partial emitted set ({len(emitted)} ids) discarded"
-            )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        pd.DataFrame({"vec_id": pd.Series(emitted, dtype="int64")})
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    n_planes = hyperplane_params(emb.count())
+    return _replay_ids(
+        spark,
+        "stream_embedding_dedup",
+        emb,
+        "vec_id",
+        lambda sink, state: embedding_dedup_dfs_sink(
+            sink, state, n_tables=2, n_planes=n_planes
+        ),
+        ordered=True,
     )
 
 
@@ -2936,9 +2845,12 @@ def stream_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping windows through the streaming engine (size 30 min, hop
     15 min): every event counted in both overlapping windows by the state
     store; same window-assignment oracle as the batch form."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir)
         agg = s.groupBy(
             F.window("ts", "1800 seconds", "900 seconds")
@@ -2959,9 +2871,12 @@ def stream_set_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SetTable through the streaming engine: per-key collect_set in the
     state store (complete mode), sorted+joined for the deterministic
     encoding — the reference's changelogged per-key set."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir)
         agg = s.groupBy("user_id").agg(
             F.array_sort(F.collect_set("event_type")).alias("types_arr")
@@ -2987,7 +2902,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator the reference declares but stubs (its joins raise
     NotImplementedError; its own test asserts that). Full replay emits
     exactly the batch join result (oracle = plain SQL join)."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
     p = (
         _events_stream(spark, sf_dir)
@@ -3008,7 +2926,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     )
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         out = run_to_memory(j, output_mode="append")
     return out.select("user_id", "p_ts", "c_ts")
 
@@ -3044,7 +2962,10 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark — Spark takes the min across both inputs). Purchases
     inside the final watermark hour stay open forever in a finite
     replay, and the driver-checked row set pins that boundary."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
     p = (
         _events_stream(spark, sf_dir)
@@ -3065,7 +2986,7 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "leftOuter",
     )
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         out = run_to_memory(j, output_mode="append")
     return out.select("user_id", "p_ts", "c_ts")
 
@@ -3119,7 +3040,10 @@ def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the reference's table-lookup-in-agent idiom executed as a
     streaming query. Same oracle as the batch form."""
     from faust_spark.joins import global_lookup
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
     s = _events_stream(spark, sf_dir)
     dim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -3127,7 +3051,7 @@ def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         return run_to_memory(agg, output_mode="complete")
 
 
@@ -3257,9 +3181,12 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches (sessions spanning batch boundaries must merge), complete-mode
     memory sink. Hash-matches the same lag/cumsum oracle as the batch
     form."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir)
         agg = s.groupBy(
             F.session_window("ts", "1800 seconds"), "user_id"
@@ -3581,48 +3508,34 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates must match BIT-FOR-BIT. The strongest form of
     streaming-state verification in the repo: not rows-only, not a
     tolerance contract — exact."""
-    import tempfile
-
-    from faust_spark.catalog import load_table, normalize_event_time
+    from faust_spark.catalog import normalize_event_time
     from faust_spark.operators.mat import local_rows
     from faust_spark.operators.sketch import cms_estimate
     from faust_spark.streaming.dfs_state import (
         cms_dfs_sink,
         cms_state_cells,
     )
-    from faust_spark.streaming.runner import stream_parquet
+    from faust_spark.streaming.runner import drain, stream_parquet
 
-    ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
-    work = tempfile.mkdtemp(prefix="streamcms_")
-    try:
-        src = os.path.join(work, "src")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        state = os.path.join(work, "ckpt", "cms_state")
+    ev = _t(spark, sf_dir, "events").select("event_type", "ts")
+    with tempfile.TemporaryDirectory(prefix="streamcms_") as work:
+        src, ckpt = os.path.join(work, "src"), os.path.join(work, "ckpt")
+        ev.repartition(4).write.parquet(src)
+        state = os.path.join(ckpt, "cms_state")
         stream = normalize_event_time(
             stream_parquet(spark, src, max_files_per_trigger=2)
         )
-        q = (
+        drain(
             stream.writeStream.foreachBatch(
                 cms_dfs_sink("event_type", state, depth=4, width=1024)
             )
             .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "stream_heavy_hitters",
         )
-        if not q.awaitTermination(300):
-            # fail loudly: a half-accumulated sketch must never reach
-            # the bit-exact oracle comparison
-            q.stop()
-            raise TimeoutError(
-                "stream_heavy_hitters: query still running after 300s; "
-                "partial CMS state discarded"
-            )
         # the merged sketch is model-sized (depth × width cells): collect
         # it so the work dir can go before the result is read
         cells = [tuple(r) for r in cms_state_cells(spark, state).collect()]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     counts = local_rows(spark, cells, "d int, bucket bigint, cnt bigint")
     keys = (
         _t(spark, sf_dir, "events")
@@ -7722,10 +7635,13 @@ def stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment shape (agent keeps windowed counters, a reader flags
     outliers), so the composition itself is what's verified: streaming
     state accumulation must land exactly on the batch oracle."""
-    from faust_spark.streaming.runner import run_to_memory
+    from faust_spark.streaming.runner import (
+        run_to_memory,
+        shuffle_partitions,
+    )
     from faust_spark.streaming.state import stateful_counts
 
-    with _state_parts_for(spark, sf_dir):
+    with shuffle_partitions(spark, _stream_state_parts(spark, sf_dir)):
         s = _events_stream(spark, sf_dir).withColumn("day", F.to_date("ts"))
         counted = stateful_counts(
             s.groupBy("user_id", "day"), ["user_id", "day"]
@@ -8387,13 +8303,15 @@ def stream_livecheck_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     signals always precede the watermark passing their deadline under
     time-ordered replay, so per-execution verdicts, n_seen, and exact
     integer-µs runtimes are batching-invariant."""
-    import tempfile
-
     from faust_spark.streaming.livecheck_audit import (
         audit_state_partitions,
         audit_updates,
     )
-    from faust_spark.streaming.runner import stream_parquet
+    from faust_spark.streaming.runner import (
+        drain,
+        shuffle_partitions,
+        stream_parquet,
+    )
 
     execs, sigs, specs = _livecheck_fixture(spark, sf_dir)
     unified = execs.select(
@@ -8413,109 +8331,96 @@ def stream_livecheck_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("timestamp").alias("expires"),
         )
     )
-    work = tempfile.mkdtemp(prefix="lc_stream_")
-    src = os.path.join(work, "src")
-    # Replay shape (r10, down from r8's two data batches): data AND
-    # sentinel share ONE micro-batch. The initial watermark is unset
-    # during it, so no deadline timer can fire before the in-time
-    # signals it governs are processed and every complete execution is
-    # decided PASS/FAIL there; the trailing no-data batch then carries
-    # the watermark to sentinel−1s — past EVERY deadline (TTLs ≤ 72h,
-    # sentinel = max ts + 80h) — and fires all TIMEOUT timers at once.
-    # Batching-invariance makes this safe: per-execution state keeps
-    # min-by-event-time first arrivals (row order within the batch is
-    # irrelevant) and the fixture emits exactly one exec row per key,
-    # so the verdict set hash-matches the batch oracle exactly as the
-    # r8 three-batch replay did, at one fewer micro-batch and no
-    # mtime-ordering sleep.
-    # r14 (guide §1.2): hi/n_rows piggyback on the write job via
-    # observe() — the r13 shape re-scanned the just-written file with a
-    # second job for one MAX+COUNT (itself an r8 fix for re-running the
-    # two-shuffle fixture lineage). Observed metrics see exactly the
-    # written rows, so the values are identical; one fixture pass, not
-    # two. (MAX/COUNT are retry-safe observe metrics: re-executed tasks
-    # replace, not double-count, their partition's contribution.)
-    from pyspark.sql import Observation
+    with tempfile.TemporaryDirectory(prefix="lc_stream_") as work:
+        src = os.path.join(work, "src")
+        # Replay shape (r10, down from r8's two data batches): data AND
+        # sentinel share ONE micro-batch. The initial watermark is unset
+        # during it, so no deadline timer can fire before the in-time
+        # signals it governs are processed and every complete execution is
+        # decided PASS/FAIL there; the trailing no-data batch then carries
+        # the watermark to sentinel−1s — past EVERY deadline (TTLs ≤ 72h,
+        # sentinel = max ts + 80h) — and fires all TIMEOUT timers at once.
+        # Batching-invariance makes this safe: per-execution state keeps
+        # min-by-event-time first arrivals (row order within the batch is
+        # irrelevant) and the fixture emits exactly one exec row per key,
+        # so the verdict set hash-matches the batch oracle exactly as the
+        # r8 three-batch replay did, at one fewer micro-batch and no
+        # mtime-ordering sleep.
+        # r14 (guide §1.2): hi/n_rows piggyback on the write job via
+        # observe() — the r13 shape re-scanned the just-written file with a
+        # second job for one MAX+COUNT (itself an r8 fix for re-running the
+        # two-shuffle fixture lineage). Observed metrics see exactly the
+        # written rows, so the values are identical; one fixture pass, not
+        # two. (MAX/COUNT are retry-safe observe metrics: re-executed tasks
+        # replace, not double-count, their partition's contribution.)
+        from pyspark.sql import Observation
 
-    obs = Observation("lc_fixture_stats")
-    (
-        unified.observe(
-            obs,
-            F.max("ts").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(src)
-    )
-    hi, n_rows = obs.get["hi"], obs.get["n"]
-    # (no mtime-ordering sleep: both files ride one micro-batch, and
-    # within a batch the state fn is row-order-invariant — see above)
-    # sentinel = max fixture time + 80h: strictly past every deadline
-    # (TTLs are <= 72h) at ANY scale factor, so the oracle's
-    # everything-incomplete-is-TIMEOUT tail holds by construction — a
-    # fixed far-future date would silently stop deciding executions
-    # whose data outgrew it. Built JVM-side (range + literals): a
-    # Python-object createDataFrame plans a Python-runner local scan
-    # whose fixed cost is ~5s per action — measured, absurd for one row.
-    (
-        spark.range(1)
-        .select(
-            F.lit("__wm__").alias("test_id"),
-            F.lit("__none__").alias("case_name"),
-            F.lit("sig").alias("kind"),
-            F.lit(None).cast("string").alias("signal_name"),
-            (F.lit(hi) + F.expr("INTERVAL 80 HOURS")).alias("ts"),
-            F.lit(None).cast("timestamp").alias("expires"),
-        )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(src)
-    )
-
-    case_signals: dict = {}
-    for case, sig, _idx in sorted(
-        _LIVECHECK_SPEC_ROWS, key=lambda r: (r[0], r[2])
-    ):
-        case_signals.setdefault(case, []).append(sig)
-
-    s = stream_parquet(spark, src, max_files_per_trigger=2).withWatermark(
-        "ts", "1 second"
-    )
-    decided = audit_updates(
-        s.groupBy("test_id", "case_name"),
-        case_signals,
-        require_order=True,
-    )
-    emitted: list = []
-    # GATE-HARNESS ONLY collect; production writes decided verdicts to
-    # a sink (the operator itself never collects).
-    # State-store partitions sized to the fixture (r10 sweep in
-    # audit_state_partitions); the setting binds at stream start via the
-    # fresh checkpoint and is restored after.
-    default_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(audit_state_partitions(n_rows))
-    )
-    try:
-        q = (
-            decided.writeStream.foreachBatch(
-                lambda b, i: emitted.append(b.toPandas())
+        obs = Observation("lc_fixture_stats")
+        (
+            unified.observe(
+                obs,
+                F.max("ts").alias("hi"),
+                F.count(F.lit(1)).alias("n"),
             )
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(src)
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "stream_livecheck_audit: query still running after "
-                f"600s; {len(emitted)} partial update batches discarded"
+        hi, n_rows = obs.get["hi"], obs.get["n"]
+        # (no mtime-ordering sleep: both files ride one micro-batch, and
+        # within a batch the state fn is row-order-invariant — see above)
+        # sentinel = max fixture time + 80h: strictly past every deadline
+        # (TTLs are <= 72h) at ANY scale factor, so the oracle's
+        # everything-incomplete-is-TIMEOUT tail holds by construction — a
+        # fixed far-future date would silently stop deciding executions
+        # whose data outgrew it. Built JVM-side (range + literals): a
+        # Python-object createDataFrame plans a Python-runner local scan
+        # whose fixed cost is ~5s per action — measured, absurd for one row.
+        (
+            spark.range(1)
+            .select(
+                F.lit("__wm__").alias("test_id"),
+                F.lit("__none__").alias("case_name"),
+                F.lit("sig").alias("kind"),
+                F.lit(None).cast("string").alias("signal_name"),
+                (F.lit(hi) + F.expr("INTERVAL 80 HOURS")).alias("ts"),
+                F.lit(None).cast("timestamp").alias("expires"),
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_parts)
-        shutil.rmtree(work, ignore_errors=True)
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(src)
+        )
+
+        case_signals: dict = {}
+        for case, sig, _idx in sorted(
+            _LIVECHECK_SPEC_ROWS, key=lambda r: (r[0], r[2])
+        ):
+            case_signals.setdefault(case, []).append(sig)
+
+        s = stream_parquet(spark, src, max_files_per_trigger=2).withWatermark(
+            "ts", "1 second"
+        )
+        decided = audit_updates(
+            s.groupBy("test_id", "case_name"),
+            case_signals,
+            require_order=True,
+        )
+        emitted: list = []
+        # GATE-HARNESS ONLY collect; production writes decided verdicts to
+        # a sink (the operator itself never collects).
+        # State-store partitions sized to the fixture (r10 sweep in
+        # audit_state_partitions); the setting binds at stream start via the
+        # fresh checkpoint and is restored after.
+        with shuffle_partitions(spark, audit_state_partitions(n_rows)):
+            drain(
+                decided.writeStream.foreachBatch(
+                    lambda b, i: emitted.append(b.toPandas())
+                )
+                .outputMode("update")
+                .option("checkpointLocation", os.path.join(work, "ckpt")),
+                "stream_livecheck_audit",
+                timeout_sec=600,
+            )
     import pandas as _pd
 
     # re-enter Spark through the Arrow path (createDataFrame from a

@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from faust_spark.catalog import load_table, normalize_event_time  # noqa: E402
 from faust_spark.session import get_spark  # noqa: E402
 from faust_spark.streaming.dfs_state import bloom_dedup_dfs_sink  # noqa: E402
-from faust_spark.streaming.runner import stream_parquet  # noqa: E402
+from faust_spark.streaming.runner import drain, stream_parquet  # noqa: E402
 
 
 def main() -> None:
@@ -70,20 +70,13 @@ def run(spark, sf_dir: str, out_root: str) -> tuple[str, str]:
         state_dir=state_dir,
         m_bits=1 << 22,
     )
-    q = (
+    drain(
         normalize_event_time(stream_parquet(spark, src, max_files_per_trigger=2))
         .writeStream.foreachBatch(wrapped)
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        f"everseen_dedup into {out}",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "everseen_dedup: stream still running after 300s; "
-            f"output in {out} is partial"
-        )
     return out, state_dir
 
 

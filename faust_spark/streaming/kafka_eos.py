@@ -68,6 +68,8 @@ from typing import Callable, Optional, Protocol
 
 from pyspark.sql import DataFrame
 
+from faust_spark.streaming.runner import drain
+
 DEFAULT_CONTROL_TOPIC = "__faust_spark_txn_commits"
 
 
@@ -296,16 +298,13 @@ def kafka_transactional_foreach_batch(
         control_topic=control_topic,
         checkpoint=checkpoint,
     )
-    q = (
+    drain(
         df.writeStream.foreachBatch(sink)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        "kafka_transactional_foreach_batch",
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("kafka_transactional_foreach_batch didn't finish")
 
 
 __all__ = [

@@ -115,6 +115,16 @@ def audit_updates(
     Emits one decided row per tracked execution (schema of
     evaluate_executions, minus the never-emitted INIT: pending IS the
     state). Decisions are final: state is removed on emission.
+
+    One timer per key: ``applyInPandasWithState`` keeps a single timeout
+    per grouping key, and each ``setTimeoutTimestamp`` replaces the last.
+    So the deadline timer, the orphan-signal GC timer and the tombstone
+    expiry share one slot, and the state row decides which is armed: a
+    pending execution with a known deadline arms the deadline; orphan
+    signals and a NULL-deadline execution arm the GC horizon; a decided
+    key arms its tombstone expiry. This is the operator's limit, recorded
+    rather than worked around; an operator with several named timers per
+    key (``transformWithStateInPandas``) would lift it.
     """
     orphan_ttl_us = int(orphan_ttl_seconds * 1_000_000)
 

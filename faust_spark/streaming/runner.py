@@ -1,8 +1,11 @@
 """Run helpers: execute a streaming plan to completion over bounded input.
 
-``run_to_memory`` is the test/correctness harness path: replay a bounded
-source (e.g. the driver's parquet fixtures) through the *streaming* engine
-with an ``availableNow`` trigger, sink to memory, and hand back the result
+Every bounded run starts in :func:`drain`: the query goes on an
+``availableNow`` trigger, the caller waits, a timeout raises
+``TimeoutError`` naming the run, and a query still active on any exit is
+stopped. ``run_to_memory`` is the test/correctness harness path on top of
+it: replay a bounded source (e.g. the driver's parquet fixtures) through
+the *streaming* engine, sink to memory, and hand back the result
 DataFrame. This is how streaming operators get the same DuckDB-oracle
 treatment as batch ones — same data, same query shape, real streaming
 execution (state store, watermarks, output modes).
@@ -10,11 +13,15 @@ execution (state store, watermarks, output modes).
 
 from __future__ import annotations
 
+import glob
 import os
+import time
 import uuid
-from typing import Callable, Optional
+from contextlib import contextmanager
+from typing import Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 #: Hadoop ``GlobPattern`` metacharacters, plus ``!``/``^``, which negate
@@ -50,6 +57,22 @@ def stream_parquet(
     return reader.load(path)
 
 
+def write_ordered(df: DataFrame, path: str, n: int, col: str) -> None:
+    """Write ``df`` as ``n`` part files under ``path`` that a file stream
+    replays in nondecreasing ``col`` order.
+
+    A range partitioner puts ascending ``col`` ranges in ascending
+    part-file NAMES, but the file stream source orders by MODIFICATION
+    TIME, and one write job stamps near-identical mtimes (measured:
+    batches arrived rotated). So the files get strictly increasing mtimes
+    in name order, all in the past: a file written to ``path`` later
+    replays after every one of them."""
+    df.repartitionByRange(n, col).write.parquet(path)
+    t0 = time.time() - n
+    for i, f in enumerate(sorted(glob.glob(os.path.join(path, "part-*")))):
+        os.utime(f, (t0 + i, t0 + i))
+
+
 def state_partitions(n_events: int, cap: int) -> int:
     """State-store partition count for a keyed stream of ``n_events``.
 
@@ -61,28 +84,61 @@ def state_partitions(n_events: int, cap: int) -> int:
     return min(cap, max(4, n_events // 12_500))
 
 
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``
+    and restore the session's value after. A stateful query's state-store
+    partition count binds when it first starts on a fresh checkpoint, so
+    the block has to cover only the start; size ``n`` with
+    :func:`state_partitions` or the operator's own rule."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def drain(
+    writer: DataStreamWriter, label: str, timeout_sec: float = 300.0
+) -> StreamingQuery:
+    """Run ``writer``'s query over all input available now; return the
+    finished query.
+
+    The query starts on an ``availableNow`` trigger and is awaited. If it
+    is still running after ``timeout_sec`` it is stopped and
+    ``TimeoutError`` names ``label``: a partial output must never pass for
+    the drained result. A failed query's exception propagates from the
+    wait. On any exit a query still active is stopped, so the caller's
+    cleanup never deletes files under a running query."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"{label}: streaming query still running after "
+                f"{timeout_sec:g}s; partial output discarded"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
+    return q
+
+
 def run_to_memory(
     df: DataFrame,
     output_mode: str = "update",
     query_name: Optional[str] = None,
     timeout_sec: float = 300.0,
 ) -> DataFrame:
-    """Start ``df`` as a streaming query on an availableNow trigger, wait
-    for completion, return the memory-sink table."""
+    """:func:`drain` ``df`` into a memory sink; return the sink's table."""
     name = query_name or f"q_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        name,
+        timeout_sec,
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(f"streaming query {name} didn't finish")
-    finally:
-        if q.isActive:
-            q.stop()
     return df.sparkSession.table(name)
 
 
@@ -106,16 +162,13 @@ def cdc_export(
             .parquet(path)
         )
 
-    q = (
+    drain(
         df.writeStream.foreachBatch(sink)
         .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        "cdc_export",
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("cdc_export didn't finish")
 
 
 def exactly_once_parquet_sink(
@@ -148,16 +201,13 @@ def exactly_once_parquet_sink(
             .parquet(path)
         )
 
-    q = (
+    drain(
         df.writeStream.foreachBatch(sink)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        "exactly_once_parquet_sink",
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("exactly_once_parquet_sink didn't finish")
 
 
 def committed_batch_sink(
@@ -204,17 +254,13 @@ def transactional_foreach_batch(
     atomicity the marker write and sink write must share a failure domain
     (same object store / same DB transaction).
     """
-    wrapped = committed_batch_sink(sink, commit_dir)
-    q = (
-        df.writeStream.foreachBatch(wrapped)
+    drain(
+        df.writeStream.foreachBatch(committed_batch_sink(sink, commit_dir))
         .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        "transactional_foreach_batch",
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("transactional_foreach_batch didn't finish")
 
 
 def take_buffers(
@@ -249,22 +295,24 @@ def take_buffers(
 
     writer = df.writeStream.foreachBatch(sink).outputMode("append")
     if within is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{within} seconds")
-    q = writer.start()
+        drain(writer, "take_buffers", timeout_sec)
+        return buffers
+    # a timed run, not a drain: the processing-time trigger never ends
+    # on its own, so the timeout is the run length
+    q = writer.trigger(processingTime=f"{within} seconds").start()
     try:
-        if not q.awaitTermination(timeout_sec):
-            if within is None:
-                raise TimeoutError("take_buffers didn't drain")
+        q.awaitTermination(timeout_sec)
     finally:
-        if q.isActive:
-            q.stop()
+        q.stop()
     return buffers
 
 
 __all__ = [
     "stream_parquet",
+    "write_ordered",
+    "state_partitions",
+    "shuffle_partitions",
+    "drain",
     "run_to_memory",
     "cdc_export",
     "exactly_once_parquet_sink",

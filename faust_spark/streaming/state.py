@@ -4,10 +4,17 @@ Counters (:func:`stateful_counter`, :func:`stateful_counts`) are native
 update-mode streaming aggregations: the state store holds the aggregation
 buffer and no Python worker runs. The reference's Table also allows any
 Python reduction per key (SURVEY §2.4); that arbitrary state
-(:func:`reduce_by_key`, :func:`session_tracker`) runs through
-``applyInPandasWithState`` — Spark's keyed-state operator with checkpointed
-state (the analogue of faust's RocksDB store + changelog, minus all the
-recovery machinery).
+(:func:`reduce_by_key`) runs through ``applyInPandasWithState`` — Spark's
+keyed-state operator with checkpointed state (the analogue of faust's
+RocksDB store + changelog, minus all the recovery machinery).
+
+Sessions need no Python state: the faust idiom of a per-key session table
+plus a cleanup timer firing ``on_window_close`` is a native
+``F.session_window`` aggregation in append mode under a watermark. The
+state store holds each open session, and the engine emits it once, when
+the watermark passes its last event plus the gap
+(``tests/test_session_windows.py`` pins restart recovery and closing; the
+``stream_session_windows`` gate checks the sessions against the oracle).
 
 Emission pattern: every batch emits each updated key's *cumulative* state
 (update-mode semantics). Readers that want only the final value take
@@ -27,7 +34,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -123,111 +129,8 @@ def reduce_by_key(
     )
 
 
-def session_tracker(
-    grouped,
-    key_name: str,
-    gap_seconds: float = 1800.0,
-    ts_col: str = "ts",
-    key_type=LongType(),
-) -> DataFrame:
-    """Per-key session detection with event-time TIMERS.
-
-    The faust idiom this replaces: a table holding per-key session state
-    plus the cleanup timer firing ``on_window_close`` when a key goes
-    quiet. Here ``GroupStateTimeout.EventTimeTimeout`` is the timer: each
-    batch (re)arms the timeout at ``last_event + gap``; when the watermark
-    passes it with no new data, the callback fires with ``hasTimedOut``
-    and the closed session is emitted exactly once. A gap *within* a
-    batch's data closes the previous session inline.
-
-    Input must carry ``withWatermark(ts_col, ...)``. Emits
-    (key, session_start, session_end, cnt) per CLOSED session.
-    """
-    import datetime as _dt
-
-    out_schema = StructType(
-        [
-            StructField(key_name, key_type, False),
-            StructField("session_start", StringType(), False),
-            StructField("session_end", StringType(), False),
-            StructField("cnt", LongType(), False),
-        ]
-    )
-    # state: (start_epoch_us, end_epoch_us, count)
-    state_schema = StructType(
-        [
-            StructField("s", LongType(), False),
-            StructField("e", LongType(), False),
-            StructField("c", LongType(), False),
-        ]
-    )
-    gap_us = int(gap_seconds * 1_000_000)
-
-    def _fmt(us: int) -> str:
-        return _dt.datetime.utcfromtimestamp(us / 1e6).strftime(
-            "%Y-%m-%d %H:%M:%S"
-        )
-
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            s, e, c = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        key_name: key[0],
-                        "session_start": _fmt(s),
-                        "session_end": _fmt(e),
-                        "cnt": c,
-                    }
-                ]
-            )
-            return
-        ts_list = []
-        for pdf in pdfs:
-            ts_list.extend(
-                int(t.value // 1000) for t in pd.to_datetime(pdf[ts_col])
-            )
-        ts_list.sort()
-        closed = []
-        if state.exists:
-            s, e, c = state.get
-        else:
-            s = e = ts_list[0]
-            c = 0
-        for t in ts_list:
-            if c > 0 and t - e > gap_us:
-                closed.append((s, e, c))
-                s, c = t, 0
-            e = max(e, t)
-            c += 1
-        state.update((s, e, c))
-        state.setTimeoutTimestamp(e // 1000 + int(gap_us // 1000))
-        if closed:
-            yield pd.DataFrame(
-                [
-                    {
-                        key_name: key[0],
-                        "session_start": _fmt(cs),
-                        "session_end": _fmt(ce),
-                        "cnt": cc,
-                    }
-                    for cs, ce, cc in closed
-                ]
-            )
-
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 __all__ = [
     "stateful_counter",
     "stateful_counts",
     "reduce_by_key",
-    "session_tracker",
 ]

@@ -10,7 +10,6 @@ agents, ``feed_stream`` replays the rows through the real streaming engine
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 from typing import Any, Callable, Optional, Sequence
 
@@ -58,14 +57,11 @@ def feed_stream(
     if isinstance(schema, type) and issubclass(schema, Record):
         schema = schema.spark_schema()
     spark = agent.app.spark
-    d = tempfile.mkdtemp(prefix="feed_stream_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="feed_stream_") as d:
         spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(d)
         s = stream_parquet(spark, d)
         out = agent(s)
         return run_to_memory(out, output_mode=output_mode).collect()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 class ProducerFencedError(RuntimeError):

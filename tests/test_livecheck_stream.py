@@ -11,7 +11,7 @@ from faust_spark.streaming.livecheck_audit import (
     audit_state_partitions,
     audit_updates,
 )
-from faust_spark.streaming.runner import stream_parquet
+from faust_spark.streaming.runner import drain, stream_parquet
 
 SCHEMA = (
     "test_id string, case_name string, kind string, "
@@ -28,7 +28,7 @@ def _run(spark, src, ckpt, emitted, require_order=True):
     s = stream_parquet(spark, src, max_files_per_trigger=1).withWatermark(
         "ts", "1 second"
     )
-    q = (
+    drain(
         audit_updates(
             s.groupBy("test_id", "case_name"),
             CASES,
@@ -36,11 +36,9 @@ def _run(spark, src, ckpt, emitted, require_order=True):
         )
         .writeStream.foreachBatch(lambda b, i: emitted.extend(b.collect()))
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "audit replay",
     )
-    assert q.awaitTermination(300)
 
 
 @pytest.mark.slow

@@ -4,7 +4,8 @@ A module that puts a fixed absolute checkout path on ``sys.path`` makes
 every run from another checkout or worktree silently import that other
 copy's ``faust_spark`` — a benchmark or A/B then measures the wrong code.
 Paths resolve from ``__file__`` instead; this pins it for the package, the
-tests, every tool and the entry points that import the package.
+tests, the examples, every tool and the entry points that import the
+package.
 """
 
 import glob
@@ -22,7 +23,7 @@ ENTRY_POINTS = ("bench.py", "__spark_entry__.py")
 def _sources() -> list[str]:
     files = [os.path.join(ROOT, f) for f in ENTRY_POINTS]
     files += glob.glob(os.path.join(ROOT, "tools", "*.py"))
-    for pkg in ("faust_spark", "tests"):
+    for pkg in ("faust_spark", "tests", "examples"):
         files += glob.glob(os.path.join(ROOT, pkg, "**", "*.py"),
                            recursive=True)
     return files

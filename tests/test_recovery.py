@@ -15,6 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from faust_spark.streaming.runner import drain
 from faust_spark.streaming.state import stateful_counter
 
 
@@ -36,14 +37,12 @@ def _run(spark, src_dir, ckpt):
     def sink(batch_df, batch_id):
         emitted.extend(batch_df.collect())
 
-    q = (
+    drain(
         counted.writeStream.foreachBatch(sink)
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "counter replay",
     )
-    assert q.awaitTermination(300)
     return emitted
 
 

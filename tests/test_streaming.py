@@ -7,13 +7,16 @@ batches, t/stress/tests/tables/app.py:96-150 behavior spec).
 
 import os
 import re
+import time
 import uuid
 
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from faust_spark.streaming.runner import (
+    drain,
     run_to_memory,
     state_partitions,
     stream_parquet,
@@ -164,17 +167,11 @@ def test_stateful_counter_sum_matches_batch_decimal_sum(
 
 def _executed_plan(df) -> str:
     """Physical plan of the last micro-batch of ``df`` run to completion."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(f"plan_{uuid.uuid4().hex[:8]}")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    name = f"plan_{uuid.uuid4().hex[:8]}"
+    q = drain(
+        df.writeStream.format("memory").queryName(name).outputMode("update"),
+        name,
     )
-    try:
-        assert q.awaitTermination(300)
-    finally:
-        q.stop()
     return q._jsq.explainInternal(False)
 
 
@@ -194,6 +191,34 @@ def test_counters_run_in_the_native_state_store(
     plan = _executed_plan(df)
     assert "StateStoreSave" in plan
     assert not re.search(r"Python|Pandas|InArrow", plan), plan
+
+
+def test_drain_timeout_names_the_run_and_stops_the_query(
+    spark, multi_file_events
+):
+    """A run still going at the timeout raises TimeoutError naming its
+    label, and the query is stopped, not left running."""
+    writer = stream_parquet(spark, multi_file_events).writeStream.foreachBatch(
+        lambda df, bid: time.sleep(3)
+    )
+    with pytest.raises(TimeoutError, match="slow sink run"):
+        drain(writer, "slow sink run", timeout_sec=1)
+    assert spark.streams.active == []
+
+
+def test_drain_propagates_the_query_failure(spark, multi_file_events):
+    """A sink that raises fails the drain with the streaming query's
+    exception, and no query is left active."""
+
+    def boom(df, bid):
+        raise ValueError("sink exploded")
+
+    writer = stream_parquet(spark, multi_file_events).writeStream.foreachBatch(
+        boom
+    )
+    with pytest.raises(StreamingQueryException, match="sink exploded"):
+        drain(writer, "failing sink run")
+    assert spark.streams.active == []
 
 
 def test_state_partitions_rule():

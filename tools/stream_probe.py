@@ -38,7 +38,6 @@ import argparse
 import glob
 import json
 import os
-import shutil
 import sys
 import tempfile
 import time
@@ -73,37 +72,37 @@ def drive_banded(spark, label: str, mk_wrapped, src_dir: str) -> dict:
     """Synchronous per-batch drive of a banded bucket-claim sink over the
     range-partitioned part files under ``src_dir`` (ascending id ranges in
     ascending part-file names — the sinks' ordering contract)."""
-    work = tempfile.mkdtemp(prefix=f"streamprobe_{label}_")
-    state = os.path.join(work, "state")
     emitted = {"n": 0}
 
     def sink(df, bid):
         emitted["n"] += df.count()
 
-    wrapped = mk_wrapped(sink, state)
     parts = sorted(glob.glob(os.path.join(src_dir, "part-*")))
     times = []
-    for bid, path in enumerate(parts):
-        batch = spark.read.parquet(path)
-        t0 = time.time()
-        wrapped(batch, bid)
-        times.append(time.time() - t0)
+    with tempfile.TemporaryDirectory(prefix=f"streamprobe_{label}_") as work:
+        state = os.path.join(work, "state")
+        wrapped = mk_wrapped(sink, state)
+        for bid, path in enumerate(parts):
+            batch = spark.read.parquet(path)
+            t0 = time.time()
+            wrapped(batch, bid)
+            times.append(time.time() - t0)
+        state_mb = sum(
+            os.path.getsize(p)
+            for p in glob.glob(
+                os.path.join(state, "**", "*.parquet"), recursive=True
+            )
+        ) / (1 << 20)
     compact_ids = {
         b for b in range(len(parts)) if b != 0 and b % COMPACT_EVERY == 0
     }
-    state_mb = sum(
-        os.path.getsize(p)
-        for p in glob.glob(os.path.join(state, "**", "*.parquet"), recursive=True)
-    ) / (1 << 20)
-    out = {
+    return {
         "label": label,
         "batches": len(parts),
         "emitted": emitted["n"],
         "state_mb": round(state_mb, 2),
         **_series_stats(times, compact_ids),
     }
-    shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 def main() -> int:
@@ -125,14 +124,14 @@ def main() -> int:
     )
 
     spark = get_spark("stream-probe")
-    big = tempfile.mkdtemp(prefix="stream_probe_")
-    rows = []
 
     # ---- replicated fixtures (same construction as scale_probe.py) ----
     docs = load_table(spark, args.base, "documents").select("doc_id", "text")
     n_docs = docs.count()
     emb = load_table(spark, args.base, "embeddings").select("vec_id", "embedding")
     n_emb = emb.count()
+    ev = load_table(spark, args.base, "events")
+    n_ev = ev.count()
 
     def docs_at(mult: int) -> "F.DataFrame":
         if mult == 1:
@@ -161,60 +160,62 @@ def main() -> int:
             "embedding",
         )
 
-    # ---- lsh + embedding sinks, 1x and mult-x, per-batch timed --------
-    for scale, mult in (("1x", 1), (f"{args.mult}x", args.mult)):
-        d_src = os.path.join(big, f"docs_{scale}")
-        docs_at(mult).repartitionByRange(args.batches, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(d_src)
-        rows.append(
-            drive_banded(
-                spark,
-                f"stream_lsh_dedup_{scale}",
-                lambda s, st: lsh_dedup_dfs_sink(
-                    s, st, compact_every=COMPACT_EVERY
-                ),
-                d_src,
+    rows = []
+    with tempfile.TemporaryDirectory(prefix="stream_probe_") as big:
+        # ---- lsh + embedding sinks, 1x and mult-x, per-batch timed ----
+        for scale, mult in (("1x", 1), (f"{args.mult}x", args.mult)):
+            d_src = os.path.join(big, f"docs_{scale}")
+            docs_at(mult).repartitionByRange(
+                args.batches, "doc_id"
+            ).write.parquet(d_src)
+            rows.append(
+                drive_banded(
+                    spark,
+                    f"stream_lsh_dedup_{scale}",
+                    lambda s, st: lsh_dedup_dfs_sink(
+                        s, st, compact_every=COMPACT_EVERY
+                    ),
+                    d_src,
+                )
             )
-        )
-        e_src = os.path.join(big, f"emb_{scale}")
-        emb_at(mult).repartitionByRange(args.batches, "vec_id").write.mode(
-            "overwrite"
-        ).parquet(e_src)
-        rows.append(
-            drive_banded(
-                spark,
-                f"stream_embedding_dedup_{scale}",
-                lambda s, st: embedding_dedup_dfs_sink(
-                    s, st, compact_every=COMPACT_EVERY
-                ),
-                e_src,
+            e_src = os.path.join(big, f"emb_{scale}")
+            emb_at(mult).repartitionByRange(
+                args.batches, "vec_id"
+            ).write.parquet(e_src)
+            rows.append(
+                drive_banded(
+                    spark,
+                    f"stream_embedding_dedup_{scale}",
+                    lambda s, st: embedding_dedup_dfs_sink(
+                        s, st, compact_every=COMPACT_EVERY
+                    ),
+                    e_src,
+                )
             )
+
+        # ---- livecheck: real streaming query, N time-ordered batches --
+        ev_dir = os.path.join(big, "events_big")
+        (
+            ev.crossJoin(
+                spark.range(args.mult).select(F.col("id").alias("rep"))
+            )
+            .select(
+                (F.col("event_id") + F.col("rep") * n_ev).alias("event_id"),
+                (
+                    F.col("ts") + F.make_interval(secs=F.col("rep") * 86400)
+                ).alias("ts"),
+                (F.col("user_id") + F.col("rep") * 1000).alias("user_id"),
+                "event_type",
+                "value",
+                "props",
+            )
+            .write.parquet(os.path.join(ev_dir, "events.parquet"))
         )
+        for scale, sf_dir in (("1x", args.base), (f"{args.mult}x", ev_dir)):
+            rows.append(
+                livecheck_probe(spark, entry, scale, sf_dir, args.batches)
+            )
 
-    # ---- livecheck: real streaming query, N time-ordered batches ------
-    ev = load_table(spark, args.base, "events")
-    n_ev = ev.count()
-    ev_dir = os.path.join(big, "events_big")
-    os.makedirs(ev_dir, exist_ok=True)
-    (
-        ev.crossJoin(spark.range(args.mult).select(F.col("id").alias("rep")))
-        .select(
-            (F.col("event_id") + F.col("rep") * n_ev).alias("event_id"),
-            (F.col("ts") + F.make_interval(secs=F.col("rep") * 86400)).alias("ts"),
-            (F.col("user_id") + F.col("rep") * 1000).alias("user_id"),
-            "event_type",
-            "value",
-            "props",
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(ev_dir, "events.parquet"))
-    )
-
-    for scale, sf_dir in (("1x", args.base), (f"{args.mult}x", ev_dir)):
-        rows.append(livecheck_probe(spark, entry, scale, sf_dir, args.batches))
-
-    shutil.rmtree(big, ignore_errors=True)
     out = {
         "mult": args.mult,
         "batches": args.batches,
@@ -246,7 +247,12 @@ def livecheck_probe(spark, entry, scale: str, sf_dir: str, batches: int) -> dict
         audit_state_partitions,
         audit_updates,
     )
-    from faust_spark.streaming.runner import stream_parquet
+    from faust_spark.streaming.runner import (
+        drain,
+        shuffle_partitions,
+        stream_parquet,
+        write_ordered,
+    )
 
     execs, sigs, _specs = entry._livecheck_fixture(spark, sf_dir)
     unified = execs.select(
@@ -266,75 +272,55 @@ def livecheck_probe(spark, entry, scale: str, sf_dir: str, batches: int) -> dict
             F.lit(None).cast("timestamp").alias("expires"),
         )
     )
-    work = tempfile.mkdtemp(prefix=f"lcprobe_{scale}_")
-    src = os.path.join(work, "src")
-    # time-ordered ranges: ascending ts ranges land in ascending part
-    # names; mtimes stamped in path order so FileStreamSource (which
-    # orders by mtime) delivers them time-ordered — watermark rises
-    # monotonically and in-time signals precede their deadline timers,
-    # the same contract the 2-batch gate relies on.
-    unified.repartitionByRange(batches, "ts").write.mode("overwrite").parquet(src)
-    (hi, n_rows) = (
-        spark.read.parquet(src).agg(F.max("ts"), F.count(F.lit(1))).first()
-    )
-    t0 = time.time()
-    for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*")))):
-        os.utime(f, (t0 + i, t0 + i))
-    (
-        spark.range(1)
-        .select(
-            F.lit("__wm__").alias("test_id"),
-            F.lit("__none__").alias("case_name"),
-            F.lit("sig").alias("kind"),
-            F.lit(None).cast("string").alias("signal_name"),
-            (F.lit(hi) + F.expr("INTERVAL 80 HOURS")).alias("ts"),
-            F.lit(None).cast("timestamp").alias("expires"),
-        )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(src)
-    )
-    newest = max(
-        glob.glob(os.path.join(src, "part-*")), key=os.path.getmtime
-    )
-    os.utime(newest, (t0 + batches + 1, t0 + batches + 1))
-
     case_signals: dict = {}
     for case, sig, _idx in sorted(
         entry._LIVECHECK_SPEC_ROWS, key=lambda r: (r[0], r[2])
     ):
         case_signals.setdefault(case, []).append(sig)
-
-    s = stream_parquet(spark, src, max_files_per_trigger=1).withWatermark(
-        "ts", "1 second"
-    )
-    decided = audit_updates(
-        s.groupBy("test_id", "case_name"), case_signals, require_order=True
-    )
     marks: list[tuple[float, int]] = []
 
     def sink(b, i):
         marks.append((time.time(), b.count()))
 
-    default_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(audit_state_partitions(n_rows))
-    )
-    try:
-        start = time.time()
-        q = (
-            decided.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix=f"lcprobe_{scale}_") as work:
+        src = os.path.join(work, "src")
+        # time-ordered ranges, delivered in ts order (write_ordered):
+        # the watermark rises monotonically and in-time signals precede
+        # their deadline timers, the same contract the 2-batch gate
+        # relies on. The sentinel, written after them, replays last.
+        write_ordered(unified, src, batches, "ts")
+        (hi, n_rows) = (
+            spark.read.parquet(src).agg(F.max("ts"), F.count(F.lit(1))).first()
         )
-        if not q.awaitTermination(1200):
-            q.stop()
-            raise TimeoutError(f"livecheck probe {scale}: >1200s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_parts)
-        shutil.rmtree(work, ignore_errors=True)
+        (
+            spark.range(1)
+            .select(
+                F.lit("__wm__").alias("test_id"),
+                F.lit("__none__").alias("case_name"),
+                F.lit("sig").alias("kind"),
+                F.lit(None).cast("string").alias("signal_name"),
+                (F.lit(hi) + F.expr("INTERVAL 80 HOURS")).alias("ts"),
+                F.lit(None).cast("timestamp").alias("expires"),
+            )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(src)
+        )
+        s = stream_parquet(spark, src, max_files_per_trigger=1).withWatermark(
+            "ts", "1 second"
+        )
+        decided = audit_updates(
+            s.groupBy("test_id", "case_name"), case_signals, require_order=True
+        )
+        with shuffle_partitions(spark, audit_state_partitions(n_rows)):
+            start = time.time()
+            drain(
+                decided.writeStream.foreachBatch(sink)
+                .outputMode("update")
+                .option("checkpointLocation", os.path.join(work, "ckpt")),
+                f"livecheck probe {scale}",
+                timeout_sec=1200,
+            )
     times = []
     prev = start
     for t, _n in marks:
