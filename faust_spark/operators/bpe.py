@@ -276,7 +276,7 @@ def bpe_fit(
         # lazy: the NEXT round's pair-count collect (or the caller's
         # first traversal after the last round) materializes it — one
         # action per merge round instead of two (r14, guide §1.2)
-        sym = materialize(_merge_pair(sym, a, b), iterative=True)
+        sym = materialize(_merge_pair(sym, a, b))
     return merges, sym
 
 
@@ -300,5 +300,5 @@ def bpe_segment(
         ),
     )
     for a, b, *_ in merges:
-        sym = materialize(_merge_pair(sym, a, b), iterative=True)
+        sym = materialize(_merge_pair(sym, a, b))
     return sym

@@ -1023,7 +1023,7 @@ def connected_components(
         # planning time alone dominates. localCheckpoint materializes the
         # current labels and cuts the chain.
         if it > 0 and it % 5 == 0:
-            labels = materialize(labels, eager=True, iterative=True)
+            labels = materialize(labels, eager=True)
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -1049,7 +1049,6 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()  # see the union-find branch note
     active.unpersist()
     out = labels.unionByName(
         isolated.select("node", F.col("node").alias("label"))

@@ -1,4 +1,5 @@
-"""Graph ranking over edge relations: PageRank.
+"""Graph ranking and communities over edge relations: PageRank,
+personalized PageRank, HITS and label propagation.
 
 Crawl-scale data curation ranks DOMAINS before it ranks documents —
 Common Crawl publishes harmonic-centrality/PageRank-ranked domain lists
@@ -8,14 +9,17 @@ This module is that step over an arbitrary (src, dst) edge relation
 the repo's verification style: deterministic, engine-portable, the
 whole iteration trajectory reproducible by a SQL oracle.
 
-Shape per iteration (the only shapes in the loop):
+PageRank and PPR run ONE power-iteration loop (:func:`_power_iteration`);
+they differ only in the teleport and dangling-share Column expressions
+they pass in. Shape per iteration (the only shapes in the loop):
 
 - contributions: ranks ⋈ edges on src (one hash join keyed by src),
   partial-agg SUM keyed by dst — the classic scatter/gather, shuffle
   bounded by |E| contribution rows pre-combine;
 - dangling mass: one-row aggregate, broadcast back (nodes with no
-  out-edges donate their rank uniformly — the standard stochastic fix);
-- update: rank' = ROUND((1-d)/N + d·(Σ in + dangling/N), round_dp).
+  out-edges donate their rank through the teleport distribution — the
+  standard stochastic fix);
+- update: rank' = ROUND(teleport + d·(Σ in + dangling share), round_dp).
 
 The per-iteration ROUND (in-engine, HALF_UP — same as DuckDB) is what
 makes the trajectory bit-portable: cross-engine float-sum differences
@@ -23,14 +27,15 @@ makes the trajectory bit-portable: cross-engine float-sum differences
 value sits within that error of a rounding-grid boundary — the
 ``mmr_rerank``/``logreg_fit`` guard applied to graph iteration.
 
-Iterates are materialized each round (``operators.mat``), truncating
-lineage exactly as ``dedup.connected_components`` does — plan depth
-stays constant in ``iters``.
+All four operators prepare their edges the same way (:func:`_edge_list`)
+and cut lineage the same way: every loop invariant and every round's
+iterate goes through ``operators.mat`` (always a checkpoint), so plan
+depth stays constant in ``iters``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from faust_spark.operators.mat import (
     loop_partitions,
@@ -46,71 +51,74 @@ __all__ = [
 ]
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    round_dp: int = 9,
-) -> DataFrame:
-    """PageRank over distinct directed edges; returns (node, rank).
-
-    Nodes = distinct src ∪ dst; initial rank = ROUND(1/N, round_dp);
-    ``iters`` synchronous iterations with uniform dangling-mass
-    redistribution. Deterministic — no RNG, no order dependence beyond
-    float addition, which the per-iteration rounding absorbs.
-    """
+def _edge_list(
+    edges: DataFrame, src_col: str, dst_col: str, rows_per_edge: int = 1
+) -> tuple[DataFrame, int]:
+    """Distinct (src, dst) edges behind a lineage cut, and the
+    ``loop_partitions`` width for a loop invariant of
+    ``rows_per_edge``·|E| rows (r11 rule)."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    # lazy checkpoint: the loop_partitions count right below is the
-    # first action and materializes the blocks itself — eager=True was
-    # one whole extra |E|-pass job per call (r14, guide §1.2)
+    # lazy checkpoint: the count right below is the first action and
+    # materializes the blocks itself — eager=True was one whole extra
+    # |E|-pass job per call (r14, guide §1.2)
     e = materialize(e)
-    parts = loop_partitions(e.sparkSession, e.count())
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # nodes carry their dangling flag from day one (r10): the per-round
-    # dangling mass is then a filtered SUM over the checkpointed rank
-    # iterate — the anti-join against outdeg (which re-ran the degree
-    # agg every round) leaves the loop entirely. Partitioned by node
-    # ONCE so each round's update join reuses the exchange.
-    nodes = materialize_partitioned(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(
-            outdeg.select(
+    return e, loop_partitions(e.sparkSession, rows_per_edge * e.count())
+
+
+def _out_degree(e: DataFrame) -> DataFrame:
+    return e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+
+
+def _flag_dangling(
+    nodes: DataFrame, e: DataFrame, parts: int, *cols: Column
+) -> DataFrame:
+    """(node, *cols, dang) partitioned by node ONCE (r10): the
+    per-round dangling mass is then a filtered SUM over the
+    checkpointed rank iterate, with no per-round anti-join against the
+    out-degrees, and each round's update join reuses this exchange."""
+    return materialize_partitioned(
+        nodes.join(
+            _out_degree(e).select(
                 F.col("src").alias("node"), F.lit(1).alias("__o")
             ),
             "node",
             "left",
-        )
-        .select("node", F.col("__o").isNull().alias("dang")),
+        ).select("node", *cols, F.col("__o").isNull().alias("dang")),
         "node",
         num_partitions=parts,
     )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError(
-            "pagerank: empty edge relation — no nodes to rank"
-        )
+
+
+def _power_iteration(
+    e: DataFrame,
+    nodes: DataFrame,
+    parts: int,
+    rank0: Column,
+    teleport: Column,
+    dangling_share: Column,
+    iters: int,
+    damping: float,
+    round_dp: int,
+) -> DataFrame:
+    """The synchronous power iteration PageRank and PPR share; returns
+    (node, rank). ``nodes`` comes from :func:`_flag_dangling`;
+    ``rank0``, ``teleport`` and ``dangling_share`` are the caller's
+    Column expressions over the node columns and the round's dangling
+    mass ``dm``."""
     # edges annotated once with the donor's out-degree, partitioned by
     # the loop's join key ONCE — the checkpointed blocks keep that
     # partitioning, so each round's contribution join shuffles only the
     # |V| rank side, never the |E| edge side
     eo = materialize_partitioned(
-        e.join(outdeg, "src"), "src", num_partitions=parts
+        e.join(_out_degree(e), "src"), "src", num_partitions=parts
     )
-
     # initial rank rounded IN-ENGINE (F.round is HALF_UP like DuckDB's
     # ROUND; Python's round() is banker's — a tie would diverge)
     ranks = nodes.select(
-        "node",
-        "dang",
-        F.round(F.lit(1.0) / F.lit(float(n)), round_dp).alias("rank"),
+        "node", "dang", F.round(rank0, round_dp).alias("rank")
     )
-    base = (1.0 - damping) / n
     for _ in range(iters):
         dangling = ranks.filter(F.col("dang")).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
@@ -126,28 +134,67 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = materialize(  # iterative: see mat.py
-            nodes.join(
-                contrib, nodes["node"] == contrib["dst"], "left"
-            )
+        ranks = materialize(
+            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",
                 "dang",
                 F.round(
-                    F.lit(base)
+                    teleport
                     + F.lit(damping)
                     * (
                         F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
+                        + dangling_share
                     ),
                     round_dp,
                 ).alias("rank"),
             ),
             eager=True,
-            iterative=True,
         )
     return ranks.select("node", "rank")
+
+
+def pagerank(
+    edges: DataFrame,
+    iters: int = 3,
+    damping: float = 0.85,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    round_dp: int = 9,
+) -> DataFrame:
+    """PageRank over distinct directed edges; returns (node, rank).
+
+    Nodes = distinct src ∪ dst; initial rank = ROUND(1/N, round_dp);
+    ``iters`` synchronous iterations with uniform dangling-mass
+    redistribution: rank' = ROUND((1-d)/N + d·(Σ in + dangling/N)).
+    Deterministic — no RNG, no order dependence beyond float addition,
+    which the per-iteration rounding absorbs.
+    """
+    e, parts = _edge_list(edges, src_col, dst_col)
+    nodes = _flag_dangling(
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct(),
+        e,
+        parts,
+    )
+    n = nodes.count()
+    if n == 0:
+        raise ValueError(
+            "pagerank: empty edge relation — no nodes to rank"
+        )
+    return _power_iteration(
+        e,
+        nodes,
+        parts,
+        rank0=F.lit(1.0) / F.lit(float(n)),
+        teleport=F.lit((1.0 - damping) / n),
+        dangling_share=F.col("dm") / F.lit(float(n)),
+        iters=iters,
+        damping=damping,
+        round_dp=round_dp,
+    )
 
 
 def personalized_pagerank(
@@ -169,16 +216,10 @@ def personalized_pagerank(
     init rank = ROUND(w, round_dp); update rank' = ROUND((1-d)·w +
     d·(inflow + dangling·w), round_dp) — dangling mass re-enters
     through the teleport distribution, so total mass stays with the
-    seed-reachable subgraph.  Same shapes as :func:`pagerank` (one
-    src-keyed join + dst-keyed SUM + one-row dangling broadcast per
-    iteration) plus a one-time seed semi-join.
+    seed-reachable subgraph.  Same loop as :func:`pagerank` plus a
+    one-time seed semi-join.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e = materialize(e)  # lazy: the count below materializes (r14)
-    # loop-invariant partition width scaled to |E| (r11 rule)
-    parts = loop_partitions(e.sparkSession, e.count())
+    e, parts = _edge_list(edges, src_col, dst_col)
     nodes = materialize(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -192,76 +233,25 @@ def personalized_pagerank(
     ns = sd.count()
     if ns == 0:
         raise ValueError("no seed nodes present in the edge relation")
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # teleport weight + dangling flag annotated ONCE, partitioned by
-    # node once — same loop discipline as pagerank (r10): the per-round
-    # dangling mass is a filtered SUM over the checkpointed iterate,
-    # and the update join reuses this exchange every round
-    wnodes = materialize_partitioned(
-        nodes.join(
-            sd.withColumn("__s", F.lit(1)), "node", "left"
-        )
-        .join(
-            outdeg.select(
-                F.col("src").alias("node"), F.lit(1).alias("__o")
-            ),
-            "node",
-            "left",
-        )
-        .select(
-            "node",
-            F.when(F.col("__s").isNotNull(), F.lit(1.0) / F.lit(float(ns)))
-            .otherwise(F.lit(0.0))
-            .alias("w"),
-            F.col("__o").isNull().alias("dang"),
-        ),
-        "node",
-        num_partitions=parts,
+    wnodes = _flag_dangling(
+        nodes.join(sd.withColumn("__s", F.lit(1)), "node", "left"),
+        e,
+        parts,
+        F.when(F.col("__s").isNotNull(), F.lit(1.0) / F.lit(float(ns)))
+        .otherwise(F.lit(0.0))
+        .alias("w"),
     )
-    eo = materialize_partitioned(
-        e.join(outdeg, "src"), "src", num_partitions=parts
+    return _power_iteration(
+        e,
+        wnodes,
+        parts,
+        rank0=F.col("w"),
+        teleport=F.lit(1.0 - damping) * F.col("w"),
+        dangling_share=F.col("dm") * F.col("w"),
+        iters=iters,
+        damping=damping,
+        round_dp=round_dp,
     )
-
-    ranks = wnodes.select(
-        "node", "dang", F.round(F.col("w"), round_dp).alias("rank")
-    )
-    for _ in range(iters):
-        dangling = ranks.filter(F.col("dang")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contrib = (
-            eo.join(
-                ranks.select(
-                    F.col("node").alias("src"), F.col("rank").alias("r")
-                ),
-                "src",
-            )
-            .select("dst", (F.col("r") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = materialize(  # iterative: see mat.py
-            wnodes.join(
-                contrib, wnodes["node"] == contrib["dst"], "left"
-            )
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "dang",
-                F.round(
-                    F.lit(1.0 - damping) * F.col("w")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.col("dm") * F.col("w")
-                    ),
-                    round_dp,
-                ).alias("rank"),
-            ),
-            eager=True,
-            iterative=True,
-        )
-    return ranks.select("node", "rank")
 
 
 def hits(
@@ -292,12 +282,7 @@ def hits(
     """
     if iters < 1:
         raise ValueError("hits: iters must be >= 1")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e = materialize(e)  # lazy: the count below materializes (r14)
-    # loop-invariant partition width scaled to |E| (r11 rule)
-    parts = loop_partitions(e.sparkSession, e.count())
+    e, parts = _edge_list(edges, src_col, dst_col)
     # the |E| relation is checkpointed pre-partitioned by EACH
     # half-step's join key (r10): the auth step joins on src, the hub
     # step on dst — two partitioned copies mean neither half-step ever
@@ -348,8 +333,7 @@ def hits(
                 hubs.select(F.col("node").alias("src"), "hub"), "src"
             )
             .groupBy("dst")
-            .agg(F.sum("hub").alias("raw")),
-            iterative=True,
+            .agg(F.sum("hub").alias("raw"))
         )
         atot = araw.agg(F.sum("raw").alias("t"))
         # LAZY checkpoint (r14): the auth half-step's first consumer is
@@ -370,16 +354,14 @@ def hits(
                     ),
                     round_dp,
                 ).alias("auth"),
-            ),
-            iterative=True,
+            )
         )
         hraw = materialize(
             ed.join(
                 auths.select(F.col("node").alias("dst"), "auth"), "dst"
             )
             .groupBy("src")
-            .agg(F.sum("auth").alias("raw")),
-            iterative=True,
+            .agg(F.sum("auth").alias("raw"))
         )
         htot = hraw.agg(F.sum("raw").alias("t"))
         hubs = materialize(
@@ -395,7 +377,6 @@ def hits(
                 ).alias("hub"),
             ),
             eager=True,
-            iterative=True,
         )
     return (
         nodes.join(hubs, "node", "left")
@@ -444,18 +425,12 @@ def label_propagation(
     — the difference between 3 and 1 full-data exchanges per iteration
     at cluster scale.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    # r12 (VERDICT r11 item 5): LPA now follows the same loop-width rule
-    # as pagerank/hits — checkpoint e first (which ALSO stops the union
-    # below recomputing the distinct subtree twice: e appears on both
-    # sides), count it cheaply from the checkpoint, and size the |2E|
-    # loop invariant with loop_partitions instead of the session
-    # default, so a small graph stops scanning 32 near-empty blocks per
-    # round. The directed count bounds the undirected one (|und| ≤ 2|E|).
-    e = materialize(e)  # lazy: the count below materializes (r14)
-    parts = loop_partitions(e.sparkSession, 2 * e.count())
+    # r12 (VERDICT r11 item 5): the checkpointed e ALSO stops the union
+    # below recomputing the distinct subtree twice (e appears on both
+    # sides), and the |2E| loop invariant is sized by loop_partitions,
+    # so a small graph stops scanning 32 near-empty blocks per round.
+    # The directed count bounds the undirected one (|und| ≤ 2|E|).
+    e, parts = _edge_list(edges, src_col, dst_col, rows_per_edge=2)
     und = materialize_partitioned(
         e.unionByName(
             e.select(
@@ -503,6 +478,5 @@ def label_propagation(
             )
             .select("node", F.col("m.label").alias("label")),
             eager=True,
-            iterative=True,
         )
     return labels

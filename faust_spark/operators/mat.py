@@ -1,24 +1,22 @@
-"""Materialization strategy for operators that reuse an intermediate.
+"""Lineage cuts for operators that reuse an intermediate.
 
-Several operators (shingle tables, CC edge lists, corpus stats) compute a
-relation once and feed it to multiple downstream consumers. The default
-materialization is ``localCheckpoint``: blocks release on GC (no persist
-leak) and lineage truncates (no exponential replan in iterative loops).
-Its trade-off is cluster fragility — localCheckpoint blocks are
-NON-REPLICATED, so losing an executor (or dynamic allocation reclaiming
-one) mid-job makes the job unrecoverable, because the truncated lineage
-cannot recompute the lost blocks.
+Several operators (shingle tables, CC edge lists, corpus stats, every
+iterative loop's invariants and round iterates) compute a relation once
+and feed it to multiple downstream consumers. :func:`materialize` always
+CHECKPOINTS: the result is computed once and its lineage truncated, so
+an iterative loop's plan depth stays constant in its round count, and a
+rewrite can never read from the files it overwrites.
 
-``set_strategy``/conf knob ``spark.faust_spark.materialize``:
+``spark.faust_spark.materialize`` picks where the checkpoint lives:
 
-- ``"local"`` (default): ``localCheckpoint`` — fastest, single-tenant /
-  static-allocation clusters and local runs.
+- ``"local"`` (default): ``localCheckpoint`` — blocks release on GC (no
+  persist leak); fastest, for single-tenant / static-allocation clusters
+  and local runs. The blocks are NON-REPLICATED, so losing an executor
+  (or dynamic allocation reclaiming one) mid-job makes the job
+  unrecoverable: the truncated lineage cannot recompute them.
 - ``"reliable"``: ``DataFrame.checkpoint`` to the SparkContext checkpoint
-  dir (set ``spark.sparkContext.setCheckpointDir`` to a DFS path first) —
-  survives executor loss; the right setting under dynamic allocation.
-- ``"persist"``: MEMORY_AND_DISK persist — recomputable from lineage on
-  block loss (safe with dynamic allocation), but pinned until unpersist
-  and lineage is NOT truncated (avoid inside iterative loops).
+  dir (set ``spark.sparkContext.setCheckpointDir`` to a DFS path first)
+  — survives executor loss; the setting for dynamic allocation.
 
 The knob is read per call, so a long-lived session can switch modes
 between jobs.
@@ -30,7 +28,7 @@ import threading
 
 from pyspark.sql import DataFrame
 
-_VALID = ("local", "reliable", "persist")
+_VALID = ("local", "reliable")
 
 #: serializes the AQE on/off/restore window in materialize_partitioned —
 #: the conf is session-global, so two interleaved callers could each read
@@ -53,43 +51,13 @@ def _strategy(df: DataFrame) -> str:
     return s
 
 
-def materialize(
-    df: DataFrame, eager: bool = False, iterative: bool = False
-) -> DataFrame:
-    """Cut ``df``'s lineage / pin its result per the session's
-    materialization strategy (see module docstring).
-
-    ``iterative=True`` marks a call INSIDE an iteration loop (pagerank
-    rounds, BPE merges, CC label propagation): each round re-calls it
-    on a new relation, so the plain ``persist`` strategy would pin one
-    never-unpersisted cache per round while leaving lineage untruncated
-    — super-linear memory AND replan growth, the exact misuse the
-    strategy doc warns about. Loop-internal calls therefore never use
-    raw persist: under the ``persist`` strategy they upgrade to a
-    reliable checkpoint when a checkpoint dir is configured (the
-    dynamic-allocation-safe option) and otherwise fall back to
-    ``localCheckpoint`` (bounded memory, truncated lineage — the
-    documented single-tenant trade)."""
-    s = _strategy(df)
-    if s == "persist" and iterative:
-        try:
-            has_ckpt_dir = (
-                df.sparkSession.sparkContext.getCheckpointDir()
-                is not None
-            )
-        except Exception:
-            has_ckpt_dir = False
-        s = "reliable" if has_ckpt_dir else "local"
-    if s == "local":
-        return df.localCheckpoint(eager=eager)
-    if s == "reliable":
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Checkpoint ``df`` — cut its lineage — where the session's
+    strategy says (see module docstring). A lazy checkpoint
+    (``eager=False``) materializes at the first action over it."""
+    if _strategy(df) == "reliable":
         return df.checkpoint(eager=eager)
-    from pyspark.storagelevel import StorageLevel
-
-    p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        p.count()
-    return p
+    return df.localCheckpoint(eager=eager)
 
 
 def materialize_partitioned(
@@ -97,7 +65,6 @@ def materialize_partitioned(
     *key_cols: str,
     num_partitions: int = None,
     eager: bool = True,
-    iterative: bool = False,
 ) -> DataFrame:
     """Checkpoint ``df`` hash-partitioned by ``key_cols`` with the
     partitioning VISIBLE to downstream plans.
@@ -133,7 +100,7 @@ def materialize_partitioned(
         prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            return materialize(rep, eager=eager, iterative=iterative)
+            return materialize(rep, eager=eager)
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prev)
 

@@ -54,6 +54,16 @@ def norm_expr(a: Column) -> Column:
     )
 
 
+def sqdist_expr(a: Column, b: Column) -> Column:
+    """Squared L2 distance as ascending-index adds from 0.0 — the fold
+    order ``assign_cells_arrow`` reproduces bit-for-bit."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
@@ -896,12 +906,7 @@ def _cell_expr(
     two true distances straddle a rounding-grid boundary)."""
     terms = []
     for i, c in enumerate(cents):
-        carr = F.array(*[F.lit(v) for v in c])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        d = sqdist_expr(F.col(vec_col), F.array(*[F.lit(v) for v in c]))
         if round_dp is not None:
             d = F.round(d, round_dp)
         terms.append(F.struct(d.alias("d"), F.lit(i).alias("i")))
@@ -946,13 +951,7 @@ def assign_cells_join(
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cell int, __cv array<double>",
     )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col(vec_col), F.col("__cv"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = sqdist_expr(F.col(vec_col), F.col("__cv"))
     if round_dp is not None:
         dist = F.round(dist, round_dp)
     return (
@@ -1115,12 +1114,7 @@ def assign_cells_two_level(
         return assign_cells(df, cents, vec_col)
 
     def dist_to(c: list[float]) -> Column:
-        carr = F.array(*[F.lit(v) for v in c])
-        return F.aggregate(
-            F.zip_with(F.col(vec_col), carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        return sqdist_expr(F.col(vec_col), F.array(*[F.lit(v) for v in c]))
 
     sup = [
         F.struct(dist_to(reps[j]).alias("d"), F.lit(j).alias("i"))
@@ -1316,11 +1310,7 @@ def kmeans_centroids_multi(
             F.array(*[F.slice(F.col(vec_col), s, ln) for s, ln, _ in specs])
         ).alias("g", "sv"),
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("__cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = sqdist_expr(F.col("sv"), F.col("__cv"))
     spark = df.sparkSession
     for _ in range(iters):
         # local_rows (guide §4): this runs once per fit ITERATION — the
@@ -1438,11 +1428,7 @@ def pq_encode_join(
     long = df.select(
         F.col(id_col), F.posexplode(F.array(*slices)).alias("j", "sv")
     )
-    dist = F.aggregate(
-        F.zip_with(F.col("sv"), F.col("__cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = sqdist_expr(F.col("sv"), F.col("__cv"))
     assigned = (
         long.join(F.broadcast(bdf), "j")
         .groupBy(id_col, "j")
@@ -1499,11 +1485,7 @@ def adc_lut(
             F.array(*[F.slice(F.col(qv_col), j * d + 1, d) for j in range(m)])
         ).alias("j", "qs"),
     )
-    ldist = F.aggregate(
-        F.zip_with(F.col("qs"), F.col("__cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    ldist = sqdist_expr(F.col("qs"), F.col("__cv"))
     return qsub.join(F.broadcast(bdf), "j").select(
         *keys, "j", "code", ldist.alias("ldist")
     )
@@ -1594,13 +1576,7 @@ def probe_cells_join(
         [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
         "cell int, __cv array<double>",
     )
-    qdist = F.aggregate(
-        F.zip_with(
-            F.col("qv"), F.col("__cv"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    qdist = sqdist_expr(F.col("qv"), F.col("__cv"))
     wq = W.partitionBy("qid").orderBy(F.asc("d"), F.col("cell"))
     return (
         q.join(F.broadcast(cdf))
@@ -2484,11 +2460,9 @@ def compact_ann_index(spark: SparkSession, path: str) -> dict:
                    tomb.select("cell").distinct().collect())
     relp = os.path.join(path, _index_rel(meta))
     # the lineage must be CUT (not merely cached) before the overwrite:
-    # the write job must not read from the path it is rewriting, and
-    # the plain `persist` strategy keeps the file scan in the plan
-    # (AnalysisException at best; recompute-from-half-overwritten-dir
-    # on block loss at worst). iterative=True is the materialize mode
-    # that guarantees a checkpoint under every strategy.
+    # the write job must not read from the path it is rewriting. Lazy:
+    # the kept_cells collect right below is the first action, so the
+    # blocks ARE materialized before the overwrite job starts.
     keep = materialize(
         _cell_partitioned(
             spark.read.parquet(relp)
@@ -2496,11 +2470,7 @@ def compact_ann_index(spark: SparkSession, path: str) -> dict:
             .join(tomb.select("nid").distinct(), "nid", "left_anti"),
             meta["n_cells"],
             meta.get("files_per_cell", 1),
-        ),
-        # lazy: the kept_cells collect right below is the first action,
-        # so the blocks ARE materialized before the overwrite job starts
-        # (the lineage-cut-before-write invariant holds unchanged)
-        iterative=True,
+        )
     )
     kept_cells = {
         int(r["cell"]) for r in keep.select("cell").distinct().collect()
@@ -2769,6 +2739,7 @@ def ivfpq_index_topk(
 __all__ = [
     "dot_expr",
     "norm_expr",
+    "sqdist_expr",
     "cosine_expr",
     "cosine_topk",
     "hard_negative_topk",

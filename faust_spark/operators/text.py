@@ -839,6 +839,57 @@ def unigram_logprob(
     )
 
 
+def _bigram_stream(
+    df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The (id, v, w) stream of adjacent space-split tokens and its
+    (v, w, cvw) counts — one (v,w)-keyed partial-agg shuffle."""
+    ws = F.split(F.col(text_col), " ")
+    qt = _qcol(text_col)
+    pairs = F.when(
+        F.size(ws) >= 2,
+        F.expr(
+            f"transform(sequence(2, size(split({qt}, ' '))), i ->"
+            f" named_struct("
+            f"  'v', element_at(split({qt}, ' '), i - 1),"
+            f"  'w', element_at(split({qt}, ' '), i)))"
+        ),
+    )
+    big = df.select(F.col(id_col), F.explode(pairs).alias("p")).select(
+        id_col, "p.v", "p.w"
+    )
+    return big, big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("cvw"))
+
+
+def _score_bigrams(
+    df: DataFrame, big: DataFrame, nll: DataFrame, id_col: str
+) -> DataFrame:
+    """Per-doc (id, n_bigrams, avg_nll) from the (v, w, nll) table:
+    the exploded stream joins it on (v, w), the decimal NLLs sum
+    exactly, and every id of ``df`` comes back (0 bigrams, NULL
+    avg_nll when it has none)."""
+    per = (
+        big.join(nll, ["v", "w"])
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.sum("nll").alias("__s"),
+        )
+    )
+    return (
+        df.select(F.col(id_col))
+        .join(per, id_col, "left")
+        .select(
+            F.col(id_col),
+            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
+            (
+                F.col("__s").cast("double")
+                / F.col("n_bigrams").cast("double")
+            ).alias("avg_nll"),
+        )
+    )
+
+
 def bigram_logprob(
     df: DataFrame,
     lam: float = 0.7,
@@ -867,20 +918,7 @@ def bigram_logprob(
     Returns (id, n_bigrams, avg_nll); single-token docs have 0 bigrams
     and NULL avg_nll.
     """
-    ws = F.split(F.col(text_col), " ")
-    qt = _qcol(text_col)
-    pairs = F.when(
-        F.size(ws) >= 2,
-        F.expr(
-            f"transform(sequence(2, size(split({qt}, ' '))), i ->"
-            f" named_struct("
-            f"  'v', element_at(split({qt}, ' '), i - 1),"
-            f"  'w', element_at(split({qt}, ' '), i)))"
-        ),
-    )
-    big = df.select(F.col(id_col), F.explode(pairs).alias("p")).select(
-        id_col, "p.v", "p.w"
-    )
+    big, bg = _bigram_stream(df, text_col, id_col)
     # r13 NOTE (guide §1.1 empirical loop): a per-(doc, v, w) count
     # relation materialized once (the dsir_logratio shape) was built
     # and REJECTED here — interleaved same-session A/B at sf0.1 showed
@@ -888,9 +926,8 @@ def bigram_logprob(
     # below already share their exchanges (ReuseExchange), the (v,w)
     # partial agg pre-combines map-side, while the (doc,v,w) relation
     # barely pre-combines and pays a checkpoint barrier. Kept as-is.
-    bg = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("cvw"))
     ctx = bg.groupBy("v").agg(F.sum("cvw").alias("cv"))
-    toks = df.select(F.explode(ws).alias("w"))
+    toks = df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
     tot = uni.agg(F.sum("cw").alias("t"))
     nll = (
@@ -913,26 +950,7 @@ def bigram_logprob(
             .alias("nll"),
         )
     )
-    per = (
-        big.join(nll, ["v", "w"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("nll").alias("__s"),
-        )
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            (
-                F.col("__s").cast("double")
-                / F.col("n_bigrams").cast("double")
-            ).alias("avg_nll"),
-        )
-    )
+    return _score_bigrams(df, big, nll, id_col)
 
 
 def kn_bigram_logprob(
@@ -963,21 +981,7 @@ def kn_bigram_logprob(
     source and summed exactly as decimals, so engines agree
     bit-for-bit. Returns (id, n_bigrams, avg_nll).
     """
-    ws = F.split(F.col(text_col), " ")
-    qt = _qcol(text_col)
-    pairs = F.when(
-        F.size(ws) >= 2,
-        F.expr(
-            f"transform(sequence(2, size(split({qt}, ' '))), i ->"
-            f" named_struct("
-            f"  'v', element_at(split({qt}, ' '), i - 1),"
-            f"  'w', element_at(split({qt}, ' '), i)))"
-        ),
-    )
-    big = df.select(F.col(id_col), F.explode(pairs).alias("p")).select(
-        id_col, "p.v", "p.w"
-    )
-    bg = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("cvw"))
+    big, bg = _bigram_stream(df, text_col, id_col)
     # bg rows ARE the distinct (v,w) types: count(*) per v is N1+(v,·),
     # per w is N1+(·,w), and the relation size is N1+(·,·)
     ctx = bg.groupBy("v").agg(
@@ -1006,26 +1010,7 @@ def kn_bigram_logprob(
             .alias("nll"),
         )
     )
-    per = (
-        big.join(nll, ["v", "w"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("nll").alias("__s"),
-        )
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            (
-                F.col("__s").cast("double")
-                / F.col("n_bigrams").cast("double")
-            ).alias("avg_nll"),
-        )
-    )
+    return _score_bigrams(df, big, nll, id_col)
 
 
 def dsir_logratio(

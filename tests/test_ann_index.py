@@ -752,10 +752,9 @@ def test_delete_with_stale_vector_escalates_to_full_scan(
     )
 
 
-def test_compact_under_persist_materialize_strategy(spark, emb, tmp_path):
-    """The compact rewrite must cut lineage under EVERY materialization
-    strategy: plain persist keeps the file scan in the plan and the
-    overwrite would read from the path it rewrites."""
+def test_compact_under_reliable_materialize_strategy(spark, emb, tmp_path):
+    """The compact rewrite cuts lineage under the 'reliable' strategy
+    too: the overwrite must not read from the path it rewrites."""
     from faust_spark.operators.similarity import (
         compact_ann_index,
         corpus_fingerprint,
@@ -764,9 +763,10 @@ def test_compact_under_persist_materialize_strategy(spark, emb, tmp_path):
 
     key = "spark.faust_spark.materialize"
     old = spark.conf.get(key, None)
-    spark.conf.set(key, "persist")
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(key, "reliable")
     try:
-        path = str(tmp_path / "persistidx")
+        path = str(tmp_path / "reliableidx")
         build_ivf_index(emb, path, n_cells=8, iters=1)
         delete_from_ann_index(spark, path, [11, 13])
         meta = compact_ann_index(spark, path)

@@ -78,37 +78,29 @@ def test_pagerank_mass_conserved_with_dangling(spark):
 
 
 def test_pagerank_iteration_plan_shape(spark):
-    """Loop-internal materializations must truncate lineage under EVERY
-    strategy (mat.py iterative=True): under 'persist' each round would
-    otherwise pin a never-unpersisted cache AND grow the join tree per
-    iteration. The terminal plan is therefore a truncated scan whose
-    size does NOT grow with the iteration count, and no Python ever
-    enters the plan. (The per-iteration join/agg shape itself is
-    audited by tools/plancheck.py on the ppr/hits family and by the
+    """Every loop materialization is a checkpoint, so the terminal plan
+    is a truncated scan whose size does NOT grow with the iteration
+    count, and no Python ever enters the plan. (The per-iteration
+    join/agg shape itself is pinned by tests/test_plans.py and the
     trajectory oracles, which would hash-mismatch on any shape bug.)"""
     df = spark.createDataFrame(
         [("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string"
     )
-    spark.conf.set("spark.faust_spark.materialize", "persist")
-    try:
-        p2 = (
-            pagerank(df, iters=2)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        p4 = (
-            pagerank(df, iters=4)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        spark.conf.set("spark.faust_spark.materialize", "local")
-        spark.catalog.clearCache()
+    p2 = (
+        pagerank(df, iters=2)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    p4 = (
+        pagerank(df, iters=4)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
     assert "EvalPython" not in p2 and "EvalPython" not in p4
     # lineage truncated: doubling the iterations must not grow the
-    # terminal plan (the pre-fix persist path grew it super-linearly)
+    # terminal plan
     assert len(p4) <= len(p2) + 200
     assert p2.count("\n") < 10
 

@@ -223,9 +223,9 @@ def test_cms_estimate_survives_colliding_key_columns(spark):
     assert got == {"a": 7, "b": 3}
 
 
-def test_materialize_strategy_knob(spark):
-    """operators.mat: the conf knob selects localCheckpoint (default),
-    reliable checkpoint, or persist; bad values raise."""
+def test_materialize_strategy_knob(spark, tmp_path):
+    """operators.mat: the conf knob selects localCheckpoint (default)
+    or a reliable checkpoint; bad values raise."""
     import pytest as _pytest
 
     from faust_spark.operators.mat import materialize
@@ -233,13 +233,49 @@ def test_materialize_strategy_knob(spark):
     df = spark.range(10)
     assert materialize(df).count() == 10  # default local
 
-    spark.conf.set("spark.faust_spark.materialize", "persist")
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set("spark.faust_spark.materialize", "reliable")
     try:
-        p = materialize(df, eager=True)
-        assert p.count() == 10
-        p.unpersist()
-        spark.conf.set("spark.faust_spark.materialize", "bogus")
-        with _pytest.raises(ValueError):
-            materialize(df)
+        assert materialize(df, eager=True).count() == 10
+        # 'persist' is no longer a strategy: every materialize cuts
+        # lineage, and the error names the valid values
+        for bad in ("bogus", "persist"):
+            spark.conf.set("spark.faust_spark.materialize", bad)
+            with _pytest.raises(ValueError, match="'local', 'reliable'"):
+                materialize(df)
     finally:
         spark.conf.set("spark.faust_spark.materialize", "local")
+
+
+def test_reliable_materialize_cuts_lineage(spark, tmp_path):
+    """'reliable' writes the checkpoint under the SparkContext
+    checkpoint dir: the rows are unchanged and the plan scans the
+    checkpoint, not the source files."""
+    import os
+
+    from faust_spark.operators.mat import materialize
+
+    src = str(tmp_path / "src")
+    spark.range(20).select(
+        F.col("id"), (F.col("id") % 3).alias("g")
+    ).write.parquet(src)
+    df = spark.read.parquet(src).filter(F.col("g") != 1)
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    spark.conf.set("spark.faust_spark.materialize", "reliable")
+    try:
+        cut = materialize(df, eager=True)
+    finally:
+        spark.conf.set("spark.faust_spark.materialize", "local")
+    assert sorted(map(tuple, cut.collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    plan = cut._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    assert "FileScan" not in plan and "parquet" not in plan.lower()
+    # the blocks are files under the checkpoint dir, not executor memory
+    assert any(
+        f.startswith("part-")
+        for _, _, files in os.walk(ckpt)
+        for f in files
+    )

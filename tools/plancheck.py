@@ -54,8 +54,7 @@ SKIP = {
     # per-iteration shape (hash joins + hash aggs, one-row dangling
     # broadcast, zero Python evals) is pinned by the trajectory oracle
     # + tests/test_graph.py test_pagerank_iteration_plan_shape (plan
-    # bounded under every strategy; loop materializations are
-    # iterative=True so persist can no longer grow plans per round)
+    # bounded in the iteration count: every materialize is a checkpoint)
 }
 
 
