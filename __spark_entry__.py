@@ -4468,10 +4468,11 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clustering: connected components over jaccard≥0.5 pairs
-    (iterative min-label propagation, operators/dedup.py). The canonical
+    (iterative min-label propagation, operators/graph.py). The canonical
     keeper per cluster = the component id. Oracle: transitive closure via
     DuckDB recursive CTE — same fixpoint, declaratively."""
-    from faust_spark.operators.dedup import connected_components, jaccard_pairs
+    from faust_spark.operators.dedup import jaccard_pairs
+    from faust_spark.operators.graph import connected_components
 
     docs = _t(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, threshold=0.5)
@@ -4620,10 +4621,8 @@ def split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     so entire clusters move atomically between splits, deterministic
     across runs/engines/partitionings. Singletons hash their own id:
     identical to split_assign for unclustered docs."""
-    from faust_spark.operators.dedup import (
-        connected_components,
-        jaccard_pairs,
-    )
+    from faust_spark.operators.dedup import jaccard_pairs
+    from faust_spark.operators.graph import connected_components
     from faust_spark.operators.sampling import assign_splits
 
     docs = _t(spark, sf_dir, "documents")

@@ -64,6 +64,20 @@ def word_counts(
     )
 
 
+def _spelled(words: DataFrame) -> DataFrame:
+    """(word, cnt, syms): each word as its characters plus ``END`` — the
+    state before the first merge — behind a lazy lineage cut."""
+    return materialize(
+        words.select(
+            "word",
+            "cnt",
+            F.concat(
+                F.split(F.col("word"), ""), F.array(F.lit(END))
+            ).alias("syms"),
+        ),
+    )
+
+
 def _merge_pair(sym: DataFrame, a: str, b: str) -> DataFrame:
     """Apply one merge (a, b) -> ab to every symbol sequence, greedy
     left-to-right non-overlapping, via islands-parity window logic."""
@@ -228,15 +242,7 @@ def bpe_fit(
             return merges, sym
     # lazy: round 1's pair-count collect is the first action and
     # materializes the blocks (r14, guide §1.2)
-    sym = materialize(
-        words.select(
-            "word",
-            "cnt",
-            F.concat(
-                F.split(F.col("word"), ""), F.array(F.lit(END))
-            ).alias("syms"),
-        ),
-    )
+    sym = _spelled(words)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         # sequence(0, size-1) is always ascending (size >= 1); the
@@ -290,15 +296,7 @@ def bpe_segment(
     # lazy chain: each checkpoint still cuts lineage at plan time; the
     # caller's first action materializes the cascade once, instead of
     # len(merges)+1 separate driver-blocking jobs here (r14, §1.2)
-    sym = materialize(
-        words.select(
-            "word",
-            "cnt",
-            F.concat(
-                F.split(F.col("word"), ""), F.array(F.lit(END))
-            ).alias("syms"),
-        ),
-    )
+    sym = _spelled(words)
     for a, b, *_ in merges:
         sym = materialize(_merge_pair(sym, a, b))
     return sym

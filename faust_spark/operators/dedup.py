@@ -26,12 +26,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from faust_spark.operators.mat import (
-    local_rows,
-    loop_partitions,
-    materialize,
-    materialize_partitioned,
-)
+from faust_spark.operators.mat import materialize
 
 
 # --------------------------------------------------------------------------
@@ -893,168 +888,6 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("doc1", "doc2", "hamming")
         .dropDuplicates(["doc1", "doc2"])
-    )
-
-
-# --------------------------------------------------------------------------
-# duplicate clustering (connected components)
-# --------------------------------------------------------------------------
-
-
-def connected_components(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iterations: int = 20,
-    small_graph_edges: int = 100_000,
-) -> DataFrame:
-    """Label each node with the min id of its duplicate cluster.
-
-    Iterative min-label propagation (the standard large-graph CC loop):
-    every round each node takes the min of its own label and its
-    neighbors' labels; converges in O(component diameter) rounds. Data
-    stays distributed — the driver loop only checks a convergence count
-    per round. Dup components from near-dup pair detection have tiny
-    diameters, so 3-4 rounds is typical.
-
-    ``nodes``: one column ``id_col``; ``pairs``: columns doc1/doc2.
-    Returns (id_col, component).
-
-    Fast path: near-dup edge sets are orders of magnitude smaller than
-    the corpus (they're the *output* of candidate pruning), so when the
-    edge list fits comfortably on the driver (≤ ``small_graph_edges``,
-    default 100k — a conservative few MB of ids) a local union-find
-    resolves components in one pass and only the node→component map is
-    distributed again. The iterative join loop remains the fallback for
-    genuinely huge duplicate graphs.
-    """
-    # materialize the pair list once — both the path decision below and
-    # every consumer (driver collect on the small path; the union of both
-    # edge directions on the distributed path) would otherwise re-evaluate
-    # the (expensive) pair-generation pipeline. LAZY localCheckpoint: the
-    # count() on the next line is the first action, so it materializes the
-    # blocks — an eager=True here was one whole extra job (r14, guide §1.2:
-    # the count is unavoidable, the separate materialization pass was not).
-    pairs = materialize(pairs)  # once, not per-round
-    n_pairs = pairs.count()
-    all_nodes = nodes.select(F.col(id_col).alias("node"))
-    spark = nodes.sparkSession
-
-    # Fast path decided BEFORE any distributed loop state is built (r14):
-    # the r13 shape checkpointed + counted the |2E| undirected relation
-    # and persisted the active-node set only to throw all of it away when
-    # the union-find branch hit — three jobs of pure overhead on the path
-    # every near-dup corpus actually takes. 2·|pairs| bounds the
-    # undirected-distinct edge count from above, so the branch condition
-    # only gets more conservative (borderline graphs go distributed —
-    # both paths are value-identical).
-    if 2 * n_pairs <= small_graph_edges:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        # union-find needs each undirected edge once; direction and
-        # duplicates are harmless, so collect the raw pairs directly
-        for r in pairs.collect():
-            a, b = r["doc1"], r["doc2"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        comp_rows = [(n, find(n)) for n in parent]
-        if comp_rows:
-            # local_rows (guide §4): LocalTableScan, no Python re-eval
-            resolved = local_rows(
-                spark, comp_rows, "node long, component long"
-            )
-        else:
-            resolved = all_nodes.limit(0).select(
-                "node", F.col("node").alias("component")
-            )
-        # isolated = everything not in the (already collected) edge set —
-        # an anti-join against the tiny resolved side, not a recompute of
-        # the pair pipeline
-        iso = all_nodes.join(
-            F.broadcast(resolved.select("node")), "node", "left_anti"
-        )
-        return resolved.unionByName(
-            iso.select("node", F.col("node").alias("component"))
-        ).select(F.col("node").alias(id_col), "component")
-
-    # distributed min-label propagation — loop state built only here
-    # (the small path above never pays for it). Edges checkpointed
-    # pre-partitioned by dst, the loop's join key (r11:
-    # materialize_partitioned, not persist — under AQE a plain
-    # checkpoint/persist loses the partitioning and every propagation
-    # round re-shuffles the |E| side); width scaled to the edge count
-    # (r11 rule, mat.loop_partitions).
-    parts = loop_partitions(spark, 2 * n_pairs)
-    edges = materialize_partitioned(
-        pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("doc2").alias("src"), F.col("doc1").alias("dst")
-            )
-        )
-        .distinct(),
-        "dst",
-        num_partitions=parts,
-    )
-    # only edge-connected nodes participate in propagation; isolated nodes
-    # are their own component and join back at the end (in a dedup corpus
-    # the connected subgraph is a tiny fraction of all docs)
-    active = edges.select(F.col("src").alias("node")).distinct().persist()
-    isolated = all_nodes.join(active, "node", "left_anti")
-
-    labels = active.select(
-        "node", F.col("node").alias("label")
-    ).persist()
-    for it in range(max_iterations):
-        # truncate lineage every few rounds: each iteration chains the
-        # previous plan, so without this the logical plan (and failure-
-        # recovery depth) grows linearly with rounds — after ~20 rounds
-        # planning time alone dominates. localCheckpoint materializes the
-        # current labels and cuts the chain.
-        if it > 0 and it % 5 == 0:
-            labels = materialize(labels, eager=True)
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    active.unpersist()
-    out = labels.unionByName(
-        isolated.select("node", F.col("node").alias("label"))
-    )
-    return out.select(
-        F.col("node").alias(id_col), F.col("label").alias("component")
     )
 
 

@@ -1,5 +1,6 @@
 """Graph ranking and communities over edge relations: PageRank,
-personalized PageRank, HITS and label propagation.
+personalized PageRank, HITS, label propagation and connected
+components.
 
 Crawl-scale data curation ranks DOMAINS before it ranks documents —
 Common Crawl publishes harmonic-centrality/PageRank-ranked domain lists
@@ -27,10 +28,12 @@ makes the trajectory bit-portable: cross-engine float-sum differences
 value sits within that error of a rounding-grid boundary — the
 ``mmr_rerank``/``logreg_fit`` guard applied to graph iteration.
 
-All four operators prepare their edges the same way (:func:`_edge_list`)
-and cut lineage the same way: every loop invariant and every round's
-iterate goes through ``operators.mat`` (always a checkpoint), so plan
-depth stays constant in ``iters``.
+All five operators cut lineage the same way: every loop invariant and
+every round's iterate goes through ``operators.mat`` (always a
+checkpoint), so plan depth stays constant in ``iters``. The first four
+prepare their edges with :func:`_edge_list`; the two undirected loops
+(label propagation, connected components) share one undirected edge
+relation (:func:`_undirected`).
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from faust_spark.operators.mat import (
+    local_rows,
     loop_partitions,
     materialize,
     materialize_partitioned,
@@ -48,6 +52,7 @@ __all__ = [
     "personalized_pagerank",
     "hits",
     "label_propagation",
+    "connected_components",
 ]
 
 
@@ -89,6 +94,26 @@ def _flag_dangling(
         "node",
         num_partitions=parts,
     )
+
+
+def _undirected(e: DataFrame, parts: int) -> tuple[DataFrame, DataFrame]:
+    """The undirected view of (src, dst) edges — distinct, checkpointed
+    pre-partitioned by ``dst`` (the vote/min-label join key of both
+    undirected loops) — and its (node) set behind a lazy lineage cut."""
+    und = materialize_partitioned(
+        e.unionByName(
+            e.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst")
+            )
+        )
+        .distinct(),
+        "dst",
+        num_partitions=parts,
+    )
+    nodes = materialize(
+        und.select(F.col("src").alias("node")).distinct()
+    )
+    return und, nodes
 
 
 def _power_iteration(
@@ -260,7 +285,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     round_dp: int = 9,
-    low_memory: bool = False,
 ) -> DataFrame:
     """HITS hubs & authorities over distinct directed edges; returns
     (node, hub, auth).
@@ -286,19 +310,11 @@ def hits(
     # the |E| relation is checkpointed pre-partitioned by EACH
     # half-step's join key (r10): the auth step joins on src, the hub
     # step on dst — two partitioned copies mean neither half-step ever
-    # shuffles the edges again, only the |V| score side. nodes keep a
-    # node partitioning for the same reason (the update joins). The
-    # second copy DOUBLES the checkpointed edge bytes (2x|E| state);
-    # low_memory=True keeps one src-partitioned copy and pays one |E|
-    # dst re-exchange per hub half-step instead — the time/space knob
-    # for edge sets near executor-storage limits (DEPLOYMENT.md sizing
-    # table has the row).
+    # shuffles the edges again, only the |V| score side (2x|E|
+    # checkpointed state). nodes keep a node partitioning for the same
+    # reason (the update joins).
     es = materialize_partitioned(e, "src", num_partitions=parts)
-    ed = (
-        es
-        if low_memory
-        else materialize_partitioned(e, "dst", num_partitions=parts)
-    )
+    ed = materialize_partitioned(e, "dst", num_partitions=parts)
     nodes = materialize_partitioned(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -431,19 +447,7 @@ def label_propagation(
     # so a small graph stops scanning 32 near-empty blocks per round.
     # The directed count bounds the undirected one (|und| ≤ 2|E|).
     e, parts = _edge_list(edges, src_col, dst_col, rows_per_edge=2)
-    und = materialize_partitioned(
-        e.unionByName(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct(),
-        "dst",
-        num_partitions=parts,
-    )
-    nodes = materialize(
-        und.select(F.col("src").alias("node")).distinct()
-    )
+    und, nodes = _undirected(e, parts)
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(iters):
         nbr_votes = und.join(
@@ -480,3 +484,129 @@ def label_propagation(
             eager=True,
         )
     return labels
+
+
+def connected_components(
+    nodes: DataFrame,
+    pairs: DataFrame,
+    id_col: str = "doc_id",
+    max_iterations: int = 20,
+    small_graph_edges: int = 100_000,
+) -> DataFrame:
+    """Label each node with the min id of its duplicate cluster.
+
+    Iterative min-label propagation (the standard large-graph CC loop):
+    every round each node takes the min of its own label and its
+    neighbors' labels; converges in O(component diameter) rounds. Data
+    stays distributed — the driver loop only checks a convergence count
+    per round. Dup components from near-dup pair detection have tiny
+    diameters, so 3-4 rounds is typical. Each round's iterate is
+    checkpointed, so plan depth stays constant in the round count.
+
+    ``nodes``: one column ``id_col``; ``pairs``: columns doc1/doc2.
+    Returns (id_col, component).
+
+    Fast path: near-dup edge sets are orders of magnitude smaller than
+    the corpus (they're the *output* of candidate pruning), so when the
+    edge list fits comfortably on the driver (≤ ``small_graph_edges``,
+    default 100k — a conservative few MB of ids) a local union-find
+    resolves components in one pass and only the node→component map is
+    distributed again. The iterative join loop remains the fallback for
+    genuinely huge duplicate graphs.
+    """
+    # materialize the pair list once — both the path decision below and
+    # every consumer (driver collect on the small path; the union of both
+    # edge directions on the distributed path) would otherwise re-evaluate
+    # the (expensive) pair-generation pipeline. LAZY localCheckpoint: the
+    # count() on the next line is the first action, so it materializes the
+    # blocks — an eager=True here was one whole extra job (r14, guide §1.2:
+    # the count is unavoidable, the separate materialization pass was not).
+    pairs = materialize(pairs)  # once, not per-round
+    n_pairs = pairs.count()
+    all_nodes = nodes.select(F.col(id_col).alias("node"))
+    spark = nodes.sparkSession
+
+    # Fast path decided BEFORE any distributed loop state is built (r14):
+    # the r13 shape checkpointed + counted the |2E| undirected relation
+    # and cached the active-node set only to throw all of it away when
+    # the union-find branch hit — three jobs of pure overhead on the path
+    # every near-dup corpus actually takes. 2·|pairs| bounds the
+    # undirected-distinct edge count from above, so the branch condition
+    # only gets more conservative (borderline graphs go distributed —
+    # both paths are value-identical).
+    if 2 * n_pairs <= small_graph_edges:
+        parent: dict = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        # union-find needs each undirected edge once; direction and
+        # duplicates are harmless, so collect the raw pairs directly
+        for r in pairs.collect():
+            a, b = r["doc1"], r["doc2"]
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        comp_rows = [(n, find(n)) for n in parent]
+        if comp_rows:
+            # local_rows (guide §4): LocalTableScan, no Python re-eval
+            resolved = local_rows(
+                spark, comp_rows, "node long, component long"
+            )
+        else:
+            resolved = all_nodes.limit(0).select(
+                "node", F.col("node").alias("component")
+            )
+        # isolated = everything not in the (already collected) edge set —
+        # an anti-join against the tiny resolved side, not a recompute of
+        # the pair pipeline
+        iso = all_nodes.join(
+            F.broadcast(resolved.select("node")), "node", "left_anti"
+        )
+        return resolved.unionByName(
+            iso.select("node", F.col("node").alias("component"))
+        ).select(F.col("node").alias(id_col), "component")
+
+    # distributed min-label propagation — loop state built only here
+    # (the small path above never pays for it), on the same undirected
+    # relation label propagation votes over
+    und, active = _undirected(
+        pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst")),
+        loop_partitions(spark, 2 * n_pairs),
+    )
+    # only edge-connected nodes participate in propagation; isolated nodes
+    # are their own component and join back at the end (in a dedup corpus
+    # the connected subgraph is a tiny fraction of all docs)
+    isolated = all_nodes.join(active, "node", "left_anti")
+    labels = active.select("node", F.col("node").alias("label"))
+    for _ in range(max_iterations):
+        # min over the node's own label and its neighbors' — one
+        # node-keyed partial-agg MIN, as label propagation's vote count.
+        # Lazy: the convergence count below is the round's one action
+        # and materializes the checkpoint.
+        new_labels = materialize(
+            und.join(labels.select(F.col("node").alias("dst"), "label"), "dst")
+            .select(F.col("src").alias("node"), "label")
+            .unionByName(labels)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
+            .filter(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels.unionByName(
+        isolated.select("node", F.col("node").alias("label"))
+    ).select(F.col("node").alias(id_col), F.col("label").alias("component"))

@@ -799,15 +799,15 @@ def kmeans_fit(
 
     Init is the ``k`` lowest-id vectors (no RNG: identical across runs and
     retries).  Each iteration is one corpus pass: nearest-centroid
-    assignment, then one (cell, dim)-keyed partial-agg shuffle via
-    posexplode to re-average.  For k ≤ 32 the assignment is the literal
-    argmin expression (narrow map — the whole iteration is ONE shuffle of
-    k×dim partial sums); larger k uses the broadcast centroid-table form
-    (``assign_cells_join``), which adds the id-keyed argmin shuffle but
-    keeps codegen constant-size.  Both forms produce identical values and
-    tie-breaks.  Only the k×dim centroid model ever reaches the driver —
-    the standard fit shape for IVF coarse quantizers (k ≪ data, model is
-    driver-side by design).
+    assignment, then the one-group :func:`_lloyd_update` (one
+    (cell, dim)-keyed partial-agg shuffle via posexplode to re-average).
+    With an id column and full precision the assignment is the Arrow
+    numpy argmin (:func:`assign_cells_arrow`); otherwise it is the
+    literal argmin expression (narrow map — the whole iteration is ONE
+    shuffle of k×dim partial sums).  Both forms produce identical values
+    and tie-breaks.  Only the k×dim centroid model ever reaches the
+    driver — the standard fit shape for IVF coarse quantizers (k ≪ data,
+    model is driver-side by design).
 
     ``round_dp`` rounds both the assignment distances and the updated
     centroids in-engine each iteration (HALF_UP, same as DuckDB's ROUND),
@@ -819,7 +819,7 @@ def kmeans_fit(
     orders by the vector itself (arrays compare lexicographically —
     still deterministic) and assignment uses the ``_cell_expr``
     expression form, which needs only the vector column. The id-keyed
-    Arrow/join fast paths require ``id_col``.
+    Arrow path requires ``id_col``.
     """
     have_id = id_col in df.columns
     seed = (
@@ -833,53 +833,64 @@ def kmeans_fit(
     for _ in range(iters):
         if round_dp is None and have_id:
             # full-precision fit: Arrow numpy argmin — bit-identical
-            # cells to the expression forms (assign_cells_arrow's fold
+            # cells to the expression form (assign_cells_arrow's fold
             # contract), so the trajectory is unchanged while the
             # per-iteration n×k distance evals leave the interpreter.
-            # The round_dp path keeps the in-engine F.round forms (the
+            # The round_dp path keeps the in-engine F.round form (the
             # oracle-unrolled kmeans_fit gate needs HALF_UP rounding
             # applied INSIDE the engine expression).
             assigned = assign_cells_arrow(
                 df, cents, vec_col=vec_col, id_col=id_col
-            ).select("cell", F.col(vec_col))
-        elif k <= 32 or not have_id:
+            )
+        else:
             assigned = df.select(
                 _cell_expr(cents, vec_col, round_dp).alias("cell"),
                 F.col(vec_col),
             )
-        else:
-            cells = assign_cells_join(
-                df, cents, vec_col=vec_col, id_col=id_col,
-                round_dp=round_dp,
-            )
-            assigned = df.select(F.col(id_col), F.col(vec_col)).join(
-                cells, id_col
-            )
-        m = F.avg("v")
-        if round_dp is not None:
-            m = F.round(m, round_dp)
-        per_dim = (
-            assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(m.alias("m"))
-        )
-        rows = (
-            per_dim.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                    ),
-                    lambda s: s["m"],
-                ).alias("centroid"),
-            )
-            .collect()
-        )
-        new = {r["cell"]: list(r["centroid"]) for r in rows}
-        # empty cells keep their previous centroid
-        cents = [new.get(i, c) for i, c in enumerate(cents)]
+        cents = _lloyd_update(
+            assigned.select(
+                F.lit(0).alias("g"), "cell", F.col(vec_col).alias("sv")
+            ),
+            [cents],
+            round_dp,
+        )[0]
         traj.append(cents)
     return traj
+
+
+def _lloyd_update(
+    assigned: DataFrame,
+    cents: list[list[list[float]]],
+    round_dp: Optional[int] = None,
+) -> list[list[list[float]]]:
+    """One Lloyd re-average over a (g, cell, sv) assignment frame:
+    ``cents`` holds one codebook per group g; each (g, cell) becomes the
+    per-(g, cell, pos) average of its members' ``sv`` (ROUNDed in-engine
+    when ``round_dp`` is set), and an empty cell keeps its previous
+    centroid. One collect of the k×dim model."""
+    m = F.avg("v")
+    if round_dp is not None:
+        m = F.round(m, round_dp)
+    rows = (
+        assigned.select("g", "cell", F.posexplode("sv").alias("pos", "v"))
+        .groupBy("g", "cell", "pos")
+        .agg(m.alias("m"))
+        .groupBy("g", "cell")
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
+                ),
+                lambda s: s["m"],
+            ).alias("centroid"),
+        )
+        .collect()
+    )
+    new = {(r["g"], r["cell"]): list(r["centroid"]) for r in rows}
+    return [
+        [new.get((g, i), c) for i, c in enumerate(book)]
+        for g, book in enumerate(cents)
+    ]
 
 
 def kmeans_centroids(
@@ -1333,28 +1344,7 @@ def kmeans_centroids_multi(
             )
             .select("g", F.col("__m.cell").alias("cell"), "sv")
         )
-        rows = (
-            assigned.select(
-                "g", "cell", F.posexplode("sv").alias("pos", "v")
-            )
-            .groupBy("g", "cell", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("g", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                    ),
-                    lambda s: s["m"],
-                ).alias("centroid"),
-            )
-            .collect()
-        )
-        new = {(r["g"], r["cell"]): list(r["centroid"]) for r in rows}
-        cents = [
-            [new.get((g, i), c) for i, c in enumerate(book)]
-            for g, book in enumerate(cents)
-        ]
+        cents = _lloyd_update(assigned, cents)
     return cents
 
 
@@ -1666,24 +1656,19 @@ def ivfpq_topk(
 
     Returns (qid, nid, rank).
     """
-    if index is not None:
-        cents, books = index
-    else:
-        dim = corpus.select(F.size(F.col(vec_col))).first()[0]
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d = dim // m
-        # one batched fit: group 0 is the coarse quantizer over the full
-        # vector, groups 1..m the PQ subspaces — iters+2 driver
-        # round-trips total instead of (m+1) independent fits
-        fitted = kmeans_centroids_multi(
+    cents, books = (
+        index
+        if index is not None
+        else ivfpq_fit(
             corpus,
-            [(1, dim, n_cells)] + [(j * d + 1, d, ksub) for j in range(m)],
+            n_cells=n_cells,
+            m=m,
+            ksub=ksub,
             iters=iters,
             vec_col=vec_col,
             id_col=id_col,
         )
-        cents, books = fitted[0], fitted[1:]
+    )
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
     )

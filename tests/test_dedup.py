@@ -198,10 +198,10 @@ def test_containment_matches_bruteforce_property(spark):
 @pytest.mark.slow
 def test_connected_components_bounded_plan_depth(spark):
     """15+ label-propagation rounds must NOT grow the logical plan
-    linearly: localCheckpoint every 5 rounds truncates lineage, so the
-    final plan depth is bounded by one truncation window regardless of
-    iteration count (VERDICT r4 item 7)."""
-    from faust_spark.operators.dedup import connected_components
+    linearly: every round's iterate is checkpointed, so the final plan
+    depth is bounded by one round regardless of iteration count
+    (VERDICT r4 item 7)."""
+    from faust_spark.operators.graph import connected_components
 
     # path graph 0-1-2-...-16: min-label needs ~16 rounds to reach the end
     n = 17
@@ -220,7 +220,7 @@ def test_connected_components_bounded_plan_depth(spark):
     assert "LogicalRDD" in plan, "no checkpoint leaf — lineage not cut"
     # and the rendered plan stays bounded (each un-truncated round DOUBLES
     # the tree — 16 rounds would render tens of thousands of lines; the
-    # truncated tail is the <=2 rounds since the last 5-round checkpoint)
+    # truncated tail is the last round's checkpoint)
     plan_lines = len(plan.splitlines())
     assert plan_lines < 1500, f"plan depth {plan_lines} — lineage not cut"
 

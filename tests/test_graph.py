@@ -1,10 +1,12 @@
-"""PageRank (operators/graph.py): trajectory vs a numpy reference,
-dangling-mass conservation, and plan shape (no Python evals)."""
+"""Graph operators (operators/graph.py): trajectories vs numpy/Python
+references, dangling-mass conservation, connected components on both
+paths, and plan shape (no Python evals)."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from faust_spark.operators.graph import hits, pagerank
+from faust_spark.operators.graph import connected_components, hits, pagerank
+from faust_spark.operators.mat import local_rows
 
 
 def _numpy_pagerank(edges, iters, d=0.85, round_dp=9):
@@ -311,21 +313,68 @@ def test_hits_requires_at_least_one_iteration(spark):
         hits(df, iters=0)
 
 
-def test_hits_low_memory_identical_trajectory(spark):
-    """low_memory=True keeps one edge copy (1x|E| checkpointed state,
-    one dst re-exchange per hub half-step) — the VALUES must be
-    bit-identical to the two-copy default."""
-    edges = [
-        ("a", "x"), ("a", "y"), ("b", "y"), ("b", "z"),
-        ("c", "y"), ("c", "x"), ("d", "z"),
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    full = {
-        r["node"]: (r["hub"], r["auth"])
-        for r in hits(df, iters=3).collect()
-    }
-    lean = {
-        r["node"]: (r["hub"], r["auth"])
-        for r in hits(df, iters=3, low_memory=True).collect()
-    }
-    assert full == lean
+
+def _union_find_components(nodes, pairs):
+    """Plain-Python union-find replica: node -> min id of its component."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _cc(spark, nodes, pairs, **kw):
+    out = connected_components(
+        local_rows(spark, [(n,) for n in nodes], "doc_id long"),
+        local_rows(spark, pairs, "doc1 long, doc2 long"),
+        **kw,
+    )
+    return {r["doc_id"]: r["component"] for r in out.collect()}
+
+
+def test_connected_components_paths_match_union_find_replica(spark):
+    """Seeded random graphs with isolated nodes and a planted 7-hop path
+    (longer than any fixed checkpoint window): the driver union-find
+    path, the distributed min-label loop and a Python replica agree
+    exactly."""
+    rng = np.random.default_rng(11)
+    for _ in range(3):
+        nodes = list(range(40))
+        # random edges among 0..24; 25..29 stay isolated
+        pairs = [
+            tuple(int(v) for v in rng.choice(25, 2, replace=False))
+            for _ in range(12)
+        ]
+        # a path over 30..37 in shuffled order, so the min label has to
+        # walk all 7 hops
+        path = [int(v) for v in rng.permutation(np.arange(30, 38))]
+        pairs += list(zip(path, path[1:]))
+        want = _union_find_components(nodes, pairs)
+        assert _cc(spark, nodes, pairs) == want
+        assert _cc(spark, nodes, pairs, small_graph_edges=0) == want
+
+
+def test_connected_components_distributed_leaves_no_cache_entries(spark):
+    """The distributed loop cuts lineage with checkpoints only: after
+    a run of 8 rounds the session CacheManager holds no more entries
+    than before the call (a persist/unpersist loop leaked one cached
+    frame per lineage cut)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    chain = spark.range(8)
+    nodes = chain.select(F.col("id").alias("doc_id"))
+    pairs = chain.filter(F.col("id") < 7).select(
+        F.col("id").alias("doc1"), (F.col("id") + 1).alias("doc2")
+    )
+    before = cm.numCachedEntries()
+    out = connected_components(
+        nodes, pairs, max_iterations=20, small_graph_edges=0
+    )
+    assert {r.component for r in out.collect()} == {0}
+    assert cm.numCachedEntries() <= before

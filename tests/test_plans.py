@@ -351,6 +351,29 @@ def test_lpa_round_never_reshuffles_edges(spark, edge_frame, mat_spy):
     _assert_round_plan(mat_spy[-1], 2)
 
 
+def test_cc_round_plan_constant_in_rounds(spark, mat_spy):
+    """Each min-label round reads the previous round's checkpoint, so
+    the last round's executed plan has the same exchanges after 2
+    rounds as after 6 (a cached, un-cut iterate nests every earlier
+    round into it)."""
+    import faust_spark.operators.graph as g
+
+    chain = spark.range(12)
+    nodes = chain.select(F.col("id").alias("doc_id"))
+    pairs = chain.filter(F.col("id") < 11).select(
+        F.col("id").alias("doc1"), (F.col("id") + 1).alias("doc2")
+    )
+    exchanges = []
+    for rounds in (2, 6):
+        mat_spy.clear()
+        g.connected_components(
+            nodes, pairs, max_iterations=rounds, small_graph_edges=0
+        ).count()
+        exchanges.append(mat_spy[-1].count("Exchange hashpartitioning"))
+    assert exchanges[0] == exchanges[1], exchanges
+    _assert_round_plan(mat_spy[-1], 2)
+
+
 @pytest.fixture()
 def collect_spy(monkeypatch):
     """Capture the executed plan of every DataFrame.collect() — the
@@ -373,7 +396,7 @@ def collect_spy(monkeypatch):
 
 
 def test_kmeans_iteration_single_corpus_shuffle(spark, sf_dir, collect_spy):
-    """Each Lloyd iteration (k<=32 expression path) is ONE corpus scan
+    """Each Lloyd iteration (round_dp expression path) is ONE corpus scan
     whose only corpus-sized exchange carries k x dim partial averages;
     the cell re-gather is k x dim-sized. No joins, no windows."""
     from faust_spark.operators.similarity import kmeans_fit

@@ -221,7 +221,7 @@ def test_cluster_atomic_split(spark):
     """Composing connected components with a root-keyed assign_splits
     keeps every near-dup cluster in ONE split (the leakage guard), and
     singletons match plain per-id split assignment exactly."""
-    from faust_spark.operators.dedup import connected_components
+    from faust_spark.operators.graph import connected_components
     from faust_spark.operators.sampling import assign_splits
 
     docs = spark.createDataFrame(

@@ -393,8 +393,8 @@ def test_kmeans_fit_matches_numpy_reference(spark):
 def test_kmeans_assignment_forms_agree(spark):
     """The literal argmin expression and the broadcast centroid-table
     form produce identical assignments under rounding (same values,
-    same tie-break), so kmeans_fit's k-dependent form switch never
-    changes results."""
+    same tie-break), so an oracle-rounded fit assigns the same cells
+    whichever form runs it."""
     import numpy as np
 
     from faust_spark.operators.similarity import (
