@@ -7934,10 +7934,12 @@ def kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     kn_bigram_logprob — the KenLM/CCNet-standard smoothing): absolute
     discount D=0.75 with the freed mass weighted by the context's
     distinct continuation count, backing off to CONTINUATION
-    probability N1+(·,w)/N1+(·,·) rather than raw frequency. Everything
-    derives from the (v,w,count) relation — no second corpus pass; the
-    per-(v,w) NLL is one fixed operand-order expression of integer
-    counts, rounded at source and decimal-summed — engine bit-exact."""
+    probability N1+(·,w)/N1+(·,·) rather than raw frequency. Every
+    statistic is a window over the one (v,w,count) relation, so the
+    corpus is exploded twice: once for the counts, once for the scoring
+    stream. The per-(v,w) NLL is one fixed operand-order expression of
+    integer counts, rounded at source and decimal-summed — engine
+    bit-exact."""
     from faust_spark.operators.text import kn_bigram_logprob
 
     return kn_bigram_logprob(

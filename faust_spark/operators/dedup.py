@@ -92,9 +92,11 @@ def shingles(
 
     Documents shorter than ``n`` words produce no shingles (and therefore
     never enter pair generation) — Spark's ``sequence(1, 0)`` would count
-    DOWN, so the short case needs an explicit empty guard.
+    DOWN, so the short case needs an explicit empty guard. The split is
+    projected first: inside the lambda it would re-split the document
+    for every shingle (O(len²)).
     """
-    words = F.split(F.col(text_col), " ")
+    words = F.col("__words")
     idx = F.when(
         F.size(words) >= n,
         F.sequence(F.lit(1), F.size(words) - (n - 1)),
@@ -103,7 +105,8 @@ def shingles(
         idx, lambda i: F.concat_ws(" ", F.slice(words, i, n))
     )
     return (
-        df.select(F.col(id_col), F.explode(sh).alias("shingle"))
+        df.select(F.col(id_col), F.split(text_col, " ").alias("__words"))
+        .select(id_col, F.explode(sh).alias("shingle"))
         .distinct()
     )
 

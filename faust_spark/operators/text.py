@@ -37,6 +37,14 @@ def _qcol(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _adjacent(ws: Column, f) -> Column:
+    """``f(ws[i], ws[i + 1])`` over the adjacent token pairs: the array
+    zipped with its own tail, O(len) per document, where an index lambda
+    re-reading (or re-splitting) ``ws`` per element is O(len²)."""
+    n = F.greatest(F.size(ws) - 1, F.lit(0))
+    return F.zip_with(F.slice(ws, 1, n), F.slice(ws, 2, n), f)
+
+
 def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("tokens", F.split(F.col(text_col), " "))
 
@@ -186,17 +194,9 @@ def repetition_stats(
             F.max("count").alias("top_cnt"),
         )
     )
-    # non-distinct bigrams: zip the token array with its own tail — O(len)
-    # per doc (an index+slice build would copy O(len) per position);
-    # slice handles short docs (empty zip → no rows)
-    tail = F.slice(words, 2, F.greatest(F.size(words) - 1, F.lit(0)))
-    head = F.slice(words, 1, F.greatest(F.size(words) - 1, F.lit(0)))
-    bg = df.select(
-        F.col(id_col),
-        F.explode(
-            F.zip_with(head, tail, lambda a, b: F.concat_ws(" ", a, b))
-        ).alias("b"),
-    )
+    # non-distinct bigrams
+    bigrams = _adjacent(words, lambda a, b: F.concat_ws(" ", a, b))
+    bg = df.select(F.col(id_col), F.explode(bigrams).alias("b"))
     bstats = (
         bg.groupBy(id_col, "b")
         .count()
@@ -844,16 +844,9 @@ def _bigram_stream(
 ) -> tuple[DataFrame, DataFrame]:
     """The (id, v, w) stream of adjacent space-split tokens and its
     (v, w, cvw) counts — one (v,w)-keyed partial-agg shuffle."""
-    ws = F.split(F.col(text_col), " ")
-    qt = _qcol(text_col)
-    pairs = F.when(
-        F.size(ws) >= 2,
-        F.expr(
-            f"transform(sequence(2, size(split({qt}, ' '))), i ->"
-            f" named_struct("
-            f"  'v', element_at(split({qt}, ' '), i - 1),"
-            f"  'w', element_at(split({qt}, ' '), i)))"
-        ),
+    pairs = _adjacent(
+        F.split(F.col(text_col), " "),
+        lambda v, w: F.struct(v.alias("v"), w.alias("w")),
     )
     big = df.select(F.col(id_col), F.explode(pairs).alias("p")).select(
         id_col, "p.v", "p.w"
@@ -907,9 +900,11 @@ def bigram_logprob(
     scores high here.
 
     Scale shape: the bigram LM is (v, w, count) — one (v,w)-keyed
-    partial-agg shuffle; context totals derive from it by a v-keyed
-    re-agg (no second corpus pass); scoring joins the exploded bigram
-    stream back on (v, w) — posting-list-shaped, text never shuffles.
+    partial-agg shuffle; the context total c(v) is a ``sum`` window by
+    ``v`` over that relation, so the bigram expansion runs twice (the
+    counts and the scoring stream) plus one unigram pass for c(w);
+    scoring joins the exploded bigram stream back on (v, w) —
+    posting-list-shaped, text never shuffles.
     Determinism: per distinct (v, w) the NLL double is one fixed
     operand-order expression of integer counts, rounded to 9 decimals
     at source and summed exactly as decimals (the unigram_logprob
@@ -919,20 +914,16 @@ def bigram_logprob(
     and NULL avg_nll.
     """
     big, bg = _bigram_stream(df, text_col, id_col)
-    # r13 NOTE (guide §1.1 empirical loop): a per-(doc, v, w) count
-    # relation materialized once (the dsir_logratio shape) was built
-    # and REJECTED here — interleaved same-session A/B at sf0.1 showed
-    # 1.04× (and 1.16× for the KN variant): the "duplicate" subtrees
-    # below already share their exchanges (ReuseExchange), the (v,w)
-    # partial agg pre-combines map-side, while the (doc,v,w) relation
-    # barely pre-combines and pays a checkpoint barrier. Kept as-is.
-    ctx = bg.groupBy("v").agg(F.sum("cvw").alias("cv"))
+    # c(v) is a window over bg, not a bg.groupBy("v") joined back: the
+    # optimizer infers isnotnull filters and prunes columns per consumer
+    # of bg, so the aggregates' (v,w) exchanges were never reused
+    # (kn_bigram_logprob had four, each re-running the corpus explode)
+    ctx = bg.withColumn("cv", F.sum("cvw").over(W.partitionBy("v")))
     toks = df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
     tot = uni.agg(F.sum("cw").alias("t"))
     nll = (
-        bg.join(ctx, "v")
-        .join(uni, "w")
+        ctx.join(uni, "w")
         .crossJoin(F.broadcast(tot))
         .select(
             "v",
@@ -972,10 +963,14 @@ def kn_bigram_logprob(
     not raw frequency — the correction that scores "San Francisco"
     boilerplate correctly where JM overweights bare "Francisco".
 
-    Scale shape: everything derives from the (v, w, count) bigram
-    relation — c(v) and N1+(v,·) by one v-keyed re-agg, N1+(·,w) by one
-    w-keyed re-agg, N1+(·,·) as a one-row broadcast — no second corpus
-    pass; scoring joins the exploded bigram stream back on (v, w).
+    Scale shape: everything derives from the one (v, w, count) bigram
+    relation, read as windows: c(v) and N1+(v,·) partitioned by ``v``,
+    N1+(·,w) by ``w``, N1+(·,·) as ``count(*) over ()``. The corpus is
+    exploded exactly twice, once for the counts and once for the
+    scoring stream, which joins back on (v, w). The relation is
+    model-sized (one row per distinct bigram type: 916 at sf0.01, 931
+    at sf0.1), so the single-partition window holds what a one-row
+    broadcast join would.
     Determinism: per distinct (v, w) the NLL is ONE fixed operand-order
     double expression of integer counts, rounded to 9 decimals at
     source and summed exactly as decimals, so engines agree
@@ -983,17 +978,19 @@ def kn_bigram_logprob(
     """
     big, bg = _bigram_stream(df, text_col, id_col)
     # bg rows ARE the distinct (v,w) types: count(*) per v is N1+(v,·),
-    # per w is N1+(·,w), and the relation size is N1+(·,·)
-    ctx = bg.groupBy("v").agg(
-        F.sum("cvw").alias("cv"), F.count(F.lit(1)).alias("n1f")
-    )
-    cont = bg.groupBy("w").agg(F.count(F.lit(1)).alias("n1b"))
-    types = bg.agg(F.count(F.lit(1)).alias("t"))
+    # per w is N1+(·,w), and over all of bg N1+(·,·). Windows, not
+    # aggregates joined back: see the note in bigram_logprob
+    by_v = W.partitionBy("v")
+    one = F.count(F.lit(1))
     d = F.lit(discount)
     nll = (
-        bg.join(ctx, "v")
-        .join(cont, "w")
-        .crossJoin(F.broadcast(types))
+        bg.select(
+            "v", "w", "cvw",
+            F.sum("cvw").over(by_v).alias("cv"),
+            one.over(by_v).alias("n1f"),
+            one.over(W.partitionBy("w")).alias("n1b"),
+            one.over(W.partitionBy()).alias("t"),
+        )
         .select(
             "v",
             "w",
@@ -1034,7 +1031,8 @@ def dsir_logratio(
     ``temperature_sample``/``hash_sample`` for the resampling step.
 
     Scale shape (r6, VERDICT r5 item 5): the n-gram expansion runs
-    ONCE — features partial-aggregate straight into a per-(doc, bucket)
+    ONCE, linear in document length (bigrams zip the tokens with their
+    tail) — features partial-aggregate straight into a per-(doc, bucket)
     count relation, which is bounded at ``docs × n_buckets`` rows
     whatever the document lengths, and is materialized (operators.mat).
     Source and target bucket distributions, their totals, and the
@@ -1050,13 +1048,8 @@ def dsir_logratio(
 
     Returns (id, n_feats, dsir_logratio).
     """
-    ws = f"split({_qcol(text_col)}, ' ')"
-    allf = (
-        f"concat({ws}, if(size({ws}) < 2, array(),"
-        f" transform(sequence(2, size({ws})), i ->"
-        f" concat_ws(' ', element_at({ws}, i - 1),"
-        f" element_at({ws}, i)))))"
-    )
+    ws = F.split(F.col(text_col), " ")
+    allf = F.concat(ws, _adjacent(ws, lambda a, b: F.concat_ws(" ", a, b)))
     # bucket = md5-prefix value mod n_buckets, so the parameter actually
     # drives the feature space (and stays consistent with the Laplace
     # denominators below). For n_buckets <= 256 the 2-hex-char (one
@@ -1067,7 +1060,7 @@ def dsir_logratio(
     fb = df.select(
         F.col(id_col),
         F.col(target_col).alias("__t"),
-        F.explode(F.expr(allf)).alias("f"),
+        F.explode(allf).alias("f"),
     ).select(
         id_col,
         "__t",

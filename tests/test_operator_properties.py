@@ -251,3 +251,46 @@ def test_hits_random_graphs_match_replica(spark, edges):
     for n in hub:
         assert abs(got[n][0] - hub[n]) < 1e-9
         assert abs(got[n][1] - auth[n]) < 1e-9
+
+
+# the empty text, one token, exactly n=3 tokens, repeated and
+# leading/trailing spaces, non-ASCII tokens, NULL
+NGRAM_EDGE_TEXTS = ["", "a", "a b c", "  a  b ", "héllo wörld 日本 語", None]
+
+
+@given(
+    texts=st.lists(
+        st.text(alphabet=st.sampled_from("ab é日"), max_size=12),
+        max_size=4,
+    )
+)
+@settings(max_examples=3, deadline=None)
+def test_ngram_expansion_matches_python_split(spark, texts):
+    """shingles(n=3), the bigram stream under kn_bigram_logprob and
+    dsir_logratio's unigram+bigram features expand exactly the n-grams
+    of Python's ``text.split(' ')`` — empty tokens from repeated or
+    edge spaces included; NULL text expands to nothing."""
+    from faust_spark.operators.dedup import shingles
+    from faust_spark.operators.text import dsir_logratio, kn_bigram_logprob
+
+    rows = list(enumerate(NGRAM_EDGE_TEXTS + texts))
+    df = spark.createDataFrame(
+        [(i, t, i % 2 == 0) for i, t in rows],
+        "doc_id long, text string, is_t boolean",
+    )
+    ws = {i: t.split(" ") for i, t in rows if t is not None}
+    got = {(r.doc_id, r.shingle) for r in shingles(df, n=3).collect()}
+    assert got == {
+        (i, " ".join(w[j : j + 3]))
+        for i, w in ws.items()
+        for j in range(len(w) - 2)
+    }
+    got = {
+        r.doc_id: r.n_bigrams
+        for r in kn_bigram_logprob(df.select("doc_id", "text")).collect()
+    }
+    assert got == {i: max(len(ws.get(i, [])) - 1, 0) for i, _ in rows}
+    got = {
+        r.doc_id: r.n_feats for r in dsir_logratio(df, "is_t").collect()
+    }
+    assert got == {i: 2 * len(w) - 1 for i, w in ws.items()}

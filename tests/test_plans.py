@@ -564,3 +564,99 @@ def test_nb_fit_count_relation_materialized(spark, sf_dir):
     assert "ExistingRDD" in plan
     assert "Generate" not in plan
     assert v > 0
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _tree(node):
+    """``node`` and all its descendants (a Catalyst plan or expression)."""
+    yield node
+    for c in _seq(node.children()):
+        yield from _tree(c)
+
+
+def _executed(node):
+    """Executed physical nodes, descending into AQE's current plan and
+    its query stages (a reused exchange is a leaf, so it counts once)."""
+    k = _kind(node)
+    if k == "AdaptiveSparkPlanExec":
+        yield from _executed(node.executedPlan())
+    elif k.endswith("QueryStageExec"):
+        yield from _executed(node.plan())
+    else:
+        yield node
+        for c in _seq(node.children()):
+            yield from _executed(c)
+
+
+@pytest.fixture()
+def text_frame(spark):
+    return spark.createDataFrame(
+        [(1, "a b a b c", True), (2, "c c c c", False), (3, "x", True)],
+        "doc_id long, text string, is_t boolean",
+    )
+
+
+def test_ngram_lambdas_never_split_text(spark, text_frame, monkeypatch):
+    """N-gram expansion is linear in document length: no
+    higher-order-function lambda re-splits the text per element (Spark
+    does not hoist the invariant split out of the lambda, so every
+    n-gram would re-split its whole document). Frames checkpointed on
+    the way (dsir_logratio's count relation) are checked too."""
+    import faust_spark.operators.text as text
+    from faust_spark.operators.dedup import shingles
+
+    frames = []
+    real = text.materialize
+
+    def spy(df, **kw):
+        frames.append(df)
+        return real(df, **kw)
+
+    monkeypatch.setattr(text, "materialize", spy)
+    splitting = []
+    for name, fn in (
+        ("shingles", shingles),
+        ("bigram_logprob", text.bigram_logprob),
+        ("kn_bigram_logprob", text.kn_bigram_logprob),
+        ("dsir_logratio", lambda d: text.dsir_logratio(d, "is_t")),
+    ):
+        frames.clear()
+        frames.append(fn(text_frame))
+        bodies = [
+            x.function()
+            for df in frames
+            for node in _tree(df._jdf.queryExecution().optimizedPlan())
+            for e in _seq(node.expressions())
+            for x in _tree(e)
+            if _kind(x) == "LambdaFunction"
+        ]
+        assert bodies, name
+        splitting += [
+            (name, b.toString())
+            for b in bodies
+            if any(_kind(y) == "StringSplit" for y in _tree(b))
+        ]
+    assert not splitting, splitting
+
+
+def test_kn_bigram_logprob_explodes_corpus_twice(spark, text_frame):
+    """Every Kneser-Ney statistic is a window over the one (v,w) count
+    relation, so the executed plan has exactly two Generates: the count
+    relation's and the scoring stream's. Separate c(v)/N1+ aggregates
+    joined back each re-ran the explode (five Generates): inferred
+    filters and pruning keep their exchanges from being reused."""
+    from faust_spark.operators.text import kn_bigram_logprob
+
+    out = kn_bigram_logprob(text_frame.select("doc_id", "text"))
+    out.collect()  # AQE finalizes
+    nodes = list(_executed(out._jdf.queryExecution().executedPlan()))
+    assert sum(_kind(n) == "GenerateExec" for n in nodes) == 2, [
+        _kind(n) for n in nodes
+    ]

@@ -487,10 +487,11 @@ def test_kn_continuation_beats_raw_frequency(spark):
 
 @pytest.mark.slow
 def test_expr_operators_quote_column_names(spark):
-    """bigram_logprob / kn_bigram_logprob / dsir_score / winnowing
-    interpolate the text column into F.expr SQL — the name must be
-    backtick-quoted so a column named like a keyword (or containing a
-    space) is a column reference, not injected SQL (ADVICE r7)."""
+    """A text column named like a keyword (or containing a space) is a
+    column reference, never SQL: winnow_fingerprint interpolates it into
+    F.expr text and must backtick-quote it (ADVICE r7); the bigram LMs
+    and dsir_logratio build Column expressions and must give the same
+    results under such a name."""
     from faust_spark.operators.text import (
         bigram_logprob,
         dsir_logratio,
