@@ -5288,7 +5288,7 @@ def ivfpq_topk_serve_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet directory-partitioned by cell, + a models file) — per-call
     work is probe + partition-pruned ADC over the probed cells' codes +
     shortlist re-rank, the FAISS serving shape at any scale. The codes
-    are written by the same pq_encode_join as the inline path — same
+    are written by the same pq_encode as the inline path — same
     codes, so the recall contract is indifferent to the artifact."""
     from faust_spark.operators.similarity import ivfpq_index_topk
 

@@ -111,6 +111,78 @@ def shingles(
     )
 
 
+def _cap_hubs(
+    sh: DataFrame, id_col: str, max_shingle_freq: int | None
+) -> DataFrame:
+    """The hub-key guard: drop shingles that occur in more than
+    ``max_shingle_freq`` docs (``None``: keep all) — a stop-shingle in
+    1M docs would otherwise contribute 10^12 self-join rows."""
+    if max_shingle_freq is None:
+        return sh
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    return sh.join(
+        freq.filter(F.col("df") <= max_shingle_freq), "shingle"
+    ).select(id_col, "shingle")
+
+
+def _with_sizes(pairs: DataFrame, sizes: DataFrame, id_col: str) -> DataFrame:
+    """``pairs`` (doc1, doc2, ...) with both shingle-set sizes n1, n2."""
+    s1 = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
+    s2 = sizes.select(F.col(id_col).alias("doc2"), F.col("n_sh").alias("n2"))
+    return pairs.join(s1, "doc1").join(s2, "doc2")
+
+
+def _shingle_overlap(sh: DataFrame, id_col: str) -> DataFrame:
+    """(doc1, doc2, inter, n1, n2) for every doc1 < doc2 sharing a
+    shingle: one shingle-keyed self-join counts the co-occurrences."""
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .groupBy(
+            F.col(f"a.{id_col}").alias("doc1"),
+            F.col(f"b.{id_col}").alias("doc2"),
+        )
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _with_sizes(inter, sizes, id_col)
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc1, doc2, jaccard) of the (doc1, doc2, inter, n1, n2) rows
+    with Jaccard >= ``threshold``."""
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.col("inter").cast("double")
+            / (F.col("n1") + F.col("n2") - F.col("inter")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc1", "doc2", "jaccard")
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    sh: DataFrame,
+    sizes: DataFrame,
+    threshold: float,
+    id_col: str,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate (doc1, doc2) pairs: the
+    full-set intersection is counted for candidates only."""
+    sa = sh.select(F.col(id_col).alias("doc1"), "shingle")
+    sb = sh.select(F.col(id_col).alias("doc2"), "shingle")
+    inter = (
+        cand.join(sa, "doc1")
+        .join(sb, ["doc2", "shingle"])
+        .groupBy("doc1", "doc2")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _jaccard_at_least(_with_sizes(inter, sizes, id_col), threshold)
+
+
 def jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -130,36 +202,8 @@ def jaccard_pairs(
     # set spark.faust_spark.materialize=reliable under dynamic allocation,
     # where non-replicated localCheckpoint blocks are a job-loss risk)
     sh = materialize(shingles(df, n, text_col, id_col))
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh = (
-            sh.join(freq.filter(F.col("df") <= max_shingle_freq), "shingle")
-            .select(id_col, "shingle")
-        )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc1"),
-            F.col(f"b.{id_col}").alias("doc2"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("doc2"), F.col("n_sh").alias("n2"))
-    out = (
-        inter.join(s1, "doc1")
-        .join(s2, "doc2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc1", "doc2", "jaccard")
+    sh = _cap_hubs(sh, id_col, max_shingle_freq)
+    return _jaccard_at_least(_shingle_overlap(sh, id_col), threshold)
 
 
 def jaccard_pairs_prefix(
@@ -259,29 +303,7 @@ def jaccard_pairs_prefix(
         )
         .distinct()
     )
-    s1 = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("doc2"), F.col("n_sh").alias("n2"))
-    # exact verification: count the full-set intersection per candidate
-    sa = sh.select(F.col(id_col).alias("doc1"), "shingle")
-    sb = sh.select(F.col(id_col).alias("doc2"), "shingle")
-    inter = (
-        cand.select("doc1", "doc2")
-        .join(sa, "doc1")
-        .join(sb, ["doc2", "shingle"])
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(s1, "doc1")
-        .join(s2, "doc2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc1", "doc2", "jaccard")
+    return _verify_jaccard(cand, sh, sizes, threshold, id_col)
 
 
 def containment_pairs(
@@ -304,28 +326,9 @@ def containment_pairs(
     Returns (doc1, doc2, containment), doc1 < doc2.
     """
     sh = materialize(shingles(df, n, text_col, id_col))
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh = (
-            sh.join(freq.filter(F.col("df") <= max_shingle_freq), "shingle")
-            .select(id_col, "shingle")
-        )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc1"),
-            F.col(f"b.{id_col}").alias("doc2"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("doc2"), F.col("n_sh").alias("n2"))
+    sh = _cap_hubs(sh, id_col, max_shingle_freq)
     return (
-        inter.join(s1, "doc1")
-        .join(s2, "doc2")
+        _shingle_overlap(sh, id_col)
         .withColumn(
             "containment",
             F.col("inter").cast("double") / F.least("n1", "n2"),
@@ -359,12 +362,11 @@ def incremental_dedup(
     :func:`jaccard_pairs`).
     """
     sh_new = materialize(shingles(new_df, n, text_col, id_col))
-    sh_old = materialize(shingles(corpus_df, n, text_col, id_col))
-    if max_shingle_freq is not None:
-        freq = sh_old.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh_old = sh_old.join(
-            freq.filter(F.col("df") <= max_shingle_freq), "shingle"
-        ).select(id_col, "shingle")
+    sh_old = _cap_hubs(
+        materialize(shingles(corpus_df, n, text_col, id_col)),
+        id_col,
+        max_shingle_freq,
+    )
     sz_new = sh_new.groupBy(id_col).agg(F.count(F.lit(1)).alias("n1"))
     sz_old = sh_old.groupBy(id_col).agg(F.count(F.lit(1)).alias("n2"))
     inter = (
@@ -634,27 +636,7 @@ def minhash_lsh_pairs(
     )
     # exact-Jaccard verification on candidates only
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc1"), F.col("shingle"))
-    b = sh.select(F.col(id_col).alias("doc2"), F.col("shingle"))
-    inter = (
-        cands.join(a, "doc1")
-        .join(b, ["doc2", "shingle"])
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("doc1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("doc2"), F.col("n_sh").alias("n2"))
-    rep_pairs = (
-        inter.join(s1, "doc1")
-        .join(s2, "doc2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
-    )
+    rep_pairs = _verify_jaccard(cands, sh, sizes, threshold, id_col)
     if not collapse_exact:
         return rep_pairs
     # expand representative pairs back to member pairs

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.types import (
+    ArrayType,
     IntegerType,
     StringType,
     StructField,
@@ -801,13 +802,13 @@ def kmeans_fit(
     retries).  Each iteration is one corpus pass: nearest-centroid
     assignment, then the one-group :func:`_lloyd_update` (one
     (cell, dim)-keyed partial-agg shuffle via posexplode to re-average).
-    With an id column and full precision the assignment is the Arrow
-    numpy argmin (:func:`assign_cells_arrow`); otherwise it is the
-    literal argmin expression (narrow map — the whole iteration is ONE
-    shuffle of k×dim partial sums).  Both forms produce identical values
-    and tie-breaks.  Only the k×dim centroid model ever reaches the
-    driver — the standard fit shape for IVF coarse quantizers (k ≪ data,
-    model is driver-side by design).
+    At full precision the assignment is the Arrow kernel
+    (:func:`_nearest_arrow`, the cells of :func:`assign_cells`
+    bit-for-bit); with ``round_dp`` it is the literal argmin expression.
+    Either way it is a narrow map and the whole iteration is ONE
+    shuffle of k×dim partial sums.  Only the k×dim centroid model ever
+    reaches the driver — the standard fit shape for IVF coarse
+    quantizers (k ≪ data, model is driver-side by design).
 
     ``round_dp`` rounds both the assignment distances and the updated
     centroids in-engine each iteration (HALF_UP, same as DuckDB's ROUND),
@@ -817,13 +818,10 @@ def kmeans_fit(
 
     A frame WITHOUT ``id_col`` is accepted (ADVICE r8): the seed then
     orders by the vector itself (arrays compare lexicographically —
-    still deterministic) and assignment uses the ``_cell_expr``
-    expression form, which needs only the vector column. The id-keyed
-    Arrow path requires ``id_col``.
+    still deterministic). Assignment needs only the vector column.
     """
-    have_id = id_col in df.columns
     seed = (
-        df.orderBy(F.col(id_col) if have_id else F.col(vec_col))
+        df.orderBy(F.col(id_col) if id_col in df.columns else F.col(vec_col))
         .limit(k)
         .select(vec_col)
         .collect()
@@ -831,25 +829,21 @@ def kmeans_fit(
     cents = [[float(v) for v in r[0]] for r in seed]
     traj = [cents]
     for _ in range(iters):
-        if round_dp is None and have_id:
-            # full-precision fit: Arrow numpy argmin — bit-identical
-            # cells to the expression form (assign_cells_arrow's fold
-            # contract), so the trajectory is unchanged while the
-            # per-iteration n×k distance evals leave the interpreter.
-            # The round_dp path keeps the in-engine F.round form (the
-            # oracle-unrolled kmeans_fit gate needs HALF_UP rounding
-            # applied INSIDE the engine expression).
-            assigned = assign_cells_arrow(
-                df, cents, vec_col=vec_col, id_col=id_col
+        if round_dp is None:
+            cell = F.col("codes")[0]
+            assigned = _nearest_arrow(
+                df, [cents], [slice(None)], vec_col, [vec_col]
             )
         else:
-            assigned = df.select(
-                _cell_expr(cents, vec_col, round_dp).alias("cell"),
-                F.col(vec_col),
-            )
+            # the oracle-unrolled kmeans_fit gate needs HALF_UP rounding
+            # applied INSIDE the engine expression
+            cell = _cell_expr(cents, vec_col, round_dp)
+            assigned = df
         cents = _lloyd_update(
             assigned.select(
-                F.lit(0).alias("g"), "cell", F.col(vec_col).alias("sv")
+                F.lit(0).alias("g"),
+                cell.alias("cell"),
+                F.col(vec_col).alias("sv"),
             ),
             [cents],
             round_dp,
@@ -931,48 +925,90 @@ def assign_cells(
     return df.withColumn("cell", _cell_expr(cents, vec_col))
 
 
-def assign_cells_join(
+def _nearest_arrow(
     df: DataFrame,
-    cents: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: Optional[int] = None,
+    books: list[list[list[float]]],
+    slices: list[slice],
+    vec_col: str,
+    keep: list[str],
 ) -> DataFrame:
-    """(id, cell) via a broadcast CENTROID TABLE instead of a literal
-    argmin expression.
+    """``keep`` + ``codes``: per row, ``codes[g]`` is the centroid of
+    ``books[g]`` nearest to ``vec[slices[g]]`` — the one exact
+    nearest-centroid kernel behind every full-precision assignment (IVF
+    cells, the multi-codebook k-means fit, PQ codes).
 
-    The expression forms (:func:`assign_cells`,
-    :func:`assign_cells_two_level`) bake k distance terms into ONE
-    codegen expression — exact and shuffle-free, but both expression size
-    and Janino compile time grow with k (measured: the compile dominates
-    the whole assignment once k reaches ~100).  Here the centroids are
-    DATA: a k-row broadcast table crossed against the corpus scan (the
-    FAISS coarse-quantizer shape), one small fixed expression computes
-    the squared distance, and a partial-aggregated ``min(struct(dist,
-    cell))`` per id picks the argmin — same values and tie-break as the
-    flat expression (lexicographic struct min == ORDER BY dist, cell),
-    so the SQL oracle is unchanged.  Scales to any k a broadcast can
-    carry; beyond that the same plan works with the centroid table
-    bucketed instead of broadcast.
+    The squared distance accumulates in EXPLICIT fold order —
+    ``acc += (v[j] - c[j])**2`` for j ascending, one IEEE double add per
+    term from a 0.0 init, exactly :func:`sqdist_expr`'s zip_with/aggregate
+    and DuckDB's ``list_sum(list_transform(...))`` — and the argmin takes
+    the FIRST minimum (strict ``<``), i.e. the lowest code on ties, as
+    ``array_min`` over (dist, cell) structs does. Values and tie-breaks
+    are therefore bit-identical to the expression form
+    :func:`assign_cells`, malformed rows included. A NULL vector gets
+    code 0. A slice whose length differs from a centroid's width has a
+    NULL distance to it, which sorts first: the lowest such centroid
+    wins, i.e. code 0 against a rectangular codebook. A NaN vector gets
+    code 0 (a NaN distance never wins a strict ``<``).
+
+    Scale shape: one narrow mapInArrow pass — no join, no shuffle. The
+    codebooks ride in the serialized closure (model-sized), so the plan
+    is the same at any k. ``keep`` columns pass through as Arrow arrays,
+    untouched (a pandas round trip would turn NaN elements into NULLs).
+    Catalyst evaluates the fold's zip_with / aggregate lambdas
+    INTERPRETED (~20x numpy per term); here the same flops run
+    vectorized, k x width passes per group and batch.
     """
-    spark = df.sparkSession
-    # local_rows (guide §4): LocalTableScan, no Python re-eval per action
-    cdf = local_rows(
-        spark,
-        [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
-        "cell int, __cv array<double>",
+    import numpy as np
+    import pyarrow as pa
+
+    arrs = [
+        [np.asarray(c, dtype=np.float64) for c in book] for book in books
+    ]
+    out_schema = StructType(
+        [StructField(c, df.schema[c].dataType, True) for c in keep]
+        + [StructField("codes", ArrayType(IntegerType(), False), False)]
     )
-    dist = sqdist_expr(F.col(vec_col), F.col("__cv"))
-    if round_dp is not None:
-        dist = F.round(dist, round_dp)
-    return (
-        df.join(F.broadcast(cdf))
-        .groupBy(id_col)
-        .agg(
-            F.min(F.struct(dist.alias("d"), F.col("cell"))).alias("__m")
-        )
-        .select(F.col(id_col), F.col("__m.cell").alias("cell"))
-    )
+
+    def nearest(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            vecs = batch.column(vec_col)
+            lens = vecs.value_lengths().fill_null(-1).to_numpy()
+            starts = vecs.offsets.to_numpy()[:-1]
+            flat = vecs.values.to_numpy(zero_copy_only=False)
+            codes = np.zeros((n, len(arrs)), dtype=np.int32)
+            for n_dim in np.unique(lens[lens >= 0]):
+                rows = np.flatnonzero(lens == n_dim)
+                V = flat[starts[rows, None] + np.arange(n_dim)].astype(
+                    np.float64
+                )
+                for g, (book, sl) in enumerate(zip(arrs, slices)):
+                    S = V[:, sl]
+                    w = S.shape[1]
+                    off = [i for i, c in enumerate(book) if len(c) != w]
+                    if off:  # a NULL distance sorts first
+                        codes[rows, g] = off[0]
+                        continue
+                    best = np.full(len(rows), np.inf)
+                    for ci, c in enumerate(book):
+                        acc = np.zeros(len(rows))
+                        for j in range(len(c)):
+                            t = S[:, j] - c[j]
+                            acc += t * t
+                        upd = acc < best  # strict: first minimum wins
+                        best[upd] = acc[upd]
+                        codes[rows[upd], g] = ci
+            step = np.arange(0, codes.size + 1, len(arrs), dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [pa.ListArray.from_arrays(step, codes.ravel())],
+                names=[*keep, "codes"],
+            )
+
+    cols = list(dict.fromkeys([*keep, vec_col]))
+    return df.select(*cols).mapInArrow(nearest, out_schema)
 
 
 def assign_cells_arrow(
@@ -981,70 +1017,15 @@ def assign_cells_arrow(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id, vec, cell) via Arrow-batched numpy argmin — the exact
-    assignment at the n×k scale where expression evaluation dominates.
-
-    :func:`assign_cells_join` materializes n×k joined rows and evaluates
-    the squared-distance fold on each with Catalyst's INTERPRETED
-    higher-order functions (zip_with/aggregate lambdas don't codegen) —
-    measured as the whole cost of semantic_dedup at the 10× probe once
-    k is corpus-derived (the n×k flops are unavoidable, paying
-    interpreter overhead per term is not). Here the same flops run
-    vectorized in numpy over Arrow batches; the distance accumulates in
-    EXPLICIT fold order — ``acc += (v[j] - c[j])**2`` for j ascending,
-    one IEEE double add per term from a 0.0 init, exactly the
-    zip_with/aggregate and DuckDB ``list_sum(list_transform(...))``
-    evaluation order — and the argmin takes the FIRST minimum (strict
-    ``<``), i.e. the lowest cell on ties, matching ``min(struct(dist,
-    cell))``. Values and tie-breaks are therefore bit-identical to the
-    expression forms: this is a physical-plan swap, not an
-    approximation (assign_cells_two_level is the approximate one).
-
-    Scale shape: one narrow mapInPandas pass (no shuffle, no join); the
-    centroid matrix rides in the serialized closure (k×dim doubles —
-    model-sized). Work per batch is k×d vectorized passes over the
-    batch rows.
+    """(id, vec, cell): :func:`assign_cells` as the one-group case of
+    the Arrow kernel :func:`_nearest_arrow` — same cells bit-for-bit
+    (NULL, wrong-length and NaN vectors land in cell 0), one narrow map,
+    one row out per row in, and an expression size that does not grow
+    with k.
     """
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray([[float(x) for x in c] for c in cents], dtype=np.float64)
-    k, d = C.shape
-    vec_type = df.schema[vec_col].dataType
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField(id_col, id_type, True),
-            StructField(vec_col, vec_type, True),
-            StructField("cell", IntegerType(), False),
-        ]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = V.shape[0]
-            best_d = np.full(n, np.inf)
-            best_c = np.zeros(n, dtype=np.int32)
-            for ci in range(k):
-                acc = np.zeros(n)
-                for j in range(d):
-                    t = V[:, j] - C[ci, j]
-                    acc += t * t
-                upd = acc < best_d  # strict: first minimum = lowest cell
-                best_d[upd] = acc[upd]
-                best_c[upd] = ci
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": best_c,
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    return _nearest_arrow(
+        df, [cents], [slice(None)], vec_col, [id_col, vec_col]
+    ).select(id_col, vec_col, F.col("codes")[0].alias("cell"))
 
 
 def centroid_blocks(
@@ -1191,10 +1172,7 @@ def ivf_assign_corpus(
     base = corpus.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
     )
-    return base.join(
-        assign_cells_join(base, centroids, vec_col="cv", id_col="nid"),
-        "nid",
-    )
+    return assign_cells_arrow(base, centroids, vec_col="cv", id_col="nid")
 
 
 def ivf_topk(
@@ -1295,10 +1273,12 @@ def kmeans_centroids_multi(
     ``start``, as in ``F.slice``): each group fits its own ``k``
     centroids over ``vec[start : start+length-1]``.  Per group the math
     is identical to :func:`kmeans_centroids` on the sliced column — seed
-    = the ``k`` lowest-id subvectors, argmin assignment with the same
-    ``min(struct(dist, cell))`` tie-break, per-(cell, dim) re-average —
-    but ALL groups ride the same scan: the corpus is posexploded into
-    (id, group, subvec) long form once, and the whole fit costs
+    = the ``k`` lowest-id subvectors, first-minimum argmin assignment,
+    per-(cell, dim) re-average — but ALL groups ride the same scan: each
+    iteration assigns every group in ONE call of the Arrow kernel
+    :func:`_nearest_arrow` (the codebooks ride in its closure, no join,
+    no shuffle), then posexplodes (codes, subvectors) into the
+    (g, cell, sv) frame of :func:`_lloyd_update`, so the whole fit costs
     ``iters + 1`` Spark actions regardless of ``len(specs)``.  That is
     what makes an IVF+PQ fit (1 coarse group + m subspace groups)
     affordable: 5 independent fits would be ~5x the driver round-trips
@@ -1315,34 +1295,16 @@ def kmeans_centroids_multi(
         [list(r[0])[s - 1 : s - 1 + ln] for r in seed_rows[:k]]
         for (s, ln, k) in specs
     ]
-    long = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(*[F.slice(F.col(vec_col), s, ln) for s, ln, _ in specs])
-        ).alias("g", "sv"),
-    )
-    dist = sqdist_expr(F.col("sv"), F.col("__cv"))
-    spark = df.sparkSession
+    slices = [slice(s - 1, s - 1 + ln) for s, ln, _ in specs]
+    svs = F.array(*[F.slice(F.col(vec_col), s, ln) for s, ln, _ in specs])
     for _ in range(iters):
-        # local_rows (guide §4): this runs once per fit ITERATION — the
-        # Python-runner scan cost would multiply by iters
-        cdf = local_rows(
-            spark,
-            [
-                (g, i, [float(v) for v in c])
-                for g, book in enumerate(cents)
-                for i, c in enumerate(book)
-            ],
-            "g int, cell int, __cv array<double>",
-        )
+        z = F.posexplode(
+            F.arrays_zip(F.col("codes").alias("cell"), svs.alias("sv"))
+        ).alias("g", "z")
         assigned = (
-            long.join(F.broadcast(cdf), "g")
-            .groupBy(id_col, "g")
-            .agg(
-                F.min(F.struct(dist.alias("d"), F.col("cell"))).alias("__m"),
-                F.first("sv").alias("sv"),
-            )
-            .select("g", F.col("__m.cell").alias("cell"), "sv")
+            _nearest_arrow(df, cents, slices, vec_col, [vec_col])
+            .select(z)
+            .select("g", "z.cell", "z.sv")
         )
         cents = _lloyd_update(assigned, cents)
     return cents
@@ -1380,68 +1342,39 @@ def pq_codebooks(
     )
 
 
-def pq_encode_join(
+def pq_encode(
     df: DataFrame,
     books: list[list[list[float]]],
     coarse: list[list[float]] | None = None,
     vec_col: str = "embedding",
-    id_col: str = "nid",
 ) -> DataFrame:
-    """(id[, cell], codes) with the codebooks as broadcast TABLES, not
-    literal argmin expressions (whose Catalyst analysis and Janino
-    compile grow with m*ksub*dim literals).
+    """``df``'s other columns + ``codes`` [+ ``cell``], one row per input
+    row: ``codes[j]`` is the nearest centroid of ``books[j]`` to the
+    j-th of ``m`` contiguous subvectors; when ``coarse`` is given the
+    IVF cell over the full vector rides the same pass as one more group.
 
-    The corpus is posexploded once into (id, group, subvec) long form,
-    joined against a broadcast (group, cell, centroid) table (m*ksub +
-    n_cells rows — always model-sized), and a partial-aggregated
-    ``min(struct(dist, cell))`` per (id, group) picks each code: the
-    squared distance folds dimensions in ascending order from 0.0, and
-    the lowest code wins a tie (the first-minimum argmin,
-    ``tests/test_similarity.py`` pins it). Constant-size expressions,
-    one shuffle. When ``coarse`` is given the IVF cell rides the same
-    scan as group ``m`` over the full vector.
+    One call of the Arrow kernel :func:`_nearest_arrow`: the squared
+    distance folds dimensions in ascending order from 0.0 and the
+    lowest code wins a tie (the first-minimum argmin,
+    ``tests/test_similarity.py`` pins it); a NULL vector, or one too
+    short for a subspace (or not the coarse width), gets code 0 there.
+    The codebooks ride in the kernel's closure, so the plan is one
+    narrow map — no join, no shuffle — and its size is constant in
+    m·ksub and n_cells. Passing the other columns through is what lets
+    an index build carry each row's fingerprint term without a join.
     """
     m = len(books)
     d = len(books[0][0])
-    slices = [F.slice(F.col(vec_col), j * d + 1, d) for j in range(m)]
-    rows = [
-        (j, i, [float(v) for v in c])
-        for j, book in enumerate(books)
-        for i, c in enumerate(book)
-    ]
-    if coarse is not None:
-        slices.append(F.col(vec_col))
-        rows += [(m, i, [float(v) for v in c]) for i, c in enumerate(coarse)]
-    spark = df.sparkSession
-    # local_rows (guide §4): LocalTableScan, no Python re-eval per action
-    bdf = local_rows(spark, rows, "j int, cell int, __cv array<double>")
-    long = df.select(
-        F.col(id_col), F.posexplode(F.array(*slices)).alias("j", "sv")
-    )
-    dist = sqdist_expr(F.col("sv"), F.col("__cv"))
-    assigned = (
-        long.join(F.broadcast(bdf), "j")
-        .groupBy(id_col, "j")
-        .agg(F.min(F.struct(dist.alias("d"), F.col("cell"))).alias("__m"))
-    )
-    codes = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("j") < m,
-                    F.struct(F.col("j"), F.col("__m.cell").alias("c")),
-                )
-            )
-        ),
-        lambda s: s["c"],
-    ).alias("codes")
+    keep = [c for c in df.columns if c != vec_col]
+    slices = [slice(j * d, (j + 1) * d) for j in range(m)]
     if coarse is None:
-        return assigned.groupBy(id_col).agg(codes)
-    return assigned.groupBy(id_col).agg(
-        codes,
-        F.max(
-            F.when(F.col("j") == m, F.col("__m.cell"))
-        ).alias("cell"),
+        return _nearest_arrow(df, books, slices, vec_col, keep)
+    return _nearest_arrow(
+        df, books + [coarse], slices + [slice(None)], vec_col, keep
+    ).select(
+        *keep,
+        F.slice("codes", 1, m).alias("codes"),
+        F.col("codes")[m].alias("cell"),
     )
 
 
@@ -1495,7 +1428,7 @@ def pq_topk(
 
     Stage 1 scans only the code table (``m`` small ints per vector —
     the 100 TB corpus is a few hundred GB of codes, encoded by
-    :func:`pq_encode_join`): approximate distance = Σ_j ‖q_j −
+    :func:`pq_encode`): approximate distance = Σ_j ‖q_j −
     book_j[code_j]‖², read from the per-query lookup table of
     :func:`adc_lut` (here without a cell column: every (qid, j, code)
     row applies corpus-wide). The exploded codes hash-join that
@@ -1515,7 +1448,7 @@ def pq_topk(
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
     )
-    enc = pq_encode_join(
+    enc = pq_encode(
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
         books,
         vec_col=vec_col,
@@ -1634,21 +1567,21 @@ def ivfpq_topk(
     encoding is the standard refinement once cells are large enough for
     the per-cell offset to dominate distortion.
 
-    The codebooks are broadcast TABLES: encoding runs through
-    :func:`pq_encode_join` (one long-form scan + partial-agg argmin,
-    the coarse cell riding the same scan) and scoring through the FAISS
-    precomputed-LUT trick (:func:`adc_lut` — per-(query, probed cell)
-    (j, code) → distance rows, broadcast hash-joined against the
-    exploded code table and partial-agg summed). Expression size and
-    compile time are CONSTANT in n_cells/m/ksub, so the plan survives
-    k growing with the corpus. The LUT sum adds the m lookups in
-    aggregation order, which can flip near-degenerate shortlist tails;
-    recall is contract-checked (same recall@5 gate as ivf_topk /
+    No model is a literal expression: encoding runs through
+    :func:`pq_encode` (one narrow Arrow map with the codebooks in its
+    closure, the coarse cell riding the same pass) and scoring through
+    the FAISS precomputed-LUT trick (:func:`adc_lut` — per-(query,
+    probed cell) (j, code) → distance rows, broadcast hash-joined
+    against the exploded code table and partial-agg summed). Expression
+    size and compile time are CONSTANT in n_cells/m/ksub, so the plan
+    survives k growing with the corpus. The LUT sum adds the m lookups
+    in aggregation order, which can flip near-degenerate shortlist
+    tails; recall is contract-checked (same recall@5 gate as ivf_topk /
     pq_ann_topk).
 
     **Index reuse**: pass ``index=(cents, books)`` from
     :func:`ivfpq_fit` to skip the quantizer fits, and ``codes=`` — the
-    persisted (nid, cell, codes) relation from :func:`pq_encode_join`
+    persisted (nid, cell, codes) relation from :func:`pq_encode`
     (the compact index artifact, written bucketed by cell at scale) —
     to skip corpus encoding; the per-call cost is then probe + ADC over
     the probed code buckets + shortlist re-rank only. Inline fit stays
@@ -1678,7 +1611,7 @@ def ivfpq_topk(
     enc = (
         codes
         if codes is not None
-        else pq_encode_join(
+        else pq_encode(
             corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
             books,
             coarse=cents,
@@ -1908,6 +1841,17 @@ def load_ann_index(spark: SparkSession, path: str) -> dict:
     return _INDEX_MODEL_CACHE[key]
 
 
+def _crc_rows(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(nid, vec, crc): the PQ index rows' input, each carrying its
+    :func:`corpus_fingerprint` term (crc32 of the vector rendered as a
+    string)."""
+    return df.select(
+        F.col(id_col).alias("nid"),
+        F.col(vec_col),
+        F.crc32(F.col(vec_col).cast("string")).alias("crc"),
+    )
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -2026,21 +1970,11 @@ def build_ivfpq_index(
     (
         _cell_partitioned(
             # format 2: PQ codes are lossy, so the per-row fingerprint
-            # crc (see build_ivf_index) must be computed from the
-            # ORIGINAL vector and ride along the code row — one extra
-            # build-time join, and delete_from_ann_index never needs
-            # the corpus again
-            pq_encode_join(
-                corpus.select(F.col(id_col).alias("nid"), F.col(vec_col)),
-                books,
-                coarse=cents,
-                vec_col=vec_col,
-            ).join(
-                corpus.select(
-                    F.col(id_col).alias("nid"),
-                    F.crc32(F.col(vec_col).cast("string")).alias("crc"),
-                ),
-                "nid",
+            # crc (see build_ivf_index) is computed from the ORIGINAL
+            # vector and rides through the encoder with the row —
+            # delete_from_ann_index never needs the corpus again
+            pq_encode(
+                _crc_rows(corpus, vec_col, id_col), books, cents, vec_col
             ),
             n_cells,
             files_per_cell,
@@ -2227,17 +2161,8 @@ def append_ann_index(
             batch, cents, vec_col=vec_col, id_col=id_col
         ).withColumn("crc", F.crc32(F.col("cv").cast("string")))
     else:
-        rows = pq_encode_join(
-            batch.select(F.col(id_col).alias("nid"), F.col(vec_col)),
-            meta["books"],
-            coarse=cents,
-            vec_col=vec_col,
-        ).join(
-            batch.select(
-                F.col(id_col).alias("nid"),
-                F.crc32(F.col(vec_col).cast("string")).alias("crc"),
-            ),
-            "nid",
+        rows = pq_encode(
+            _crc_rows(batch, vec_col, id_col), meta["books"], cents, vec_col
         )
     import os
 
@@ -2739,7 +2664,6 @@ __all__ = [
     "kmeans_centroids",
     "kmeans_centroids_multi",
     "assign_cells",
-    "assign_cells_join",
     "centroid_blocks",
     "assign_cells_two_level",
     "ivf_fit",
@@ -2758,7 +2682,7 @@ __all__ = [
     "ivfpq_fit",
     "ivfpq_topk",
     "pq_codebooks",
-    "pq_encode_join",
+    "pq_encode",
     "adc_lut",
     "pq_topk",
     "probe_cells_join",

@@ -900,11 +900,16 @@ def bigram_logprob(
     scores high here.
 
     Scale shape: the bigram LM is (v, w, count) — one (v,w)-keyed
-    partial-agg shuffle; the context total c(v) is a ``sum`` window by
-    ``v`` over that relation, so the bigram expansion runs twice (the
-    counts and the scoring stream) plus one unigram pass for c(w);
-    scoring joins the exploded bigram stream back on (v, w) —
-    posting-list-shaped, text never shuffles.
+    partial-agg shuffle — and every count is read off it: c(v) is a
+    ``sum`` window by ``v``; c(w) is a ``sum`` window by ``w`` (each
+    token but a document's first is exactly one bigram's ``w``) plus
+    the count of documents starting with ``w``; T is Σ c(v,w) plus one
+    first token per non-NULL document. The first tokens come from one
+    narrow projection of ``df`` and a small aggregation, so the bigram
+    expansion runs exactly twice (the counts and the scoring stream) and
+    no unigram pass explodes the corpus; scoring joins the exploded
+    bigram stream back on (v, w) — posting-list-shaped, text never
+    shuffles.
     Determinism: per distinct (v, w) the NLL double is one fixed
     operand-order expression of integer counts, rounded to 9 decimals
     at source and summed exactly as decimals (the unigram_logprob
@@ -914,17 +919,29 @@ def bigram_logprob(
     and NULL avg_nll.
     """
     big, bg = _bigram_stream(df, text_col, id_col)
-    # c(v) is a window over bg, not a bg.groupBy("v") joined back: the
-    # optimizer infers isnotnull filters and prunes columns per consumer
-    # of bg, so the aggregates' (v,w) exchanges were never reused
-    # (kn_bigram_logprob had four, each re-running the corpus explode)
-    ctx = bg.withColumn("cv", F.sum("cvw").over(W.partitionBy("v")))
-    toks = df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
-    tot = uni.agg(F.sum("cw").alias("t"))
+    # windows over bg, not aggregates joined back: the optimizer infers
+    # isnotnull filters and prunes columns per consumer of bg, so such
+    # aggregates' (v,w) exchanges are never reused and each re-runs the
+    # corpus explode
+    first = (
+        df.select(F.split(F.col(text_col), " ")[0].alias("w"))
+        .filter(F.col("w").isNotNull())
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cf"))
+    )
+    cw = F.col("cbw") + F.coalesce("cf", F.lit(0))
+    t = F.col("nb") + F.col("nd")
     nll = (
-        ctx.join(uni, "w")
-        .crossJoin(F.broadcast(tot))
+        bg.select(
+            "v",
+            "w",
+            "cvw",
+            F.sum("cvw").over(W.partitionBy("v")).alias("cv"),
+            F.sum("cvw").over(W.partitionBy("w")).alias("cbw"),
+            F.sum("cvw").over(W.partitionBy()).alias("nb"),
+        )
+        .join(first, "w", "left")
+        .crossJoin(F.broadcast(first.agg(F.sum("cf").alias("nd"))))
         .select(
             "v",
             "w",
@@ -932,8 +949,7 @@ def bigram_logprob(
                 -F.log(
                     F.lit(lam)
                     * (F.col("cvw").cast("double") / F.col("cv"))
-                    + F.lit(1.0 - lam)
-                    * (F.col("cw").cast("double") / F.col("t"))
+                    + F.lit(1.0 - lam) * (cw.cast("double") / t)
                 ),
                 9,
             )

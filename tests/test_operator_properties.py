@@ -269,9 +269,18 @@ def test_ngram_expansion_matches_python_split(spark, texts):
     """shingles(n=3), the bigram stream under kn_bigram_logprob and
     dsir_logratio's unigram+bigram features expand exactly the n-grams
     of Python's ``text.split(' ')`` — empty tokens from repeated or
-    edge spaces included; NULL text expands to nothing."""
+    edge spaces included; NULL text expands to nothing. bigram_logprob's
+    scores equal a plain-Python Jelinek-Mercer model counted from the
+    same split."""
+    import math
+    from collections import Counter
+
     from faust_spark.operators.dedup import shingles
-    from faust_spark.operators.text import dsir_logratio, kn_bigram_logprob
+    from faust_spark.operators.text import (
+        bigram_logprob,
+        dsir_logratio,
+        kn_bigram_logprob,
+    )
 
     rows = list(enumerate(NGRAM_EDGE_TEXTS + texts))
     df = spark.createDataFrame(
@@ -294,3 +303,28 @@ def test_ngram_expansion_matches_python_split(spark, texts):
         r.doc_id: r.n_feats for r in dsir_logratio(df, "is_t").collect()
     }
     assert got == {i: 2 * len(w) - 1 for i, w in ws.items()}
+    pairs = {i: list(zip(w, w[1:])) for i, w in ws.items()}
+    cvw = Counter(p for ps in pairs.values() for p in ps)
+    cv = Counter()
+    for (v, _), c in cvw.items():
+        cv[v] += c
+    cw = Counter(t for w in ws.values() for t in w)
+    total = sum(cw.values())
+
+    def nll(v, w):
+        return -math.log(
+            0.7 * cvw[v, w] / cv[v] + 0.3 * cw[w] / total
+        )
+
+    want = {
+        i: sum(nll(*p) for p in ps) / len(ps) if ps else None
+        for i, ps in pairs.items()
+    }
+    got = {
+        r.doc_id: r.avg_nll
+        for r in bigram_logprob(df.select("doc_id", "text")).collect()
+    }
+    assert set(got) == {i for i, _ in rows}
+    for i, g in got.items():
+        w = want.get(i)
+        assert (g is None and w is None) or abs(g - w) < 1e-9, (i, g, w)

@@ -412,6 +412,37 @@ def test_kmeans_iteration_single_corpus_shuffle(spark, sf_dir, collect_spy):
         assert plan.count("FileScan") <= 2
 
 
+def test_nearest_centroid_kernel_is_one_narrow_map(spark, sf_dir, collect_spy):
+    """PQ encoding and the multi-codebook k-means fit assign through
+    the one Arrow nearest-centroid kernel: pq_encode's plan has no Join
+    and no Exchange, and a kmeans_centroids_multi round has no Join and
+    only _lloyd_update's two exchanges — no broadcast centroid table,
+    no (id, group) re-aggregation of an exploded corpus."""
+    from faust_spark.operators.similarity import (
+        kmeans_centroids_multi,
+        pq_encode,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    books = [[[0.0] * 16, [1.0] * 16]] * 4
+    enc = pq_encode(
+        emb.select(F.col("vec_id").alias("nid"), "embedding"),
+        books,
+        coarse=[[0.0] * 64, [1.0] * 64],
+    )
+    assert len(enc.collect()) == emb.count()
+    plan = plan_of(enc)
+    assert "MapInArrow" in plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    collect_spy.clear()
+    kmeans_centroids_multi(emb, [(1, 64, 4), (1, 32, 4), (33, 32, 4)], 1)
+    (rnd,) = collect_spy[1:]  # capture 0 is the seed collect
+    assert "MapInArrow" in rnd
+    assert "Join" not in rnd
+    assert rnd.count("Exchange") == rnd.count("Exchange hashpartitioning")
+    assert rnd.count("Exchange hashpartitioning") == 2, rnd
+
+
 def test_adaboost_round_single_corpus_agg(spark, sf_dir, collect_spy):
     """Each boosting round is ONE (feat, bin)-keyed aggregation pass;
     prior stumps enter as expressions, never as joins or extra scans —
@@ -655,6 +686,22 @@ def test_kn_bigram_logprob_explodes_corpus_twice(spark, text_frame):
     from faust_spark.operators.text import kn_bigram_logprob
 
     out = kn_bigram_logprob(text_frame.select("doc_id", "text"))
+    out.collect()  # AQE finalizes
+    nodes = list(_executed(out._jdf.queryExecution().executedPlan()))
+    assert sum(_kind(n) == "GenerateExec" for n in nodes) == 2, [
+        _kind(n) for n in nodes
+    ]
+
+
+def test_bigram_logprob_explodes_corpus_twice(spark, text_frame):
+    """The Jelinek-Mercer unigram counts come off the (v,w) count
+    relation plus each document's first token (a narrow projection, no
+    explode), so the executed plan has exactly two Generates: the count
+    relation's and the scoring stream's. A separate unigram explode was
+    a third."""
+    from faust_spark.operators.text import bigram_logprob
+
+    out = bigram_logprob(text_frame.select("doc_id", "text"))
     out.collect()  # AQE finalizes
     nodes = list(_executed(out._jdf.queryExecution().executedPlan()))
     assert sum(_kind(n) == "GenerateExec" for n in nodes) == 2, [

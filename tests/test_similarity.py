@@ -60,7 +60,7 @@ def test_pq_roundtrip_codes_and_recall(spark, sf_dir):
     recall beats random chance by a wide margin (≥60% of 10 queries)."""
     from faust_spark.operators.similarity import (
         pq_codebooks,
-        pq_encode_join,
+        pq_encode,
         pq_topk,
     )
 
@@ -68,14 +68,14 @@ def test_pq_roundtrip_codes_and_recall(spark, sf_dir):
     books = pq_codebooks(emb, m=8, ksub=16, iters=2)
     assert len(books) == 8 and all(len(b) <= 16 for b in books)
     assert all(len(c) == 8 for b in books for c in b)  # 64/8 dims each
-    enc = pq_encode_join(emb.limit(50), books, id_col="vec_id")
+    enc = pq_encode(emb.limit(50), books)
     rows = enc.collect()
     assert len(rows) == 50
     assert all(len(r.codes) == 8 for r in rows)
     assert all(0 <= c < 16 for r in rows for c in r.codes)
     again = {
         r.vec_id: r.codes
-        for r in pq_encode_join(emb.limit(50), books, id_col="vec_id")
+        for r in pq_encode(emb.limit(50), books)
         .collect()
     }
     assert {r.vec_id: r.codes for r in rows} == again
@@ -286,7 +286,7 @@ def test_index_reuse_matches_inline_fit(spark, sf_dir):
         ivf_topk,
         ivfpq_fit,
         ivfpq_topk,
-        pq_encode_join,
+        pq_encode,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -323,7 +323,7 @@ def test_index_reuse_matches_inline_fit(spark, sf_dir):
         ).collect()
     }
     assert reused_pq == inline_pq
-    codes = pq_encode_join(
+    codes = pq_encode(
         emb.select(F.col("vec_id").alias("nid"), "embedding"),
         books,
         coarse=cents2,
@@ -390,41 +390,6 @@ def test_kmeans_fit_matches_numpy_reference(spark):
             assert np.allclose(g, w, atol=1e-9), (g, w)
 
 
-def test_kmeans_assignment_forms_agree(spark):
-    """The literal argmin expression and the broadcast centroid-table
-    form produce identical assignments under rounding (same values,
-    same tie-break), so an oracle-rounded fit assigns the same cells
-    whichever form runs it."""
-    import numpy as np
-
-    from faust_spark.operators.similarity import (
-        assign_cells_join,
-        _cell_expr,
-    )
-
-    rng = np.random.RandomState(7)
-    X = np.float32(rng.randn(80, 4))
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(80)],
-        "vec_id bigint, embedding array<float>",
-    )
-    cents = [[float(v) for v in X[i]] for i in range(5)]
-    a = {
-        r["vec_id"]: r["cell"]
-        for r in df.select(
-            "vec_id",
-            _cell_expr(cents, "embedding", round_dp=9).alias("cell"),
-        ).collect()
-    }
-    b = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells_join(
-            df, cents, round_dp=9
-        ).collect()
-    }
-    assert a == b
-
-
 def test_ann_recall_contract_dedups_and_handles_empty(spark):
     """ADVICE r7: duplicate (qid, nid) pairs in the approximate result
     must not fan out exact rows (inflating n_exact_pairs / corrupting
@@ -449,16 +414,17 @@ def test_ann_recall_contract_dedups_and_handles_empty(spark):
     assert row.recall_ok is True  # vacuous, and NOT NULL
 
 
-def test_assign_cells_arrow_matches_join_exactly(spark):
+def test_assign_cells_arrow_matches_expression_exactly(spark):
     """The Arrow/numpy assignment is a physical swap, not an
     approximation: identical IEEE fold order and first-minimum
-    tie-break, so cells match assign_cells_join bit-for-bit — including
-    on deliberately tie-prone duplicated centroids."""
+    tie-break, so cells match the literal argmin expression
+    (assign_cells) bit-for-bit — including on deliberately tie-prone
+    duplicated centroids."""
     import numpy as np
 
     from faust_spark.operators.similarity import (
+        assign_cells,
         assign_cells_arrow,
-        assign_cells_join,
     )
 
     rng = np.random.RandomState(11)
@@ -472,7 +438,7 @@ def test_assign_cells_arrow_matches_join_exactly(spark):
     cents = [[float(v) for v in X[i]] for i in (0, 1, 2, 2, 3)]
     a = {
         r["vec_id"]: r["cell"]
-        for r in assign_cells_join(df, cents).collect()
+        for r in assign_cells(df, cents).collect()
     }
     b = {
         r["vec_id"]: r["cell"]
@@ -485,14 +451,68 @@ def test_assign_cells_arrow_matches_join_exactly(spark):
     assert list(np.float32(row["embedding"])) == list(X[5])
 
 
-def test_pq_encode_join_codes_match_first_minimum_argmin(spark):
-    """pq_encode_join's codes (and its coarse cell) equal a plain-Python
+def test_nearest_centroid_malformed_rows_match_engine(spark):
+    """NULL, wrong-length and NaN vectors: the Arrow kernel assigns what
+    the in-engine expression does (cell 0 — NULL distances sort first, a
+    NaN distance never wins) instead of raising in the Python worker,
+    and passes the vector through untouched. PQ encoding applies the
+    rule per group: the 3-dim vector has well-formed 1-dim subspace
+    slices but no 2-dim coarse cell."""
+    import math
+
+    from faust_spark.operators.similarity import (
+        assign_cells,
+        assign_cells_arrow,
+        kmeans_fit,
+        pq_encode,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (0, [0.0, 0.0]),
+            (1, [5.0, 5.0]),
+            (2, None),
+            (3, [5.0, 5.0, 5.0]),
+            (4, [float("nan"), 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [[0.0, 0.0], [5.0, 5.0]]
+    want = {r["vec_id"]: r["cell"] for r in assign_cells(df, cents).collect()}
+    assert want == {0: 0, 1: 1, 2: 0, 3: 0, 4: 0}
+    got = {r["vec_id"]: r for r in assign_cells_arrow(df, cents).collect()}
+    assert {i: r["cell"] for i, r in got.items()} == want
+    assert got[2]["embedding"] is None
+    assert math.isnan(got[4]["embedding"][0])
+    enc = pq_encode(
+        df.withColumnRenamed("vec_id", "nid"),
+        [[[0.0], [5.0]], [[0.0], [5.0]]],
+        coarse=cents,
+    )
+    got = {r["nid"]: (list(r["codes"]), r["cell"]) for r in enc.collect()}
+    assert got == {
+        0: ([0, 0], 0),
+        1: ([1, 1], 1),
+        2: ([0, 0], 0),
+        3: ([1, 1], 0),
+        4: ([0, 0], 0),
+    }
+    # the Lloyd update averages the 3-dim member into a 3-wide centroid;
+    # the next round's kernel follows the expression's NULL-distance
+    # rule for it, so both fits agree (NaN included, hence repr)
+    fit = kmeans_fit(df, k=2, iters=2)
+    assert repr(fit) == repr(kmeans_fit(df, k=2, iters=2, round_dp=9))
+    assert len(fit[2][1]) == 3
+
+
+def test_pq_encode_codes_match_first_minimum_argmin(spark):
+    """pq_encode's codes (and its coarse cell) equal a plain-Python
     argmin per subspace: squared distance folded over ascending
     dimensions from 0.0, the FIRST minimum winning — so a duplicated
     codebook centroid always resolves to the lower code."""
     import numpy as np
 
-    from faust_spark.operators.similarity import pq_encode_join
+    from faust_spark.operators.similarity import pq_encode
 
     rng = np.random.RandomState(5)
     X = np.float32(rng.randn(60, 6))
@@ -527,7 +547,7 @@ def test_pq_encode_join_codes_match_first_minimum_argmin(spark):
     }
     got = {
         r["nid"]: (list(r["codes"]), r["cell"])
-        for r in pq_encode_join(df, books, coarse=coarse).collect()
+        for r in pq_encode(df, books, coarse=coarse).collect()
     }
     assert got == want
     assert want[1][0] == [1, 1, 1] and want[3][1] == 1  # ties exercised
@@ -535,7 +555,7 @@ def test_pq_encode_join_codes_match_first_minimum_argmin(spark):
     # without ``coarse`` the codes are the same
     plain = {
         r["nid"]: list(r["codes"])
-        for r in pq_encode_join(df, books).collect()
+        for r in pq_encode(df, books).collect()
     }
     assert plain == {n: codes for n, (codes, _) in want.items()}
 
@@ -627,10 +647,11 @@ def test_rp_shortlist_partial_topk_matches_full_window(spark):
 
 
 def test_kmeans_fit_vectors_only_frame(spark):
-    """ADVICE r8: kmeans_fit on a frame WITHOUT id_col falls back to
-    the vector-seeded _cell_expr path instead of raising a
-    missing-column error, and matches the id-bearing fit when the
-    id order equals the vector order."""
+    """ADVICE r8: kmeans_fit on a frame WITHOUT id_col seeds by the
+    vector instead of raising a missing-column error (assignment needs
+    only the vector, on both the rounded and the full-precision path),
+    and matches the id-bearing fit when the id order equals the vector
+    order."""
     import numpy as np
 
     from faust_spark.operators.similarity import kmeans_fit

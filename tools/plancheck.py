@@ -121,8 +121,8 @@ ALLOW_NESTED_LOOP = {
     "bigram_logprob",  # one-ROW corpus-total crossJoin into per-(v,w) NLL
     "kn_logprob",  # r6: one-ROW bigram-type-total crossJoin, same shape
     "dsir_score",  # one-ROW (ts, tt) totals crossJoin into bucket weights
-    # broadcast centroid TABLE × corpus scan (assign_cells_join): the
-    # FAISS coarse-quantizer shape — k-row broadcast, partial-agg argmin
+    # cells from the narrow Arrow argmin (assign_cells_arrow), then the
+    # one cell-keyed shuffle into the chunked pairwise scorer
     "semantic_dedup",
     # r8: pigeonhole chunk self-join over the materialized fingerprint
     # relation; Hamming verify runs before the pair-dedup shuffle
