@@ -3278,17 +3278,18 @@ def dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Jaccard ≥ 0.5 near-dup join via prefix filtering
-    (operators/dedup.py jaccard_pairs_prefix — PPJoin prefix + length
-    filters, Xiao et al. WWW 2008). Where ``dedup_jaccard`` tames hub
-    shingles with an approximating frequency cap (mirrored by its
-    oracle), this form needs NO cap: under the df-ascending canonical
-    order any J ≥ t pair must collide within its first
+    (operators/dedup.py jaccard_pairs_prefix — PPJoin prefix, length
+    and positional filters, Xiao et al. WWW 2008). Where
+    ``dedup_jaccard`` tames hub shingles with an approximating frequency
+    cap (mirrored by its oracle), this form needs NO cap: each document
+    becomes one row of its distinct shingles in the df-ascending
+    canonical order, and any J ≥ t pair must collide within its first
     ``s - ceil(t*s) + 1`` shingles, so only those prefixes — each doc's
     RAREST tokens, hub keys structurally excluded — feed the self-join,
-    and candidates are verified with an exact intersection count. The
-    oracle is therefore the plain capless co-occurrence computation:
-    the operator must reproduce the exact answer while shuffling only
-    the prefix fraction."""
+    and candidates are verified by an exact intersection of their two
+    sets. The oracle is therefore the plain capless co-occurrence
+    computation: the operator must reproduce the exact answer while
+    shuffling only the prefix fraction."""
     from faust_spark.operators.dedup import jaccard_pairs_prefix
 
     return jaccard_pairs_prefix(
@@ -6925,6 +6926,7 @@ def _kmeans_oracle_sql(k: int = 8, iters: int = 3) -> str:
     parts = [
         f"""
     WITH sd AS (SELECT vec_id, embedding FROM embeddings
+                WHERE embedding IS NOT NULL
                 ORDER BY vec_id LIMIT {k}),
     seed AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell,
                     embedding

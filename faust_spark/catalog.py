@@ -3,13 +3,17 @@
 The driver fixtures (TESTDATA.md) are one parquet file per table under
 ``/root/testdata/sf{0.001,0.01,0.1}/``. Loading through here guarantees
 every query sees the same temp-view names the DuckDB oracle uses.
+A table's parquet schema is inferred once per file version (path, size,
+mtime) and reused, so a repeated load launches no footer-reading job.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -59,6 +63,34 @@ def normalize_event_time(df: DataFrame, col_name: str = "ts") -> DataFrame:
     return df
 
 
+#: parquet schemas as Spark inferred them, keyed by :func:`_file_version`
+#: (inference reads footers in a Spark job on every ``spark.read.parquet``)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """``(path, size, mtime_ns)`` of a file; for a directory, ``(path,
+    sorted (relative name, size, mtime_ns) of every file under it)``.
+    ``None`` when ``os.stat`` cannot see the path (a remote URI): such a
+    table is inferred on every load."""
+    path = os.path.abspath(path)
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (path, st.st_size, st.st_mtime_ns)
+        entries = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                fs = os.stat(full)
+                entries.append(
+                    (os.path.relpath(full, path), fs.st_size, fs.st_mtime_ns)
+                )
+    except OSError:
+        return None
+    return (path, tuple(sorted(entries)))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, normalizing physical quirks (see
     :func:`normalize_event_time`). Confs are set per-session so the
@@ -67,7 +99,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Event-time math must be UTC regardless of the caller's session
     # defaults (the correctness driver builds its own SparkSession).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _file_version(path)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
     if name == "events":
         df = normalize_event_time(df)
     return df

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from faust_spark.operators.mat import materialize
@@ -152,35 +152,33 @@ def _shingle_overlap(sh: DataFrame, id_col: str) -> DataFrame:
 def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
     """(doc1, doc2, jaccard) of the (doc1, doc2, inter, n1, n2) rows
     with Jaccard >= ``threshold``."""
-    return (
-        pairs.withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
-    )
+    union = F.col("n1") + F.col("n2") - F.col("inter")
+    jac = (F.col("inter").cast("double") / union).alias("jaccard")
+    out = pairs.select("doc1", "doc2", jac)
+    return out.filter(F.col("jaccard") >= threshold)
 
 
-def _verify_jaccard(
-    cand: DataFrame,
-    sh: DataFrame,
-    sizes: DataFrame,
-    threshold: float,
-    id_col: str,
+def _min_overlap(threshold: float, n1: Column, n2: Column) -> Column:
+    """The overlap ``ceil(t/(1+t)·(n1+n2))`` that ``J >= t`` requires of
+    sets of sizes n1, n2. The epsilon biases it toward ADMITTING
+    borderline pairs: it may only discard provably-failing ones."""
+    return F.ceil(F.lit(threshold / (1.0 + threshold)) * (n1 + n2) - 1e-9)
+
+
+def _verify_sets(
+    cand: DataFrame, sets: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate (doc1, doc2) pairs: the
-    full-set intersection is counted for candidates only."""
-    sa = sh.select(F.col(id_col).alias("doc1"), "shingle")
-    sb = sh.select(F.col(id_col).alias("doc2"), "shingle")
-    inter = (
-        cand.join(sa, "doc1")
-        .join(sb, ["doc2", "shingle"])
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    """Exact-Jaccard verification of candidate (doc1, doc2) pairs against
+    the per-document (id, set, n_sh) relation: one array intersection
+    per candidate. The overlap bound filters first, so the Jaccard
+    quotient (two intersections once pushed into the join condition)
+    runs only for the few candidates that pass it."""
+    s1, s2 = (sets.toDF(f"doc{i}", f"s{i}", f"n{i}") for i in (1, 2))
+    pairs = cand.join(s1, "doc1").join(s2, "doc2").withColumn(
+        "inter", F.size(F.array_intersect("s1", "s2"))
     )
-    return _jaccard_at_least(_with_sizes(inter, sizes, id_col), threshold)
+    bound = _min_overlap(threshold, F.col("n1"), F.col("n2"))
+    return _jaccard_at_least(pairs.filter(F.col("inter") >= bound), threshold)
 
 
 def jaccard_pairs(
@@ -204,6 +202,32 @@ def jaccard_pairs(
     sh = materialize(shingles(df, n, text_col, id_col))
     sh = _cap_hubs(sh, id_col, max_shingle_freq)
     return _jaccard_at_least(_shingle_overlap(sh, id_col), threshold)
+
+
+def _canonical_sets(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, set, n_sh): each document's distinct shingles as one string
+    array in the canonical PPJoin order (ascending document frequency,
+    then the shingle). Strings, not structs: Spark intersects string
+    arrays through a hash set, struct arrays pairwise."""
+    sdf = F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+    canon = F.sort_array(F.collect_list(F.struct("sdf", "shingle")))
+    return (
+        sh.withColumn("sdf", sdf)
+        .groupBy(id_col)
+        .agg(canon.getField("shingle").alias("set"))
+        .withColumn("n_sh", F.size("set"))
+    )
+
+
+def _prefixes(sets: DataFrame, threshold: float, id_col: str) -> DataFrame:
+    """(id, shingle, rn, n_sh): the first ``n_sh - ceil(t*n_sh) + 1``
+    shingles of each canonical set, ``rn`` their 1-based rank. The
+    epsilon biases ceil DOWN: float fuzz may only LENGTHEN a prefix."""
+    p = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh") - 1e-9) + 1
+    prefix = F.posexplode(F.slice("set", 1, p)).alias("pos", "shingle")
+    return sets.select(id_col, "n_sh", prefix).select(
+        id_col, "shingle", (F.col("pos") + 1).alias("rn"), "n_sh"
+    )
 
 
 def jaccard_pairs_prefix(
@@ -239,42 +263,23 @@ def jaccard_pairs_prefix(
     (``min >= t * max``), and survivors are verified with an exact
     intersection count over the full sets.
 
-    Shuffle budget: df-count (shingle-keyed agg) + df join back +
-    per-doc prefix window (doc-keyed) + prefix self-join (prefix-
-    shingle-keyed) + candidate verification join — each keyed on a
-    column whose cardinality grows with the data, nothing quadratic.
+    Shuffle budget: one per-document relation ``(id, set, n_sh)``
+    (:func:`_canonical_sets`: a shingle-keyed window count and one
+    doc-keyed collect), materialized once; the prefix self-join; two
+    doc-keyed joins attaching both sets, one array intersection per
+    candidate row; a distinct of the verified pairs. Nothing is
+    quadratic. Verifying before the distinct keeps the intersections in
+    the self-join's tasks (few rows repeat a pair), not in the few
+    partitions AQE coalesces the distinct's small output into.
     """
-    sh = materialize(shingles(df, n, text_col, id_col))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-
-    from pyspark.sql import Window as W
-
-    # prefix length p = s - ceil(t*s) + 1; the epsilon biases ceil DOWN
-    # so float fuzz can only LENGTHEN the prefix (more candidates, same
-    # verified result) — shortening it would break exactness
-    w = W.partitionBy(id_col).orderBy("sdf", "shingle")
-    pref = (
-        sh.join(dfreq, "shingle")
-        .join(sizes, id_col)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.col("n_sh")
-            - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-            + 1
-        )
-        .select(id_col, "shingle", "rn", "n_sh")
+    sets = materialize(
+        _canonical_sets(shingles(df, n, text_col, id_col), id_col)
     )
+    pref = _prefixes(sets, threshold, id_col)
     a, b = pref.alias("a"), pref.alias("b")
-    # required overlap alpha = ceil(t/(1+t)·(|x|+|y|)); both epsilons
-    # bias toward ADMITTING borderline rows — the verification join is
-    # what decides, the filters may only discard provably-failing pairs
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("a.n_sh") + F.col("b.n_sh"))
-        - F.lit(1e-9)
-    )
+    # both epsilons bias toward ADMITTING borderline rows — verification
+    # decides, the filters may only discard provably-failing pairs
+    alpha = _min_overlap(threshold, F.col("a.n_sh"), F.col("b.n_sh"))
     cand = (
         a.join(b, F.col("a.shingle") == F.col("b.shingle"))
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -288,7 +293,7 @@ def jaccard_pairs_prefix(
         # n_sh) caps the overlap at 1 + min(|x|-i, |y|-j); a qualifying
         # pair always has a witnessing row (its globally-minimal shared
         # shingle, in both prefixes), so dropping non-witnesses loses
-        # no pair — it only shrinks the distinct + verification input
+        # no pair — it only shrinks the verification input
         .filter(
             F.lit(1)
             + F.least(
@@ -301,9 +306,8 @@ def jaccard_pairs_prefix(
             F.col(f"a.{id_col}").alias("doc1"),
             F.col(f"b.{id_col}").alias("doc2"),
         )
-        .distinct()
     )
-    return _verify_jaccard(cand, sh, sizes, threshold, id_col)
+    return _verify_sets(cand, sets, threshold).distinct()
 
 
 def containment_pairs(
@@ -367,31 +371,24 @@ def incremental_dedup(
         id_col,
         max_shingle_freq,
     )
-    sz_new = sh_new.groupBy(id_col).agg(F.count(F.lit(1)).alias("n1"))
-    sz_old = sh_old.groupBy(id_col).agg(F.count(F.lit(1)).alias("n2"))
+    n1, n2 = (
+        sh.groupBy(F.col(id_col).alias(f"doc{i}")).agg(
+            F.count(F.lit(1)).alias(f"n{i}")
+        )
+        for i, sh in ((1, sh_new), (2, sh_old))
+    )
     inter = (
         sh_new.alias("a")
         .join(sh_old.alias("b"), "shingle")
         .groupBy(
-            F.col(f"a.{id_col}").alias("new_id"),
-            F.col(f"b.{id_col}").alias("old_id"),
+            F.col(f"a.{id_col}").alias("doc1"),
+            F.col(f"b.{id_col}").alias("doc2"),
         )
-        .agg(F.count(F.lit(1)).alias("i"))
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
-    dup_ids = (
-        inter.join(sz_new.withColumnRenamed(id_col, "new_id"), "new_id")
-        .join(sz_old.withColumnRenamed(id_col, "old_id"), "old_id")
-        .filter(
-            F.col("i").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("i"))
-            >= threshold
-        )
-        .select("new_id")
-        .distinct()
-    )
-    return new_df.join(
-        dup_ids, new_df[id_col] == dup_ids["new_id"], "left_anti"
-    )
+    pairs = inter.join(n1, "doc1").join(n2, "doc2")
+    dup_ids = _jaccard_at_least(pairs, threshold).select("doc1").distinct()
+    return new_df.join(dup_ids, new_df[id_col] == dup_ids["doc1"], "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -579,9 +576,9 @@ def minhash_lsh_pairs(
         )
     else:
         lsh_df = df
-    # one shingle materialization serves signatures, verification joins,
-    # and sizes (localCheckpoint: GC-released blocks, lineage cut; Delta
-    # staging at corpus scale)
+    # one shingle materialization serves the signatures and the
+    # verification sets (localCheckpoint: GC-released blocks, lineage cut;
+    # Delta staging at corpus scale)
     sh = materialize(shingles(lsh_df, n, text_col, id_col))
     # band signatures straight off the wide signature row — the banding
     # needs NO second shuffle (lsh_bands' (id, band) re-agg exists only
@@ -607,9 +604,7 @@ def minhash_lsh_pairs(
         )
         for b in range(n_bands)
     ]
-    bands = wide.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bs")
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
+    bands = wide.select(F.col(id_col), F.inline(F.array(*band_structs)))
     if max_bucket_size is not None:
         bucket_n = bands.groupBy("band", "band_sig").agg(
             F.count(F.lit(1)).alias("__bn")
@@ -635,8 +630,11 @@ def minhash_lsh_pairs(
         .distinct()
     )
     # exact-Jaccard verification on candidates only
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    rep_pairs = _verify_jaccard(cands, sh, sizes, threshold, id_col)
+    sets = sh.groupBy(id_col).agg(
+        F.collect_list("shingle").alias("set"),
+        F.count(F.lit(1)).alias("n_sh"),
+    )
+    rep_pairs = _verify_sets(cands, sets, threshold)
     if not collapse_exact:
         return rep_pairs
     # expand representative pairs back to member pairs
@@ -658,11 +656,11 @@ def minhash_lsh_pairs(
     if threshold > 1.0:
         return cross
     # intra-group member pairs are exact dups (jaccard 1.0) — but only
-    # for texts that produce >=1 shingle (presence in the rep size table
+    # for texts that produce >=1 shingle (presence in the rep set table
     # mirrors the uncollapsed pipeline, where shingle-less docs never
     # enter pair generation)
     mm = members.join(
-        sizes.select(F.col(id_col).alias("__rep")), "__rep"
+        sets.select(F.col(id_col).alias("__rep")), "__rep"
     )
     intra = (
         mm.alias("x")

@@ -798,10 +798,11 @@ def kmeans_fit(
     """Deterministic Lloyd k-means; returns the FULL centroid trajectory
     ``[cents_0, ..., cents_iters]`` (cents_0 = the seed).
 
-    Init is the ``k`` lowest-id vectors (no RNG: identical across runs and
-    retries).  Each iteration is one corpus pass: nearest-centroid
-    assignment, then the one-group :func:`_lloyd_update` (one
-    (cell, dim)-keyed partial-agg shuffle via posexplode to re-average).
+    Init is the ``k`` lowest-id non-NULL vectors (no RNG: identical
+    across runs and retries).  Each iteration is one corpus pass:
+    nearest-centroid assignment, then the one-group
+    :func:`_lloyd_update` (one (cell, dim)-keyed partial-agg shuffle via
+    posexplode to re-average).
     At full precision the assignment is the Arrow kernel
     (:func:`_nearest_arrow`, the cells of :func:`assign_cells`
     bit-for-bit); with ``round_dp`` it is the literal argmin expression.
@@ -821,7 +822,8 @@ def kmeans_fit(
     still deterministic). Assignment needs only the vector column.
     """
     seed = (
-        df.orderBy(F.col(id_col) if id_col in df.columns else F.col(vec_col))
+        df.filter(F.col(vec_col).isNotNull())
+        .orderBy(F.col(id_col) if id_col in df.columns else F.col(vec_col))
         .limit(k)
         .select(vec_col)
         .collect()
@@ -1273,9 +1275,9 @@ def kmeans_centroids_multi(
     ``start``, as in ``F.slice``): each group fits its own ``k``
     centroids over ``vec[start : start+length-1]``.  Per group the math
     is identical to :func:`kmeans_centroids` on the sliced column — seed
-    = the ``k`` lowest-id subvectors, first-minimum argmin assignment,
-    per-(cell, dim) re-average — but ALL groups ride the same scan: each
-    iteration assigns every group in ONE call of the Arrow kernel
+    = the ``k`` lowest-id non-NULL subvectors, first-minimum argmin
+    assignment, per-(cell, dim) re-average — but ALL groups ride the same
+    scan: each iteration assigns every group in ONE call of the Arrow kernel
     :func:`_nearest_arrow` (the codebooks ride in its closure, no join,
     no shuffle), then posexplodes (codes, subvectors) into the
     (g, cell, sv) frame of :func:`_lloyd_update`, so the whole fit costs
@@ -1289,7 +1291,11 @@ def kmeans_centroids_multi(
     """
     max_k = max(k for _, _, k in specs)
     seed_rows = (
-        df.orderBy(F.col(id_col)).limit(max_k).select(vec_col).collect()
+        df.filter(F.col(vec_col).isNotNull())
+        .orderBy(F.col(id_col))
+        .limit(max_k)
+        .select(vec_col)
+        .collect()
     )
     cents: list[list[list[float]]] = [
         [list(r[0])[s - 1 : s - 1 + ln] for r in seed_rows[:k]]

@@ -469,7 +469,11 @@ def test_jaccard_prefix_joins_only_prefix_tokens(spark):
     table, with hub shingles absent from prefixes unless a doc has
     almost nothing rarer — the structural (non-approximating) hub
     guard."""
-    from faust_spark.operators.dedup import shingles
+    from faust_spark.operators.dedup import (
+        _canonical_sets,
+        _prefixes,
+        shingles,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -479,31 +483,58 @@ def test_jaccard_prefix_joins_only_prefix_tokens(spark):
         ],
         ["doc_id", "text"],
     )
-    sh = shingles(docs, 3)
-    # 'common common phrase' appears in all 3 docs (max df); with
-    # t=0.5 each doc's prefix holds its ~rarest half — the hub shingle
-    # must not be in any prefix
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
+    sets = _canonical_sets(shingles(docs, 3), "doc_id")
+    # every doc has 5 shingles; the hub 'common common phrase' (df 3)
+    # sorts last in each canonical set
+    assert {
+        r.doc_id: (r.n_sh, r.set[-1]) for r in sets.collect()
+    } == {i: (5, "common common phrase") for i in (1, 2, 3)}
+    # with t=0.5 each doc's prefix holds its rarest 5 - ceil(2.5) + 1 = 3
+    # shingles, ranked 1..3 — the hub shingle is in no prefix
+    pref = _prefixes(sets, 0.5, "doc_id").collect()
+    assert sorted((r.doc_id, r.rn) for r in pref) == [
+        (i, rn) for i in (1, 2, 3) for rn in (1, 2, 3)
+    ]
+    assert all(r.shingle != "common common phrase" for r in pref)
 
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    w = W.partitionBy("doc_id").orderBy("sdf", "shingle")
-    pref = (
-        sh.join(dfreq, "shingle")
-        .join(sizes, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(
-            F.col("rn")
-            <= F.col("n_sh")
-            - F.ceil(F.lit(0.5) * F.col("n_sh") - F.lit(1e-9))
-            + 1
-        )
+
+def test_jaccard_prefix_malformed_inputs_match_exact(spark):
+    """NULL text, empty text, documents shorter than n words and exact
+    duplicates (J = 1.0): the prefix join returns exactly the capless
+    co-occurrence pairs at every threshold, the boundary t = 1.0
+    included."""
+    from faust_spark.operators.dedup import (
+        jaccard_pairs,
+        jaccard_pairs_prefix,
     )
-    assert (
-        pref.filter(F.col("shingle") == "common common phrase").count()
-        == 0
+
+    df = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "too short"),
+            (4, "a b c d e f"),
+            (5, "a b c d e f"),
+            (6, "a b c d e g"),
+            (7, "a b c x y z"),
+            (8, "too short"),
+            (9, None),
+            (10, "q r s"),
+            (11, "q r s"),
+        ],
+        "doc_id long, text string",
     )
+    for thr in (0.3, 0.5, 1.0):
+        exact = {
+            (r.doc1, r.doc2): r.jaccard
+            for r in jaccard_pairs(df, threshold=thr).collect()
+        }
+        pref = {
+            (r.doc1, r.doc2): r.jaccard
+            for r in jaccard_pairs_prefix(df, threshold=thr).collect()
+        }
+        assert pref == exact, thr
+        assert {(4, 5), (10, 11)} <= set(pref), thr
 
 
 def test_semantic_dup_cells_chunked_matches_brute_force(spark):

@@ -154,6 +154,25 @@ def test_keep_best_single_aggregation_no_window(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") <= 1
 
 
+def test_jaccard_prefix_verifies_sets_not_shingle_rows(spark, sf_dir):
+    """PPJoin reads one materialized (id, set, n_sh) relation: prefixes
+    are a posexplode of each canonical set, not a per-doc row_number
+    window, and candidates are verified by an array intersection, not a
+    shingle-level join counted per (doc1, doc2)."""
+    import re
+
+    df = entry.queries()["dedup_jaccard_prefix"](spark, sf_dir)
+    df.collect()  # AQE finalizes
+    plan = plan_of(df)
+    assert "Window" not in plan
+    assert not re.search(
+        r"HashAggregate\(keys=\[doc1#\d+L?, doc2#\d+L?\], "
+        r"functions=\[[^\]]*count",
+        plan,
+    ), plan
+    assert "array_intersect" in plan
+
+
 def test_doc_chunking_no_shuffle(spark, sf_dir):
     """The chunk fan-out is pure codegen (sequence+explode+slice): zero
     exchanges — chunking 100 TB must not move data."""

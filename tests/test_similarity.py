@@ -674,6 +674,41 @@ def test_kmeans_fit_vectors_only_frame(spark):
     assert len(c) == 2 and len(c[1]) == 3
 
 
+def test_kmeans_seeds_skip_null_vectors(spark):
+    """A NULL vector among the lowest ids (or first in vector order) is
+    not a seed: every fit seeds from the k lowest-id non-NULL vectors,
+    and since a NULL vector adds nothing to any average, the whole
+    trajectory equals the fit of the frame without that row (to float
+    summation order on the full-precision paths)."""
+    import numpy as np
+
+    from faust_spark.operators.similarity import (
+        kmeans_centroids_multi,
+        kmeans_fit,
+    )
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(v) for v in rng.normal(size=4)]) for i in range(1, 25)]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame([(0, None)] + rows, schema)
+    assert kmeans_fit(dirty, k=3, iters=2, round_dp=9) == kmeans_fit(
+        clean, k=3, iters=2, round_dp=9
+    )
+    got = kmeans_fit(dirty, k=3, iters=2)
+    want = kmeans_fit(clean, k=3, iters=2)
+    assert got[0] == want[0] and np.allclose(got, want, rtol=0, atol=1e-12)
+    assert kmeans_fit(
+        dirty.select("embedding"), k=3, iters=1, round_dp=9
+    ) == kmeans_fit(clean.select("embedding"), k=3, iters=1, round_dp=9)
+    specs = [(1, 4, 3), (1, 2, 2), (3, 2, 2)]
+    got = kmeans_centroids_multi(dirty, specs)
+    want = kmeans_centroids_multi(clean, specs)
+    assert all(
+        np.allclose(g, w, rtol=0, atol=1e-12) for g, w in zip(got, want)
+    )
+
+
 def test_hyperplane_params_sql_rule_matches_python():
     """The stream_embedding_dedup oracle computes hyperplane_params in
     SQL from COUNT(*); the engines' double math must agree at every
