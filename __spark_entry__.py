@@ -4929,7 +4929,9 @@ def approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF coarse partitioner alone, oracle-checked: nearest-seed-cell
     assignment (k = 8 lowest-id vectors as centroids, i.e. the k-means
-    init state) as a codegen argmin — no UDF, no shuffle. Embeddings are
+    init state) as one argmin expression over the centroid literal —
+    no UDF, no shuffle; its ``zip_with``/``aggregate`` lambdas run
+    interpreted, not in generated code. Embeddings are
     cast float→double on BOTH engines so squared-distance sums are
     bit-identical and the argmin is engine-portable; the iterative fit on
     top of this stays rows-only (``ivf_topk``)."""
@@ -6175,9 +6177,9 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/similarity.py pq_topk):
     8 subspaces x 16 centroids compress each 64-dim vector to 8 codes
     (32x fewer bytes than float32). Two-stage FAISS-style serving:
-    ADC shortlist over the code table (codes index the broadcast
-    codebook literal inside one codegen expression — corpus vectors
-    never decoded), then exact cosine re-rank of candidates only.
+    ADC shortlist over the code table (exploded codes hash-join a
+    broadcast per-query lookup table — corpus vectors never decoded),
+    then exact cosine re-rank of candidates only.
     Checkable contract: recall@5 vs the brute-force ranking (recomputed
     by the DuckDB oracle) must stay >= 0.5 — quantization to 8 bytes on
     near-uniform synthetic embeddings is inherently lossier than IVF's
@@ -6973,8 +6975,9 @@ def kmeans_fit_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans_fit) — the coarse-quantizer fit behind every IVF index and
     the cluster step behind SemDeDup, here verified as a first-class
     trajectory instead of transitively through recall contracts. k=8
-    cells, 3 iterations; each iteration is ONE corpus pass (literal
-    argmin assignment in codegen — narrow map, no UDF) plus one
+    cells, 3 iterations; each iteration is ONE corpus pass (argmin
+    expression over one centroid literal, its lambdas interpreted —
+    narrow map, no UDF) plus one
     (cell, dim)-keyed partial-agg shuffle of k×dim averages; only the
     k×dim model reaches the driver. Distances and updated centroids
     round to 9 dp in-engine (HALF_UP on both sides) each iteration, so

@@ -20,6 +20,11 @@ rewrite can never read from the files it overwrites.
 
 The knob is read per call, so a long-lived session can switch modes
 between jobs.
+
+A LAZY checkpoint (``eager=False``) is not free at call time: building
+it plans the query to an RDD, and under AQE that runs every shuffle
+stage beneath it there and then. Only the final, shuffle-free stage
+waits for the first action over the result.
 """
 
 from __future__ import annotations
@@ -54,7 +59,9 @@ def _strategy(df: DataFrame) -> str:
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Checkpoint ``df`` — cut its lineage — where the session's
     strategy says (see module docstring). A lazy checkpoint
-    (``eager=False``) materializes at the first action over it."""
+    (``eager=False``) defers only the last stage to the first action
+    over it: under AQE every shuffle stage beneath it runs in this
+    call."""
     if _strategy(df) == "reliable":
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -14,12 +14,15 @@ Two paths, as a 100 TB design requires:
   → bigger buckets → higher recall, more compute).
 
 The dot product stays JVM-side via ``F.zip_with`` + ``F.aggregate`` —
-no Python, no UDF, vectorizable by codegen.
+no Python, no UDF. Catalyst evaluates those lambdas interpreted, not in
+generated code; driver-side models (centroids, planes) enter as one
+literal each (:func:`_model_lit`).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 from typing import Optional
 
@@ -69,6 +72,31 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _model_lit(rows: list[list], elem: str = "double") -> Column:
+    """A driver-side model (centroids, planes, block members) as ONE
+    ``array<array<elem>>`` literal: a ``from_json`` over the model's JSON
+    text, which ConstantFolding turns into a single Literal. The
+    expression is two nodes at any model size, so building and analysing
+    it does not grow with k×dim (an ``F.array`` of ``F.lit``s is k×dim
+    py4j calls and k×dim analysed children). ``json.dumps`` writes
+    each double's shortest round-trip repr and NaN/±Infinity as the
+    tokens Spark's JSON reader accepts, so every value — -0.0 and
+    subnormals included — parses back bit-exactly."""
+    cast = float if elem == "double" else int
+    text = json.dumps([[cast(v) for v in r] for r in rows])
+    return F.from_json(F.lit(text), f"array<array<{elem}>>")
+
+
+def _top_by_sim(scored: DataFrame, k: int) -> DataFrame:
+    """``scored`` with a ``rank`` column, cut to each query's ``k``
+    highest-``sim`` rows: rank 1..k per qid, the lower nid first on a
+    similarity tie."""
+    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -93,12 +121,7 @@ def cosine_topk(
         c.join(F.broadcast(q), F.col("qid") != F.col("nid"))
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
-    )
+    return _top_by_sim(scored, k).select("qid", "nid", "rank")
 
 
 def _deterministic_planes(
@@ -145,16 +168,12 @@ def hyperplane_signature(
 ) -> DataFrame:
     """Add a ``bucket`` column: sign-bit string of projections onto
     deterministic hyperplanes. A narrow map — no shuffle."""
-    planes = _deterministic_planes(n_planes, dim, seed)
-    bits = []
-    for row in planes:
-        plane = F.array(*[F.lit(v) for v in row])
-        bits.append(
-            F.when(dot_expr(F.col(vec_col), plane) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-        )
-    return df.withColumn("bucket", F.concat(*bits))
+    planes = _model_lit(_deterministic_planes(n_planes, dim, seed))
+    bits = F.transform(
+        planes,
+        lambda p: F.when(dot_expr(F.col(vec_col), p) >= 0, "1").otherwise("0"),
+    )
+    return df.withColumn("bucket", F.array_join(bits, ""))
 
 
 def hyperplane_bands_arrow(
@@ -314,12 +333,7 @@ def hyperplane_lsh_topk(
         .join(F.broadcast(queries_sel), "qid")
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
-    )
+    return _top_by_sim(scored, k).select("qid", "nid", "rank")
 
 
 def cosine_rows_arrow(
@@ -522,12 +536,7 @@ def rp_shortlist_topk(
         .join(F.broadcast(q), "qid")
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
-    )
+    return _top_by_sim(rerank, k).select("qid", "nid", "rank")
 
 
 def ranking_eval(
@@ -620,12 +629,7 @@ def hard_negative_topk(
         )
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
-    )
+    return _top_by_sim(scored, k).select("qid", "nid", "rank")
 
 
 def knn_vote(
@@ -661,10 +665,7 @@ def knn_vote(
         .filter(F.col("qid") != F.col("nid"))
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    nn = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    nn = _top_by_sim(scored, k)
     votes = nn.groupBy("qid", "nlabel").agg(
         F.count(F.lit(1)).alias("votes")
     )
@@ -730,12 +731,7 @@ def hard_negative_topk_ivf(
         .filter(F.col("nlabel") != F.col("qlabel"))
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
-    )
+    return _top_by_sim(scored, k).select("qid", "nid", "rank")
 
 
 def knn_vote_ivf(
@@ -900,24 +896,36 @@ def kmeans_centroids(
     return kmeans_fit(df, k, iters, vec_col, id_col)[-1]
 
 
+def _dist_struct(
+    vec: Column, c: Column, i: Column, round_dp: Optional[int] = None
+) -> Column:
+    """One argmin term: the (d, i) struct of ``vec``'s squared distance
+    to centroid ``c`` with index ``i``. array_min over these takes the
+    lowest index on a distance tie, and a NULL distance sorts first.
+    ``round_dp`` rounds the distance in-engine before the argmin."""
+    d = sqdist_expr(vec, c)
+    if round_dp is not None:
+        d = F.round(d, round_dp)
+    return F.struct(d.alias("d"), i.alias("i"))
+
+
 def _cell_expr(
     cents: list[list[float]],
     vec_col: str,
     round_dp: Optional[int] = None,
 ) -> Column:
-    """argmin-over-centroids as one codegen expression: k squared-distance
-    terms in an array of (dist, idx) structs, array_min picks the cell.
-    ``round_dp`` rounds each distance in-engine before the argmin — the
-    bit-portability guard the oracle-verified ``kmeans_fit`` needs (a
-    cross-engine float-sum difference can only flip an assignment when
-    two true distances straddle a rounding-grid boundary)."""
-    terms = []
-    for i, c in enumerate(cents):
-        d = sqdist_expr(F.col(vec_col), F.array(*[F.lit(v) for v in c]))
-        if round_dp is not None:
-            d = F.round(d, round_dp)
-        terms.append(F.struct(d.alias("d"), F.lit(i).alias("i")))
-    return F.array_min(F.array(*terms))["i"]
+    """argmin-over-centroids as one expression: a lambda over the
+    centroid literal computes each (dist, idx) struct and array_min
+    picks the cell. ``round_dp`` rounds each distance in-engine before
+    the argmin — the bit-portability guard the oracle-verified
+    ``kmeans_fit`` needs (a cross-engine float-sum difference can only
+    flip an assignment when two true distances straddle a rounding-grid
+    boundary)."""
+    vec = F.col(vec_col)
+    terms = F.transform(
+        _model_lit(cents), lambda c, i: _dist_struct(vec, c, i, round_dp)
+    )
+    return F.array_min(terms)["i"]
 
 
 def assign_cells(
@@ -1087,8 +1095,8 @@ def assign_cells_two_level(
     ``k`` itself scales with the corpus (the SemDeDup bounded-cell
     contract).  Standard IVF/IMI practice splits the quantizer: route to
     the nearest block REPRESENTATIVES first, then argmin only over those
-    blocks' members — O(sqrt k) per row, still one narrow codegen map
-    with no shuffle.
+    blocks' members — O(sqrt k) per row, still one narrow map with no
+    shuffle.
 
     Blocks come from :func:`centroid_blocks` (deterministic k-means over
     the centroid list, mean reps), and each vector routes through its
@@ -1099,48 +1107,34 @@ def assign_cells_two_level(
     SemDeDup tolerates by construction (cells are arbitrary partitions
     of the space) and the IVF recall contract bounds end-to-end.
 
-    Physical shape: the block CASE dispatch means only the chosen
-    blocks' member distances are evaluated per row (codegen CASE WHEN
-    short-circuits) — never all k.
+    Physical shape: one expression over three literals (block reps,
+    block member lists, centroids). The ``top_blocks`` nearest reps'
+    member lists are flattened into one candidate list per row, and the
+    cell is the argmin over those candidates only — never all k. The
+    minimum over the union of the chosen blocks equals the minimum of
+    the per-block minima, ties to the lowest centroid index included.
     """
     members, reps = centroid_blocks(cents, n_blocks)
     if len(members) <= 1:
         return assign_cells(df, cents, vec_col)
-
-    def dist_to(c: list[float]) -> Column:
-        return sqdist_expr(F.col(vec_col), F.array(*[F.lit(v) for v in c]))
-
-    sup = [
-        F.struct(dist_to(reps[j]).alias("d"), F.lit(j).alias("i"))
-        for j in range(len(reps))
-    ]
+    vec = F.col(vec_col)
+    model, member_lit = _model_lit(cents), _model_lit(members, "int")
+    blocks = F.array_sort(
+        F.transform(_model_lit(reps), lambda c, j: _dist_struct(vec, c, j))
+    )
     topb = F.slice(
-        F.transform(F.array_sort(F.array(*sup)), lambda s: s["i"]),
+        F.transform(blocks, lambda s: s["i"]),
         1,
         min(top_blocks, len(members)),
     )
-
-    def best_in(j: int) -> Column:
-        terms = [
-            F.struct(dist_to(cents[i]).alias("d"), F.lit(i).alias("i"))
-            for i in members[j]
-        ]
-        return F.array_min(F.array(*terms))
-
-    def pick(slot: int) -> Column:
-        c = None
-        for j in range(len(members)):
-            cond = topb[slot] == j
-            c = (
-                F.when(cond, best_in(j))
-                if c is None
-                else c.when(cond, best_in(j))
-            )
-        return c
-
-    n_slots = min(top_blocks, len(members))
-    cell = F.array_min(F.array(*[pick(s) for s in range(n_slots)]))["i"]
-    return df.withColumn("cell", cell)
+    cands = F.flatten(
+        F.transform(topb, lambda b: F.element_at(member_lit, b + 1))
+    )
+    terms = F.transform(
+        cands,
+        lambda i: _dist_struct(vec, F.element_at(model, i + 1), i),
+    )
+    return df.withColumn("cell", F.array_min(terms)["i"])
 
 
 def ivf_fit(
@@ -1253,12 +1247,7 @@ def ivf_topk(
     # RANKING, so the einsum scorer applies — the recall contract's
     # exact side (cosine_topk) stays on the fold-exact expression
     scored = cosine_rows_arrow(paired, "qv", "cv", keep=["qid", "nid"])
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
-    )
+    return _top_by_sim(scored, k).select("qid", "nid", "rank")
 
 
 def kmeans_centroids_multi(
@@ -1420,6 +1409,50 @@ def adc_lut(
     )
 
 
+def _adc_rerank(
+    enc: DataFrame,
+    lut: DataFrame,
+    q: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The PQ serving tail shared by :func:`pq_topk` and
+    :func:`ivfpq_topk`: explode the code table ``enc``, hash-join the
+    broadcast ADC table ``lut`` (keyed by (j, code), plus cell when the
+    LUT is per probed cell), sum the m lookups per (qid, nid), keep the
+    ``shortlist`` nearest per query, fetch those candidates' full
+    vectors from ``corpus`` and re-rank them by exact cosine against
+    ``q`` (qid, qv). Returns (qid, nid, rank), rank 1..k."""
+    cell = ["cell"] if "cell" in lut.columns else []
+    expl = enc.select("nid", *cell, F.posexplode("codes").alias("j", "code"))
+    scored = (
+        expl.join(F.broadcast(lut), [*cell, "j", "code"])
+        .filter(F.col("qid") != F.col("nid"))
+        .groupBy("qid", "nid")
+        .agg(F.sum("ldist").alias("adist"))
+    )
+    wa = W.partitionBy("qid").orderBy(F.asc("adist"), F.col("nid"))
+    cand = (
+        scored.withColumn("arank", F.row_number().over(wa))
+        .filter(F.col("arank") <= shortlist)
+        .select("qid", "nid")
+    )
+    full = (
+        cand.join(
+            corpus.select(
+                F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
+            ),
+            "nid",
+        )
+        .join(F.broadcast(q), "qid")
+        .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
+    )
+    return _top_by_sim(full, k).select("qid", "nid", "rank")
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1459,35 +1492,8 @@ def pq_topk(
         books,
         vec_col=vec_col,
     )
-    lut = adc_lut(q, books)
-    expl = enc.select("nid", F.posexplode("codes").alias("j", "code"))
-    scored = (
-        expl.join(F.broadcast(lut), ["j", "code"])
-        .filter(F.col("qid") != F.col("nid"))
-        .groupBy("qid", "nid")
-        .agg(F.sum("ldist").alias("adist"))
-    )
-    wa = W.partitionBy("qid").orderBy(F.asc("adist"), F.col("nid"))
-    cand = (
-        scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= shortlist)
-        .select("qid", "nid")
-    )
-    full = (
-        cand.join(
-            corpus.select(
-                F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-            ),
-            "nid",
-        )
-        .join(F.broadcast(q), "qid")
-        .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        full.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
+    return _adc_rerank(
+        enc, adc_lut(q, books), q, corpus, k, shortlist, id_col, vec_col
     )
 
 
@@ -1624,37 +1630,8 @@ def ivfpq_topk(
             vec_col=vec_col,
         )
     )
-    lut = adc_lut(qp, books)
-    expl = enc.select(
-        "nid", "cell", F.posexplode("codes").alias("j", "code")
-    )
-    scored = (
-        expl.join(F.broadcast(lut), ["cell", "j", "code"])
-        .filter(F.col("qid") != F.col("nid"))
-        .groupBy("qid", "nid")
-        .agg(F.sum("ldist").alias("adist"))
-    )
-    wa = W.partitionBy("qid").orderBy(F.asc("adist"), F.col("nid"))
-    cand = (
-        scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= shortlist)
-        .select("qid", "nid")
-    )
-    full = (
-        cand.join(
-            corpus.select(
-                F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-            ),
-            "nid",
-        )
-        .join(F.broadcast(q), "qid")
-        .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (
-        full.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank")
+    return _adc_rerank(
+        enc, adc_lut(qp, books), q, corpus, k, shortlist, id_col, vec_col
     )
 
 

@@ -29,13 +29,10 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 _GLOB_META = frozenset("\\*?[]{}!^")
 
 
-def _file_glob(path: str) -> str:
-    """A Hadoop glob matching exactly the one file ``path``: every glob
-    metacharacter escaped, and the last character wrapped in a class so
-    the path IS a glob. A plain file path fails as a stream source
-    (``Option 'basePath' must be a directory``); a glob does not."""
-    esc = [("\\" + c if c in _GLOB_META else c) for c in path]
-    return "".join(esc[:-1]) + "[" + esc[-1] + "]"
+def _glob_escape(path: str) -> str:
+    """``path`` with every Hadoop glob metacharacter escaped: as a glob
+    it matches only itself."""
+    return "".join("\\" + c if c in _GLOB_META else c for c in path)
 
 
 def stream_parquet(
@@ -46,12 +43,14 @@ def stream_parquet(
     """Open a parquet file/dir as a stream (schema inferred from a batch
     peek). ``max_files_per_trigger`` forces multi-batch replay — useful to
     prove an operator is batching-invariant."""
+    opts = {}
     if os.path.isfile(path):
-        # the file stream source lists a directory or a glob: read the
-        # one file through a glob naming it
-        path = _file_glob(path)
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).format("parquet")
+        # the file stream source lists a directory: list the file's own
+        # directory and keep only the file's name
+        d, name = os.path.split(os.path.abspath(path))
+        path, opts = _glob_escape(d), {"pathGlobFilter": _glob_escape(name)}
+    schema = spark.read.options(**opts).parquet(path).schema
+    reader = spark.readStream.schema(schema).format("parquet").options(**opts)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)

@@ -419,23 +419,32 @@ def test_assign_cells_arrow_matches_expression_exactly(spark):
     approximation: identical IEEE fold order and first-minimum
     tie-break, so cells match the literal argmin expression
     (assign_cells) bit-for-bit — including on deliberately tie-prone
-    duplicated centroids."""
+    duplicated centroids, NULL, short and NaN vectors, and centroids
+    holding NaN and ±inf, whose literal values survive exactly."""
+    import math
+
     import numpy as np
 
     from faust_spark.operators.similarity import (
+        _model_lit,
         assign_cells,
         assign_cells_arrow,
     )
 
+    nan, inf = float("nan"), float("inf")
     rng = np.random.RandomState(11)
     X = np.float32(rng.randn(200, 6))
     df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(200)],
+        [(i, [float(v) for v in X[i]]) for i in range(200)]
+        + [(200, None), (201, [1.0, 2.0]), (202, [nan] * 6)],
         "vec_id bigint, embedding array<float>",
     )
     # duplicate a centroid: rows nearest to it MUST break the exact-zero
     # distance tie to the lower cell in both forms
-    cents = [[float(v) for v in X[i]] for i in (0, 1, 2, 2, 3)]
+    cents = [[float(v) for v in X[i]] for i in (0, 1, 2, 2, 3)] + [
+        [nan, inf, -inf, 0.0, 0.0, 0.0],
+        [inf, -inf, 0.0, 0.0, 0.0, 0.0],
+    ]
     a = {
         r["vec_id"]: r["cell"]
         for r in assign_cells(df, cents).collect()
@@ -446,9 +455,56 @@ def test_assign_cells_arrow_matches_expression_exactly(spark):
     }
     assert a == b
     assert 3 not in set(b.values())  # the duplicate never wins a tie
+    assert {b[200], b[201], b[202]} == {0}
+    assert not {5, 6} & set(b.values())  # NaN / inf distances never win
     # the arrow form also passes the vector through unchanged
     row = assign_cells_arrow(df, cents).filter("vec_id = 5").collect()[0]
     assert list(np.float32(row["embedding"])) == list(X[5])
+    edge = [1e-05, -0.0, 5e-324, 1.7976931348623157e308, nan, inf, -inf]
+    (got,) = spark.range(1).select(_model_lit([edge])).first()[0]
+    assert [repr(v) for v in got] == [repr(v) for v in edge]
+    assert math.copysign(1.0, got[1]) == -1.0
+
+
+def test_model_expressions_do_not_grow_with_model_size(spark):
+    """Each driver-side model enters the plan as ONE literal: the
+    optimized expression of assign_cells' ``cell`` (flat and
+    two-level) and of hyperplane_signature's ``bucket`` has the same
+    node count whatever the number of centroids or planes."""
+    import random
+
+    from faust_spark.operators.similarity import (
+        assign_cells,
+        assign_cells_two_level,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [0.0] * 8)], "vec_id bigint, embedding array<double>"
+    )
+    rng = random.Random(1)
+
+    def cents(k):
+        return [[rng.random() for _ in range(8)] for _ in range(k)]
+
+    def nodes(out, name):
+        exprs = out._jdf.queryExecution().optimizedPlan().expressions()
+        (e,) = [
+            exprs.apply(i)
+            for i in range(exprs.length())
+            if exprs.apply(i).name() == name
+        ]
+        return len(e.treeString().splitlines())
+
+    flat = [nodes(assign_cells(df, cents(k)), "cell") for k in (4, 64)]
+    two = [
+        nodes(assign_cells_two_level(df, cents(k)), "cell") for k in (16, 64)
+    ]
+    bits = [
+        nodes(hyperplane_signature(df, n, 8), "bucket") for n in (4, 32)
+    ]
+    assert flat[0] == flat[1]
+    assert two[0] == two[1]
+    assert bits[0] == bits[1]
 
 
 def test_nearest_centroid_malformed_rows_match_engine(spark):

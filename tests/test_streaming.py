@@ -59,10 +59,10 @@ def test_streaming_counts_match_batch(spark, multi_file_events):
 def test_single_file_stream_reads_every_row_leaves_no_temp_dir(
     spark, tmp_path, name
 ):
-    """One parquet file streams through a glob naming exactly it: every
-    row arrives, glob metacharacters in its path stay literal (a sibling
-    the unescaped pattern would match is not read), and no scratch dir
-    is left behind in the temp dir."""
+    """One parquet file streams alone: every row arrives, glob
+    metacharacters in its directory and name stay literal, no sibling
+    file or directory is read, and no scratch dir is left behind in the
+    temp dir."""
     import glob
     import shutil
     import tempfile
@@ -77,6 +77,11 @@ def test_single_file_stream_reads_every_row_leaves_no_temp_dir(
     (decoy,) = glob.glob(str(tmp_path / "decoy" / "part-*.parquet"))
     # the unescaped pattern of the second name would match this file
     shutil.copy(decoy, d / "ev1x!^.parquet")
+    # the source lists the file's directory: neither a subdirectory
+    # holding a same-named file nor a sibling parquet dir is read
+    (d / "sub").mkdir()
+    shutil.copy(decoy, d / "sub" / name)
+    spark.range(5).write.parquet(str(d / "more.parquet"))
     before = set(os.listdir(tempfile.gettempdir()))
     s = stream_parquet(spark, str(d / name), max_files_per_trigger=1)
     out = run_to_memory(s, output_mode="append").collect()

@@ -39,8 +39,9 @@ SKIP = {
     # test_gd_step_plan_shape); the terminal plan is the trajectory
     # literal
     "kmeans_fit",  # r6: Lloyd steps run eagerly inside the fit (one
-    # codegen argmin scan + one (cell,dim)-keyed agg each — narrow map,
-    # no UDF); the terminal plan is the trajectory literal
+    # argmin scan, its lambdas interpreted, + one (cell,dim)-keyed agg
+    # each — narrow map, no UDF); the terminal plan is the trajectory
+    # literal
     "supplier_hits",  # r6: same eager-iteration shape as pagerank
     "trusted_supplier_ppr",  # r6: eager iterations like pagerank
     "purchase_communities",  # r6: eager LPA iterations; terminal plan
