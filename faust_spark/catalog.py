@@ -1,8 +1,8 @@
-"""Test-data catalog: load the driver's parquet tables and register views.
+"""Test-data catalog: load the driver's parquet tables.
 
 The driver fixtures (TESTDATA.md) are one parquet file per table under
-``/root/testdata/sf{0.001,0.01,0.1}/``. Loading through here guarantees
-every query sees the same temp-view names the DuckDB oracle uses.
+``/root/testdata/sf{0.001,0.01,0.1}/``, named as the DuckDB oracle's
+views are (:data:`TABLES`).
 A table's parquet schema is inferred once per file version (path, size,
 mtime) and reused, so a repeated load launches no footer-reading job.
 """
@@ -111,12 +111,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_event_time(df)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view; return the DataFrames."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

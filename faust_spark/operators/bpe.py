@@ -41,6 +41,10 @@ from faust_spark.operators.mat import materialize
 
 END = "</w>"
 
+#: largest dictionary (distinct words) :func:`bpe_fit` merges driver-side;
+#: bigger ones take the distributed loop
+_DRIVER_DICT_MAX = 200_000
+
 __all__ = ["word_counts", "bpe_learn", "bpe_fit", "bpe_segment", "END"]
 
 
@@ -191,7 +195,6 @@ def _bpe_fit_driver(
 def bpe_fit(
     words: DataFrame,
     n_merges: int = 10,
-    driver_dict_max: int = 200_000,
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """:func:`bpe_learn` that also returns the final segmented
     dictionary (word, cnt, syms) — the tokenizer APPLY artifact: at
@@ -199,47 +202,45 @@ def bpe_fit(
     against this model-sized relation (the corpus text itself is never
     re-segmented row by row).
 
-    Dictionaries with at most ``driver_dict_max`` distinct words run
+    Dictionaries with at most ``_DRIVER_DICT_MAX`` distinct words run
     the merge loop driver-side (:func:`_bpe_fit_driver`) — the same
     model-sized-state discipline as connected_components' union-find
     guard: the corpus pass that BUILT the dictionary stays distributed,
     and ~3 Spark jobs per merge over a relation that fits in one pandas
     frame buy nothing but scheduler overhead. Bigger dictionaries (a
     100 TB corpus under Heaps' law can exceed any driver bound) take
-    the distributed loop below — identical trajectory, property-pinned.
-    Set ``driver_dict_max=0`` to force the distributed path."""
-    if driver_dict_max:
-        # ONE action decides the branch AND fetches the dictionary: pull
-        # at most driver_dict_max+1 rows — the corpus-sized aggregation
-        # that built `words` runs once, never count()-then-toPandas()
-        pdf = (
-            words.select("word", "cnt")
-            .limit(driver_dict_max + 1)
-            .toPandas()
+    the distributed loop below — identical trajectory, property-pinned."""
+    # ONE action decides the branch AND fetches the dictionary: pull
+    # at most _DRIVER_DICT_MAX+1 rows — the corpus-sized aggregation
+    # that built `words` runs once, never count()-then-toPandas()
+    pdf = (
+        words.select("word", "cnt")
+        .limit(_DRIVER_DICT_MAX + 1)
+        .toPandas()
+    )
+    if len(pdf) <= _DRIVER_DICT_MAX:
+        merges, dic = _bpe_fit_driver(
+            list(zip(pdf["word"], pdf["cnt"])), n_merges
         )
-        if len(pdf) <= driver_dict_max:
-            merges, dic = _bpe_fit_driver(
-                list(zip(pdf["word"], pdf["cnt"])), n_merges
-            )
-            import pandas as pd
+        import pandas as pd
 
-            out = pd.DataFrame(
-                {
-                    "word": [w for w, _, _ in dic],
-                    "cnt": [c for _, c, _ in dic],
-                    "syms": [s for _, _, s in dic],
-                }
-            )
-            # eager materialize for parity with the distributed branch:
-            # callers re-traversing the returned relation must not
-            # re-plan the (Arrow-local but per-action) pandas scan
-            sym = materialize(
-                words.sparkSession.createDataFrame(
-                    out, "word string, cnt long, syms array<string>"
-                ),
-                eager=True,
-            )
-            return merges, sym
+        out = pd.DataFrame(
+            {
+                "word": [w for w, _, _ in dic],
+                "cnt": [c for _, c, _ in dic],
+                "syms": [s for _, _, s in dic],
+            }
+        )
+        # eager materialize for parity with the distributed branch:
+        # callers re-traversing the returned relation must not
+        # re-plan the (Arrow-local but per-action) pandas scan
+        sym = materialize(
+            words.sparkSession.createDataFrame(
+                out, "word string, cnt long, syms array<string>"
+            ),
+            eager=True,
+        )
+        return merges, sym
     # lazy: round 1's pair-count collect is the first action and
     # materializes the blocks (r14, guide §1.2)
     sym = _spelled(words)

@@ -884,7 +884,6 @@ def embedding_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
     blocks: int = 32,
     n_planes: int | None = None,
     bands: int | None = None,
@@ -892,16 +891,16 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by cosine similarity over an embedding column.
 
-    Two strategies, picked by the threshold regime (``mode="auto"``):
+    Two strategies, picked by the threshold regime:
 
-    - ``"lsh"`` (default for ``threshold >= 0.72``): banded hyperplane-LSH
-      candidate generation + exact-cosine verification within candidates —
+    - **LSH** (``threshold >= 0.72``): banded hyperplane-LSH candidate
+      generation + exact-cosine verification within candidates —
       sublinear in the far-pair mass, the 100 TB path for real
       near-duplicates. Band geometry defaults are **threshold-adaptive**
       (pass ``n_planes``/``bands`` to override):
 
       - ``threshold < 0.9`` → 6-bit bands × 8: per-band match
-        ``(1 - θ/π)^6``, recall ≈ 0.81 at the 0.72 mode floor, 0.97 at
+        ``(1 - θ/π)^6``, recall ≈ 0.81 at the 0.72 LSH floor, 0.97 at
         cosine 0.90; random far pairs collide somewhere with prob
         ``1-(1-0.5^6)^8`` ≈ 12%.
       - ``threshold >= 0.9`` → 12-bit bands × 12: at this operating
@@ -915,7 +914,7 @@ def embedding_dup_pairs(
 
       Verification is exact, so precision is always 1; raise ``bands``
       when operating near the threshold floor.
-    - ``"exact"`` (default below 0.72): block-grid all-pairs. Below
+    - **exact** (``threshold < 0.72``): block-grid all-pairs. Below
       cosine ≈ 0.7 on dense vectors LSH bucket agreement degrades toward
       coin-flipping — no bucketing family separates pairs at 60-70°
       angles — so exact computation is the only way to honor the
@@ -928,14 +927,10 @@ def embedding_dup_pairs(
 
     Output: (doc1, doc2, cosine), doc1 < doc2, each unordered pair once.
     """
-    if mode == "auto":
-        mode = "lsh" if threshold >= 0.72 else "exact"
-    if mode == "exact":
+    if threshold < 0.72:
         return _block_grid_gemm(
             emb, id_col, vec_col, threshold=threshold, blocks=blocks
         )
-    if mode != "lsh":
-        raise ValueError(f"unknown mode {mode!r}")
     if n_planes is None:
         n_planes = 12 if threshold >= 0.9 else 6
     if bands is None:

@@ -47,6 +47,10 @@ from faust_spark.operators.mat import (
     materialize_partitioned,
 )
 
+#: largest undirected edge count :func:`connected_components` resolves
+#: with a driver-side union-find; bigger graphs take the distributed loop
+_SMALL_GRAPH_EDGES = 100_000
+
 __all__ = [
     "pagerank",
     "personalized_pagerank",
@@ -491,7 +495,6 @@ def connected_components(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 20,
-    small_graph_edges: int = 100_000,
 ) -> DataFrame:
     """Label each node with the min id of its duplicate cluster.
 
@@ -508,8 +511,8 @@ def connected_components(
 
     Fast path: near-dup edge sets are orders of magnitude smaller than
     the corpus (they're the *output* of candidate pruning), so when the
-    edge list fits comfortably on the driver (≤ ``small_graph_edges``,
-    default 100k — a conservative few MB of ids) a local union-find
+    edge list fits comfortably on the driver (≤ ``_SMALL_GRAPH_EDGES``
+    = 100k — a conservative few MB of ids) a local union-find
     resolves components in one pass and only the node→component map is
     distributed again. The iterative join loop remains the fallback for
     genuinely huge duplicate graphs.
@@ -534,7 +537,7 @@ def connected_components(
     # undirected-distinct edge count from above, so the branch condition
     # only gets more conservative (borderline graphs go distributed —
     # both paths are value-identical).
-    if 2 * n_pairs <= small_graph_edges:
+    if 2 * n_pairs <= _SMALL_GRAPH_EDGES:
         parent: dict = {}
 
         def find(x):

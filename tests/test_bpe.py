@@ -128,7 +128,7 @@ def test_bpe_segment_frozen_merges(spark):
 
 
 @pytest.mark.slow
-def test_bpe_driver_path_matches_distributed(spark):
+def test_bpe_driver_path_matches_distributed(spark, monkeypatch):
     """The driver-side fast path (_bpe_fit_driver) and the distributed
     merge loop produce IDENTICAL merge trajectories and final
     segmentations — including overlap counting (a-runs), the
@@ -136,8 +136,17 @@ def test_bpe_driver_path_matches_distributed(spark):
     application."""
     import random
 
+    from faust_spark.operators import bpe
     from faust_spark.operators.bpe import bpe_fit
 
+    on_driver = []
+    driver_fit = bpe._bpe_fit_driver
+
+    def spy(*args):
+        on_driver.append(args)
+        return driver_fit(*args)
+
+    monkeypatch.setattr(bpe, "_bpe_fit_driver", spy)
     rng = random.Random(7)
     alpha = "abcde"
     for trial in range(3):
@@ -159,7 +168,9 @@ def test_bpe_driver_path_matches_distributed(spark):
             list(seen.items()), "word string, cnt long"
         )
         m_drv, s_drv = bpe_fit(df, n_merges=6)
-        m_dist, s_dist = bpe_fit(df, n_merges=6, driver_dict_max=0)
+        with monkeypatch.context() as mp:
+            mp.setattr(bpe, "_DRIVER_DICT_MAX", 0)
+            m_dist, s_dist = bpe_fit(df, n_merges=6)
         assert m_drv == m_dist, f"trial {trial}"
         d1 = {
             r["word"]: (r["cnt"], list(r["syms"]))
@@ -170,3 +181,5 @@ def test_bpe_driver_path_matches_distributed(spark):
             for r in s_dist.collect()
         }
         assert d1 == d2, f"trial {trial}"
+    # only the three default fits merged on the driver
+    assert len(on_driver) == 3

@@ -196,22 +196,22 @@ def test_containment_matches_bruteforce_property(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_bounded_plan_depth(spark):
+def test_connected_components_bounded_plan_depth(spark, monkeypatch):
     """15+ label-propagation rounds must NOT grow the logical plan
     linearly: every round's iterate is checkpointed, so the final plan
     depth is bounded by one round regardless of iteration count
     (VERDICT r4 item 7)."""
+    from faust_spark.operators import graph
     from faust_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
     # path graph 0-1-2-...-16: min-label needs ~16 rounds to reach the end
     n = 17
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["doc1", "doc2"]
     )
-    out = connected_components(
-        nodes, pairs, max_iterations=20, small_graph_edges=0
-    )
+    out = connected_components(nodes, pairs, max_iterations=20)
     comp = {r.doc_id: r.component for r in out.collect()}
     assert comp == {i: 0 for i in range(n)}  # one chain component
     plan = out._jdf.queryExecution().optimizedPlan().toString()
@@ -251,13 +251,13 @@ def test_embedding_dup_exact_blockgrid_matches_bruteforce(spark):
     exactly once — cross-checked against an in-memory numpy brute force."""
     import numpy as np
 
-    from faust_spark.operators.dedup import embedding_dup_pairs
+    from faust_spark.operators.dedup import _block_grid_gemm
 
     df = _planted_embeddings(spark)
     got = {
         (r.doc1, r.doc2)
-        for r in embedding_dup_pairs(
-            df, threshold=0.30, mode="exact", blocks=8
+        for r in _block_grid_gemm(
+            df, "vec_id", "embedding", 0.30, blocks=8
         ).collect()
     }
     rows = sorted(df.collect(), key=lambda r: r.vec_id)
@@ -279,6 +279,7 @@ def test_embedding_dup_lsh_full_recall_on_near_dups(spark):
     pairs as the exact path (recall 1 on planted dups), from a candidate
     set far below n^2/2."""
     from faust_spark.operators.dedup import (
+        _block_grid_gemm,
         _lsh_candidate_pairs,
         embedding_dup_pairs,
     )
@@ -286,8 +287,8 @@ def test_embedding_dup_lsh_full_recall_on_near_dups(spark):
     df = _planted_embeddings(spark)
     exact = {
         (r.doc1, r.doc2)
-        for r in embedding_dup_pairs(
-            df, threshold=0.95, mode="exact", blocks=8
+        for r in _block_grid_gemm(
+            df, "vec_id", "embedding", 0.95, blocks=8
         ).collect()
     }
     lsh = {

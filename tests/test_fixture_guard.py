@@ -83,9 +83,8 @@ def test_normalize_handles_all_known_encodings(spark, tmp_path):
     assert [r.ts for r in out2.orderBy("ts").collect()] == expected
 
 
-def test_scale_probe_link_is_idempotent(tmp_path):
-    """ADVICE r7: the probe's table symlinks must be replaceable so a
-    second run against a warm temp dir doesn't FileExistsError."""
+def _scale_probe():
+    import importlib
     import sys
 
     tools = os.path.join(
@@ -93,12 +92,51 @@ def test_scale_probe_link_is_idempotent(tmp_path):
     )
     sys.path.insert(0, tools)
     try:
-        from scale_probe import _link
+        return importlib.import_module("scale_probe")
     finally:
         sys.path.pop(0)
+
+
+def test_scale_probe_link_is_idempotent(tmp_path):
+    """ADVICE r7: the probe's table symlinks must be replaceable so a
+    second run against a warm temp dir doesn't FileExistsError."""
+    _link = _scale_probe()._link
     src = tmp_path / "src.parquet"
     src.write_text("x")
     dst = tmp_path / "dst.parquet"
     _link(str(src), str(dst))
     _link(str(src), str(dst))  # second call must not raise
     assert dst.is_symlink() and dst.read_text() == "x"
+
+
+def test_scale_probe_replicate_doubles_tables_keeps_ids_unique(
+    spark, tmp_path
+):
+    """The probe's one replication function at mult=2: each replicated
+    table holds twice the base rows with unique ids, every other table
+    links to the base file, and the events come back through load_table
+    with a plain TimestampType ts."""
+    base = "/root/testdata/sf0.001"
+    if not os.path.isdir(base):
+        pytest.skip("sf0.001 fixtures not present")
+    dest = _scale_probe().replicate(spark, base, str(tmp_path / "x2"), 2)
+    replicated = ("events", "documents", "embeddings", "orders", "lineitem")
+    for name in TABLES:
+        path = os.path.join(dest, f"{name}.parquet")
+        if name in replicated:
+            n = load_table(spark, dest, name).count()
+            assert n == 2 * load_table(spark, base, name).count(), name
+        else:
+            assert os.path.realpath(path) == os.path.realpath(
+                os.path.join(base, f"{name}.parquet")
+            ), name
+            assert load_table(spark, dest, name).count() > 0, name
+    for name, id_col in (
+        ("events", "event_id"),
+        ("documents", "doc_id"),
+        ("embeddings", "vec_id"),
+    ):
+        df = load_table(spark, dest, name)
+        assert df.select(id_col).distinct().count() == df.count(), name
+    ev = load_table(spark, dest, "events")
+    assert isinstance(ev.schema["ts"].dataType, TimestampType)

@@ -5,6 +5,7 @@ paths, and plan shape (no Python evals)."""
 import numpy as np
 from pyspark.sql import functions as F
 
+import faust_spark.operators.graph as graph
 from faust_spark.operators.graph import connected_components, hits, pagerank
 from faust_spark.operators.mat import local_rows
 
@@ -330,20 +331,28 @@ def _union_find_components(nodes, pairs):
     return {n: find(n) for n in nodes}
 
 
-def _cc(spark, nodes, pairs, **kw):
+def _cc(spark, nodes, pairs):
     out = connected_components(
         local_rows(spark, [(n,) for n in nodes], "doc_id long"),
         local_rows(spark, pairs, "doc1 long, doc2 long"),
-        **kw,
     )
     return {r["doc_id"]: r["component"] for r in out.collect()}
 
 
-def test_connected_components_paths_match_union_find_replica(spark):
+def test_connected_components_paths_match_union_find_replica(
+    spark, monkeypatch
+):
     """Seeded random graphs with isolated nodes and a planted 7-hop path
     (longer than any fixed checkpoint window): the driver union-find
     path, the distributed min-label loop and a Python replica agree
     exactly."""
+    undirected, distributed = graph._undirected, []
+
+    def spy(*args):
+        distributed.append(args)
+        return undirected(*args)
+
+    monkeypatch.setattr(graph, "_undirected", spy)
     rng = np.random.default_rng(11)
     for _ in range(3):
         nodes = list(range(40))
@@ -358,10 +367,16 @@ def test_connected_components_paths_match_union_find_replica(spark):
         pairs += list(zip(path, path[1:]))
         want = _union_find_components(nodes, pairs)
         assert _cc(spark, nodes, pairs) == want
-        assert _cc(spark, nodes, pairs, small_graph_edges=0) == want
+        with monkeypatch.context() as mp:
+            mp.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
+            assert _cc(spark, nodes, pairs) == want
+    # only the three forced runs took the distributed loop
+    assert len(distributed) == 3
 
 
-def test_connected_components_distributed_leaves_no_cache_entries(spark):
+def test_connected_components_distributed_leaves_no_cache_entries(
+    spark, monkeypatch
+):
     """The distributed loop cuts lineage with checkpoints only: after
     a run of 8 rounds the session CacheManager holds no more entries
     than before the call (a persist/unpersist loop leaked one cached
@@ -372,9 +387,8 @@ def test_connected_components_distributed_leaves_no_cache_entries(spark):
     pairs = chain.filter(F.col("id") < 7).select(
         F.col("id").alias("doc1"), (F.col("id") + 1).alias("doc2")
     )
+    monkeypatch.setattr(graph, "_SMALL_GRAPH_EDGES", 0)
     before = cm.numCachedEntries()
-    out = connected_components(
-        nodes, pairs, max_iterations=20, small_graph_edges=0
-    )
+    out = connected_components(nodes, pairs, max_iterations=20)
     assert {r.component for r in out.collect()} == {0}
     assert cm.numCachedEntries() <= before

@@ -370,13 +370,14 @@ def test_lpa_round_never_reshuffles_edges(spark, edge_frame, mat_spy):
     _assert_round_plan(mat_spy[-1], 2)
 
 
-def test_cc_round_plan_constant_in_rounds(spark, mat_spy):
+def test_cc_round_plan_constant_in_rounds(spark, mat_spy, monkeypatch):
     """Each min-label round reads the previous round's checkpoint, so
     the last round's executed plan has the same exchanges after 2
     rounds as after 6 (a cached, un-cut iterate nests every earlier
     round into it)."""
     import faust_spark.operators.graph as g
 
+    monkeypatch.setattr(g, "_SMALL_GRAPH_EDGES", 0)
     chain = spark.range(12)
     nodes = chain.select(F.col("id").alias("doc_id"))
     pairs = chain.filter(F.col("id") < 11).select(
@@ -385,9 +386,7 @@ def test_cc_round_plan_constant_in_rounds(spark, mat_spy):
     exchanges = []
     for rounds in (2, 6):
         mat_spy.clear()
-        g.connected_components(
-            nodes, pairs, max_iterations=rounds, small_graph_edges=0
-        ).count()
+        g.connected_components(nodes, pairs, max_iterations=rounds).count()
         exchanges.append(mat_spy[-1].count("Exchange hashpartitioning"))
     assert exchanges[0] == exchanges[1], exchanges
     _assert_round_plan(mat_spy[-1], 2)
