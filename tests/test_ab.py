@@ -14,9 +14,10 @@ ab = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(ab)
 
 
-def _session(hashes: dict[str, str], mins: dict[str, float]) -> dict:
+def _session(hashes: dict[str, str], mins: dict[str, float], compiles: int = 0) -> dict:
     return {"faust_spark": "x", "keys": {
-        k: {"min_s": mins[k], "rows": 6, "hash": h, "layers": {"jobs.count": 3}}
+        k: {"min_s": mins[k], "rows": 6, "hash": h, "layers": {"jobs.count": 3},
+            "compiles": compiles}
         for k, h in hashes.items()
     }}
 
@@ -35,8 +36,8 @@ def test_fingerprint_mismatch_in_an_early_session_fails():
 
 def test_compare_reports_medians_wins_and_layers():
     runs = {
-        "old": [_session({"q": "h"}, {"q": t}) for t in (2.0, 1.0, 3.0)],
-        "new": [_session({"q": "h"}, {"q": t}) for t in (1.5, 1.2, 1.0)],
+        "old": [_session({"q": "h"}, {"q": t}, c) for t, c in ((2.0, 24), (1.0, 29), (3.0, 26))],
+        "new": [_session({"q": "h"}, {"q": t}, c) for t, c in ((1.5, 0), (1.2, 3), (1.0, 0))],
     }
     r = ab.compare(runs, ["q"])[0]["q"]
     assert r["old"]["median"] == 2.0 and r["new"]["median"] == 1.2
@@ -44,6 +45,7 @@ def test_compare_reports_medians_wins_and_layers():
     assert r["ratio"] == pytest.approx(0.6)
     assert r["wins"] == 2 and r["pairs"] == 3
     assert r["layers"]["new"] == {"jobs.count": 3}
+    assert r["compiles"] == {"old": 26, "new": 0}
 
 
 def test_child_exit_status_checked_before_its_result_line(tmp_path):
@@ -95,5 +97,7 @@ def test_aa_smoke_on_this_checkout(tmp_path):
     assert r["rows_identical"] and r["pairs"] == 2
     assert r["layers"]["old"]["jobs.count"] > 0
     assert r["layers"]["new"]["jobs.count"] > 0
+    # the last of three repeats finds every class in the codegen cache
+    assert r["compiles"] == {"old": 0, "new": 0}
     assert (tmp_path / "plans" / "old" / "q1_pricing.txt").exists()
     assert (tmp_path / "plans" / "new" / "q1_pricing.txt").exists()

@@ -3,6 +3,7 @@ references, dangling-mass conservation, connected components on both
 paths, and plan shape (no Python evals)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 import faust_spark.operators.graph as graph
@@ -339,20 +340,27 @@ def _cc(spark, nodes, pairs):
     return {r["doc_id"]: r["component"] for r in out.collect()}
 
 
+@pytest.fixture()
+def distributed(monkeypatch):
+    """The argument tuples of every ``graph._undirected`` call: one per
+    connected-components run that took the distributed loop."""
+    undirected, calls = graph._undirected, []
+
+    def spy(*args):
+        calls.append(args)
+        return undirected(*args)
+
+    monkeypatch.setattr(graph, "_undirected", spy)
+    return calls
+
+
 def test_connected_components_paths_match_union_find_replica(
-    spark, monkeypatch
+    spark, monkeypatch, distributed
 ):
     """Seeded random graphs with isolated nodes and a planted 7-hop path
     (longer than any fixed checkpoint window): the driver union-find
     path, the distributed min-label loop and a Python replica agree
     exactly."""
-    undirected, distributed = graph._undirected, []
-
-    def spy(*args):
-        distributed.append(args)
-        return undirected(*args)
-
-    monkeypatch.setattr(graph, "_undirected", spy)
     rng = np.random.default_rng(11)
     for _ in range(3):
         nodes = list(range(40))
@@ -375,7 +383,7 @@ def test_connected_components_paths_match_union_find_replica(
 
 
 def test_connected_components_distributed_leaves_no_cache_entries(
-    spark, monkeypatch
+    spark, monkeypatch, distributed
 ):
     """The distributed loop cuts lineage with checkpoints only: after
     a run of 8 rounds the session CacheManager holds no more entries
@@ -391,4 +399,5 @@ def test_connected_components_distributed_leaves_no_cache_entries(
     before = cm.numCachedEntries()
     out = connected_components(nodes, pairs, max_iterations=20)
     assert {r.component for r in out.collect()} == {0}
+    assert len(distributed) == 1
     assert cm.numCachedEntries() <= before

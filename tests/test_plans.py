@@ -383,11 +383,16 @@ def test_cc_round_plan_constant_in_rounds(spark, mat_spy, monkeypatch):
     pairs = chain.filter(F.col("id") < 11).select(
         F.col("id").alias("doc1"), (F.col("id") + 1).alias("doc2")
     )
-    exchanges = []
+    exchanges, cuts = [], []
     for rounds in (2, 6):
         mat_spy.clear()
         g.connected_components(nodes, pairs, max_iterations=rounds).count()
         exchanges.append(mat_spy[-1].count("Exchange hashpartitioning"))
+        cuts.append(len(mat_spy))
+    # the 11-hop chain never converges within 6 rounds: one checkpoint
+    # per round, so the captured plans are round iterates, not the pair
+    # list that the driver union-find materializes
+    assert cuts[1] - cuts[0] == 4, cuts
     assert exchanges[0] == exchanges[1], exchanges
     _assert_round_plan(mat_spy[-1], 2)
 

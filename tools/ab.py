@@ -11,9 +11,10 @@ side goes first from pair to pair. A session warms up like ``bench.py``
 min-of-3 per key.
 
 The measured root supplies only ``faust_spark`` and ``__spark_entry__``.
-The row fingerprint (``tools/check.table_hash``) and the layer breakdown
+The row fingerprint (``tools/check.table_hash``), the layer breakdown
 (``perfbench.layers.harvest`` over each key's last repeat: jobs, the gap
-between jobs, task time, operator metrics) come from this checkout, so
+between jobs, task time, operator metrics) and the number of classes
+whole-stage codegen compiled in that repeat come from this checkout, so
 both sides are measured by the same code.
 
 Exits non-zero, naming the cause, when a session exits non-zero, when it
@@ -79,6 +80,13 @@ def _load(name: str, rel: str):
     return mod
 
 
+def compiled_classes(spark) -> int:
+    """Generated classes this JVM has compiled so far (a codegen cache
+    hit compiles none)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def session(root: str, keys: str, sf: str, plan_dir: str) -> None:
     """One measured session (runs in the child). Prints one result line."""
     sys.path.insert(0, root)
@@ -101,14 +109,15 @@ def session(root: str, keys: str, sf: str, plan_dir: str) -> None:
     for key in keys.split(","):
         best = float("inf")
         for _ in range(REPEATS):
-            t0 = time.time()
+            c0, t0 = compiled_classes(spark), time.time()
             df = qs[key](spark, sf)
             rows = df.collect()
             t1 = time.time()
             best = min(best, t1 - t0)
         windows[key] = (t0, t1)
         out[key] = {"min_s": round(best, 4), "rows": len(rows),
-                    "hash": check.table_hash(df.columns, rows)}
+                    "hash": check.table_hash(df.columns, rows),
+                    "compiles": compiled_classes(spark) - c0}
         if plan_dir:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
@@ -163,6 +172,8 @@ def compare(runs: dict[str, list[dict]], keys: list[str]) -> tuple[dict, list[st
         r["pairs"] = len(mins["new"])
         r["rows_identical"] = len(prints) == 1
         r["rows"] = sorted(n for n, _ in prints)
+        r["compiles"] = {side: statistics.median(s["keys"][key]["compiles"] for s in runs[side])
+                         for side in SIDES}
         r["layers"] = {side: {m: statistics.median(s["keys"][key]["layers"][m]
                                                    for s in runs[side])
                               for m in runs[side][0]["keys"][key]["layers"]}
@@ -221,6 +232,7 @@ def main(argv: list[str] | None = None) -> int:
         for key, r in report["keys"].items():
             print(f"{key}: old {r['old']['median']:.3f}s new {r['new']['median']:.3f}s "
                   f"ratio {r['ratio']:.3f} wins {r['wins']}/{r['pairs']} "
+                  f"compiles {r['compiles']['old']:g}/{r['compiles']['new']:g} "
                   f"rows_identical={r['rows_identical']}")
         for e in errors:
             print(f"ab: {e}", file=sys.stderr)
