@@ -165,6 +165,7 @@ def main() -> None:
     from faust_spark.session import get_spark
 
     import __spark_entry__ as entry
+    from faust_spark.queries import pipeline
 
     # host-speed calibration: rounds run on fresh VMs whose clock speed
     # and disk vary; these fixed workloads let cross-round comparisons
@@ -206,7 +207,7 @@ def main() -> None:
 
     def _time_key(key: str) -> float:
         fn = (
-            getattr(entry, _BENCH_OVERRIDES[key])
+            getattr(pipeline, _BENCH_OVERRIDES[key])
             if key in _BENCH_OVERRIDES
             else qs[key]
         )

@@ -33,6 +33,8 @@ import threading
 
 from pyspark.sql import DataFrame
 
+from faust_spark.session import conf_set
+
 _VALID = ("local", "reliable")
 
 #: serializes the AQE on/off/restore window in materialize_partitioned —
@@ -103,13 +105,8 @@ def materialize_partitioned(
     # rest of the session. Queries planned by OTHER threads during the
     # window still lose AQE for that one plan (unavoidable with a global
     # conf); the lock guarantees the setting always RESTORES correctly.
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return materialize(rep, eager=eager)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with _AQE_TOGGLE_LOCK, conf_set(spark, "spark.sql.adaptive.enabled", "false"):
+        return materialize(rep, eager=eager)
 
 
 def loop_partitions(

@@ -2222,14 +2222,13 @@ def delete_from_ann_index(
             # a wrong cell SILENTLY skips that row's delete — so any
             # malformed row sends the whole batch to the always-correct
             # full-scan locate (one bounded batch-sized check)
-            malformed = (
-                ids.filter(
-                    F.col(vec_col).isNull()
-                    | (F.size(vec_col) != F.lit(meta["dim"]))
-                )
-                .limit(1)
-                .count()
-            )
+            # isEmpty, not limit(1).count(): a limit inside a codegen
+            # stage names its counter from a JVM-global sequence, so
+            # every call compiles new classes
+            malformed = not ids.filter(
+                F.col(vec_col).isNull()
+                | (F.size(vec_col) != F.lit(meta["dim"]))
+            ).isEmpty()
             if not malformed:
                 cells = _probed_cells(
                     ids, meta["centroids"], 1, vec_col, count_stats=False
@@ -2274,7 +2273,7 @@ def delete_from_ann_index(
         missing = idf.join(
             victims.select("nid").distinct(), "nid", "left_anti"
         )
-        if missing.limit(1).count():
+        if not missing.isEmpty():
             victims = materialize(
                 victims.unionByName(
                     rel.select("nid", "cell", "crc").join(
@@ -2341,6 +2340,7 @@ def compact_ann_index(spark: SparkSession, path: str) -> dict:
     import os
 
     from faust_spark.operators.mat import _AQE_TOGGLE_LOCK, materialize
+    from faust_spark.session import conf_set
 
     meta = load_ann_index(spark, path)
     if not meta.get("tombstones"):
@@ -2368,14 +2368,10 @@ def compact_ann_index(spark: SparkSession, path: str) -> dict:
     kept_cells = {
         int(r["cell"]) for r in keep.select("cell").distinct().collect()
     }
-    with _AQE_TOGGLE_LOCK:  # session-global conf mutation
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                             "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            keep.write.mode("overwrite").partitionBy("cell").parquet(relp)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    with _AQE_TOGGLE_LOCK, conf_set(  # session-global conf mutation
+        spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
+        keep.write.mode("overwrite").partitionBy("cell").parquet(relp)
     remaining = 0
     leftovers = []
     for c in sorted(set(cells) - kept_cells):

@@ -12,6 +12,8 @@ warm session compiles each class once.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -89,3 +91,19 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_set(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Run the block with runtime conf ``key`` set to ``value``, then put
+    the session's own setting back: its old value, or unset if it had
+    none, so the session's conf reads exactly as before the block."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -23,6 +23,8 @@ from typing import Callable, Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from faust_spark.session import conf_set
+
 
 #: Hadoop ``GlobPattern`` metacharacters, plus ``!``/``^``, which negate
 #: a character class when they open it
@@ -90,12 +92,8 @@ def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
     partition count binds when it first starts on a fresh checkpoint, so
     the block has to cover only the start; size ``n`` with
     :func:`state_partitions` or the operator's own rule."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    with conf_set(spark, "spark.sql.shuffle.partitions", str(n)):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def drain(

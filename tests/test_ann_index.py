@@ -152,15 +152,15 @@ def test_stale_index_detected_and_rebuilt(spark, emb, tmp_path):
     """ADVICE r11: a regenerated corpus under the same path must not be
     served from stale models — the entry wrapper compares the stored
     fingerprint (n) against the live table and rebuilds."""
-    import __spark_entry__ as entry
+    from faust_spark.queries import pipeline
 
     idx_dir = str(tmp_path / "idx")
     prev = os.environ.get("SPARK_GRAFT_INDEX_DIR")
     os.environ["SPARK_GRAFT_INDEX_DIR"] = idx_dir
     try:
         sf_dir = "/root/testdata/sf0.001"
-        path = entry._serve_index_path(sf_dir, "ivf")
-        meta1 = entry._ensure_serve_index(spark, sf_dir, "ivf")
+        path = pipeline._serve_index_path(sf_dir, "ivf")
+        meta1 = pipeline._ensure_serve_index(spark, sf_dir, "ivf")
         assert meta1["n"] == emb.count()
         # simulate data regeneration: poison the stored content checksum
         # (a same-size regeneration changes crc_sum, not n) and clear
@@ -171,8 +171,8 @@ def test_stale_index_detected_and_rebuilt(spark, emb, tmp_path):
 
         sim._write_index_models(spark, path, meta_bad)
         sim._INDEX_MODEL_CACHE.clear()
-        entry._SERVE_INDEX_OK.discard(path)
-        meta2 = entry._ensure_serve_index(spark, sf_dir, "ivf")
+        pipeline._SERVE_INDEX_OK.discard(path)
+        meta2 = pipeline._ensure_serve_index(spark, sf_dir, "ivf")
         assert meta2["n"] == emb.count()  # rebuilt, not served stale
     finally:
         if prev is None:
@@ -332,13 +332,13 @@ def test_serve_index_path_keys_by_full_path(tmp_path):
     """ADVICE r12 (medium): two sf_dirs with the same basename but
     different parents must map to DIFFERENT index directories, while
     spelling variants of the same directory map to the SAME one."""
-    import __spark_entry__ as entry
+    from faust_spark.queries.pipeline import _serve_index_path
 
-    a = entry._serve_index_path("/data/a/sf0.01", "ivf")
-    b = entry._serve_index_path("/data/b/sf0.01", "ivf")
+    a = _serve_index_path("/data/a/sf0.01", "ivf")
+    b = _serve_index_path("/data/b/sf0.01", "ivf")
     assert a != b
     assert os.path.basename(os.path.dirname(a)).startswith("sf0.01")
-    same = entry._serve_index_path("/data/a/./sf0.01/", "ivf")
+    same = _serve_index_path("/data/a/./sf0.01/", "ivf")
     assert same == a
 
 
@@ -828,6 +828,23 @@ def test_delete_locate_does_not_count_serve_probe_stats(
         INDEX_STATS["probe_cells"],
         INDEX_STATS["probe_fallbacks"],
     ) == before
+
+
+def test_repeated_delete_compiles_no_generated_class(spark, emb, tmp_path):
+    """A delete's emptiness probes must not put a limit into a codegen
+    stage: Spark names a limit's counter from a JVM-global sequence, so
+    such a stage compiles new classes on every call."""
+    from faust_spark.operators.similarity import delete_from_ann_index
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    path = str(tmp_path / "cgidx")
+    build_ivf_index(emb, path, n_cells=8, iters=1)
+    batch = emb.filter(F.col("vec_id").isin([11, 13]))
+    for _ in range(2):  # the second call sees the tombstones, as the third
+        delete_from_ann_index(spark, path, batch)
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    delete_from_ann_index(spark, path, batch)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
 
 
 def test_cli_index_delete_empty_ids_is_usage_error(tmp_path, capsys):

@@ -15,7 +15,12 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
 )
 
-from check import norm_cell, table_hash, type_parity_problems  # noqa: E402
+from check import (  # noqa: E402
+    conf_changes,
+    norm_cell,
+    table_hash,
+    type_parity_problems,
+)
 
 
 def test_hash_insensitive_to_row_and_column_order():
@@ -70,3 +75,13 @@ def test_type_parity_flags_hugeint_vs_long():
     assert not type_parity_problems({"n": "bigint"}, {"n": "BIGINT"})
     # int-vs-float family clash diverges on the driver's stringifier
     assert type_parity_problems({"n": "bigint"}, {"n": "DOUBLE"})
+
+
+def test_conf_changes_names_set_changed_and_unset_confs_but_not_exempt():
+    before = {"spark.sql.shuffle.partitions": "4", "a": "1", "b": "x"}
+    after = {"spark.sql.shuffle.partitions": "4", "a": "2", "c": "y",
+             "spark.sql.session.timeZone": "UTC",
+             "spark.sql.legacy.parquet.nanosAsLong": "true"}
+    assert conf_changes(before, after) == [
+        "a: 1 -> 2", "b: x -> None", "c: None -> y"]
+    assert conf_changes(before, dict(before)) == []

@@ -804,7 +804,7 @@ def test_simhash_near_pairs_default_uses_scaled_width(spark):
 
 @pytest.mark.slow
 def test_simhash_64bit_duckdb_oracle_parity(spark):
-    """The entry-file oracle CTE and the Spark fingerprints must agree at
+    """The simhash oracle CTE and the Spark fingerprints must agree at
     EVERY width the scaled rule can choose — the gate sfs only exercise
     32/44 bits, so the 64-bit family (negative two's-complement bigints,
     the k=63 branch of both engines) gets its own parity check here."""
@@ -812,8 +812,8 @@ def test_simhash_64bit_duckdb_oracle_parity(spark):
 
     import duckdb
 
-    import __spark_entry__ as entry
     from faust_spark.operators.dedup import simhash
+    from faust_spark.queries.pipeline import _simhash_cte
 
     rng = random.Random(13)
     rows = [
@@ -831,7 +831,7 @@ def test_simhash_64bit_duckdb_oracle_parity(spark):
         want = {
             d: s
             for d, s in con.sql(
-                f"WITH {entry._simhash_cte(str(bits))} "
+                f"WITH {_simhash_cte(str(bits))} "
                 "SELECT doc_id, simhash FROM fp"
             ).fetchall()
         }

@@ -395,7 +395,7 @@ def test_ann_recall_contract_dedups_and_handles_empty(spark):
     must not fan out exact rows (inflating n_exact_pairs / corrupting
     exact_pairs_md5), and an empty exact set must yield recall_ok=true
     deterministically (not NULL from SUM over zero rows)."""
-    import __spark_entry__ as entry
+    from faust_spark.queries.pipeline import _ann_recall_contract
 
     exact = spark.createDataFrame(
         [(1, 10), (1, 11)], "qid long, nid long"
@@ -403,13 +403,13 @@ def test_ann_recall_contract_dedups_and_handles_empty(spark):
     approx = spark.createDataFrame(
         [(1, 10), (1, 10), (1, 10)], "qid long, nid long"
     )
-    row = entry._ann_recall_contract(approx, exact, 0.5).collect()[0]
+    row = _ann_recall_contract(approx, exact, 0.5).collect()[0]
     assert row.n_exact_pairs == 2  # not fanned out to 4
     assert row.n_queries == 1
     assert row.recall_ok  # 1 of 2 hits >= 0.5
 
     empty = spark.createDataFrame([], "qid long, nid long")
-    row = entry._ann_recall_contract(empty, empty, 0.8).collect()[0]
+    row = _ann_recall_contract(empty, empty, 0.8).collect()[0]
     assert row.n_exact_pairs == 0
     assert row.recall_ok is True  # vacuous, and NOT NULL
 
@@ -798,10 +798,13 @@ def test_serve_cache_bit_parity_with_inline(spark, sf_dir):
     once and probe thereafter) returns exactly the rows of the inline
     fit-per-call path — same deterministic fit, same encode, same
     tie-breaks."""
-    import __spark_entry__ as entry
     from faust_spark.catalog import load_table
     from faust_spark.operators.similarity import cosine_topk  # noqa: F401
     from faust_spark.operators.similarity import ivf_topk, ivfpq_topk
+    from faust_spark.queries.pipeline import (
+        ivf_topk_serve_raw,
+        ivfpq_topk_serve_raw,
+    )
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -811,7 +814,7 @@ def test_serve_cache_bit_parity_with_inline(spark, sf_dir):
 
     cached = sorted(
         (r.qid, r.nid)
-        for r in entry.ivf_topk_serve_raw(spark, sf_dir).collect()
+        for r in ivf_topk_serve_raw(spark, sf_dir).collect()
     )
     inline = sorted(
         (r.qid, r.nid)
@@ -824,7 +827,7 @@ def test_serve_cache_bit_parity_with_inline(spark, sf_dir):
     n = emb.count()
     cached_pq = sorted(
         (r.qid, r.nid)
-        for r in entry.ivfpq_topk_serve_raw(spark, sf_dir).collect()
+        for r in ivfpq_topk_serve_raw(spark, sf_dir).collect()
     )
     inline_pq = sorted(
         (r.qid, r.nid)

@@ -4,7 +4,9 @@ Mimics the driver's t2 correctness gate: for each query key, run the Spark
 DataFrame and the DuckDB oracle SQL on the same parquet tables, then compare
 row count, sorted column names, and an order-insensitive value hash
 (columns sorted by name, rows sorted, values stringified with stable float
-formatting).
+formatting). A key also fails if it leaves a runtime SQL conf changed:
+the driver runs every key in one session, so a leaked setting reaches
+every key after it.
 
 Usage:
     python tools/check.py [--sf /root/testdata/sf0.01] [key ...]
@@ -111,6 +113,22 @@ def type_parity_problems(
     return out
 
 
+#: confs ``catalog.load_table`` sets on purpose on whatever session it
+#: is handed (a driver session may lack them), so a key may leave them set
+CONF_EXEMPT = frozenset(
+    ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone")
+)
+
+
+def conf_changes(before: dict[str, str], after: dict[str, str]) -> list[str]:
+    """Runtime confs that differ between two ``spark.conf.getAll`` reads."""
+    return [
+        f"{k}: {before.get(k)} -> {after.get(k)}"
+        for k in sorted((before.keys() | after.keys()) - CONF_EXEMPT)
+        if before.get(k) != after.get(k)
+    ]
+
+
 def table_hash(cols: list[str], rows: list[tuple]) -> str:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted(
@@ -153,6 +171,7 @@ def main() -> int:
     results: dict[str, dict] = {}
     for key in keys:
         t0 = time.time()
+        conf0 = spark.conf.getAll
         try:
             sdf = qs[key](spark, args.sf)
             scols = sdf.columns
@@ -164,6 +183,12 @@ def main() -> int:
                 "err": f"spark error: {type(e).__name__}: "
                        f"{str(e).splitlines()[0][:300] if str(e) else ''}",
             }
+            n_fail += 1
+            continue
+        leaked = conf_changes(conf0, spark.conf.getAll)
+        if leaked:
+            print(f"FAIL {key}: runtime conf left changed: " + "; ".join(leaked))
+            results[key] = {"status": "fail", "err": f"conf left changed: {leaked[0]}"}
             n_fail += 1
             continue
         if key not in oracles:
@@ -218,7 +243,7 @@ def main() -> int:
             n_fail += 1
         else:
             print(f"PASS {key} ({len(srows)} rows) [{time.time()-t0:.1f}s]")
-            results[key] = {"status": "pass", "rows": len(srows),
+            results[key] = {"status": "pass", "rows": len(srows), "hash": sh,
                             "secs": round(time.time() - t0, 1)}
             n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
