@@ -1246,15 +1246,15 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact discrete percentiles per group (absent in the reference; the
     approx path at scale is approx_percentile/t-digest). percentile_disc
     picks actual elements, so both engines agree bit-for-bit."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("__events_pct")
     return spark.sql(
         """
         SELECT event_type,
                percentile_disc(0.5) WITHIN GROUP (ORDER BY value) AS p50,
                percentile_disc(0.95) WITHIN GROUP (ORDER BY value) AS p95,
                COUNT(*) AS cnt
-        FROM __events_pct GROUP BY 1
-        """
+        FROM {ev} GROUP BY 1
+        """,
+        ev=_t(spark, sf_dir, "events"),
     )
 
 

@@ -1620,15 +1620,15 @@ def value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation, no UDF). Scaled to per-day and rounded: the raw
     slope differs across engines in the last ulps (float sum order), the
     rounded per-day figure is stable by 7 orders of magnitude."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("__events_trend")
     return spark.sql(
         """
         SELECT user_id,
                ROUND(regr_slope(value, unix_micros(ts) / 1e6) * 86400, 6)
                  AS slope_per_day,
                COUNT(*) AS cnt
-        FROM __events_trend GROUP BY 1
-        """
+        FROM {ev} GROUP BY 1
+        """,
+        ev=_t(spark, sf_dir, "events"),
     )
 
 

@@ -23,7 +23,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
@@ -73,18 +72,6 @@ def get_spark(
         # Static conf: read once, when the JVM first generates code. ---
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
-    if rocksdb_state:
-        # large streaming state (the reference's RocksDB table store,
-        # faust/stores/rocksdb.py role): spill keyed state to disk instead
-        # of holding it on the JVM heap
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ).config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

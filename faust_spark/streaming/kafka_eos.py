@@ -20,7 +20,8 @@ the gap with the standard two-phase-commit recipe:
    ``batch_id <= last`` is skipped — the sink observes each batch exactly
    once even though Spark delivers at-least-once.  The marker key is
    bound to the **checkpoint lineage** (``txn_id @ streaming-query id``,
-   read from the checkpoint's metadata file): if the checkpoint is
+   :func:`~faust_spark.streaming.runner.lineage_key`, the one key every
+   exactly-once sink of the engine commits under): if the checkpoint is
    deleted or relocated, Spark assigns a fresh query id, batch ids
    restart at 0, and old markers under the same ``transactional.id`` no
    longer match — the sink reprocesses from scratch (duplicates are the
@@ -60,15 +61,21 @@ Two sinks implement the recipe:
   producer, whole-batch atomicity.  Appropriate for **control-plane /
   low-volume** topics only; every row funnels through one Python loop,
   so it does not scale to bulk data.
+
+Both run one transaction body, :func:`_transact`; the sink's name picks
+the atomicity.  Run either with
+``runner.transactional_foreach_batch(df, sink, checkpoint)``, building
+the sink with the same ``checkpoint``.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Protocol
+from typing import Callable, Iterable, Optional, Protocol
 
-from pyspark.sql import DataFrame
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, Row
 
-from faust_spark.streaming.runner import drain
+from faust_spark.streaming.runner import batch_committed, lineage_key
 
 DEFAULT_CONTROL_TOPIC = "__faust_spark_txn_commits"
 
@@ -95,21 +102,37 @@ class TransactionalTransport(Protocol):
     ) -> Optional[int]: ...
 
 
-def _checkpoint_lineage_id(checkpoint: str) -> Optional[str]:
-    """The streaming-query id Spark wrote into ``<checkpoint>/metadata``
-    — stable across restarts of the same checkpoint, fresh whenever the
-    checkpoint is deleted or relocated.  That makes it the lineage token
-    batch ids are meaningful under: batch 0 of a reset checkpoint is NOT
-    batch 0 of the old one."""
-    import json
-    import os
-
-    path = os.path.join(checkpoint, "metadata")
+def _transact(
+    t: TransactionalTransport,
+    key: str,
+    batch_id: int,
+    rows: Callable[[], Iterable[Row]],
+    topic: str,
+    control_topic: str,
+    key_col: Optional[str],
+    value_col: str,
+) -> None:
+    """Deliver one batch (or one partition's share of it) through ``t``
+    exactly once under the marker ``key``: skip a batch id already
+    committed under it (:func:`~faust_spark.streaming.runner.
+    batch_committed`); else send ``rows()`` and the marker in ONE
+    transaction and commit, aborting on any exception.  ``rows`` is
+    called only after the skip check, so a skipped batch runs no job.
+    Module level: the partition sink's task closure pickles it by
+    reference."""
+    if batch_committed(t.last_committed(control_topic, key), batch_id):
+        return  # re-delivered: its transaction already committed
+    t.begin_transaction()
     try:
-        with open(path) as f:
-            return json.load(f).get("id")
-    except (OSError, ValueError):
-        return None
+        for row in rows():
+            key_v = str(row[key_col]) if key_col else None
+            t.send(topic, key_v, str(row[value_col]))
+        # marker rides in the SAME transaction as the data
+        t.send(control_topic, key, str(batch_id))
+        t.commit_transaction()
+    except BaseException:
+        t.abort_transaction()
+        raise
 
 
 def kafka_transactional_batch_sink(
@@ -122,34 +145,19 @@ def kafka_transactional_batch_sink(
     lineage_id: Optional[str] = None,
     checkpoint: Optional[str] = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch callback implementing the two-phase commit.
+    """Build the foreachBatch callback implementing the two-phase commit
+    with whole-batch atomicity: one driver-side transaction per batch.
 
     The producer is created once per sink lifetime (first batch) — its
     ``init_transactions`` is the fencing point; creating it per batch
     would bump the epoch every batch and defeat zombie detection of a
     concurrently-running stale driver.
 
-    Markers are keyed ``{transactional_id}@{lineage}`` where ``lineage``
-    is ``lineage_id`` if given, else the streaming-query id read from
-    ``checkpoint`` (lazily, on the first batch — by then Spark has
-    written the metadata file).  A marker written under a previous
-    checkpoint lineage therefore never matches, so a checkpoint reset
-    reprocesses instead of silently skipping restarted batch ids.
-    With neither ``lineage_id`` nor ``checkpoint`` the key is the bare
-    ``transactional_id`` — callers then MUST rotate the transactional id
-    whenever the checkpoint is reset.
+    Markers are keyed :func:`~faust_spark.streaming.runner.lineage_key`
+    ``(transactional_id, lineage_id, checkpoint)``.
     """
     state: dict = {}
-
-    def marker_key() -> str:
-        if "mk" not in state:
-            lid = lineage_id
-            if lid is None and checkpoint is not None:
-                lid = _checkpoint_lineage_id(checkpoint)
-            state["mk"] = (
-                f"{transactional_id}@{lid}" if lid else transactional_id
-            )
-        return state["mk"]
+    cols = ([key_col] if key_col else []) + [value_col]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         t = state.get("t")
@@ -157,21 +165,11 @@ def kafka_transactional_batch_sink(
             t = transport_factory(transactional_id)
             t.init_transactions()
             state["t"] = t
-        last = t.last_committed(control_topic, marker_key())
-        if last is not None and batch_id <= last:
-            return  # re-delivered batch: its transaction already committed
-        t.begin_transaction()
-        try:
-            cols = ([key_col] if key_col else []) + [value_col]
-            for row in batch_df.select(*cols).toLocalIterator():
-                key = str(row[key_col]) if key_col else None
-                t.send(topic, key, str(row[value_col]))
-            # marker rides in the SAME transaction as the data
-            t.send(control_topic, marker_key(), str(batch_id))
-            t.commit_transaction()
-        except BaseException:
-            t.abort_transaction()
-            raise
+        key = lineage_key(transactional_id, lineage_id, checkpoint)
+        rows = batch_df.select(*cols).toLocalIterator
+        _transact(
+            t, key, batch_id, rows, topic, control_topic, key_col, value_col
+        )
 
     return sink
 
@@ -194,9 +192,11 @@ def kafka_transactional_partition_sink(
     1. creates a producer under ``{transactional_id}-p{pid}`` and calls
        ``init_transactions`` — fencing any stale attempt (task retry,
        speculative execution, zombie executor) of the SAME partition;
-    2. skips if its marker ``{marker_key}#p{pid}`` already records a
+    2. skips if its marker ``{key}#p{pid}`` already records a
        ``batch_id >= `` this one (its share of a re-delivered batch
-       committed before the crash);
+       committed before the crash), ``key`` being
+       :func:`~faust_spark.streaming.runner.lineage_key`
+       ``(transactional_id, lineage_id, checkpoint)``;
     3. otherwise sends its rows AND its marker in one transaction.
 
     The driver then re-reads the control topic and requires a committed
@@ -206,45 +206,21 @@ def kafka_transactional_partition_sink(
     transport connected to the real broker from within the task.
     """
     state: dict = {}
-
-    def marker_key() -> str:
-        if "mk" not in state:
-            lid = lineage_id
-            if lid is None and checkpoint is not None:
-                lid = _checkpoint_lineage_id(checkpoint)
-            state["mk"] = (
-                f"{transactional_id}@{lid}" if lid else transactional_id
-            )
-        return state["mk"]
+    cols = ([key_col] if key_col else []) + [value_col]
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        mk = marker_key()
-        cols = ([key_col] if key_col else []) + [value_col]
+        key = lineage_key(transactional_id, lineage_id, checkpoint)
         sel = batch_df.select(*cols)
         n_parts = sel.rdd.getNumPartitions()
-        # locals captured by the task closure (no self-references)
-        factory, tid = transport_factory, transactional_id
-        tp, ct, kc, vc, bid = topic, control_topic, key_col, value_col, batch_id
 
         def run_partition(rows):
-            from pyspark import TaskContext
-
             pid = TaskContext.get().partitionId()
-            t = factory(f"{tid}-p{pid}")
+            t = transport_factory(f"{transactional_id}-p{pid}")
             t.init_transactions()  # fences prior attempts of this partition
-            pmk = f"{mk}#p{pid}"
-            last = t.last_committed(ct, pmk)
-            if last is not None and bid <= last:
-                return iter(())  # this partition's share already committed
-            t.begin_transaction()
-            try:
-                for row in rows:
-                    t.send(tp, str(row[kc]) if kc else None, str(row[vc]))
-                t.send(ct, pmk, str(bid))  # marker rides the data txn
-                t.commit_transaction()
-            except BaseException:
-                t.abort_transaction()
-                raise
+            _transact(
+                t, f"{key}#p{pid}", batch_id, lambda: rows, topic,
+                control_topic, key_col, value_col,
+            )
             return iter(())
 
         sel.rdd.mapPartitions(run_partition).count()  # raises on task failure
@@ -256,7 +232,9 @@ def kafka_transactional_partition_sink(
         missing = [
             p
             for p in range(n_parts)
-            if (m := ctrl.last_committed(ct, f"{mk}#p{p}")) is None or m < bid
+            if not batch_committed(
+                ctrl.last_committed(control_topic, f"{key}#p{p}"), batch_id
+            )
         ]
         if missing:
             raise RuntimeError(
@@ -267,50 +245,9 @@ def kafka_transactional_partition_sink(
     return sink
 
 
-def kafka_transactional_foreach_batch(
-    df: DataFrame,
-    topic: str,
-    transport_factory: Callable[[str], TransactionalTransport],
-    checkpoint: str,
-    transactional_id: str,
-    value_col: str = "value",
-    key_col: Optional[str] = None,
-    control_topic: str = DEFAULT_CONTROL_TOPIC,
-    timeout_sec: float = 300.0,
-    distributed: bool = False,
-) -> None:
-    """Run ``df`` to completion (availableNow) through the transactional
-    Kafka sink — the EOS counterpart of the built-in at-least-once
-    ``writeStream.format('kafka')`` path.  ``distributed=True`` selects
-    the executor-side per-partition sink (the scale path; requires a
-    picklable ``transport_factory``)."""
-    build = (
-        kafka_transactional_partition_sink
-        if distributed
-        else kafka_transactional_batch_sink
-    )
-    sink = build(
-        topic,
-        transport_factory,
-        transactional_id,
-        value_col=value_col,
-        key_col=key_col,
-        control_topic=control_topic,
-        checkpoint=checkpoint,
-    )
-    drain(
-        df.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint),
-        "kafka_transactional_foreach_batch",
-        timeout_sec,
-    )
-
-
 __all__ = [
     "DEFAULT_CONTROL_TOPIC",
     "TransactionalTransport",
     "kafka_transactional_batch_sink",
-    "kafka_transactional_foreach_batch",
     "kafka_transactional_partition_sink",
 ]

@@ -18,6 +18,7 @@ import os
 import time
 import uuid
 from contextlib import contextmanager
+from pathlib import Path
 from typing import Callable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -182,6 +183,13 @@ def exactly_once_parquet_sink(
     ``__batch_id=N`` partition with dynamic partition overwrite, so a
     retried batch (after a crash between write and checkpoint-commit)
     overwrites its own partition instead of duplicating rows.
+
+    Single lineage only: the partitions are keyed by batch id alone, not
+    by :func:`lineage_key`.  After a checkpoint reset, batch ids restart
+    at 0 and overwrite the old lineage's ``__batch_id=N`` partitions —
+    the old rows there are lost, or, when the new lineage batches the
+    same input differently, rows of untouched old partitions are
+    duplicated.  Point a reset checkpoint at a fresh ``path``.
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -207,22 +215,76 @@ def exactly_once_parquet_sink(
     )
 
 
+def _checkpoint_lineage_id(checkpoint: str) -> Optional[str]:
+    """The streaming-query id Spark wrote into ``<checkpoint>/metadata``
+    — stable across restarts of the same checkpoint, fresh whenever the
+    checkpoint is deleted or relocated.  That makes it the lineage token
+    batch ids are meaningful under: batch 0 of a reset checkpoint is NOT
+    batch 0 of the old one."""
+    import json
+
+    path = os.path.join(checkpoint, "metadata")
+    try:
+        with open(path) as f:
+            return json.load(f).get("id")
+    except (OSError, ValueError):
+        return None
+
+
+def lineage_key(
+    sink_id: str,
+    lineage_id: Optional[str] = None,
+    checkpoint: Optional[str] = None,
+) -> str:
+    """The key every exactly-once sink commits its batch-id markers
+    under: ``{sink_id}@{lineage}``, ``lineage`` being ``lineage_id``,
+    else the query id in ``checkpoint``'s metadata (written when the
+    query starts, so sinks resolve the key per batch).  A marker of an
+    earlier checkpoint lineage never matches, so a reset checkpoint's
+    batches are delivered again instead of silently skipped.  With
+    neither, the key is the bare ``sink_id`` — callers then MUST rotate
+    the sink id whenever the checkpoint is reset."""
+    lid = lineage_id
+    if lid is None and checkpoint is not None:
+        lid = _checkpoint_lineage_id(checkpoint)
+    return f"{sink_id}@{lid}" if lid else sink_id
+
+
+def batch_committed(last: Optional[int], batch_id: int) -> bool:
+    """Whether ``batch_id`` is a re-delivery under a key whose last
+    committed batch id is ``last`` (``None``: none committed)."""
+    return last is not None and batch_id <= last
+
+
 def committed_batch_sink(
-    sink: Callable[[DataFrame, int], None], commit_dir: str
+    sink: Callable[[DataFrame, int], None], commit_dir: str, checkpoint: str
 ) -> Callable[[DataFrame, int], None]:
-    """Wrap a foreachBatch sink with the batch commit log: skip batch ids
-    already marked committed, mark (atomic tmp+rename) after success."""
+    """Wrap a foreachBatch sink with a batch commit log in ``commit_dir``
+    (which holds nothing else): skip a batch id committed under
+    :func:`lineage_key` of the directory's name and ``checkpoint``;
+    else run ``sink``, then write the marker ``<batch_id>.committed``
+    holding the key (atomic tmp+rename).  For true cross-system
+    atomicity the marker write and the sink's write must share a failure
+    domain (same object store / same DB transaction)."""
     os.makedirs(commit_dir, exist_ok=True)
+    sink_id = os.path.basename(os.path.normpath(commit_dir))
 
     def wrapped(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(commit_dir, f"{batch_id}.committed")
-        if os.path.exists(marker):
+        key = lineage_key(sink_id, checkpoint=checkpoint)
+        # a marker below batch_id cannot make it a re-delivery: skip reads
+        later = [
+            int(stem)
+            for stem, ext in map(os.path.splitext, os.listdir(commit_dir))
+            if ext == ".committed"
+            and int(stem) >= batch_id
+            and Path(commit_dir, stem + ext).read_text() == key
+        ]
+        if batch_committed(max(later, default=None), batch_id):
             return  # re-delivery of a batch the sink already saw
         sink(batch_df, batch_id)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("ok")
-        os.replace(tmp, marker)
+        marker = os.path.join(commit_dir, f"{batch_id}.committed")
+        Path(marker + ".tmp").write_text(key)
+        os.replace(marker + ".tmp", marker)
 
     return wrapped
 
@@ -231,28 +293,27 @@ def transactional_foreach_batch(
     df: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint: str,
-    commit_dir: str,
     timeout_sec: float = 300.0,
 ):
-    """Exactly-once delivery to arbitrary sinks via a batch commit log —
-    the engine-generic analogue of the reference's Kafka transactions
+    """Exactly-once delivery through a lineage-bound sink — the engine's
+    analogue of the reference's Kafka transactions
     (``processing_guarantee='exactly_once'``,
     ``faust/types/settings/settings.py:1393``).
 
     Structured Streaming gives foreachBatch at-least-once delivery: a
     crash between sink success and checkpoint commit re-runs the batch
-    with the SAME batch_id. This wrapper closes the gap for sinks that are
-    neither idempotent nor transactional: after ``sink`` succeeds, the
-    batch id is recorded (atomic tmp+rename marker) in ``commit_dir``; a
-    re-delivered batch id that is already committed is skipped, so the
-    sink observes each batch exactly once. For Kafka, ``sink`` is the
-    kafka-format batch write and the marker plays the transaction-commit
-    role (the reference's producer transaction); for true cross-system
-    atomicity the marker write and sink write must share a failure domain
-    (same object store / same DB transaction).
+    with the SAME batch_id.  Each sink below skips a batch id at or
+    below the last one committed under its :func:`lineage_key`; build
+    the one whose guarantee is wanted, with this ``checkpoint``:
+
+    - :func:`committed_batch_sink`: any sink, directory markers;
+    - ``kafka_eos.kafka_transactional_batch_sink``: Kafka, whole-batch
+      atomicity (one driver-side transaction);
+    - ``kafka_eos.kafka_transactional_partition_sink``: Kafka,
+      per-partition atomicity (rows never cross the driver).
     """
     drain(
-        df.writeStream.foreachBatch(committed_batch_sink(sink, commit_dir))
+        df.writeStream.foreachBatch(sink)
         .outputMode("append")
         .option("checkpointLocation", checkpoint),
         "transactional_foreach_batch",
@@ -313,6 +374,9 @@ __all__ = [
     "run_to_memory",
     "cdc_export",
     "exactly_once_parquet_sink",
+    "lineage_key",
+    "batch_committed",
+    "committed_batch_sink",
     "transactional_foreach_batch",
     "take_buffers",
 ]

@@ -9,8 +9,11 @@ agents, ``feed_stream`` replays the rows through the real streaming engine
 
 from __future__ import annotations
 
+import fcntl
+import json
 import os
 import tempfile
+from contextlib import contextmanager
 from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -98,30 +101,20 @@ class FileBrokerTransport:
         self.epoch: Optional[int] = None
         os.makedirs(os.path.join(root, "topics"), exist_ok=True)
 
+    @contextmanager
     def _locked(self):
-        import fcntl
-        from contextlib import contextmanager
-
-        @contextmanager
-        def lock():
-            fd = os.open(
-                os.path.join(self.root, ".lock"), os.O_CREAT | os.O_RDWR
-            )
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-                os.close(fd)
-
-        return lock()
+        fd = os.open(os.path.join(self.root, ".lock"), os.O_CREAT | os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield
+        finally:
+            fcntl.flock(fd, fcntl.LOCK_UN)
+            os.close(fd)
 
     def _epochs_path(self) -> str:
         return os.path.join(self.root, "epochs.json")
 
     def _read_epochs(self) -> dict:
-        import json
-
         try:
             with open(self._epochs_path()) as f:
                 return json.load(f)
@@ -129,8 +122,6 @@ class FileBrokerTransport:
             return {}
 
     def init_transactions(self) -> None:
-        import json
-
         with self._locked():
             epochs = self._read_epochs()
             epochs[self.txn_id] = epochs.get(self.txn_id, 0) + 1
@@ -147,8 +138,6 @@ class FileBrokerTransport:
         self.pending.append((topic, key, value))
 
     def commit_transaction(self) -> None:
-        import json
-
         with self._locked():
             if self._read_epochs().get(self.txn_id) != self.epoch:
                 self.pending = None
@@ -175,8 +164,6 @@ class FileBrokerTransport:
         return max(bids) if bids else None
 
     def read_committed(self, topic: str) -> list:
-        import json
-
         path = os.path.join(self.root, "topics", f"{topic}.log")
         try:
             with self._locked(), open(path) as f:

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from faust_spark.streaming.kafka_eos import (
     DEFAULT_CONTROL_TOPIC,
     kafka_transactional_batch_sink,
-    kafka_transactional_foreach_batch,
 )
 
 
@@ -193,20 +192,20 @@ def test_end_to_end_foreach_batch_multi_batch(spark, broker, tmp_path):
     micro-batch; every source row delivered exactly once."""
     src = str(tmp_path / "src")
     _events_df(spark, n=40).repartition(4).write.parquet(src)
-    from faust_spark.streaming.runner import stream_parquet
+    from faust_spark.streaming.runner import (
+        stream_parquet,
+        transactional_foreach_batch,
+    )
 
     def factory(txn_id):
         return MockTransport(broker, txn_id)
 
+    ckpt = str(tmp_path / "ckpt")
     stream = stream_parquet(spark, src, max_files_per_trigger=1)
-    kafka_transactional_foreach_batch(
-        stream,
-        "out",
-        factory,
-        checkpoint=str(tmp_path / "ckpt"),
-        transactional_id="app-out",
-        key_col="key",
+    sink = kafka_transactional_batch_sink(
+        "out", factory, "app-out", key_col="key", checkpoint=ckpt
     )
+    transactional_foreach_batch(stream, sink, ckpt)
     rows = broker.read_committed("out")
     keys = [k for k, _ in rows]
     assert len(keys) == 40 and len(set(keys)) == 40  # exactly once

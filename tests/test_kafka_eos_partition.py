@@ -8,7 +8,7 @@ with producers built per task) is observable from the test process.
 Covered: per-partition delivery + markers, re-delivery skip, partial-
 partition failure (some partitions commit, one dies → batch retry must
 top up ONLY the failed partition), task-attempt fencing, and the
-end-to-end streaming run via ``distributed=True``.
+end-to-end streaming run through ``runner.transactional_foreach_batch``.
 """
 
 import functools
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from faust_spark.streaming.kafka_eos import (
     DEFAULT_CONTROL_TOPIC,
-    kafka_transactional_foreach_batch,
     kafka_transactional_partition_sink,
 )
 from faust_spark.testing import (
@@ -136,23 +135,23 @@ def test_stale_task_attempt_is_fenced(root):
 
 
 def test_distributed_foreach_batch_end_to_end(spark, root, tmp_path):
-    """Streaming end-to-end with ``distributed=True``: multi-file source,
-    one transaction per (batch, partition), every row exactly once."""
+    """Streaming end-to-end through the partition sink: multi-file
+    source, one transaction per (batch, partition), every row exactly
+    once."""
     src = str(tmp_path / "src")
     _events_df(spark, n=40, parts=2).write.parquet(src)
-    from faust_spark.streaming.runner import stream_parquet
+    from faust_spark.streaming.runner import (
+        stream_parquet,
+        transactional_foreach_batch,
+    )
 
     factory = functools.partial(FileBrokerTransport, root)
+    ckpt = str(tmp_path / "ckpt")
     stream = stream_parquet(spark, src, max_files_per_trigger=1)
-    kafka_transactional_foreach_batch(
-        stream,
-        "out",
-        factory,
-        checkpoint=str(tmp_path / "ckpt"),
-        transactional_id="app-out",
-        key_col="key",
-        distributed=True,
+    sink = kafka_transactional_partition_sink(
+        "out", factory, "app-out", key_col="key", checkpoint=ckpt
     )
+    transactional_foreach_batch(stream, sink, ckpt)
     rows = _reader(root).read_committed("out")
     keys = [k for k, _ in rows]
     assert len(keys) == 40 and len(set(keys)) == 40

@@ -151,8 +151,9 @@ def test_kafka_round_trip_exactly_once(kafka_spark, tmp_path):
     from pyspark.sql import functions as F
 
     from faust_spark.streaming.kafka_eos import (
-        kafka_transactional_foreach_batch,
+        kafka_transactional_batch_sink,
     )
+    from faust_spark.streaming.runner import transactional_foreach_batch
 
     run = uuid.uuid4().hex[:8]
     src, dst = f"e2e-src-{run}", f"e2e-dst-{run}"
@@ -172,15 +173,11 @@ def test_kafka_round_trip_exactly_once(kafka_spark, tmp_path):
             F.upper(F.col("value").cast("string")).alias("value"),
         )
     )
-    kafka_transactional_foreach_batch(
-        stream,
-        dst,
-        ConfluentTransport,
-        checkpoint=str(tmp_path / "ckpt"),
-        transactional_id=f"e2e-{run}",
-        key_col="key",
-        timeout_sec=120.0,
+    ckpt = str(tmp_path / "ckpt")
+    sink = kafka_transactional_batch_sink(
+        dst, ConfluentTransport, f"e2e-{run}", key_col="key", checkpoint=ckpt
     )
+    transactional_foreach_batch(stream, sink, ckpt, timeout_sec=120.0)
     rows = _read_committed(dst)
     keys = [k for k, _ in rows]
     assert sorted(keys) == sorted(f"k{i}" for i in range(50))
