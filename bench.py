@@ -318,8 +318,8 @@ def main() -> None:
         "rocksdb": "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
     }
-    state_parts = state_partitions(n_events, 32)
     default_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    state_parts = state_partitions(n_events, 12_500, int(default_parts))
     windowed_eps = {}
     for backend, provider in _PROVIDERS.items():
         spark.conf.set(

@@ -965,15 +965,19 @@ def _block_grid_gemm(
     normalized GEMM (``A_hat @ B_hat.T``) and emitting only the pairs at
     or above the threshold.
 
-    Why Arrow/pandas here and not ``zip_with``: the shuffle moves only the
+    Why Arrow here and not ``zip_with``: the shuffle moves only the
     ~B/2-replicated vectors (cells), never materialized pairs, and the
     n²·d inner loop runs inside BLAS instead of Catalyst's *interpreted*
     higher-order functions — measured ~10× on the sf0.1 fixture. This is
     the documented escape-hatch shape: batch-columnar, no per-row Python.
+    Only equal-length vectors meet (``similarity._vectors`` per length),
+    so a NULL vector is in no pair, as in the expression form.
     """
-    import pandas as pd
+    import pyarrow as pa
 
     from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from faust_spark.operators.similarity import _vector_dims, _vectors
 
     B = blocks
     id_type = emb.schema[id_col].dataType
@@ -1003,34 +1007,42 @@ def _block_grid_gemm(
         .withColumn("__bi", F.explode(F.sequence(F.lit(0), F.col("__bj"))))
     )
 
-    def cell(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+    def cell(key, lt: pa.Table, rt: pa.Table) -> pa.Table:
         import numpy as np
 
-        bi, bj = key
-        if lpdf.empty or rpdf.empty:
-            return pd.DataFrame({"doc1": [], "doc2": [], "cosine": []})
-        A = np.stack(lpdf["__lv"].to_numpy()).astype(np.float64)
-        C = np.stack(rpdf["__rv"].to_numpy()).astype(np.float64)
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        C /= np.linalg.norm(C, axis=1, keepdims=True)
-        S = A @ C.T
-        li, ri = np.nonzero(S >= threshold)
-        d1 = lpdf["__lid"].to_numpy()[li]
-        d2 = rpdf["__rid"].to_numpy()[ri]
-        cos = S[li, ri]
+        bi, bj = key[0].as_py(), key[1].as_py()
+        lids = lt.column("__lid").to_numpy()
+        rids = rt.column("__rid").to_numpy()
+        d1s, d2s, coss = [lids[:0]], [rids[:0]], [np.zeros(0)]
+        for d in _vector_dims(lt.column("__lv")):
+            lrows, A = _vectors(lt.column("__lv"), d)
+            rrows, C = _vectors(rt.column("__rv"), d)
+            A /= np.linalg.norm(A, axis=1, keepdims=True)
+            C /= np.linalg.norm(C, axis=1, keepdims=True)
+            S = A @ C.T
+            li, ri = np.nonzero(S >= threshold)
+            d1s.append(lids[lrows[li]])
+            d2s.append(rids[rrows[ri]])
+            coss.append(S[li, ri])
+        d1, d2, cos = map(np.concatenate, (d1s, d2s, coss))
         if bi == bj:
             keep = d1 < d2
         else:  # orientation: ids are unrelated to block order in i<j cells
             keep = np.ones(len(d1), dtype=bool)
             d1, d2 = np.minimum(d1, d2), np.maximum(d1, d2)
-        return pd.DataFrame(
-            {"doc1": d1[keep], "doc2": d2[keep], "cosine": cos[keep]}
+        idt = lt.schema.field("__lid").type
+        return pa.table(
+            {
+                "doc1": pa.array(d1[keep], idt),
+                "doc2": pa.array(d2[keep], idt),
+                "cosine": pa.array(cos[keep], pa.float64()),
+            }
         )
 
     return (
         left.groupBy("__bi", "__bj")
         .cogroup(right.groupBy("__bi", "__bj"))
-        .applyInPandas(cell, out_schema)
+        .applyInArrow(cell, out_schema)
     )
 
 
@@ -1106,27 +1118,23 @@ def _semantic_dup_cells(
     comparing, because Spark and DuckDB order NaN above every double
     while numpy comparisons return False.
 
-    Scale shape: ONE cell-keyed shuffle into ``applyInPandas``; per-task
-    memory is O(chunk · n_cell) doubles via id-ascending slabs whose
-    flags accumulate across chunks — a cell never materializes its full
-    pair matrix. The quadratic term stays bounded per cell (scale
-    ``len(cents)`` with the corpus); no join, no nested loop, no driver
-    collect.
+    Only equal-length vectors meet (``similarity._vectors`` per length):
+    a NULL vector is never a duplicate and makes none, as relationally.
 
-    ``max_cell_rows`` (VERDICT r8 item 4) bounds the population a
-    single cell task will accept: a degenerate quantizer (one hot cell
-    — e.g. a constant-embedding corpus, or a centroid model far from
-    the data) would otherwise OOM the Python worker on the
-    chunk × n_cell slab. The guard raises a ValueError naming the cell
-    and its population BEFORE any slab allocates — the fix is a bigger
-    centroid model (semantic_dedup scales ``len(cents)`` with the
-    corpus precisely so cells stay bounded) or a raised cap. At the
-    default chunk=4096 the cap of 65536 rows keeps the slab at
-    ~2 GiB/task.
+    Scale shape: ONE cell-keyed shuffle into ``applyInArrow``; per-task
+    memory is O(chunk · n_cell) doubles via id-ascending slabs whose
+    flags accumulate across chunks, so a cell never materializes its
+    full pair matrix (scale ``len(cents)`` with the corpus). A cell
+    above ``max_cell_rows`` rows (a degenerate quantizer: one hot cell)
+    raises a ValueError naming the cell BEFORE any slab allocates; the
+    fix is a bigger centroid model or a raised cap. At chunk=4096 the
+    default cap of 65536 rows keeps the slab at ~2 GiB/task.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import BooleanType, StructField, StructType
+
+    from faust_spark.operators.similarity import _vector_dims, _vectors
 
     t = float(threshold)
     cap = int(max_cell_rows)
@@ -1138,46 +1146,43 @@ def _semantic_dup_cells(
         ]
     )
 
-    def mark(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > cap:
-            cell_id = pdf["cell"].iloc[0]
+    def mark(tbl: pa.Table) -> pa.Table:
+        if tbl.num_rows > cap:
+            cell_id = tbl.column("cell")[0].as_py()
             raise ValueError(
-                f"_semantic_dup_cells: cell {cell_id} holds {len(pdf)} "
+                f"_semantic_dup_cells: cell {cell_id} holds {tbl.num_rows} "
                 f"rows, above the max_cell_rows bound of {cap}; the "
                 "chunked pairwise slab would exhaust task memory. Use "
                 "a larger centroid model so cells stay bounded, or "
                 "raise max_cell_rows explicitly."
             )
-        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        pdf = pdf.iloc[order]
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        n, d = V.shape
-        acc = np.zeros(n)
-        for j in range(d):
-            acc += V[:, j] * V[:, j]
-        nrm = np.sqrt(acc)
-        dup = np.zeros(n, dtype=bool)
-        for s in range(0, n, chunk):
-            e = min(s + chunk, n)
-            # slab rows s..e score against ALL rows below e; earlier
-            # slabs' flags are already final (ids ascend with index)
-            dots = np.zeros((e - s, e))
-            for j in range(d):
-                dots += np.multiply.outer(V[s:e, j], V[:e, j])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / np.multiply.outer(nrm[s:e], nrm[:e])
-            cos[np.isnan(cos)] = np.inf  # Spark/DuckDB: NaN > any double
-            lower = np.arange(e)[None, :] < np.arange(s, e)[:, None]
-            dup[s:e] = np.any((cos >= t) & lower, axis=1)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                "cell": pdf["cell"].to_numpy(),
-                "is_dup": dup,
-            }
+        tbl = tbl.take(
+            np.argsort(tbl.column(id_col).to_numpy(), kind="stable")
         )
+        vecs = tbl.column(vec_col)
+        dup = np.zeros(tbl.num_rows, dtype=bool)
+        for d in _vector_dims(vecs):
+            rows, V = _vectors(vecs, d)
+            n = len(rows)
+            acc = np.zeros(n)
+            for j in range(d):
+                acc += V[:, j] * V[:, j]
+            nrm = np.sqrt(acc)
+            for s in range(0, n, chunk):
+                e = min(s + chunk, n)
+                # slab rows s..e score against ALL rows below e; earlier
+                # slabs' flags are already final (ids ascend with index)
+                dots = np.zeros((e - s, e))
+                for j in range(d):
+                    dots += np.multiply.outer(V[s:e, j], V[:e, j])
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = dots / np.multiply.outer(nrm[s:e], nrm[:e])
+                cos[np.isnan(cos)] = np.inf  # Spark/DuckDB: NaN > any double
+                lower = np.arange(e)[None, :] < np.arange(s, e)[:, None]
+                dup[rows[s:e]] = np.any((cos >= t) & lower, axis=1)
+        return tbl.select([id_col, "cell"]).append_column("is_dup", [dup])
 
-    return a.select(id_col, vec_col, "cell").groupBy("cell").applyInPandas(
+    return a.select(id_col, vec_col, "cell").groupBy("cell").applyInArrow(
         mark, out_schema
     )
 

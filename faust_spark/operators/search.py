@@ -25,7 +25,7 @@ tie-break, the same contract as ``similarity.cosine_topk``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -44,6 +44,21 @@ def postings(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
     return toks.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
+
+
+def _bm25_term(k1: float, b: float) -> Column:
+    """One (doc, term) BM25 contribution from the ``tf``, ``dl``, ``df``,
+    ``n`` and ``avgdl`` columns."""
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
+        F.col("tf")
+        + F.lit(k1)
+        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    )
+    return idf * tf_part
 
 
 def bm25_topk(
@@ -86,22 +101,13 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
     scored = (
         tf.join(F.broadcast(dfs), "term")
         .crossJoin(F.broadcast(stats))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
-            F.sum(idf * tf_part).alias("score"),
+            F.sum(_bm25_term(k1, b)).alias("score"),
         )
     )
     top = scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
@@ -176,22 +182,13 @@ def bm25_multi_topk(
     matched = tf.join(F.broadcast(qterms), "term")
     if exclude_self:
         matched = matched.filter(F.col(id_col) != F.col("qid"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
     scored = (
         matched.join(F.broadcast(dfs), "term")
         .crossJoin(F.broadcast(stats))
         .groupBy("qid", id_col)
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
-            F.sum(idf * tf_part).alias("score"),
+            F.sum(_bm25_term(k1, b)).alias("score"),
         )
     )
     w = W.partitionBy("qid").orderBy(F.desc("score"), F.col(id_col))
@@ -266,7 +263,7 @@ def mmr_rerank(
 
     Scale shape: the greedy loop is inherently sequential *per query*
     but the candidate set is retrieval-bounded (tens of rows), so each
-    query's loop runs inside one Arrow batch (``applyInPandas`` grouped
+    query's loop runs inside one Arrow table (``applyInArrow`` grouped
     by query id) over numpy — no candidate ever re-shuffles, and queries
     parallelize across tasks exactly like the retrieval that produced
     them. The quadratic term is k·|candidates| per query, constant-sized
@@ -274,7 +271,9 @@ def mmr_rerank(
 
     ``candidates``: (qid, nid, score, embedding) — e.g. the output of a
     dense top-n (n > k) joined back to its vectors. Returns
-    (qid, nid, mmr_rank 1..k, mmr_score).
+    (qid, nid, mmr_rank 1..k, mmr_score). A query's vectors are read at
+    the length most of its candidates share (the longer on a tie); a
+    NULL or other-length candidate is never picked.
 
     ``round_dp``: engine-portable selection mode — each step's argmax
     runs over the MMR score ROUNDED to ``round_dp`` decimals with ties
@@ -287,7 +286,7 @@ def mmr_rerank(
     ``None`` keeps raw-float argmax (first-max-wins on the
     relevance-sorted frame).
     """
-    import pandas as pd
+    import pyarrow as pa
 
     from pyspark.sql.types import (
         DoubleType,
@@ -295,6 +294,8 @@ def mmr_rerank(
         StructField,
         StructType,
     )
+
+    from faust_spark.operators.similarity import _vector_dims, _vectors
 
     qt = candidates.schema[qid_col].dataType
     nt = candidates.schema[id_col].dataType
@@ -307,17 +308,22 @@ def mmr_rerank(
         ]
     )
 
-    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pick(tbl: pa.Table) -> pa.Table:
         import numpy as np
 
-        pdf = pdf.sort_values(score_col, ascending=False).reset_index(
-            drop=True
+        score = tbl.column(score_col).to_numpy()
+        tbl = tbl.take(np.argsort(-score, kind="stable"))
+        vecs = tbl.column(vec_col)
+        rows, V = max(
+            [_vectors(vecs, d) for d in _vector_dims(vecs)],
+            key=lambda rv: (len(rv[0]), rv[1].shape[1]),
+            default=(np.zeros(0, dtype=np.int64), np.zeros((0, 0))),
         )
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        tbl = tbl.take(rows)  # the well-formed candidates, in score order
         V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-        rel = pdf[score_col].to_numpy(dtype=np.float64)
-        nids = pdf[id_col].to_numpy()
-        n = len(pdf)
+        rel = tbl.column(score_col).to_numpy().astype(np.float64)
+        nids = tbl.column(id_col).to_numpy()
+        n = tbl.num_rows
         chosen: list[int] = []
         scores: list[float] = []
         max_sim = np.full(n, -np.inf)
@@ -346,16 +352,12 @@ def mmr_rerank(
             chosen.append(i)
             scores.append(float(mmr[i]))
             max_sim = np.maximum(max_sim, V @ V[i])
-        return pd.DataFrame(
-            {
-                qid_col: pdf[qid_col].iloc[chosen].to_numpy(),
-                id_col: pdf[id_col].iloc[chosen].to_numpy(),
-                "mmr_rank": np.arange(1, len(chosen) + 1, dtype=np.int32),
-                "mmr_score": np.array(scores),
-            }
-        )
+        picked = np.asarray(chosen, dtype=np.int64)
+        return tbl.select([qid_col, id_col]).take(picked).append_column(
+            "mmr_rank", [np.arange(1, len(chosen) + 1, dtype=np.int32)]
+        ).append_column("mmr_score", [np.array(scores, dtype=np.float64)])
 
-    return candidates.groupBy(qid_col).applyInPandas(pick, out_schema)
+    return candidates.groupBy(qid_col).applyInArrow(pick, out_schema)
 
 
 __all__ = [

@@ -13,10 +13,15 @@ Two paths, as a 100 TB design requires:
   re-ranks within the bucket. Recall is tunable via ``planes`` (fewer bits
   → bigger buckets → higher recall, more compute).
 
-The dot product stays JVM-side via ``F.zip_with`` + ``F.aggregate`` —
-no Python, no UDF. Catalyst evaluates those lambdas interpreted, not in
-generated code; driver-side models (centroids, planes) enter as one
-literal each (:func:`_model_lit`).
+The **expression form** (:func:`cosine_expr`, ``F.zip_with`` +
+``F.aggregate``, folding dimensions in ascending order from 0.0 as the
+DuckDB oracles do) is fold-exact and oracle-bearing; Catalyst runs its
+lambdas interpreted, so hot loops run as **Arrow kernels**
+(``mapInArrow`` / ``applyInArrow`` over numpy, every vector read through
+:func:`_vectors`). One that keeps the fold order is bit-identical
+(:func:`_nearest_arrow`, :func:`hyperplane_bands_arrow`); one with BLAS
+sums only ranks (:func:`cosine_rows_arrow`, the ``rp_shortlist_topk``
+shortlist). Driver-side models enter as one literal (:func:`_model_lit`).
 """
 
 from __future__ import annotations
@@ -69,7 +74,8 @@ def sqdist_expr(a: Column, b: Column) -> Column:
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+    """Cosine; NULL on a zero norm (``try_divide``: no ANSI error)."""
+    return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
 def _model_lit(rows: list[list], elem: str = "double") -> Column:
@@ -90,10 +96,57 @@ def _model_lit(rows: list[list], elem: str = "double") -> Column:
 def _top_by_sim(scored: DataFrame, k: int) -> DataFrame:
     """``scored`` with a ``rank`` column, cut to each query's ``k``
     highest-``sim`` rows: rank 1..k per qid, the lower nid first on a
-    similarity tie."""
-    w = W.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
+    similarity tie. A NULL or NaN sim sorts last and is cut above the
+    window (a filter under it would re-evaluate an inlined ``sim``)."""
+    sim = F.nanvl(F.col("sim"), F.lit(None).cast("double"))
+    w = W.partitionBy("qid").orderBy(sim.desc_nulls_last(), F.col("nid"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        (F.col("rank") <= k) & sim.isNotNull()
+    )
+
+
+def _vectors(col, dim: int):
+    """The one reader of an Arrow vector column (``Array`` or
+    ``ChunkedArray``): ``rows``, the ascending indices of the non-NULL
+    vectors with exactly ``dim`` elements, and ``V``, those vectors as a
+    float64 matrix gathered from the list offsets and values (a NULL
+    element reads as NaN). Any other row is malformed for ``dim``; the
+    kernel gives it the expression form's result, never an error."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    lens = col.value_lengths().fill_null(-1).to_numpy()
+    rows = np.flatnonzero(lens == dim)
+    starts = col.offsets.to_numpy()[rows]
+    flat = col.values.to_numpy(zero_copy_only=False)
+    return rows, flat[starts[:, None] + np.arange(dim)].astype(np.float64)
+
+
+def _vector_dims(col) -> list[int]:
+    """The distinct lengths of ``col``'s non-NULL vectors, ascending: what
+    a kernel with no fixed width decodes, one :func:`_vectors` each."""
+    import pyarrow.compute as pc
+
+    lens = pc.unique(pc.list_value_length(col)).drop_null()
+    return sorted(lens.to_pylist())
+
+
+def _sides(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a vector search: corpus as (nid, cv), queries as
+    (qid, qv)."""
+    return (
+        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")),
+        queries.select(
+            F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
+        ),
     )
 
 
@@ -111,12 +164,7 @@ def cosine_topk(
     tie-break. Scores are intentionally not exposed: engines disagree on
     float-sum rounding, ranks are stable.
     """
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-    )
+    c, q = _sides(corpus, queries, id_col, vec_col, query_id_col)
     scored = (
         c.join(F.broadcast(q), F.col("qid") != F.col("nid"))
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
@@ -188,24 +236,17 @@ def hyperplane_bands_arrow(
     pass: (id, band, band_sig) long form — the shape the banded
     bucket-claim sinks consume.
 
-    Physical-plan swap of looping :func:`hyperplane_signature` per table
-    (r12): the expression form evaluates ``n_tables × n_planes``
-    INTERPRETED zip_with/aggregate dot products per row — profiled as
-    3–4s of the streaming embedding sink's ~5s per-batch cost at the
-    10× probe (the same HOF-interpreter trap ``assign_cells_arrow``
-    exists for). Here the identical flops run vectorized over Arrow
-    batches with the EXPLICIT fold order of the expression form and of
-    DuckDB's ``list_sum(list_transform(...))``: per plane, ``acc +=
-    v[j] * p[j]`` for j ascending from a 0.0 init — one IEEE double
-    multiply-add per term, so every sign bit (and with it every bucket
-    string) is bit-identical (pinned in tests/test_similarity.py). Rows
-    whose vector is NULL or whose length ≠ dim get all-zero bits,
-    matching the expression form's NULL-fold → ``otherwise("0")``
-    behavior. Plane families are the same md5-derived
-    ``_deterministic_planes(seed=t+1)`` the per-table loop uses.
+    Physical-plan swap of looping :func:`hyperplane_signature` per
+    table (seeds ``t+1``), whose ``n_tables × n_planes`` interpreted dot
+    products per row were 3–4 s of the streaming embedding sink's ~5 s
+    per batch at the 10× probe (r12). Each plane folds ``acc += v[j] *
+    p[j]`` for j ascending from 0.0, the expression form's and DuckDB's
+    order, so every bucket string is bit-identical (pinned in
+    tests/test_similarity.py). A NULL or wrong-length vector gets
+    all-zero bits, as the expression form's NULL fold does.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     P = np.asarray(
         [
@@ -224,46 +265,33 @@ def hyperplane_bands_arrow(
     )
 
     def bands(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vec = pdf[vec_col].to_numpy()
-            valid = np.array(
-                [v is not None and len(v) == dim for v in vec], dtype=bool
-            )
-            n = len(pdf)
-            V = (
-                np.stack(vec[valid]).astype(np.float64)
-                if valid.any()
-                else np.zeros((0, dim))
-            )
-            ids = pdf[id_col].to_numpy()
-            out_ids, out_band, out_sig = [], [], []
+        for batch in batches:
+            n = batch.num_rows
+            rows, V = _vectors(batch.column(vec_col), dim)
+            out_sig = []
             for t in range(n_tables):
                 # bit matrix for the valid rows: explicit ascending-j
                 # fold per plane (see docstring)
-                sigs = np.empty(n, dtype=object)
-                sigs[~valid] = "0" * n_planes
-                if valid.any():
-                    bits = np.empty((V.shape[0], n_planes), dtype="U1")
-                    for p in range(n_planes):
-                        acc = np.zeros(V.shape[0])
-                        for j in range(dim):
-                            acc += V[:, j] * P[t, p, j]
-                        bits[:, p] = np.where(acc >= 0, "1", "0")
-                    sigs[valid] = ["".join(r) for r in bits]
-                out_ids.append(ids)
-                out_band.append(np.full(n, t, dtype=np.int32))
+                sigs = np.full(n, "0" * n_planes, dtype=object)
+                bits = np.empty((len(rows), n_planes), dtype="U1")
+                for p in range(n_planes):
+                    acc = np.zeros(len(rows))
+                    for j in range(dim):
+                        acc += V[:, j] * P[t, p, j]
+                    bits[:, p] = np.where(acc >= 0, "1", "0")
+                sigs[rows] = ["".join(r) for r in bits]
                 out_sig.append(sigs)
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(out_ids),
-                    "band": np.concatenate(out_band),
-                    "band_sig": np.concatenate(out_sig),
-                }
+            band = np.repeat(np.arange(n_tables, dtype=np.int32), n)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays([batch.column(id_col)] * n_tables),
+                    pa.array(band),
+                    pa.array(np.concatenate(out_sig), pa.string()),
+                ],
+                names=[id_col, "band", "band_sig"],
             )
 
-    return df.select(id_col, vec_col).mapInPandas(bands, out_schema)
+    return df.select(id_col, vec_col).mapInArrow(bands, out_schema)
 
 
 def hyperplane_lsh_topk(
@@ -296,12 +324,7 @@ def hyperplane_lsh_topk(
     broadcast — they are ≪ corpus), so vectors never ride the bucket
     join.
     """
-    corpus_sel = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-    )
-    queries_sel = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
+    c, q = _sides(corpus, queries, id_col, vec_col, query_id_col)
 
     def flip(i: int):
         return F.concat(
@@ -314,23 +337,23 @@ def hyperplane_lsh_topk(
 
     cand = None
     for t in range(n_tables):
-        c = hyperplane_signature(corpus_sel, n_planes, dim, "cv", seed=t)
-        qt = hyperplane_signature(queries_sel, n_planes, dim, "qv", seed=t)
+        ct = hyperplane_signature(c, n_planes, dim, "cv", seed=t)
+        qt = hyperplane_signature(q, n_planes, dim, "qv", seed=t)
         if multiprobe >= 1:
             probes = F.array(
                 F.col("bucket"), *[flip(i) for i in range(n_planes)]
             )
             qt = qt.withColumn("bucket", F.explode(probes))
         pairs = (
-            c.join(F.broadcast(qt.select("qid", "bucket")), "bucket")
+            ct.join(F.broadcast(qt.select("qid", "bucket")), "bucket")
             .filter(F.col("qid") != F.col("nid"))
             .select("qid", "nid")
         )
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.dropDuplicates(["qid", "nid"])
     scored = (
-        corpus_sel.join(F.broadcast(cand), "nid")
-        .join(F.broadcast(queries_sel), "qid")
+        c.join(F.broadcast(cand), "nid")
+        .join(F.broadcast(q), "qid")
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
     return _top_by_sim(scored, k).select("qid", "nid", "rank")
@@ -346,23 +369,20 @@ def cosine_rows_arrow(
     """Row-wise cosine over an already-joined pair relation, Arrow-batched
     — ``withColumn(out, cosine_expr(a, b))`` with numpy doing the math.
 
-    Catalyst evaluates ``zip_with``/``aggregate`` lambdas INTERPRETED
-    (~20× numpy per term, the r8 semantic_dedup measurement), which makes
-    the re-rank similarity the hot loop of every ANN serving path:
-    |probed corpus| × |queries| rows, ``dim`` interpreted multiplies and
-    adds each. Here each Arrow batch stacks the two vector columns and
-    computes all dots/norms vectorized (one einsum per batch). A narrow
-    map — no shuffle, vectors enter and leave the Python worker once.
-
-    Use ONLY where the similarity feeds a RANKING (shortlists, re-ranks,
-    votes): BLAS/einsum summation order is not the ``F.aggregate`` fold,
-    so values can differ from ``cosine_expr`` in final ulps — contract-
-    bearing exact sides (``cosine_topk``, which the DuckDB oracle
-    hash-pins) must stay on the fold-exact expression.
+    The re-rank similarity is the hot loop of every ANN serving path
+    (|probed corpus| × |queries| rows), and Catalyst interprets the
+    expression's lambdas (~20× numpy per term, r8). Here one narrow map
+    computes each batch's dots and norms by einsum, per vector length.
+    Use ONLY where the similarity feeds a RANKING: einsum summation
+    order is not the ``F.aggregate`` fold, so values can differ from
+    ``cosine_expr`` in final ulps, and oracle-pinned sides
+    (``cosine_topk``) stay on the expression. Malformed rows get the
+    expression's sim: NULL for a NULL vector, a length mismatch or a
+    zero norm, NaN for a NaN element.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType
 
     schema = StructType(
         [StructField(c, df.schema[c].dataType, True) for c in keep]
@@ -370,21 +390,28 @@ def cosine_rows_arrow(
     )
 
     def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.stack(pdf[a_col].to_numpy()).astype(np.float64)
-            B = np.stack(pdf[b_col].to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,ij->i", A, B)
-            na = np.sqrt(np.einsum("ij,ij->i", A, A))
-            nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = dots / (na * nb)
-            res = pdf[keep].copy()
-            res[out] = sim
-            yield res
+        for batch in batches:
+            n = batch.num_rows
+            a, b = batch.column(a_col), batch.column(b_col)
+            sim = np.full(n, np.nan)
+            ok = np.zeros(n, dtype=bool)
+            for d in _vector_dims(a):
+                ra, A = _vectors(a, d)
+                rb, B = _vectors(b, d)
+                rows, ia, ib = np.intersect1d(ra, rb, return_indices=True)
+                A, B = A[ia], B[ib]
+                dots = np.einsum("ij,ij->i", A, B)
+                na = np.sqrt(np.einsum("ij,ij->i", A, A))
+                nb = np.sqrt(np.einsum("ij,ij->i", B, B))
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    sim[rows] = dots / (na * nb)
+                ok[rows] = na * nb != 0
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep] + [pa.array(sim, mask=~ok)],
+                names=[*keep, out],
+            )
 
-    return df.mapInPandas(score, schema)
+    return df.mapInArrow(score, schema)
 
 
 def rp_shortlist_topk(
@@ -414,77 +441,49 @@ def rp_shortlist_topk(
     (candidate budget) with NO index build step, which is what you want
     for one-shot batch joins over a corpus you'll never query again.
 
-    Scale shape: the projected query matrix is collected driver-side
-    ONCE (model-sized — the same must-fit contract as the
-    ``F.broadcast(q)`` the re-rank already relies on) and shipped to
-    executors as a closure constant; the corpus is scanned once by a
-    single Arrow ``mapInPandas`` that projects each batch (GEMM —
-    Catalyst's interpreted higher-order functions cost ~20× numpy per
-    term, measured on semantic_dedup r8), scores it against ALL queries
-    at ``proj_dim`` flops per pair instead of ``dim``, and keeps a
-    PARTIAL top-(shortlist+1) per query PER BATCH via
-    ``np.argpartition`` — so the qid exchange that ranks the global
-    shortlist touches at most |q|·(shortlist+1)·n_batches candidate
-    rows, never the n·|q| full product (the r8 plan windowed the whole
-    product; VERDICT r8 item 2). The +1 is self-match headroom: the
-    exact ``qid != nid`` exclusion happens in Spark after the partial
-    top-k, and any batch contains at most one self row per query.
-    Zero-norm vectors (corpus or query) yield non-finite projected
-    cosines and are masked out of the shortlist entirely rather than
-    letting NaN sort first (ADVICE r8); a zero-norm query therefore
-    returns no rows. Shortlist membership, not exact ranks, is all
-    this stage decides, so BLAS summation order is fine here; the
-    contract-bearing re-rank below stays on the fold-exact
-    ``cosine_expr``, touching only |queries| × shortlist rows joined
-    back to vectors via a broadcast semi-pattern so corpus vectors
-    never ride a pair shuffle.
+    Scale shape: the projected query matrix is read driver-side ONCE
+    (model-sized, the must-fit contract of the re-rank's
+    ``F.broadcast(q)``) into the closure of one corpus ``mapInArrow``
+    that projects each batch by GEMM, scores it against ALL queries at
+    ``proj_dim`` flops per pair, and keeps a PARTIAL top-(shortlist+1)
+    per query PER BATCH, so the qid exchange ranking the global
+    shortlist sees at most |q|·(shortlist+1)·n_batches rows, never the
+    n·|q| product. The +1 is self-match headroom: ``qid != nid`` is
+    applied in Spark after the partial top-k. Both sides read vectors
+    through :func:`_vectors`, so a NULL or wrong-length vector never
+    enters the shortlist (a malformed query returns no rows); zero-norm
+    and NaN vectors give non-finite projected cosines, masked out too.
+    BLAS summation order only decides shortlist membership; the re-rank
+    stays on the fold-exact ``cosine_expr`` over |queries| × shortlist
+    rows, joined back to vectors in broadcast so corpus vectors never
+    ride a pair shuffle.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField as SF_,
-        StructType as ST_,
-    )
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType
 
     P = np.asarray(_deterministic_planes(proj_dim, dim, seed=seed))
+    c, q = _sides(corpus, queries, id_col, vec_col, query_id_col)
+    qt = q.toArrow()
+    qrows, QV = _vectors(qt.column("qv"), dim)
+    qids = qt.column("qid").combine_chunks().take(qrows)
+    QP = QV @ P.T
+    qn = np.sqrt((QP * QP).sum(axis=1))
 
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
-
-    qrows = q.collect()
-    if qrows:
-        qid_vals = np.asarray([r["qid"] for r in qrows])
-        QP = (
-            np.stack(
-                [np.asarray(r["qv"], dtype=np.float64) for r in qrows]
-            )
-            @ P.T
-        )
-        qn = np.sqrt((QP * QP).sum(axis=1))
-    else:
-        qid_vals = np.asarray([])
-        QP = np.zeros((0, proj_dim))
-        qn = np.zeros(0)
-
-    cand_schema = ST_(
+    cand_schema = StructType(
         [
-            SF_("qid", queries.schema[query_id_col].dataType, True),
-            SF_("nid", corpus.schema[id_col].dataType, True),
-            SF_("psim", DoubleType(), False),
+            StructField("qid", queries.schema[query_id_col].dataType, True),
+            StructField("nid", corpus.schema[id_col].dataType, True),
+            StructField("psim", DoubleType(), False),
         ]
     )
     keep = shortlist + 1  # self-match headroom; exact filter below
 
     def shortlist_gen(batches):
-        for pdf in batches:
-            if pdf.empty or QP.shape[0] == 0:
+        for batch in batches:
+            rows, V = _vectors(batch.column(vec_col), dim)
+            if len(rows) == 0 or QP.shape[0] == 0:
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             pr = V @ P.T
             pn = np.sqrt((pr * pr).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
@@ -511,17 +510,17 @@ def rp_shortlist_topk(
             mask &= np.isfinite(S)
             if not mask.any():
                 continue
-            ids = pdf[id_col].to_numpy()
             rix, qix = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "qid": qid_vals[qix],
-                    "nid": ids[rix],
-                    "psim": S[rix, qix],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    qids.take(qix),
+                    batch.column(id_col).take(rows[rix]),
+                    pa.array(S[rix, qix]),
+                ],
+                names=["qid", "nid", "psim"],
             )
 
-    cand_all = corpus.select(id_col, vec_col).mapInPandas(
+    cand_all = corpus.select(id_col, vec_col).mapInArrow(
         shortlist_gen, cand_schema
     )
     short_w = W.partitionBy("qid").orderBy(F.desc("psim"), F.col("nid"))
@@ -665,7 +664,12 @@ def knn_vote(
         .filter(F.col("qid") != F.col("nid"))
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    nn = _top_by_sim(scored, k)
+    return _vote(_top_by_sim(scored, k))
+
+
+def _vote(nn: DataFrame) -> DataFrame:
+    """(qid, pred_label, votes): the modal ``nlabel`` of each query's
+    neighbour rows ``nn``, the lower label on a vote tie."""
     votes = nn.groupBy("qid", "nlabel").agg(
         F.count(F.lit(1)).alias("votes")
     )
@@ -770,17 +774,7 @@ def knn_vote_ivf(
     labels = corpus.select(
         F.col(id_col).alias("nid"), F.col(label_col).alias("nlabel")
     )
-    votes = (
-        labels.join(F.broadcast(nn), "nid")
-        .groupBy("qid", "nlabel")
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    wv = W.partitionBy("qid").orderBy(F.desc("votes"), F.col("nlabel"))
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select("qid", F.col("nlabel").alias("pred_label"), "votes")
-    )
+    return _vote(labels.join(F.broadcast(nn), "nid"))
 
 
 def kmeans_fit(
@@ -985,15 +979,9 @@ def _nearest_arrow(
             if n == 0:
                 continue
             vecs = batch.column(vec_col)
-            lens = vecs.value_lengths().fill_null(-1).to_numpy()
-            starts = vecs.offsets.to_numpy()[:-1]
-            flat = vecs.values.to_numpy(zero_copy_only=False)
             codes = np.zeros((n, len(arrs)), dtype=np.int32)
-            for n_dim in np.unique(lens[lens >= 0]):
-                rows = np.flatnonzero(lens == n_dim)
-                V = flat[starts[rows, None] + np.arange(n_dim)].astype(
-                    np.float64
-                )
+            for n_dim in _vector_dims(vecs):
+                rows, V = _vectors(vecs, n_dim)
                 for g, (book, sl) in enumerate(zip(arrs, slices)):
                     S = V[:, sl]
                     w = S.shape[1]
@@ -1222,22 +1210,16 @@ def ivf_topk(
             corpus, k=n_cells, iters=iters, vec_col=vec_col, id_col=id_col
         )
     )
+    base, q = _sides(corpus, queries, id_col, vec_col, query_id_col)
     if assigned is not None:
         c = assigned
+    elif assign_mode == "two_level":
+        c = assign_cells_two_level(base, cents, "cv")
     else:
-        base = corpus.select(
-            F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
-        )
-        if assign_mode == "two_level":
-            c = assign_cells_two_level(base, cents, "cv")
-        else:
-            # Arrow numpy argmin — the flat argmin's cells bit-for-bit
-            # (assign_cells_arrow's fold-order contract), without an
-            # interpreted n×k evaluation or a reattach join
-            c = assign_cells_arrow(base, cents, vec_col="cv", id_col="nid")
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
+        # Arrow numpy argmin — the flat argmin's cells bit-for-bit
+        # (assign_cells_arrow's fold-order contract), without an
+        # interpreted n×k evaluation or a reattach join
+        c = assign_cells_arrow(base, cents, vec_col="cv", id_col="nid")
     qp = probe_cells_join(q, cents, nprobe)
     paired = c.join(F.broadcast(qp), "cell").filter(
         F.col("qid") != F.col("nid")
@@ -2456,12 +2438,11 @@ def _probed_cells(
     peek = (
         queries.select(F.col(vec_col).alias("qv"))
         .limit(driver_limit + 1)
-        .collect()
+        .toArrow()
     )
-    dim = len(cents[0]) if cents else 0
-    if len(peek) > driver_limit or any(
-        r["qv"] is None or len(r["qv"]) != dim for r in peek
-    ):
+    n = peek.num_rows
+    valid, Q = _vectors(peek.column("qv"), len(cents[0]) if cents else 0)
+    if n > driver_limit or len(valid) < n:
         # count_stats=False keeps maintenance traffic (the pruned
         # delete locate) out of the SERVE-path probe KPIs the
         # Prometheus page documents — a nightly takedown must not
@@ -2483,9 +2464,9 @@ def _probed_cells(
             INDEX_STATS["probe_batches"] += 1
             INDEX_STATS["probe_cells"] += len(cells)
         return cells
-    if not peek:
+    if not n:
         return []
-    cells = _rank_cells_numpy([r["qv"] for r in peek], cents, nprobe)
+    cells = _rank_cells_numpy(Q, cents, nprobe)
     if count_stats:
         INDEX_STATS["probe_batches"] += 1
         INDEX_STATS["probe_cells"] += len(cells)
@@ -2493,16 +2474,17 @@ def _probed_cells(
 
 
 def _rank_cells_numpy(
-    qvs: list, cents: list[list[float]], nprobe: int
+    Q, cents: list[list[float]], nprobe: int
 ) -> list[int]:
     """The driver-side probe ranking: union of each query's ``nprobe``
-    nearest cells, one float64 GEMM over the whole batch. Callers
-    guarantee every ``qvs`` row is non-null and centroid-dimensioned
-    (:func:`_probed_cells` falls back to the distributed probe
-    otherwise). Returns sorted cell ids."""
+    nearest cells, one float64 GEMM over the whole batch. ``Q`` is the
+    batch's query matrix, one centroid-width row per query
+    (:func:`_probed_cells` falls back to the distributed probe when a
+    query vector is NULL or of another width). Returns sorted cell
+    ids."""
     import numpy as np
 
-    Q = np.asarray(qvs, dtype=np.float64)
+    Q = np.asarray(Q, dtype=np.float64)
     C = np.asarray(cents, dtype=np.float64)
     qsq = np.einsum("ij,ij->i", Q, Q)
     csq = np.einsum("ij,ij->i", C, C)

@@ -319,13 +319,11 @@ def stream_livecheck_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     signals always precede the watermark passing their deadline under
     time-ordered replay, so per-execution verdicts, n_seen, and exact
     integer-µs runtimes are batching-invariant."""
-    from faust_spark.streaming.livecheck_audit import (
-        audit_state_partitions,
-        audit_updates,
-    )
+    from faust_spark.streaming.livecheck_audit import audit_updates
     from faust_spark.streaming.runner import (
         drain,
         shuffle_partitions,
+        state_partitions,
         stream_parquet,
     )
 
@@ -424,10 +422,12 @@ def stream_livecheck_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         emitted: list = []
         # GATE-HARNESS ONLY collect; production writes decided verdicts to
         # a sink (the operator itself never collects).
-        # State-store partitions sized to the fixture (r10 sweep in
-        # audit_state_partitions); the setting binds at stream start via the
-        # fresh checkpoint and is restored after.
-        with shuffle_partitions(spark, audit_state_partitions(n_rows)):
+        # State-store partitions sized to the fixture: one per 300 audit
+        # rows (the r10 sweep's 25 at sf0.1 on 32 cores), capped at the
+        # session width; the setting binds at stream start via the fresh
+        # checkpoint and is restored after.
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        with shuffle_partitions(spark, state_partitions(n_rows, 300, width)):
             drain(
                 decided.writeStream.foreachBatch(
                     lambda b, i: emitted.append(b.toPandas())

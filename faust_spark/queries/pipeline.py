@@ -849,14 +849,16 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     r AS (SELECT qid, nid,
                  ROW_NUMBER() OVER (PARTITION BY qid
                                     ORDER BY sim DESC, nid) AS rank
-          FROM s)
+          FROM s WHERE sim IS NOT NULL AND NOT isnan(sim))
     SELECT qid, nid, rank FROM r WHERE rank <= 5
     """,
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for 10 query vectors: broadcast queries,
     one corpus scan, window rank (operators/similarity.py). Ranks only —
-    float-sum rounding differs across engines, rank order does not."""
+    float-sum rounding differs across engines, rank order does not. Only
+    numeric similarities rank, in the operator and in the oracle: a NULL
+    or NaN one never takes a slot."""
     from faust_spark.operators.similarity import cosine_topk
 
     emb = _t(spark, sf_dir, "embeddings")

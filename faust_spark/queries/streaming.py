@@ -44,7 +44,7 @@ def _stream_state_parts(spark: SparkSession, sf_dir: str) -> int:
         n = _pq.read_metadata(
             os.path.join(sf_dir, "events.parquet")
         ).num_rows
-        return state_partitions(n, default)
+        return state_partitions(n, 12_500, default)
     except Exception:
         return default
 

@@ -82,21 +82,6 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def audit_state_partitions(n_rows: int) -> int:
-    """State-store partition count for an audit replay of ``n_rows``
-    unified (execution + signal) rows: one per 300 rows, at least 8, at
-    most 32. Small replays want few partitions (the per-batch
-    state-store task overhead dominates, and every micro-batch pays it
-    again); large replays want the Arrow state work spread wide.
-
-    Swept at sf0.1 (7.5k rows, 3 rounds, fresh checkpoints): 8
-    partitions 5.1-5.3 s, 16 3.9-4.7 s, 24-25 3.8-4.4 s, 32 3.8-4.6 s.
-    The rule lands on 8 at sf0.01 and 25 at sf0.1. Results are
-    partitioning-invariant; the count binds at stream start through a
-    fresh checkpoint."""
-    return min(32, max(8, int(n_rows) // 300))
-
-
 def audit_updates(
     grouped,
     case_signals: dict[str, list[str]],

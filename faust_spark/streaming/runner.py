@@ -75,15 +75,19 @@ def write_ordered(df: DataFrame, path: str, n: int, col: str) -> None:
         os.utime(f, (t0 + i, t0 + i))
 
 
-def state_partitions(n_events: int, cap: int) -> int:
-    """State-store partition count for a keyed stream of ``n_events``.
+def state_partitions(n_rows: int, rows_per_instance: int, cap: int) -> int:
+    """State-store partition count for a stateful stream of ``n_rows``.
 
     Every state-store instance pays a fixed init/commit per micro-batch
-    regardless of its rows, so the count follows the keyed-state volume —
-    one store per 12,500 events, at least 4 — capped at ``cap`` (the
-    session width). Results are partitioning-invariant; only the fixed
-    per-batch overhead changes."""
-    return min(cap, max(4, n_events // 12_500))
+    regardless of its rows, and each is one task per micro-batch, so
+    instances past the session's cores only queue. The count follows the
+    state volume — one instance per ``rows_per_instance`` rows, the
+    operator's state cost (12,500 events for a keyed aggregation, 300
+    rows for the LiveCheck audit's Python state) — at least 4, capped at
+    ``cap``, the session width (``spark.sql.shuffle.partitions``, which
+    ``get_spark`` sets to the core count). Results are
+    partitioning-invariant; only the fixed per-batch overhead changes."""
+    return min(cap, max(4, n_rows // rows_per_instance))
 
 
 @contextmanager

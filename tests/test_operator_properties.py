@@ -328,3 +328,159 @@ def test_ngram_expansion_matches_python_split(spark, texts):
     for i, g in got.items():
         w = want.get(i)
         assert (g is None and w is None) or abs(g - w) < 1e-9, (i, g, w)
+
+
+# -- malformed vectors (the contract in faust_spark/operators/__init__) --
+
+_DIM = 8
+_N_CLEAN = 40
+_BAD = {
+    "null": None,
+    "short": [0.5, -0.5, 1.0],
+    "nan": [float("nan")] * _DIM,
+    "zero": [0.0] * _DIM,
+}
+_QIDS = (0, 70, 190)
+
+
+def _vector_outputs(spark, bad):
+    """Every vector kernel's output over the seeded clean corpus plus
+    the ``bad`` rows, each a (position, kind) pair: clean row i has id
+    10*i, and the j-th bad row after clean row p has id 10*p + 1 + j, so
+    bad ids interleave with clean ones in row order and in id order.
+    Queries are clean corpus rows. Outputs are cut to the clean ids."""
+    import numpy as np
+    import pyarrow as pa
+
+    from faust_spark.operators.dedup import (
+        embedding_dup_pairs,
+        semantic_dedup,
+    )
+    from faust_spark.operators.search import mmr_rerank
+    from faust_spark.operators.similarity import (
+        cosine_topk,
+        hyperplane_bands_arrow,
+        hyperplane_lsh_topk,
+        ivf_topk,
+        rp_shortlist_topk,
+    )
+
+    V = np.random.default_rng(17).normal(size=(_N_CLEAN, _DIM))
+    V = V.astype(np.float32)
+    ids, vecs = [], []
+    for i in range(_N_CLEAN):
+        ids.append(10 * i)
+        vecs.append([float(x) for x in V[i]])
+        for j, kind in enumerate(k for p, k in bad if p == i):
+            ids.append(10 * i + 1 + j)
+            vecs.append(_BAD[kind])
+    clean = set(range(0, 10 * _N_CLEAN, 10))
+    vtype = pa.list_(pa.float32())
+
+    def frame(keep):
+        rows = [(i, v) for i, v in zip(ids, vecs) if keep(i)]
+        return spark.createDataFrame(
+            pa.table(
+                {
+                    "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                    "embedding": pa.array([v for _, v in rows], vtype),
+                }
+            )
+        )
+
+    corpus = frame(lambda i: True)
+    # semantic_dedup keeps the relational NaN rule and mmr_rerank has no
+    # expression form to follow: both take NULL and wrong-length only
+    nulls_short = {
+        i
+        for i, v in zip(ids, vecs)
+        if i in clean or v is None or len(v) != _DIM
+    }
+    corpus_ns = frame(lambda i: i in nulls_short)
+    queries = frame(lambda i: i in _QIDS).withColumnRenamed("vec_id", "qid")
+    cents = [[float(x) for x in V[i]] for i in range(4)]
+
+    def unit(v):
+        return np.asarray(v, dtype=np.float64) / np.linalg.norm(v)
+
+    # a bad candidate outscores every clean one: picked first if eligible
+    cand = [
+        (q, i, float(unit(V[q // 10]) @ unit(v)) if i in clean else 1.5, v)
+        for q in _QIDS
+        for i, v in zip(ids, vecs)
+        if i in nulls_short and i != q
+    ]
+    cands = spark.createDataFrame(
+        pa.table(
+            {
+                "qid": pa.array([c[0] for c in cand], pa.int64()),
+                "nid": pa.array([c[1] for c in cand], pa.int64()),
+                "score": pa.array([c[2] for c in cand], pa.float64()),
+                "embedding": pa.array([c[3] for c in cand], vtype),
+            }
+        )
+    )
+
+    def topk(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    return {
+        "cosine_topk": topk(cosine_topk(corpus, queries, k=5)),
+        "hyperplane_lsh_topk": topk(
+            hyperplane_lsh_topk(corpus, queries, k=5, n_planes=2, dim=_DIM)
+        ),
+        "rp_shortlist_topk": topk(
+            rp_shortlist_topk(
+                corpus, queries, k=5, proj_dim=4, shortlist=8, dim=_DIM
+            )
+        ),
+        "ivf_topk": topk(
+            ivf_topk(corpus, queries, k=5, nprobe=2, centroids=cents)
+        ),
+        "hyperplane_bands_arrow": sorted(
+            tuple(r)
+            for r in hyperplane_bands_arrow(
+                corpus, n_tables=2, n_planes=4, dim=_DIM
+            ).collect()
+            if r.vec_id in clean
+        ),
+        "embedding_dup_pairs": sorted(
+            (r.doc1, r.doc2, round(r.cosine, 9))
+            for r in embedding_dup_pairs(
+                corpus, threshold=0.5, blocks=4, dim=_DIM
+            ).collect()
+            if r.doc1 in clean and r.doc2 in clean
+        ),
+        "semantic_dedup": sorted(
+            tuple(r)
+            for r in semantic_dedup(corpus_ns, cents, threshold=0.5).collect()
+            if r.vec_id in clean
+        ),
+        "mmr_rerank": sorted(
+            (r.qid, r.nid, r.mmr_rank, round(r.mmr_score, 9))
+            for r in mmr_rerank(cands, k=4, lam=0.7).collect()
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def clean_vector_outputs(spark):
+    return _vector_outputs(spark, [])
+
+
+@given(
+    positions=st.lists(
+        st.integers(0, _N_CLEAN - 1), min_size=len(_BAD), max_size=len(_BAD)
+    )
+)
+@settings(max_examples=2, deadline=None)
+def test_malformed_vectors_leave_clean_rows_unchanged(
+    spark, clean_vector_outputs, positions
+):
+    """A NULL, wrong-length, all-NaN or zero-norm corpus vector never
+    raises from a vector kernel, never takes a top-k, shortlist or MMR
+    slot, and never changes a clean row's output (bits, pairs, dup
+    flags)."""
+    got = _vector_outputs(spark, list(zip(positions, sorted(_BAD))))
+    for op, want in clean_vector_outputs.items():
+        assert got[op] == want, op

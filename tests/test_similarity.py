@@ -23,6 +23,30 @@ def test_cosine_topk_self_similar(spark, sf_dir):
     assert top[0].nid == 0  # the original vector is the nearest neighbor
 
 
+def test_vectors_decoder_reads_sliced_and_chunked_columns():
+    """``similarity._vectors`` keeps exactly the non-NULL rows of the
+    asked length, reading list offsets right on a sliced array and
+    across chunks; a NULL element reads as NaN."""
+    import numpy as np
+    import pyarrow as pa
+
+    from faust_spark.operators.similarity import _vector_dims, _vectors
+
+    a = pa.array(
+        [[1.0, 2.0], None, [3.0], [4.0, 5.0], [6.0, None]],
+        pa.list_(pa.float32()),
+    )
+    rows, V = _vectors(a.slice(2), 2)
+    assert rows.tolist() == [1, 2]
+    np.testing.assert_array_equal(V, [[4.0, 5.0], [6.0, np.nan]])
+    assert _vector_dims(a.slice(2)) == [1, 2]
+    rows, V = _vectors(pa.chunked_array([a.slice(0, 2), a.slice(3)]), 2)
+    assert rows.tolist() == [0, 2, 3] and V.dtype == np.float64
+    np.testing.assert_array_equal(V[0], [1.0, 2.0])
+    rows, V = _vectors(pa.chunked_array([], a.type), 3)
+    assert rows.size == 0 and V.shape == (0, 3)
+
+
 def test_lsh_bucket_is_deterministic(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(50)
     a = hyperplane_signature(emb, n_planes=8, dim=64)

@@ -227,13 +227,23 @@ def test_drain_propagates_the_query_failure(spark, multi_file_events):
 
 
 def test_state_partitions_rule():
-    """One state store per 12,500 events, at least 4, at most the cap."""
-    assert state_partitions(0, 32) == 4
-    assert state_partitions(62_499, 32) == 4
-    assert state_partitions(100_000, 32) == 8
-    assert state_partitions(1_000_000, 200) == 80
-    assert state_partitions(10_000_000, 32) == 32
-    assert state_partitions(0, 2) == 2  # the cap (session width) wins
+    """One state store per ``rows_per_instance`` rows, at least 4, at
+    most the cap (the session width)."""
+    # keyed aggregations: 12,500 events per instance
+    assert state_partitions(0, 12_500, 32) == 4
+    assert state_partitions(62_499, 12_500, 32) == 4
+    assert state_partitions(100_000, 12_500, 32) == 8
+    assert state_partitions(1_000_000, 12_500, 200) == 80
+    assert state_partitions(10_000_000, 12_500, 32) == 32
+    assert state_partitions(0, 12_500, 2) == 2  # the cap wins
+    # the LiveCheck audit: 300 rows per instance; sf0.1's 7.5k rows
+    # land on the r10 sweep's 25 at 32 cores and on the core count at 4
+    assert state_partitions(0, 300, 32) == 4
+    assert state_partitions(2_699, 300, 32) == 8
+    assert state_partitions(7_500, 300, 32) == 25
+    assert state_partitions(7_500, 300, 4) == 4
+    assert state_partitions(9_600, 300, 32) == 32
+    assert state_partitions(10**9, 300, 32) == 32
 
 
 def test_append_mode_emits_only_closed_windows(spark, multi_file_events):
