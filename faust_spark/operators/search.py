@@ -25,7 +25,7 @@ tie-break, the same contract as ``similarity.cosine_topk``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -44,21 +44,6 @@ def postings(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
     return toks.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
-
-
-def _bm25_term(k1: float, b: float) -> Column:
-    """One (doc, term) BM25 contribution from the ``tf``, ``dl``, ``df``,
-    ``n`` and ``avgdl`` columns."""
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    return idf * tf_part
 
 
 def bm25_topk(
@@ -101,13 +86,22 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
+        F.col("tf")
+        + F.lit(k1)
+        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    )
     scored = (
         tf.join(F.broadcast(dfs), "term")
         .crossJoin(F.broadcast(stats))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
-            F.sum(_bm25_term(k1, b)).alias("score"),
+            F.sum(idf * tf_part).alias("score"),
         )
     )
     top = scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
@@ -182,13 +176,22 @@ def bm25_multi_topk(
     matched = tf.join(F.broadcast(qterms), "term")
     if exclude_self:
         matched = matched.filter(F.col(id_col) != F.col("qid"))
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
+        F.col("tf")
+        + F.lit(k1)
+        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    )
     scored = (
         matched.join(F.broadcast(dfs), "term")
         .crossJoin(F.broadcast(stats))
         .groupBy("qid", id_col)
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
-            F.sum(_bm25_term(k1, b)).alias("score"),
+            F.sum(idf * tf_part).alias("score"),
         )
     )
     w = W.partitionBy("qid").orderBy(F.desc("score"), F.col(id_col))

@@ -664,12 +664,7 @@ def knn_vote(
         .filter(F.col("qid") != F.col("nid"))
         .withColumn("sim", cosine_expr(F.col("qv"), F.col("cv")))
     )
-    return _vote(_top_by_sim(scored, k))
-
-
-def _vote(nn: DataFrame) -> DataFrame:
-    """(qid, pred_label, votes): the modal ``nlabel`` of each query's
-    neighbour rows ``nn``, the lower label on a vote tie."""
+    nn = _top_by_sim(scored, k)
     votes = nn.groupBy("qid", "nlabel").agg(
         F.count(F.lit(1)).alias("votes")
     )
@@ -774,7 +769,17 @@ def knn_vote_ivf(
     labels = corpus.select(
         F.col(id_col).alias("nid"), F.col(label_col).alias("nlabel")
     )
-    return _vote(labels.join(F.broadcast(nn), "nid"))
+    votes = (
+        labels.join(F.broadcast(nn), "nid")
+        .groupBy("qid", "nlabel")
+        .agg(F.count(F.lit(1)).alias("votes"))
+    )
+    wv = W.partitionBy("qid").orderBy(F.desc("votes"), F.col("nlabel"))
+    return (
+        votes.withColumn("vr", F.row_number().over(wv))
+        .filter(F.col("vr") == 1)
+        .select("qid", F.col("nlabel").alias("pred_label"), "votes")
+    )
 
 
 def kmeans_fit(
